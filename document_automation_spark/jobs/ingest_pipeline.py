@@ -45,6 +45,7 @@ import sys
 
 from contextlib import contextmanager
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -445,11 +446,26 @@ def run_ingest_pipeline(
     extract_summary.update(lg_summary)
 
     if curated_mode == "fused":
-        stats = fused_stats["collect"]()
+        stats_path = os.path.join(output_path, "_curation_stats")
+        stats = None
+        if "collect" not in fused_stats:
+            # every bucket was already committed, so no curation plan was
+            # built: the counters are the committing run's, unless it died
+            # before writing them — then re-count into a noop sink
+            try:
+                stats = spark.read.parquet(stats_path)
+            except AnalysisException:
+                try:
+                    fused_docs_fn(pages, cfg).write.format("noop").mode(
+                        "overwrite"
+                    ).save()
+                finally:
+                    for handle in fused_cache:
+                        handle.unpersist()
+        if stats is None:
+            stats = fused_stats["collect"]()
+            stats.repartition(1).write.mode("overwrite").parquet(stats_path)
         stats_row = stats.first().asDict()
-        stats.repartition(1).write.mode("overwrite").parquet(
-            os.path.join(output_path, "_curation_stats")
-        )
         summary = {
             **extract_summary,
             **stats_row,

@@ -37,7 +37,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -81,8 +81,9 @@ def extract_documents(pages: DataFrame, cfg: ExtractConfig = ExtractConfig()) ->
     """pages ``(url, warc_ts, html, ...)`` → documents (one row per passage).
 
     Only ``(url, warc_ts, html)`` survive the scan (column pruning reaches
-    the parquet reader); rows are redistributed by url hash before the
-    Python stage so payload-size skew spreads uniformly.
+    the parquet reader).  Map-only: the Python stage runs over the scan
+    partitions as they are (see the module docstring), and payload-size
+    skew is bounded by the size-based scan split, not by a shuffle.
     """
     import pandas as pd
 
@@ -228,14 +229,18 @@ def extract_documents_arrow(
     return keyed.mapInArrow(extract_batches, DOCUMENTS_SCHEMA)
 
 
-def with_bucket(pages: DataFrame, n_buckets: int) -> DataFrame:
-    """Attach the resume/layout bucket: ``pmod(xxhash64(url), n_buckets)``.
+def bucket_of(n_buckets: int) -> Column:
+    """The resume/layout bucket of a row: ``pmod(xxhash64(url), n_buckets)``."""
+    return F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
 
-    Computed as a JVM expression on the input so resume filters prune rows
-    BEFORE the Python stage ever sees them."""
-    return pages.withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-    )
+
+def with_bucket(pages: DataFrame, n_buckets: int) -> DataFrame:
+    """Attach the resume/layout bucket (:func:`bucket_of`).
+
+    A JVM expression on the input, so a resume can filter pages on the
+    same expression BEFORE the Python stage ever sees them
+    (``plans.checkpoint.pending_documents``)."""
+    return pages.withColumn("bucket", bucket_of(n_buckets))
 
 
 def passage_counts(documents: DataFrame) -> DataFrame:

@@ -542,6 +542,93 @@ class TestIngestPipeline:
         }
         assert rows_a == rows_b
 
+    def test_fused_resume_dedups_across_committed_buckets(self, spark, tmp_path):
+        """Fused curation picks one exact-dedup winner across ALL buckets,
+        so a resume must not hide the committed buckets from it.  Fixture:
+        every page plus a mirror copy under a later-sorting url; at least
+        one pair has its winner in a committed bucket and its loser in a
+        pending one.  Crash → resume equals a fresh fused run row for row,
+        counters included, and so do the no-op re-runs after it."""
+        import shutil
+
+        from pyspark import StorageLevel
+
+        from document_automation_spark.operators.curate import curate_extracted
+        from document_automation_spark.operators.extract import extract_documents
+        from document_automation_spark.plans.checkpoint import run_extraction_job
+        from document_automation_spark.sources.pages import PAGES_SCHEMA, gen_rows
+
+        rows = gen_rows(range(40))
+        rows += [
+            dict(r, url=f"https://zz-mirror.example.com/copy/{i}")
+            for i, r in enumerate(rows)
+        ]
+        pages = spark.createDataFrame(
+            [tuple(r[f] for f in PAGES_SCHEMA.names) for r in rows], PAGES_SCHEMA
+        )
+        cfg = ExtractConfig(n_buckets=8)
+        fail = 4
+
+        docs = extract_documents(pages, cfg).filter(F.col("error").isNull())
+        pairs = docs.groupBy("content").agg(
+            F.min(F.struct("url", "bucket")).alias("winner"),
+            F.max("bucket").alias("top"),
+        )
+        assert pairs.filter(
+            (F.col("winner.bucket") < fail) & (F.col("top") >= fail)
+        ).count() > 0
+
+        cache = []
+
+        def fused_fn(pages_, cfg_):
+            extracted = extract_documents(pages_, cfg_).persist(
+                StorageLevel.MEMORY_AND_DISK
+            )
+            cache.append(extracted)
+            return curate_extracted(extracted, keep_quarantined=True)[0]
+
+        out = str(tmp_path / "fused_mirror_resume")
+        crashed = run_extraction_job(
+            spark, pages, out, "fp-m", cfg, docs_fn=fused_fn, fail_buckets_above=fail
+        )
+        for h in cache:
+            h.unpersist()
+        assert 0 < crashed["buckets_processed"] < 8
+        resumed = run_ingest_pipeline(
+            spark, pages, out, "fp-m", cfg=cfg, curated_mode="fused"
+        )
+        assert resumed["buckets_skipped"] == crashed["buckets_processed"]
+        fresh = run_ingest_pipeline(
+            spark, pages, str(tmp_path / "fused_mirror_fresh"), "fp-m",
+            cfg=cfg, curated_mode="fused",
+        )
+
+        def table(summary):
+            return sorted(
+                tuple(r) for r in spark.read.parquet(summary["curated_path"])
+                .select("url", "passage_idx", "bucket", "content", "error")
+                .collect()
+            )
+
+        counters = ("rows_in", "quarantined", "gated", "deduped", "rows_out")
+        assert table(resumed) == table(fresh)
+        assert fresh["deduped"] > 0
+        assert {k: resumed[k] for k in counters} == {k: fresh[k] for k in counters}
+
+        # every bucket committed: the counters come from the committing
+        # run, or are re-counted when its stats file is gone
+        again = run_ingest_pipeline(
+            spark, pages, out, "fp-m", cfg=cfg, curated_mode="fused"
+        )
+        shutil.rmtree(os.path.join(out, "_curation_stats"))
+        recount = run_ingest_pipeline(
+            spark, pages, out, "fp-m", cfg=cfg, curated_mode="fused"
+        )
+        for s in (again, recount):
+            assert s["buckets_processed"] == 0
+            assert {k: s[k] for k in counters} == {k: fresh[k] for k in counters}
+        assert table(recount) == table(fresh)
+
     def test_fused_rejects_cut_dup_spans(self, spark, tmp_path):
         with pytest.raises(ValueError, match="copy"):
             run_ingest_pipeline(

@@ -2,18 +2,27 @@
 
 from __future__ import annotations
 
+import os
+import uuid
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
-from document_automation_spark.operators.extract import ExtractConfig
+from document_automation_spark.operators.extract import (
+    ExtractConfig,
+    documents_from_text,
+    extract_documents,
+)
 from document_automation_spark.plans.checkpoint import (
     done_buckets,
+    manifest_path,
+    pending_documents,
     read_manifest,
     read_output,
     run_extraction_job,
 )
 from document_automation_spark.plans.metrics import observe_extraction
-from document_automation_spark.operators.extract import extract_documents
 from document_automation_spark.sources.pages import pages_df
 
 N_PAGES = 120
@@ -23,6 +32,27 @@ FP = "pages-seed42-n120"
 @pytest.fixture()
 def out_dir(tmp_path):
     return str(tmp_path / "documents_out")
+
+
+@contextmanager
+def jobs_started(spark):
+    """Collects the ids of the Spark jobs started inside the block."""
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    ids: list = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _files_under(path):
+    return sorted(
+        os.path.join(d, f) for d, _, files in os.walk(path) for f in files
+    )
 
 
 def test_full_run_then_noop_resume(spark, out_dir):
@@ -97,3 +127,78 @@ def test_changed_input_fingerprint_reprocesses(spark, out_dir):
     second = run_extraction_job(spark, pages, out_dir, "fp-v2", cfg)
     assert second["buckets_skipped"] == 0
     assert second["buckets_processed"] > 0
+
+
+def test_done_buckets_on_fresh_output_runs_no_job(spark, out_dir):
+    with jobs_started(spark) as jobs:
+        assert done_buckets(spark, out_dir, FP) == []
+    assert jobs == []
+
+
+def test_resume_of_committed_output_only_reads_manifest(spark, out_dir):
+    """A re-submit of a finished job runs the manifest read and nothing
+    else: no write job, no stats scan, no empty manifest append."""
+    pages = pages_df(spark, N_PAGES, partitions=4)
+    cfg = ExtractConfig(n_buckets=8)
+    first = run_extraction_job(spark, pages, out_dir, FP, cfg)
+    assert first["buckets_processed"] == 8  # every bucket has pages
+    manifest_files = _files_under(manifest_path(out_dir))
+
+    with jobs_started(spark) as jobs:
+        again = run_extraction_job(spark, pages, out_dir, FP, cfg)
+    assert again["buckets_processed"] == 0
+    assert again["buckets_skipped"] == 8
+    assert len(jobs) <= 1
+    assert _files_under(manifest_path(out_dir)) == manifest_files
+
+
+def _plan_lines(df):
+    return df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+
+
+def _cross_row(pages_, cfg_):
+    """A builder that looks across rows, like fused curation's exact dedup:
+    keeps each content only under its smallest url."""
+    docs = extract_documents(pages_, cfg_)
+    firsts = docs.groupBy("content").agg(F.min("url").alias("url"))
+    return docs.join(firsts, ["content", "url"], "left_semi")
+
+
+@pytest.mark.parametrize(
+    "docs_fn, below",
+    [(extract_documents, True), (documents_from_text, True), (_cross_row, False)],
+    ids=["extract_documents", "documents_from_text", "cross_row"],
+)
+def test_partial_resume_filters_buckets_below_python_stage(
+    spark, tmp_path, out_dir, docs_fn, below
+):
+    """On a partial resume the row-local builders see only the pending
+    buckets: the bucket Filter sits under MapInPandas in the optimized
+    plan.  A builder that looks across rows keeps the Filter above it."""
+    src = str(tmp_path / "pages.parquet")
+    pages_df(spark, N_PAGES, partitions=4).write.parquet(src)
+    pages = spark.read.parquet(src)
+    cfg = ExtractConfig(n_buckets=8)
+    expected = sorted(
+        (r.url, r.passage_idx, r.content) for r in docs_fn(pages, cfg).collect()
+    )
+    run_extraction_job(
+        spark, pages, out_dir, FP, cfg, fail_buckets_above=4, docs_fn=docs_fn
+    )
+    done = done_buckets(spark, out_dir, FP)
+    assert done and max(done) < 4
+
+    lines = _plan_lines(pending_documents(pages, cfg, done, docs_fn=docs_fn))
+    python_stage = next(i for i, ln in enumerate(lines) if "MapInPandas" in ln)
+    bucket_filter = next(
+        i for i, ln in enumerate(lines)
+        if "Filter" in ln and ("xxhash64" in ln or "bucket" in ln)
+    )
+    assert (bucket_filter > python_stage) == below, "\n".join(lines)
+
+    resumed = run_extraction_job(spark, pages, out_dir, FP, cfg, docs_fn=docs_fn)
+    assert resumed["buckets_skipped"] == len(done)
+    got = sorted(
+        (r.url, r.passage_idx, r.content) for r in read_output(spark, out_dir).collect()
+    )
+    assert got == expected
