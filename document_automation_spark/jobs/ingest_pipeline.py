@@ -49,6 +49,12 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from document_automation_spark.plans.checkpoint import (
+    PARQUET_WRITE_OPTIONS,
+    read_output,
+    run_extraction_job,
+)
+
 
 @contextmanager
 def _conf_override(spark: SparkSession, key: str, value: str):
@@ -275,7 +281,6 @@ def run_ingest_pipeline(
     from document_automation_spark.operators.curate import curate_extracted
     from document_automation_spark.operators.extract import ExtractConfig
     from document_automation_spark.operators.urls import dedup_by_url
-    from document_automation_spark.plans.checkpoint import read_output, run_extraction_job
 
     cfg = cfg or ExtractConfig()
     robots_blocked = None
@@ -571,11 +576,9 @@ def run_ingest_pipeline(
         curated_path = os.path.join(output_path, "curated")
         # ONE action runs the whole curation: stage counters ride the write as
         # CollectMetrics observations (collect_stats() reads them afterwards).
-        # zstd-1 writer options match the durable writer (see plans/checkpoint)
         (
             curated.write.mode("overwrite")
-            .option("compression", "zstd")
-            .option("parquet.compression.codec.zstd.level", "1")
+            .options(**PARQUET_WRITE_OPTIONS)
             .parquet(curated_path)
         )
         stats = collect_stats()
@@ -644,8 +647,7 @@ def run_ingest_pipeline(
                 )
                 .drop("was_mojibake")
                 .write.mode("overwrite")
-                .option("compression", "zstd")
-                .option("parquet.compression.codec.zstd.level", "1")
+                .options(**PARQUET_WRITE_OPTIONS)
                 .parquet(enc_path)
             )
             # Counter contract: mojibake_repaired counts SURVIVING repaired
@@ -691,8 +693,7 @@ def run_ingest_pipeline(
             (
                 fresh.observe(obs_x, F.count(F.lit(1)).alias("rows_kept"))
                 .write.mode("overwrite")
-                .option("compression", "zstd")
-                .option("parquet.compression.codec.zstd.level", "1")
+                .options(**PARQUET_WRITE_OPTIONS)
                 .parquet(xsnap_path)
             )
             summary["xsnap_rows_in"] = int(stats_row.get("rows_out") or 0)
@@ -730,8 +731,7 @@ def run_ingest_pipeline(
             try:
                 (
                     surgered.write.mode("overwrite")
-                    .option("compression", "zstd")
-                    .option("parquet.compression.codec.zstd.level", "1")
+                    .options(**PARQUET_WRITE_OPTIONS)
                     .parquet(cut_path)
                 )
             finally:
@@ -786,8 +786,7 @@ def run_ingest_pipeline(
             para_path = os.path.join(output_path, "curated_paradedup")
             (
                 surgered.write.mode("overwrite")
-                .option("compression", "zstd")
-                .option("parquet.compression.codec.zstd.level", "1")
+                .options(**PARQUET_WRITE_OPTIONS)
                 .parquet(para_path)
             )
             summary["dropped_paragraphs"] = int(
@@ -816,8 +815,7 @@ def run_ingest_pipeline(
             (
                 kept.withColumnRenamed("text", "content")
                 .write.mode("overwrite")
-                .option("compression", "zstd")
-                .option("parquet.compression.codec.zstd.level", "1")
+                .options(**PARQUET_WRITE_OPTIONS)
                 .parquet(quality_path)
             )
             summary.update(
@@ -849,8 +847,7 @@ def run_ingest_pipeline(
             (
                 corpus.withColumnRenamed("text", "content")
                 .write.mode("overwrite")
-                .option("compression", "zstd")
-                .option("parquet.compression.codec.zstd.level", "1")
+                .options(**PARQUET_WRITE_OPTIONS)
                 .parquet(hygiene_path)
             )
             if obs_d is not None:
@@ -930,8 +927,7 @@ def run_ingest_pipeline(
                 corpus.join(losers, "doc_id", "left_anti")
                 .observe(obs_sem, F.count(F.lit(1)).alias("kept_rows"))
                 .write.mode("overwrite")
-                .option("compression", "zstd")
-                .option("parquet.compression.codec.zstd.level", "1")
+                .options(**PARQUET_WRITE_OPTIONS)
                 .parquet(sem_path)
             )
             kept_rows = int(obs_sem.get["kept_rows"] or 0)
@@ -945,8 +941,7 @@ def run_ingest_pipeline(
                     .withColumnRenamed("vec_id", "vector_id")
                     .drop("bucket", "centroid_sim", "kept")
                     .write.mode("overwrite")
-                    .option("compression", "zstd")
-                    .option("parquet.compression.codec.zstd.level", "1")
+                    .options(**PARQUET_WRITE_OPTIONS)
                     .parquet(emb_sem_path)
                 )
             finally:
@@ -1066,8 +1061,7 @@ def _classifier_stage(
         kept.withColumnRenamed("text", "content")
         .observe(obs, F.count(F.lit(1)).alias("n_kept"))
         .write.mode("overwrite")
-        .option("compression", "zstd")
-        .option("parquet.compression.codec.zstd.level", "1")
+        .options(**PARQUET_WRITE_OPTIONS)
         .parquet(classifier_path)
     )
     n_kept = obs.get["n_kept"]
@@ -1116,8 +1110,7 @@ def _dsir_stage(
         corpus.join(kept_ids, "doc_id")
         .withColumnRenamed("text", "content")
         .write.mode("overwrite")
-        .option("compression", "zstd")
-        .option("parquet.compression.codec.zstd.level", "1")
+        .options(**PARQUET_WRITE_OPTIONS)
         .parquet(dsir_path)
     )
     return {
@@ -1181,8 +1174,7 @@ def _bpe_stage(
         .withColumnRenamed("text", "content")
         .observe(obs, F.sum("n_tokens_bpe").alias("tot"))
         .write.mode("overwrite")
-        .option("compression", "zstd")
-        .option("parquet.compression.codec.zstd.level", "1")
+        .options(**PARQUET_WRITE_OPTIONS)
         .parquet(bpe_path)
     )
     stats = obs.get
@@ -1235,8 +1227,7 @@ def _pack_stage(
     (
         segments.write.mode("overwrite")
         .partitionBy("shard")
-        .option("compression", "zstd")
-        .option("parquet.compression.codec.zstd.level", "1")
+        .options(**PARQUET_WRITE_OPTIONS)
         .parquet(pack_path)
     )
     stats = (
@@ -1284,8 +1275,7 @@ def _embed_stage(
     embeddings_path = os.path.join(output_path, "embeddings")
     (
         with_ids.write.mode("overwrite")
-        .option("compression", "zstd")
-        .option("parquet.compression.codec.zstd.level", "1")
+        .options(**PARQUET_WRITE_OPTIONS)
         .parquet(embeddings_path)
     )
     for handle in cache:
@@ -1300,7 +1290,6 @@ def read_curated(spark: SparkSession, output_path: str) -> DataFrame:
     Plan shape: pruned scan → row-local filters → broadcast anti-join —
     no shuffle, no second copy."""
     from document_automation_spark.operators.curate import apply_tombstones
-    from document_automation_spark.plans.checkpoint import read_output
 
     cfg_rows = (
         spark.read.schema("min_chars int, scripts string")

@@ -127,6 +127,22 @@ def _decode_html(payload: bytes) -> str:
         return payload.decode(codec)  # unknown codec → LookupError → quarantine
 
 
+def _quarantine_row(url: str, link: str, error: str) -> DocRow:
+    """The single row a page that cannot be extracted emits: null content,
+    zero passages, the error string kept queryable."""
+    return DocRow(
+        url=url,
+        doc_id=None,
+        passage_idx=None,
+        content=None,
+        char_start=None,
+        char_end=None,
+        link=link,
+        n_passages=0,
+        error=error,
+    )
+
+
 def extract_page(
     url: str,
     payload: Optional[bytes],
@@ -147,19 +163,7 @@ def extract_page(
             raise ValueError("null payload")
         text = extract_payload_text(payload)
     except Exception as err:  # noqa: BLE001 — quarantine, never task-fatal
-        return [
-            DocRow(
-                url=url,
-                doc_id=None,
-                passage_idx=None,
-                content=None,
-                char_start=None,
-                char_end=None,
-                link=link,
-                n_passages=0,
-                error=f"{type(err).__name__}: {err}",
-            )
-        ]
+        return [_quarantine_row(url, link, f"{type(err).__name__}: {err}")]
 
     return rows_from_text(
         url, text, max_len=max_len, overlap=overlap, min_chars=min_chars,
@@ -182,19 +186,7 @@ def rows_from_text(
     exactly like a broken HTML payload."""
     link = link_from_url(url)
     if text is None:
-        return [
-            DocRow(
-                url=url,
-                doc_id=None,
-                passage_idx=None,
-                content=None,
-                char_start=None,
-                char_end=None,
-                link=link,
-                n_passages=0,
-                error="ValueError: null text",
-            )
-        ]
+        return [_quarantine_row(url, link, "ValueError: null text")]
     passages = extract_document(
         text, max_len=max_len, overlap=overlap, min_chars=min_chars, split_doc=split_doc
     )

@@ -41,7 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from document_automation_spark.kernels.page import extract_page
+from document_automation_spark.kernels.page import extract_page, rows_from_text
 from document_automation_spark.kernels.textproc import (
     DEFAULT_MAX_LEN,
     DEFAULT_MIN_CHARS,
@@ -77,14 +77,17 @@ class ExtractConfig:
     n_buckets: int = 64  # resume granularity; scale with cluster size
 
 
-def extract_documents(pages: DataFrame, cfg: ExtractConfig = ExtractConfig()) -> DataFrame:
-    """pages ``(url, warc_ts, html, ...)`` → documents (one row per passage).
+def _documents(pages: DataFrame, cfg: ExtractConfig, payload: str, row_fn) -> DataFrame:
+    """The one row-local batch loop: ``row_fn(url, pages[payload], ...)``
+    per page → documents rows, one Python dispatch per Arrow batch.
 
-    Only ``(url, warc_ts, html)`` survive the scan (column pruning reaches
-    the parquet reader).  Map-only: the Python stage runs over the scan
-    partitions as they are (see the module docstring), and payload-size
-    skew is bounded by the size-based scan split, not by a shuffle.
-    """
+    Only ``(url, warc_ts, <payload>)`` survive the scan (column pruning
+    reaches the parquet reader).  Map-only: the Python stage runs over the
+    scan partitions as they are (see the module docstring), and
+    payload-size skew is bounded by the size-based scan split, not by a
+    shuffle.  Every output row keeps its input page's ``bucket``, which is
+    what lets a resume filter pages below this stage
+    (``plans.checkpoint.ROW_LOCAL_BUILDERS``)."""
     import pandas as pd
 
     max_len, overlap, min_chars, split_doc = (
@@ -94,20 +97,20 @@ def extract_documents(pages: DataFrame, cfg: ExtractConfig = ExtractConfig()) ->
         cfg.split_doc,
     )
 
-    def extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for batch in batches:
+    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        for batch in it:
             # columnar accumulation: building one list per column and a
             # dict-backed DataFrame is measurably cheaper than a
             # list-of-tuples DataFrame at these row counts
             c_url, c_ts, c_bucket = [], [], []
             c_doc_id, c_idx, c_content = [], [], []
             c_start, c_end, c_link, c_np, c_err = [], [], [], [], []
-            for url, warc_ts, bucket, payload in zip(
-                batch["url"], batch["warc_ts"], batch["bucket"], batch["html"]
+            for url, warc_ts, bucket, value in zip(
+                batch["url"], batch["warc_ts"], batch["bucket"], batch[payload]
             ):
-                for row in extract_page(
+                for row in row_fn(
                     url,
-                    payload,
+                    value,
                     max_len=max_len,
                     overlap=overlap,
                     min_chars=min_chars,
@@ -124,6 +127,10 @@ def extract_documents(pages: DataFrame, cfg: ExtractConfig = ExtractConfig()) ->
                     c_link.append(row.link)
                     c_np.append(row.n_passages)
                     c_err.append(row.error)
+            if not c_url:
+                # every page fell under the gate: an empty dict-backed frame
+                # has untyped columns that Arrow cannot cast to the schema
+                continue
             yield pd.DataFrame(
                 {
                     "url": c_url,
@@ -140,93 +147,17 @@ def extract_documents(pages: DataFrame, cfg: ExtractConfig = ExtractConfig()) ->
                 }
             )
 
-    keyed = with_bucket(pages, cfg.n_buckets).select("url", "warc_ts", "html", "bucket")
+    keyed = with_bucket(pages, cfg.n_buckets).select("url", "warc_ts", payload, "bucket")
     # map-only: no shuffle of the raw payloads (see module docstring);
     # callers that write partitioned output repartition the (smaller)
     # extracted rows on `bucket` at the sink.
-    return keyed.mapInPandas(extract_batches, DOCUMENTS_SCHEMA)
+    return keyed.mapInPandas(batches, DOCUMENTS_SCHEMA)
 
 
-def extract_documents_arrow(
-    pages: DataFrame, cfg: ExtractConfig = ExtractConfig()
-) -> DataFrame:
-    """``extract_documents`` via ``mapInArrow`` — the pyarrow-level variant.
-
-    Skips pandas on BOTH sides of the boundary: inputs come out of the
-    Arrow RecordBatch as plain python lists (`to_pylist`, cheaper than
-    Series construction for string/binary columns), the repeated
-    ``warc_ts``/``bucket`` columns are gathered with ``pyarrow.compute.take``
-    (no python datetime objects ever materialize), and the output batch is
-    built directly with ``pa.array``.
-
-    MEASURED (tools/bench_extract_variants.py, 200k pages, local[32],
-    interleaved best-of-3): 52.5k docs/s vs the pandas path's 55.5k —
-    0.95×.  The columnar-dict pandas path already avoids the Series
-    overhead this variant targets, and `to_pylist` pays what pandas'
-    `.values` iteration paid.  Kept (tested byte-identical) as the
-    integration point for a future zero-copy kernel; the pandas path stays
-    the default."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    max_len, overlap, min_chars, split_doc = (
-        cfg.max_len,
-        cfg.overlap,
-        cfg.min_chars,
-        cfg.split_doc,
-    )
-
-    def extract_batches(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        for batch in batches:
-            urls = batch.column(0).to_pylist()  # url
-            ts_col = batch.column(1)  # warc_ts: stays Arrow end to end
-            payloads = batch.column(2).to_pylist()  # html
-            bucket_col = batch.column(3)
-            src_idx: list = []  # input row index per OUTPUT row
-            c_url, c_doc_id, c_idx, c_content = [], [], [], []
-            c_start, c_end, c_link, c_np, c_err = [], [], [], [], []
-            for i, (url, payload) in enumerate(zip(urls, payloads)):
-                for row in extract_page(
-                    url,
-                    payload,
-                    max_len=max_len,
-                    overlap=overlap,
-                    min_chars=min_chars,
-                    split_doc=split_doc,
-                ):
-                    src_idx.append(i)
-                    c_url.append(row.url)
-                    c_doc_id.append(row.doc_id)
-                    c_idx.append(row.passage_idx)
-                    c_content.append(row.content)
-                    c_start.append(row.char_start)
-                    c_end.append(row.char_end)
-                    c_link.append(row.link)
-                    c_np.append(row.n_passages)
-                    c_err.append(row.error)
-            idx = pa.array(src_idx, type=pa.int64())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(c_url, type=pa.string()),
-                    pc.take(ts_col, idx),
-                    pc.take(bucket_col, idx),
-                    pa.array(c_doc_id, type=pa.string()),
-                    pa.array(c_idx, type=pa.int32()),
-                    pa.array(c_content, type=pa.string()),
-                    pa.array(c_start, type=pa.int64()),
-                    pa.array(c_end, type=pa.int64()),
-                    pa.array(c_link, type=pa.string()),
-                    pa.array(c_np, type=pa.int32()),
-                    pa.array(c_err, type=pa.string()),
-                ],
-                names=[
-                    "url", "warc_ts", "bucket", "doc_id", "passage_idx", "content",
-                    "char_start", "char_end", "link", "n_passages", "error",
-                ],
-            )
-
-    keyed = with_bucket(pages, cfg.n_buckets).select("url", "warc_ts", "html", "bucket")
-    return keyed.mapInArrow(extract_batches, DOCUMENTS_SCHEMA)
+def extract_documents(pages: DataFrame, cfg: ExtractConfig = ExtractConfig()) -> DataFrame:
+    """pages ``(url, warc_ts, html, ...)`` → documents (one row per passage),
+    decoding each HTML/PDF payload with :func:`kernels.page.extract_page`."""
+    return _documents(pages, cfg, "html", extract_page)
 
 
 def bucket_of(n_buckets: int) -> Column:
@@ -258,44 +189,7 @@ def documents_from_text(
 ) -> DataFrame:
     """WET-path twin of :func:`extract_documents`: documents built from the
     pre-extracted ``text`` column (Common-Crawl *.wet conversion payloads,
-    or any corpus whose extraction happened upstream) — same gate/split
-    kernel, same output schema, no HTML/PDF decode.  Map-only like the
-    HTML path; null texts quarantine."""
-    import pandas as pd
-
-    from document_automation_spark.kernels.page import rows_from_text
-
-    max_len, overlap, min_chars, split_doc = (
-        cfg.max_len,
-        cfg.overlap,
-        cfg.min_chars,
-        cfg.split_doc,
-    )
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for batch in it:
-            cols: dict = {name: [] for name in (
-                "url", "warc_ts", "bucket", "doc_id", "passage_idx", "content",
-                "char_start", "char_end", "link", "n_passages", "error")}
-            for url, warc_ts, bucket, text in zip(
-                batch["url"], batch["warc_ts"], batch["bucket"], batch["text"]
-            ):
-                for row in rows_from_text(
-                    url, text, max_len=max_len, overlap=overlap,
-                    min_chars=min_chars, split_doc=split_doc,
-                ):
-                    cols["url"].append(row.url)
-                    cols["warc_ts"].append(warc_ts)
-                    cols["bucket"].append(bucket)
-                    cols["doc_id"].append(row.doc_id)
-                    cols["passage_idx"].append(row.passage_idx)
-                    cols["content"].append(row.content)
-                    cols["char_start"].append(row.char_start)
-                    cols["char_end"].append(row.char_end)
-                    cols["link"].append(row.link)
-                    cols["n_passages"].append(row.n_passages)
-                    cols["error"].append(row.error)
-            yield pd.DataFrame(cols)
-
-    keyed = with_bucket(pages, cfg.n_buckets).select("url", "warc_ts", "text", "bucket")
-    return keyed.mapInPandas(batches, DOCUMENTS_SCHEMA)
+    or any corpus whose extraction happened upstream) — same batch loop,
+    gate/split kernel (:func:`kernels.page.rows_from_text`) and output
+    schema, no HTML/PDF decode.  Null texts quarantine."""
+    return _documents(pages, cfg, "text", rows_from_text)

@@ -53,6 +53,20 @@ from document_automation_spark.operators.extract import (
 # rows it would select on their output
 ROW_LOCAL_BUILDERS = (extract_documents, documents_from_text)
 
+# Parquet writer options for every data table the pipeline writes (the
+# durable extraction output here and each jobs/ingest_pipeline stage), set
+# as WRITER options so the choice is session-independent.  zstd at level 1,
+# measured on the composed ingest (tools/profile_ingest.py, 200k pages,
+# local[32], warm): ~25% faster end-to-end than snappy AND 21% smaller
+# files (373 MB vs 474 MB).  zstd's default level 3 shrinks files another
+# 22% but costs ~15% wall — at 100 TB the data table is re-read only by
+# accounting + curation, so encode speed wins here and long-retention
+# sinks can re-encode at a higher level downstream.
+PARQUET_WRITE_OPTIONS = {
+    "compression": "zstd",
+    "parquet.compression.codec.zstd.level": "1",
+}
+
 MANIFEST_SCHEMA = (
     "bucket int, run_id string, input_fingerprint string, rows_in long, "
     "rows_out long, error_rows long, wall_ms long, committed_at timestamp"
@@ -138,10 +152,7 @@ def run_extraction_job(
     input_fingerprint: str,
     cfg: ExtractConfig = ExtractConfig(),
     fail_buckets_above: int | None = None,
-    write_partitions: int | None = None,
     docs_fn=None,
-    codec: str = "zstd",
-    codec_level: str | None = "1",
 ) -> dict:
     """Run (or resume) the extraction job with per-bucket checkpointing.
 
@@ -162,30 +173,10 @@ def run_extraction_job(
     builder outside :data:`ROW_LOCAL_BUILDERS` still decodes committed
     pages on a resume, because its bucket filter sits above it).
 
-    ``write_partitions`` decouples WRITE parallelism from RESUME
-    granularity (round-2 verdict #5): round 2 repartitioned on ``bucket``
-    alone — exactly one writer task per bucket, so a 1000-executor cluster
-    writing 64 buckets left most of the cluster idle at the sink.  Now each
-    bucket is sub-split into ``k = write_partitions // n_buckets`` salt
-    slices and the shuffle keys on (bucket, salt): ~``write_partitions``
-    concurrent writers, ~``write_partitions`` total files (NOT tasks ×
-    buckets — keying on something url-unique instead would write every
-    bucket from every task, an O(tasks·buckets) small-file explosion:
-    measured 11.2 s vs 2.0 s for the same 20k-page write).  Default =
-    max(n_buckets, 4× cluster parallelism), so clusters with fewer than
-    n_buckets/4 cores keep the one-file-per-bucket layout and bigger ones
-    scale writers linearly.  Dynamic partition overwrite is per-DIRECTORY,
-    so multi-file buckets resume exactly as before (pinned by
-    tests/test_resume.py).
-
-    ``codec``/``codec_level``: parquet compression for the data files, set
-    as WRITER options so the choice is session-independent.  Default zstd
-    level 1 — measured on the composed ingest (tools/profile_ingest.py,
-    200k pages, local[32], warm): ~25% faster end-to-end than snappy AND
-    21% smaller files (373 MB vs 474 MB); zstd's default level 3 shrinks
-    files another 22% but costs ~15% wall — at 100 TB the data table is
-    re-read only by accounting + curation, so encode speed wins here and
-    long-retention sinks can re-encode at a higher level downstream.
+    The data files are written with :data:`PARQUET_WRITE_OPTIONS` by
+    ``max(n_buckets, 4 × defaultParallelism)`` writer tasks; dynamic
+    partition overwrite is per bucket DIRECTORY, so multi-file buckets
+    resume exactly like single-file ones (pinned by tests/test_resume.py).
     """
     run_id = uuid.uuid4().hex[:12]
     already_done = set(done_buckets(spark, output_path, input_fingerprint))
@@ -206,14 +197,20 @@ def run_extraction_job(
         pages, cfg, already_done, fail_buckets_above, docs_fn
     ).withColumn("content_sha", F.unhex(F.sha2(F.col("content"), 256)))
 
-    if write_partitions is None:
-        # 4× parallelism (round 6, was 2×): the writer stage is zstd-
-        # encode CPU-bound and bucket sizes are uneven, so at 2× cores the
-        # encode tail left cores idle — 200k-page durable write measured
-        # 6.6 s → 4.9 s at 4×.  File count equals write_partitions either
-        # way (bounded); at cluster scale n_buckets usually dominates the
-        # max() and nothing changes.
-        write_partitions = max(cfg.n_buckets, spark.sparkContext.defaultParallelism * 4)
+    # Write parallelism is decoupled from resume granularity: each bucket
+    # is sub-split into salt_k salt slices and the shuffle keys on
+    # (bucket, salt), so ~write_partitions writers run at once and write
+    # ~write_partitions files.  One writer per bucket (round 2) left most
+    # of a 1000-executor cluster idle at the sink of a 64-bucket job;
+    # keying on something url-unique instead writes every bucket from
+    # every task, an O(tasks·buckets) small-file explosion (measured
+    # 11.2 s vs 2.0 s for the same 20k-page write).  4× parallelism, not
+    # 2×: the writer stage is zstd-encode CPU-bound and bucket sizes are
+    # uneven, so at 2× the encode tail left cores idle — 200k-page durable
+    # write measured 6.6 s → 4.9 s.  Clusters with fewer
+    # than n_buckets/4 cores keep one file per bucket; at cluster scale
+    # n_buckets usually dominates the max().
+    write_partitions = max(cfg.n_buckets, spark.sparkContext.defaultParallelism * 4)
     salt_k = max(1, write_partitions // cfg.n_buckets)
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -227,14 +224,7 @@ def run_extraction_job(
         .repartition(write_partitions, "bucket", "_salt")
         .drop("_salt")
         .write.mode("overwrite")
-        .option("compression", codec)
-        .options(
-            **(
-                {f"parquet.compression.codec.{codec}.level": codec_level}
-                if codec_level
-                else {}
-            )
-        )
+        .options(**PARQUET_WRITE_OPTIONS)
         .partitionBy("bucket")
         .parquet(data_path(output_path))
     )

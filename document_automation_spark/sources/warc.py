@@ -2,9 +2,9 @@
 
 Spark has no WARC reader; this source distributes WARC files with the
 built-in ``binaryFile`` format (one row per file: path + content bytes)
-and parses records inside an Arrow-batched kernel (kernels/warc.py) — the
-custom-scan pattern from sources/fast_scan.py applied to the format the
-real corpus actually arrives in.
+and parses records inside an Arrow-batched kernel (kernels/warc.py) — a
+custom scan: Spark schedules the files, the Python stage reads the format
+the real corpus actually arrives in.
 
 Output schema = the standard pages table (url, warc_ts, html, text, lang)
 — ``text``/``lang`` null at ingest — so ``operators.extract`` runs on WARC
@@ -14,8 +14,8 @@ input unchanged.  Per-file parse errors surface as a quarantine row with
 Scale note: ``binaryFile`` materializes a whole file per row — right for
 CC-style ~1 GB WARC segments on executors with several GB of memory, and
 the reason real deployments keep WARC segments bounded.  For larger files,
-switch the unit to (file, byte-range) like fast_scan's row-group units and
-seek inside the kernel (WARC records are self-framing, so a range scan
+switch the unit to (file, byte-range) work units and seek inside the
+kernel (WARC records are self-framing, so a range scan
 resynchronizes on the next ``WARC/`` marker).
 """
 

@@ -9,32 +9,51 @@ from __future__ import annotations
 
 import pytest
 
-from document_automation_spark.kernels.page import extract_page
+from document_automation_spark.kernels.page import extract_page, rows_from_text
 from document_automation_spark.operators.extract import (
     ExtractConfig,
+    documents_from_text,
     extract_documents,
     passage_counts,
 )
-from document_automation_spark.sources.pages import gen_page, pages_df
+from document_automation_spark.sources.pages import PAGES_SCHEMA, gen_page, pages_df
 
 N_PAGES = 300
 SEED = 42
 
+# one page with neither payload: both paths must emit its quarantine row
+NULL_PAGE = {**gen_page(N_PAGES, SEED), "html": None, "text": None}
+PAGES = [gen_page(i, SEED) for i in range(N_PAGES)] + [NULL_PAGE]
+PAGE_BY_URL = {page["url"]: page for page in PAGES}
+
+# (Spark plan builder, per-row oracle kernel, payload column): the HTML/PDF
+# path and the WET text path run through the same batch loop
+PATHS = {
+    "html": (extract_documents, extract_page, "html"),
+    "text": (documents_from_text, rows_from_text, "text"),
+}
+
 
 @pytest.fixture(scope="module")
-def oracle_rows():
+def path(request):
+    """The HTML path, unless a test parametrizes it indirectly."""
+    return PATHS[getattr(request, "param", "html")]
+
+
+@pytest.fixture(scope="module")
+def oracle_rows(path):
     """Pure-Python single-process reference run over the same input."""
-    rows = {}
-    for i in range(N_PAGES):
-        page = gen_page(i, SEED)
-        rows[page["url"]] = extract_page(page["url"], page["html"])
-    return rows
+    _, kernel, payload = path
+    return {page["url"]: kernel(page["url"], page[payload]) for page in PAGES}
 
 
 @pytest.fixture(scope="module")
-def spark_rows(spark):
-    df = extract_documents(pages_df(spark, N_PAGES, SEED), ExtractConfig(n_buckets=8))
-    collected = df.collect()
+def spark_rows(spark, path):
+    build, _, _ = path
+    pages = pages_df(spark, N_PAGES, SEED).unionByName(
+        spark.createDataFrame([NULL_PAGE], PAGES_SCHEMA)
+    )
+    collected = build(pages, ExtractConfig(n_buckets=8)).collect()
     by_url = {}
     for row in collected:
         by_url.setdefault(row.url, []).append(row)
@@ -43,11 +62,17 @@ def spark_rows(spark):
     return by_url
 
 
+both_paths = pytest.mark.parametrize("path", list(PATHS), indirect=True)
+
+
+@both_paths
 def test_same_url_set(oracle_rows, spark_rows):
     oracle_urls = {u for u, rows in oracle_rows.items() if rows}
+    assert NULL_PAGE["url"] in oracle_urls  # its quarantine row
     assert set(spark_rows) == oracle_urls
 
 
+@both_paths
 def test_byte_identical_content_per_url(oracle_rows, spark_rows):
     for url, got in spark_rows.items():
         expected = oracle_rows[url]
@@ -57,6 +82,17 @@ def test_byte_identical_content_per_url(oracle_rows, spark_rows):
             assert g.char_start == e.char_start and g.char_end == e.char_end, url
             assert g.doc_id == e.doc_id, url
             assert g.link == e.link and g.n_passages == e.n_passages, url
+            assert g.error == e.error, url
+
+
+def test_batch_without_output_rows(spark):
+    """Pages that all fall under the gate make a batch with no output rows;
+    the builders must emit nothing for it instead of failing the task."""
+    short = [{**gen_page(i, SEED), "html": b"<p>hi</p>", "text": "hi"} for i in range(3)]
+    pages = spark.createDataFrame(short, PAGES_SCHEMA)
+    for build, kernel, payload in PATHS.values():
+        assert all(kernel(page["url"], page[payload]) == [] for page in short)
+        assert build(pages, ExtractConfig(n_buckets=2)).collect() == []
 
 
 def test_quarantine_rows_present_not_fatal(spark_rows):
@@ -66,11 +102,7 @@ def test_quarantine_rows_present_not_fatal(spark_rows):
 
 
 def test_pdf_payloads_extracted(oracle_rows, spark_rows):
-    pdf_urls = [
-        u
-        for u in spark_rows
-        if gen_page(int(u.rsplit("/", 1)[-1].split(".")[0]), SEED)["html"][:5] == b"%PDF-"
-    ]
+    pdf_urls = [u for u in spark_rows if (PAGE_BY_URL[u]["html"] or b"")[:5] == b"%PDF-"]
     assert pdf_urls, "fixture guarantees ~5% PDF payloads"
     for u in pdf_urls:
         assert all(r.error is None for r in spark_rows[u])
@@ -114,19 +146,3 @@ def test_parallelism_invariance(spark):
     )
     assert rows_a == rows_b
 
-
-def test_arrow_variant_byte_identical(spark):
-    """extract_documents_arrow (mapInArrow) must emit exactly the rows of
-    the default mapInPandas path — it's the swap-in integration point."""
-    from document_automation_spark.operators.extract import (
-        ExtractConfig,
-        extract_documents,
-        extract_documents_arrow,
-    )
-    from document_automation_spark.sources.pages import pages_df
-
-    pages = pages_df(spark, 400)
-    cfg = ExtractConfig(n_buckets=8)
-    a = sorted(map(tuple, extract_documents(pages, cfg).collect()))
-    b = sorted(map(tuple, extract_documents_arrow(pages, cfg).collect()))
-    assert a == b

@@ -6,8 +6,11 @@ must hold beyond sf0.1.  This tool builds a K×-row copy of an sf dir with
 DuckDB so the frozen bench can be pointed at it
 (``SPARK_GRAFT_SF_DIR=<out>``):
 
-* fact tables replicate K× with key columns offset per replica so join
-  cardinalities scale linearly (no accidental key collapse);
+* fact tables replicate K× with key columns offset by ``max(key)+1`` per
+  replica so join cardinalities scale linearly (no accidental key
+  collapse).  Every key domain must be dense (exactly ``0..max``) and
+  every foreign key must lie inside its domain; otherwise the tool exits
+  non-zero instead of writing colliding or gapped replicas;
 * ``documents.text`` gets a per-replica suffix token (`` rK``) so the
   dedup/LSH family sees K near-duplicate variants per original — dup
   STRUCTURE scales with the corpus instead of every replica being
@@ -50,9 +53,35 @@ def main() -> None:
             f"SELECT count(*) FROM read_parquet('{src}/{table}.parquet')"
         ).fetchone()[0]
 
-    n_docs, n_ev, n_ord, n_cust, n_vec = (
-        n("documents"), n("events"), n("orders"), n("customer"), n("embeddings")
+    def key_range(table: str, col: str) -> tuple:
+        return con.sql(
+            f"SELECT min({col}), max({col}), count(DISTINCT {col}) "
+            f"FROM read_parquet('{src}/{table}.parquet')"
+        ).fetchone()
+
+    def span(table: str, col: str) -> int:
+        """Replica offset of a key domain: max(key)+1, for dense keys only."""
+        lo, hi, distinct = key_range(table, col)
+        if lo != 0 or distinct != hi + 1:
+            sys.exit(
+                f"make_synth_sf: {table}.{col} is not dense 0..max "
+                f"(min {lo}, max {hi}, {distinct} distinct); refusing to replicate"
+            )
+        return hi + 1
+
+    n_docs, n_ev, n_user, n_ord, n_cust, n_vec = (
+        span("documents", "doc_id"), span("events", "event_id"),
+        span("events", "user_id"), span("orders", "o_orderkey"),
+        span("customer", "c_custkey"), span("embeddings", "vec_id"),
     )
+    # foreign keys shift with their domain's offset, so they must stay in it
+    for table, col, n_dom in (("lineitem", "l_orderkey", n_ord), ("orders", "o_custkey", n_cust)):
+        lo, hi, _ = key_range(table, col)
+        if lo < 0 or hi >= n_dom:
+            sys.exit(
+                f"make_synth_sf: {table}.{col} spans {lo}..{hi}, outside its "
+                f"key domain 0..{n_dom - 1}; its replicas would collide"
+            )
     copies = [
         (
             "documents",
@@ -67,7 +96,7 @@ def main() -> None:
             "events",
             f"""SELECT event_id + k*{n_ev} AS event_id,
                    ts + INTERVAL (k) SECOND AS ts,
-                   user_id + k*10000 AS user_id, event_type, value, props""",
+                   user_id + k*{n_user} AS user_id, event_type, value, props""",
         ),
         (
             "lineitem",

@@ -1,10 +1,12 @@
 """Phase-level profile of the composed ingest pipeline (round-4 perf work).
 
 Replicates jobs/ingest_pipeline.run_ingest_pipeline with a timer around each
-phase so the durable-path tuning (codec, write partitioning, curation plan
-shape) is measured, not guessed.
+phase so the durable-path tuning (write partitioning, curation plan shape)
+is measured, not guessed.  Every write uses the production writer options,
+``plans.checkpoint.PARQUET_WRITE_OPTIONS``; to A/B a codec, edit that
+constant, which moves every writer the pipeline runs at once.
 
-    python tools/profile_ingest.py [n_pages] [cpus] [codec]
+    python tools/profile_ingest.py [n_pages] [cpus]
 """
 
 from __future__ import annotations
@@ -21,14 +23,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
     cpus = int(sys.argv[2]) if len(sys.argv) > 2 else 32
-    codec = sys.argv[3] if len(sys.argv) > 3 else "snappy"
-
-    from pyspark.sql import functions as F
 
     from document_automation_spark.operators.curate import curate_extracted
     from document_automation_spark.operators.extract import ExtractConfig
     from document_automation_spark.operators.urls import dedup_by_url
     from document_automation_spark.plans.checkpoint import (
+        PARQUET_WRITE_OPTIONS,
         read_output,
         run_extraction_job,
     )
@@ -42,7 +42,6 @@ def main() -> None:
         extra_conf={
             "spark.sql.files.maxPartitionBytes": "4m",
             "spark.sql.files.openCostInBytes": "262144",
-            "spark.sql.parquet.compression.codec": codec,
         },
     )
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -57,8 +56,6 @@ def main() -> None:
     pages = spark.read.parquet(pages_path)
     cfg = ExtractConfig(n_buckets=max(64, cpus * 2))
 
-    from document_automation_spark.jobs.ingest_pipeline import run_ingest_pipeline
-
     reps = int(os.environ.get("PROFILE_INGEST_REPS", "2"))
     for rep in range(reps):
         out = os.path.join(
@@ -68,18 +65,12 @@ def main() -> None:
 
         t_all = time.time()
 
-        # codec flows through to the WRITERS (writer options override the
-        # session conf, so setting only the conf would silently bench the
-        # zstd-1 defaults no matter what was asked)
-        codec_level = "1" if codec == "zstd" else None
         t0 = time.time()
         url_cache = []
         deduped = dedup_by_url(
             pages, shuffle_payloads=False, cache_registry=url_cache
         ).drop("canonical_url")
-        summary = run_extraction_job(
-            spark, deduped, out, "profile", cfg, codec=codec, codec_level=codec_level
-        )
+        summary = run_extraction_job(spark, deduped, out, "profile", cfg)
         for h in url_cache:
             h.unpersist()
         t_extract = time.time() - t0
@@ -88,12 +79,9 @@ def main() -> None:
         curated, collect_stats = curate_extracted(raw_docs)
 
         t0 = time.time()
-        writer = curated.write.mode("overwrite").option("compression", codec)
-        if codec_level:
-            writer = writer.option(
-                f"parquet.compression.codec.{codec}.level", codec_level
-            )
-        writer.parquet(os.path.join(out, "curated"))
+        curated.write.mode("overwrite").options(**PARQUET_WRITE_OPTIONS).parquet(
+            os.path.join(out, "curated")
+        )
         t_curated_write = time.time() - t0
 
         t0 = time.time()
@@ -110,7 +98,7 @@ def main() -> None:
                 "rep": rep,
                 "n_pages": n_pages,
                 "cpus": cpus,
-                "codec": codec,
+                "writer": PARQUET_WRITE_OPTIONS,
                 "dedup_plus_durable_extract_s": round(t_extract, 2),
                 "curate_stats_s": round(t_stats, 2),
                 "curated_write_s": round(t_curated_write, 2),
