@@ -540,18 +540,24 @@ def run_ingest_pipeline(
                 "deduped": n_losers,
                 "rows_out": rows_out,
             }
-            # persist the gate config so read_curated applies the SAME policy
-            spark.createDataFrame(
-                [(min_chars, ",".join(scripts) if scripts else None)],
-                "min_chars int, scripts string",
-            ).repartition(1).write.mode("overwrite").json(
+            # persist the gate config so read_curated applies the SAME policy;
+            # both one-row sidecars are JVM literals (a createDataFrame of a
+            # local list would run a Python-worker job per write)
+            one_row = spark.range(1, numPartitions=1)
+            one_row.select(
+                F.lit(min_chars).cast("int").alias("min_chars"),
+                F.lit(",".join(scripts) if scripts else None)
+                .cast("string")
+                .alias("scripts"),
+            ).write.mode("overwrite").json(
                 os.path.join(output_path, "_curation_config")
             )
-            spark.createDataFrame(
-                [tuple(stats_row[k] for k in
-                       ("rows_in", "quarantined", "gated", "deduped", "rows_out"))],
-                "rows_in long, quarantined long, gated long, deduped long, rows_out long",
-            ).repartition(1).write.mode("overwrite").parquet(
+            one_row.select(
+                *(
+                    F.lit(stats_row[k]).cast("long").alias(k)
+                    for k in ("rows_in", "quarantined", "gated", "deduped", "rows_out")
+                )
+            ).write.mode("overwrite").parquet(
                 os.path.join(output_path, "_curation_stats")
             )
             summary = {

@@ -10,17 +10,19 @@ writers:
   (the column the extraction operator already emits) and written with
   dynamic partition overwrite, so re-processing a bucket REPLACES its
   files — write idempotency;
-* after the data commit, one manifest row per completed bucket is appended:
+* after the data commit, one manifest row per bucket the run had pending
+  is appended — buckets that got no output rows (no pages, or every page
+  under the gate) included, with zero counters:
   ``(bucket, run_id, input_fingerprint, rows_in, rows_out, error_rows,
   wall_ms, committed_at)`` — lineage + counter metrics required by the
   north rule;
-* on resume, pending work = input buckets NOT IN the done manifest
-  buckets (for the same input fingerprint), a literal ``isin`` filter —
-  below the Python kernel for row-local plan builders, so committed pages
-  are never decoded again (:func:`pending_documents`); a job whose every
-  bucket is committed returns before building any plan.  A crash between
-  data write and manifest append re-runs that bucket; overwrite makes
-  that harmless.
+* on resume, pending work = the buckets of ``range(n_buckets)`` NOT IN
+  the done manifest buckets (for the same input fingerprint), a literal
+  ``isin`` filter — below the Python kernel for row-local plan builders,
+  so committed pages are never decoded again (:func:`pending_documents`);
+  a job whose every bucket is committed returns before building any plan.
+  A crash between data write and manifest append re-runs that bucket;
+  overwrite makes that harmless.
 
 On Iceberg the manifest append and data commit would share a transaction
 (snapshot id recorded in the manifest); with plain parquet the
@@ -113,13 +115,11 @@ def done_buckets(spark: SparkSession, output_path: str, input_fingerprint: str) 
 def pending_documents(
     pages: DataFrame,
     cfg: ExtractConfig,
-    done: Collection[int],
-    fail_buckets_above: int | None = None,
+    pending: Collection[int],
     docs_fn=None,
 ) -> DataFrame:
-    """The documents plan for the buckets a run still has to write: those
-    not in ``done`` and, if the crash hook ``fail_buckets_above`` is set,
-    below it.
+    """The documents plan restricted to the ``pending`` buckets, the ones a
+    run still has to write (no filter when they cover ``range(n_buckets)``).
 
     For the :data:`ROW_LOCAL_BUILDERS` the predicate is a JVM filter on
     ``pages``, built on the same :func:`bucket_of` expression the builder
@@ -130,19 +130,11 @@ def pending_documents(
     buckets, so feeding it only the pending pages would keep duplicates
     whose winner sits in a committed bucket."""
     build = docs_fn or extract_documents
-    row_local = build in ROW_LOCAL_BUILDERS
-    bucket = bucket_of(cfg.n_buckets) if row_local else F.col("bucket")
-    pending = None
-    if done:
-        pending = ~bucket.isin(sorted(done))
-    if fail_buckets_above is not None:
-        below = bucket < fail_buckets_above
-        pending = below if pending is None else pending & below
-    if pending is None:
+    if set(pending) >= set(range(cfg.n_buckets)):
         return build(pages, cfg)
-    if row_local:
-        return build(pages.filter(pending), cfg)
-    return build(pages, cfg).filter(pending)
+    if build in ROW_LOCAL_BUILDERS:
+        return build(pages.filter(bucket_of(cfg.n_buckets).isin(sorted(pending))), cfg)
+    return build(pages, cfg).filter(F.col("bucket").isin(sorted(pending)))
 
 
 def run_extraction_job(
@@ -161,8 +153,10 @@ def run_extraction_job(
     ``input_fingerprint`` it returns after the manifest read: no write, no
     stats scan, no manifest append.  ``fail_buckets_above`` is a test
     hook: buckets with id >= the value are left unwritten, as if the job
-    died before reaching them.  Committed and hooked-out buckets are
-    dropped by :func:`pending_documents`.
+    died before reaching them.  The pending buckets — neither committed
+    nor hooked out — are computed once on the driver; they select the
+    documents (:func:`pending_documents`) and each gets a manifest row,
+    so ``buckets_processed`` is their count.
 
     ``docs_fn`` is the documents-plan builder, ``(pages, cfg) ->
     DOCUMENTS_SCHEMA DataFrame`` — default :func:`extract_documents` (the
@@ -174,18 +168,27 @@ def run_extraction_job(
     pages on a resume, because its bucket filter sits above it).
 
     The data files are written with :data:`PARQUET_WRITE_OPTIONS` by
-    ``max(n_buckets, 4 × defaultParallelism)`` writer tasks; dynamic
+    ``4 × defaultParallelism`` writer tasks; each (bucket, salt) slice goes
+    to one task, which writes one file per bucket it holds.  Dynamic
     partition overwrite is per bucket DIRECTORY, so multi-file buckets
-    resume exactly like single-file ones (pinned by tests/test_resume.py).
+    resume exactly like single-file ones.  The layout
+    and task count are pinned by tests/test_resume.py.
     """
     run_id = uuid.uuid4().hex[:12]
     already_done = set(done_buckets(spark, output_path, input_fingerprint))
-    if already_done >= set(range(cfg.n_buckets)):
-        return {
-            "run_id": run_id,
-            "buckets_processed": 0,
-            "buckets_skipped": len(already_done),
-        }
+    pending = [
+        b
+        for b in range(cfg.n_buckets)
+        if b not in already_done
+        and (fail_buckets_above is None or b < fail_buckets_above)
+    ]
+    summary = {
+        "run_id": run_id,
+        "buckets_processed": len(pending),
+        "buckets_skipped": len(already_done),
+    }
+    if not pending:
+        return summary
 
     # content_sha (32-byte binary) rides the data files: computed here as a
     # JVM expression during the one pass that already has content in hand,
@@ -193,34 +196,39 @@ def run_extraction_job(
     # (content_sha, url, passage_idx) scan instead of re-reading and
     # re-hashing every content byte — at 100 TB that is the difference
     # between a metadata-sized curation pass and a full-corpus re-scan.
-    docs = pending_documents(
-        pages, cfg, already_done, fail_buckets_above, docs_fn
-    ).withColumn("content_sha", F.unhex(F.sha2(F.col("content"), 256)))
+    docs = pending_documents(pages, cfg, pending, docs_fn).withColumn(
+        "content_sha", F.unhex(F.sha2(F.col("content"), 256))
+    )
 
-    # Write parallelism is decoupled from resume granularity: each bucket
-    # is sub-split into salt_k salt slices and the shuffle keys on
-    # (bucket, salt), so ~write_partitions writers run at once and write
-    # ~write_partitions files.  One writer per bucket (round 2) left most
-    # of a 1000-executor cluster idle at the sink of a 64-bucket job;
-    # keying on something url-unique instead writes every bucket from
-    # every task, an O(tasks·buckets) small-file explosion (measured
-    # 11.2 s vs 2.0 s for the same 20k-page write).  4× parallelism, not
-    # 2×: the writer stage is zstd-encode CPU-bound and bucket sizes are
-    # uneven, so at 2× the encode tail left cores idle — 200k-page durable
-    # write measured 6.6 s → 4.9 s.  Clusters with fewer
-    # than n_buckets/4 cores keep one file per bucket; at cluster scale
-    # n_buckets usually dominates the max().
-    write_partitions = max(cfg.n_buckets, spark.sparkContext.defaultParallelism * 4)
+    # Writer tasks follow the cluster, not the bucket count: 4 tasks per
+    # core, and each bucket is sub-split into salt_k slices so the shuffle
+    # on (bucket, salt) keeps them all busy when there are fewer buckets
+    # than tasks.  With more buckets than tasks each task writes several
+    # whole buckets (one file each): sizing the stage by bucket count left
+    # 16 tasks per core on a 64-bucket job, ~37% of them empty from hash
+    # collisions (4k pages, 4 cores: 64 → 16 writer tasks, together with
+    # the JVM-only manifest append below, measured 1183 → 1483 pages/s end
+    # to end).  One writer per bucket (round 2) left most of a
+    # 1000-executor cluster idle at the sink; keying on something
+    # url-unique instead writes every bucket from every task, an
+    # O(tasks·buckets) small-file explosion (measured 11.2 s vs 2.0 s for
+    # the same 20k-page write).  4×, not 2×: the writer stage is
+    # zstd-encode CPU-bound and bucket sizes are uneven, so at 2× the
+    # encode tail left cores idle — 200k-page durable write measured
+    # 6.6 s → 4.9 s.
+    write_partitions = spark.sparkContext.defaultParallelism * 4
     salt_k = max(1, write_partitions // cfg.n_buckets)
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     started = time.time()
     (
         # extraction is map-only; the shuffle happens HERE, on the extracted
-        # rows (≪ raw payload size).  (bucket, salt) sub-splits each bucket
-        # across salt_k writer tasks; partitionBy routes the slices back to
-        # one directory per bucket for per-bucket overwrite/resume.
-        docs.withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(salt_k)))
+        # rows (≪ raw payload size).  partitionBy routes the slices back to
+        # one directory per bucket for per-bucket overwrite/resume.  The
+        # salt is a Murmur3 hash, independent of the bucket's xxhash64:
+        # pmod(xxhash64(url), salt_k) is fixed by the bucket whenever salt_k
+        # divides n_buckets, so it would never split one.
+        docs.withColumn("_salt", F.pmod(F.hash("url"), F.lit(salt_k)))
         .repartition(write_partitions, "bucket", "_salt")
         .drop("_salt")
         .write.mode("overwrite")
@@ -230,30 +238,45 @@ def run_extraction_job(
     )
     wall_ms = int((time.time() - started) * 1000)
 
-    # Post-commit accounting per bucket: a second scan of what was just
-    # written, but PRUNED to the two tiny columns the counters need (the
-    # bucket partition column is discovered from the directory layout).
-    # Reading the full schema here cost ~14 s of a 24 s sf0.1 job — the
-    # cold re-read of the wide `content` column; the pruned read is ~1 s.
-    # (Persisting the extracted rows through the write to skip the re-scan
-    # entirely was measured WORSE: caching the wide rows inflated the
-    # write phase 14 s → 32 s.)
-    written = spark.read.schema("passage_idx int, error string").parquet(
-        data_path(output_path)
-    )
-    if already_done:
-        written = written.filter(~F.col("bucket").isin(sorted(already_done)))
-    stats = (
-        written.groupBy("bucket")
-        .agg(
+    # Post-commit accounting, one JVM aggregate appended straight to the
+    # manifest: a second scan of what was just written, PRUNED to the
+    # bucket partition column and the two tiny columns the counters need
+    # (reading the full schema cost ~14 s of a 24 s sf0.1 job — the cold
+    # re-read of the wide `content` column; the pruned read is ~1 s), plus
+    # one zero row per pending bucket so a bucket that wrote nothing is
+    # committed too.  (Persisting the extracted rows through the write to
+    # skip the re-scan was measured WORSE: caching the wide rows inflated
+    # the write phase 14 s → 32 s.)  No collect and no driver-built frame:
+    # a createDataFrame of local rows runs its own Python-worker job.
+    error = F.col("error").isNotNull()
+    counted = (
+        spark.read.schema("passage_idx int, error string, bucket int")
+        .parquet(data_path(output_path))
+        .filter(F.col("bucket").isin(pending))
+        .select(
+            "bucket",
             # urls counted without DISTINCT: passage_idx==0 occurs exactly
             # once per extracted url, error rows once per failed url
-            F.sum(
-                F.when((F.col("passage_idx") == 0) | F.col("error").isNotNull(), 1).otherwise(0)
-            ).alias("rows_in"),
-            F.sum(F.when(F.col("error").isNull(), 1).otherwise(0)).alias("rows_out"),
-            F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("error_rows"),
+            ((F.col("passage_idx") == 0) | error).cast("long").alias("rows_in"),
+            (~error).cast("long").alias("rows_out"),
+            error.cast("long").alias("error_rows"),
         )
+    )
+    zero = F.lit(0).cast("long")
+    zeros = (
+        spark.range(0, cfg.n_buckets, 1, 1)
+        .filter(F.col("id").isin(pending))
+        .select(
+            F.col("id").cast("int").alias("bucket"),
+            zero.alias("rows_in"),
+            zero.alias("rows_out"),
+            zero.alias("error_rows"),
+        )
+    )
+    (
+        counted.unionByName(zeros)
+        .groupBy("bucket")
+        .agg(*(F.sum(c).alias(c) for c in ("rows_in", "rows_out", "error_rows")))
         .select(
             "bucket",
             F.lit(run_id).alias("run_id"),
@@ -261,30 +284,14 @@ def run_extraction_job(
             "rows_in",
             "rows_out",
             "error_rows",
-            F.lit(wall_ms).alias("wall_ms"),
+            F.lit(wall_ms).cast("long").alias("wall_ms"),
             F.current_timestamp().alias("committed_at"),
         )
+        .coalesce(1)
+        .write.mode("append")
+        .parquet(manifest_path(output_path))
     )
-    # one materialization: the stats aggregate is O(n_buckets) rows, so
-    # collect once and append from the local copy — writing the plan and
-    # then count()ing it would re-run the post-commit scan+agg twice
-    # (measured ~0.7 s of the 3.4 s durable job at 20k pages / 8 cores)
-    stat_rows = stats.collect()
-    # repartition(1), NOT coalesce(1): a parallelize()-backed local frame
-    # coalesced without a shuffle chains its ~defaultParallelism python
-    # partitions SERIALLY through one task (each a worker round-trip —
-    # measured 5.4 s for 64 manifest rows on local[32]); the one-row
-    # shuffle runs them in parallel and costs ~0.5 s.
-    spark.createDataFrame(stat_rows, stats.schema).repartition(1).write.mode(
-        "append"
-    ).parquet(manifest_path(output_path))
-
-    processed = len(stat_rows)
-    return {
-        "run_id": run_id,
-        "buckets_processed": processed,
-        "buckets_skipped": len(already_done),
-    }
+    return summary
 
 
 def read_output(

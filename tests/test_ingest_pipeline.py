@@ -266,8 +266,17 @@ class TestIngestPipeline:
             spark, pages, out_view, "fp", cfg=ExtractConfig(n_buckets=4),
             min_chars=5, curated_mode="view",
         )
-        for k in ("rows_in", "quarantined", "gated", "deduped", "rows_out"):
+        counters = ("rows_in", "quarantined", "gated", "deduped", "rows_out")
+        for k in counters:
             assert s_copy[k] == s_view[k], k
+        # the one-row sidecars read back the run's values and types
+        stats = spark.read.parquet(os.path.join(out_view, "_curation_stats"))
+        assert stats.dtypes == [(k, "bigint") for k in counters]
+        assert [r.asDict() for r in stats.collect()] == [
+            {k: s_view[k] for k in counters}
+        ]
+        config = spark.read.json(os.path.join(out_view, "_curation_config"))
+        assert [r.asDict() for r in config.collect()] == [{"min_chars": 5}]
         copy_rows = {
             (r.url, r.passage_idx, r.content)
             for r in spark.read.parquet(s_copy["curated_path"]).collect()

@@ -22,8 +22,7 @@ from document_automation_spark.plans.checkpoint import (
     read_output,
     run_extraction_job,
 )
-from document_automation_spark.plans.metrics import observe_extraction
-from document_automation_spark.sources.pages import pages_df
+from document_automation_spark.sources.pages import PAGES_SCHEMA, gen_page, pages_df
 
 N_PAGES = 120
 FP = "pages-seed42-n120"
@@ -108,17 +107,6 @@ def test_manifest_lineage_counters(spark, out_dir):
     assert sum(r.rows_out + r.error_rows for r in rows) == total_rows
 
 
-def test_observation_metrics(spark):
-    docs = extract_documents(pages_df(spark, 80, partitions=2), ExtractConfig(n_buckets=4))
-    observed, observation = observe_extraction(docs)
-    total = observed.count()
-    got = observation.get
-    assert got["rows_total"] == total
-    assert got["urls_seen"] > 0
-    assert got["error_rows"] >= 0
-    assert got["passages_total"] > 0
-
-
 def test_changed_input_fingerprint_reprocesses(spark, out_dir):
     pages = pages_df(spark, 60, partitions=2)
     cfg = ExtractConfig(n_buckets=4)
@@ -150,6 +138,81 @@ def test_resume_of_committed_output_only_reads_manifest(spark, out_dir):
     assert again["buckets_skipped"] == 8
     assert len(jobs) <= 1
     assert _files_under(manifest_path(out_dir)) == manifest_files
+
+
+def test_buckets_without_output_rows_are_committed(spark, out_dir):
+    """A bucket that writes no rows — no pages, or every page under the
+    gate — is still committed, so a re-submit of the finished job is a
+    manifest read and not a rebuild that appends an empty manifest."""
+    pages = spark.createDataFrame(
+        [
+            {**gen_page(i), "text": "hi" if i % 2 else "lorem ipsum " * 60}
+            for i in range(6)
+        ],
+        PAGES_SCHEMA,
+    )
+    cfg = ExtractConfig(n_buckets=8)
+    first = run_extraction_job(
+        spark, pages, out_dir, FP, cfg, docs_fn=documents_from_text
+    )
+    assert first["buckets_processed"] == 8
+    assert done_buckets(spark, out_dir, FP) == list(range(8))
+    manifest = read_manifest(spark, out_dir).collect()
+    assert sum(r.rows_in for r in manifest) == 3  # the gated pages emit nothing
+    assert sum(r.rows_out + r.error_rows for r in manifest) == (
+        read_output(spark, out_dir).count()
+    )
+    manifest_files = _files_under(manifest_path(out_dir))
+
+    with jobs_started(spark) as jobs:
+        again = run_extraction_job(
+            spark, pages, out_dir, FP, cfg, docs_fn=documents_from_text
+        )
+    assert again["buckets_processed"] == 0
+    assert again["buckets_skipped"] == 8
+    assert len(jobs) <= 1
+    assert _files_under(manifest_path(out_dir)) == manifest_files
+
+
+def _data_files_per_bucket(out_dir):
+    data = os.path.join(out_dir, "data")
+    return {
+        d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(data, d)))
+        for d in os.listdir(data)
+        if d.startswith("bucket=")
+    }
+
+
+def test_salt_splits_buckets_across_writer_tasks(spark, out_dir):
+    """4 × 4 cores = 16 writer tasks for 8 buckets: salt_k = 2, so each
+    bucket is written as (up to) two slices by different tasks."""
+    pages = pages_df(spark, N_PAGES, partitions=4)
+    run_extraction_job(spark, pages, out_dir, FP, ExtractConfig(n_buckets=8))
+    files = _data_files_per_bucket(out_dir)
+    assert len(files) == 8
+    assert all(1 <= n <= 2 for n in files.values()), files
+    # two slices of one bucket may hash to the same task; most must not
+    assert sum(n == 2 for n in files.values()) >= 6, files
+
+
+def test_writer_tasks_follow_the_cores(spark, out_dir):
+    """32 buckets on 4 cores: the write stage runs 16 tasks (not one per
+    bucket), each writing whole buckets, one file each; the fresh call
+    runs four jobs — extraction, write, and the manifest aggregate's two."""
+    pages = pages_df(spark, N_PAGES, partitions=4)
+    with jobs_started(spark) as jobs:
+        run_extraction_job(spark, pages, out_dir, FP, ExtractConfig(n_buckets=32))
+    assert len(jobs) <= 4
+    # the first job with two stages is the write: it re-uses the
+    # extraction's shuffle map stage and runs the writer stage after it
+    tracker = spark.sparkContext.statusTracker()
+    write_job = next(
+        info for info in map(tracker.getJobInfo, sorted(jobs))
+        if len(info.stageIds) > 1
+    )
+    assert tracker.getStageInfo(max(write_job.stageIds)).numTasks == 16
+    files = _data_files_per_bucket(out_dir)
+    assert files and set(files.values()) == {1}
 
 
 def _plan_lines(df):
@@ -188,7 +251,8 @@ def test_partial_resume_filters_buckets_below_python_stage(
     done = done_buckets(spark, out_dir, FP)
     assert done and max(done) < 4
 
-    lines = _plan_lines(pending_documents(pages, cfg, done, docs_fn=docs_fn))
+    pending = [b for b in range(cfg.n_buckets) if b not in done]
+    lines = _plan_lines(pending_documents(pages, cfg, pending, docs_fn=docs_fn))
     python_stage = next(i for i, ln in enumerate(lines) if "MapInPandas" in ln)
     bucket_filter = next(
         i for i, ln in enumerate(lines)
