@@ -10,6 +10,10 @@ writers:
   (the column the extraction operator already emits) and written with
   dynamic partition overwrite, so re-processing a bucket REPLACES its
   files — write idempotency;
+* before the data write, the directories of the pending buckets are
+  deleted (Hadoop FS calls, no Spark job): dynamic overwrite replaces
+  only the buckets that get rows, so a pending bucket that writes none
+  would otherwise keep an earlier run's files;
 * after the data commit, one manifest row per bucket the run had pending
   is appended — buckets that got no output rows (no pages, or every page
   under the gate) included, with zero counters:
@@ -33,6 +37,7 @@ is always small enough to inline as a literal list.
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 import uuid
@@ -83,11 +88,42 @@ def data_path(output_path: str) -> str:
     return os.path.join(output_path, "data")
 
 
+@functools.cache
+def _path_class(jvm):
+    # each package step of the lookup is one Py4J round trip: ~3.4 ms of a
+    # ~90 ms re-submit of a finished job, every call, when not cached
+    return jvm.org.apache.hadoop.fs.Path
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path``: metadata calls on the driver
+    that start no Spark job."""
+    jpath = _path_class(spark.sparkContext._jvm)(path)
+    return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jpath
+
+
+def _buckets_glob(output_path: str, buckets: Collection[int]) -> str:
+    """One Hadoop glob over the ``bucket=`` directories of ``buckets``;
+    it matches only the directories that exist."""
+    return os.path.join(
+        data_path(output_path), "bucket={" + ",".join(map(str, buckets)) + "}"
+    )
+
+
+def _clear_buckets(spark: SparkSession, output_path: str, buckets: Collection[int]) -> None:
+    """Deletes the data directories of ``buckets``: one listing of the
+    data directory, then one delete per bucket that has a directory."""
+    fs, pattern = _hadoop_path(spark, _buckets_glob(output_path, buckets))
+    for status in fs.globStatus(pattern) or []:
+        fs.delete(status.getPath(), True)
+
+
 def _manifest_or_none(spark: SparkSession, output_path: str) -> DataFrame | None:
-    try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path(output_path))
-    except AnalysisException:  # first run: no manifest yet
+    path = manifest_path(output_path)
+    fs, jpath = _hadoop_path(spark, path)
+    if not fs.exists(jpath):  # first run: no manifest yet
         return None
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
 
 
 def read_manifest(spark: SparkSession, output_path: str) -> DataFrame:
@@ -155,8 +191,9 @@ def run_extraction_job(
     hook: buckets with id >= the value are left unwritten, as if the job
     died before reaching them.  The pending buckets — neither committed
     nor hooked out — are computed once on the driver; they select the
-    documents (:func:`pending_documents`) and each gets a manifest row,
-    so ``buckets_processed`` is their count.
+    documents (:func:`pending_documents`), their old directories are
+    deleted before the write, and each gets a manifest row, so
+    ``buckets_processed`` is their count.
 
     ``docs_fn`` is the documents-plan builder, ``(pages, cfg) ->
     DOCUMENTS_SCHEMA DataFrame`` — default :func:`extract_documents` (the
@@ -219,6 +256,7 @@ def run_extraction_job(
     write_partitions = spark.sparkContext.defaultParallelism * 4
     salt_k = max(1, write_partitions // cfg.n_buckets)
 
+    _clear_buckets(spark, output_path, pending)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     started = time.time()
     (
@@ -239,31 +277,21 @@ def run_extraction_job(
     wall_ms = int((time.time() - started) * 1000)
 
     # Post-commit accounting, one JVM aggregate appended straight to the
-    # manifest: a second scan of what was just written, PRUNED to the
-    # bucket partition column and the two tiny columns the counters need
-    # (reading the full schema cost ~14 s of a 24 s sf0.1 job — the cold
-    # re-read of the wide `content` column; the pruned read is ~1 s), plus
-    # one zero row per pending bucket so a bucket that wrote nothing is
-    # committed too.  (Persisting the extracted rows through the write to
-    # skip the re-scan was measured WORSE: caching the wide rows inflated
-    # the write phase 14 s → 32 s.)  No collect and no driver-built frame:
-    # a createDataFrame of local rows runs its own Python-worker job.
-    error = F.col("error").isNotNull()
-    counted = (
-        spark.read.schema("passage_idx int, error string, bucket int")
-        .parquet(data_path(output_path))
-        .filter(F.col("bucket").isin(pending))
-        .select(
-            "bucket",
-            # urls counted without DISTINCT: passage_idx==0 occurs exactly
-            # once per extracted url, error rows once per failed url
-            ((F.col("passage_idx") == 0) | error).cast("long").alias("rows_in"),
-            (~error).cast("long").alias("rows_out"),
-            error.cast("long").alias("error_rows"),
-        )
-    )
+    # manifest: a second scan of what was just written, read through one
+    # glob over the pending bucket directories (``basePath`` keeps the
+    # bucket partition column), so a partial resume lists O(pending)
+    # directories, not the whole table — up to 32 on the driver, more with
+    # one listing task per core (session.build_session).  The scan is
+    # PRUNED to the two tiny columns the counters need (reading the full
+    # schema cost ~14 s of a 24 s sf0.1 job — the cold re-read of the wide
+    # `content` column; the pruned read is ~1 s), plus one zero row per
+    # pending bucket so a bucket that wrote nothing is committed too.
+    # (Persisting the extracted rows through the write to skip the re-scan
+    # was measured WORSE: caching the wide rows inflated the write phase
+    # 14 s → 32 s.)  No collect and no driver-built frame: a
+    # createDataFrame of local rows runs its own Python-worker job.
     zero = F.lit(0).cast("long")
-    zeros = (
+    counters = (
         spark.range(0, cfg.n_buckets, 1, 1)
         .filter(F.col("id").isin(pending))
         .select(
@@ -273,9 +301,28 @@ def run_extraction_job(
             zero.alias("error_rows"),
         )
     )
+    try:
+        written = (
+            spark.read.schema("passage_idx int, error string, bucket int")
+            .option("basePath", data_path(output_path))
+            .parquet(_buckets_glob(output_path, pending))
+        )
+    except AnalysisException as e:
+        # the glob matched nothing: no pending bucket wrote a row
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+    else:
+        error = F.col("error").isNotNull()
+        counters = written.select(
+            "bucket",
+            # urls counted without DISTINCT: passage_idx==0 occurs exactly
+            # once per extracted url, error rows once per failed url
+            ((F.col("passage_idx") == 0) | error).cast("long").alias("rows_in"),
+            (~error).cast("long").alias("rows_out"),
+            error.cast("long").alias("error_rows"),
+        ).unionByName(counters)
     (
-        counted.unionByName(zeros)
-        .groupBy("bucket")
+        counters.groupBy("bucket")
         .agg(*(F.sum(c).alias(c) for c in ("rows_in", "rows_out", "error_rows")))
         .select(
             "bucket",

@@ -15,6 +15,7 @@ from document_automation_spark.operators.extract import (
     extract_documents,
 )
 from document_automation_spark.plans.checkpoint import (
+    _clear_buckets,
     done_buckets,
     manifest_path,
     pending_documents,
@@ -140,13 +141,14 @@ def test_resume_of_committed_output_only_reads_manifest(spark, out_dir):
     assert _files_under(manifest_path(out_dir)) == manifest_files
 
 
-def test_buckets_without_output_rows_are_committed(spark, out_dir):
-    """A bucket that writes no rows — no pages, or every page under the
-    gate — is still committed, so a re-submit of the finished job is a
-    manifest read and not a rebuild that appends an empty manifest."""
+def _gated_buckets_are_committed(spark, out_dir, gated, rows_in):
+    """6 WET pages, ``gated(i)`` ones with text under the gate (they emit
+    nothing), 8 buckets: every bucket is committed, the gated pages count
+    nowhere, and a re-submit of the finished job is a manifest read and
+    not a rebuild that appends an empty manifest."""
     pages = spark.createDataFrame(
         [
-            {**gen_page(i), "text": "hi" if i % 2 else "lorem ipsum " * 60}
+            {**gen_page(i), "text": "hi" if gated(i) else "lorem ipsum " * 60}
             for i in range(6)
         ],
         PAGES_SCHEMA,
@@ -158,7 +160,7 @@ def test_buckets_without_output_rows_are_committed(spark, out_dir):
     assert first["buckets_processed"] == 8
     assert done_buckets(spark, out_dir, FP) == list(range(8))
     manifest = read_manifest(spark, out_dir).collect()
-    assert sum(r.rows_in for r in manifest) == 3  # the gated pages emit nothing
+    assert sum(r.rows_in for r in manifest) == rows_in
     assert sum(r.rows_out + r.error_rows for r in manifest) == (
         read_output(spark, out_dir).count()
     )
@@ -172,6 +174,19 @@ def test_buckets_without_output_rows_are_committed(spark, out_dir):
     assert again["buckets_skipped"] == 8
     assert len(jobs) <= 1
     assert _files_under(manifest_path(out_dir)) == manifest_files
+
+
+def test_buckets_without_output_rows_are_committed(spark, out_dir):
+    """A bucket that writes no rows — no pages, or every page under the
+    gate — is still committed."""
+    _gated_buckets_are_committed(spark, out_dir, lambda i: i % 2, rows_in=3)
+
+
+def test_no_bucket_writes_rows(spark, out_dir):
+    """Every page under the gate: the write creates no bucket directory,
+    so the manifest re-scan's glob matches nothing and the counters are
+    the zero rows alone."""
+    _gated_buckets_are_committed(spark, out_dir, lambda i: True, rows_in=0)
 
 
 def _data_files_per_bucket(out_dir):
@@ -198,7 +213,9 @@ def test_salt_splits_buckets_across_writer_tasks(spark, out_dir):
 def test_writer_tasks_follow_the_cores(spark, out_dir):
     """32 buckets on 4 cores: the write stage runs 16 tasks (not one per
     bucket), each writing whole buckets, one file each; the fresh call
-    runs four jobs — extraction, write, and the manifest aggregate's two."""
+    runs four jobs — extraction, write, and the manifest aggregate's two.
+    No listing job: the manifest re-scan globs at most 32 bucket
+    directories, which Spark lists on the driver."""
     pages = pages_df(spark, N_PAGES, partitions=4)
     with jobs_started(spark) as jobs:
         run_extraction_job(spark, pages, out_dir, FP, ExtractConfig(n_buckets=32))
@@ -213,6 +230,76 @@ def test_writer_tasks_follow_the_cores(spark, out_dir):
     assert tracker.getStageInfo(max(write_job.stageIds)).numTasks == 16
     files = _data_files_per_bucket(out_dir)
     assert files and set(files.values()) == {1}
+
+
+def _stage_tasks(spark, jobs):
+    tracker = spark.sparkContext.statusTracker()
+    return {
+        stage: tracker.getStageInfo(stage).numTasks
+        for job in jobs
+        for stage in tracker.getJobInfo(job).stageIds
+    }
+
+
+def test_fresh_call_stages_follow_the_cores(spark, out_dir):
+    """64 buckets on 4 cores, ~54 of them written: the manifest re-scan
+    lists more than 32 directories, so Spark lists them in a job — with
+    one task per core, not one per directory.  No stage of the call runs
+    more tasks than the 16 writer tasks."""
+    pages = pages_df(spark, N_PAGES, partitions=4)
+    with jobs_started(spark) as jobs:
+        run_extraction_job(spark, pages, out_dir, FP, ExtractConfig(n_buckets=64))
+    assert len(_data_files_per_bucket(out_dir)) > 32
+    tasks = _stage_tasks(spark, jobs)
+    assert tasks and max(tasks.values()) <= 16, tasks
+
+
+def test_resume_rescans_only_the_pending_buckets(spark, out_dir):
+    """A resume with 32 pending buckets re-scans only their directories,
+    listed on the driver: no listing job over the whole table."""
+    pages = pages_df(spark, N_PAGES, partitions=4)
+    cfg = ExtractConfig(n_buckets=64)
+    run_extraction_job(spark, pages, out_dir, FP, cfg, fail_buckets_above=32)
+    with jobs_started(spark) as jobs:
+        resumed = run_extraction_job(spark, pages, out_dir, FP, cfg)
+    assert resumed["buckets_processed"] == 32
+    assert len(_data_files_per_bucket(out_dir)) > 32  # the whole table is larger
+    assert len(jobs) <= 5
+    manifest = read_manifest(spark, out_dir)
+    assert sum(r.rows_out + r.error_rows for r in manifest.collect()) == (
+        read_output(spark, out_dir).count()
+    )
+
+
+def test_pending_buckets_drop_files_of_an_earlier_fingerprint(spark, out_dir):
+    """Fingerprint A on 200 pages, then fingerprint B on 3 pages into the
+    same path: a bucket B leaves empty must not keep A's files.  Buckets
+    hooked out by ``fail_buckets_above`` are not pending, so they keep
+    theirs until the resume; clearing starts no Spark job."""
+    cfg = ExtractConfig(n_buckets=8)
+    run_extraction_job(spark, pages_df(spark, 200, partitions=4), out_dir, "fp-a", cfg)
+    data = os.path.join(out_dir, "data")
+    hooked = {b: _files_under(os.path.join(data, f"bucket={b}")) for b in range(4, 8)}
+    assert all(hooked.values())
+
+    b_pages = pages_df(spark, 3, partitions=1)
+    b_urls = {r.url for r in b_pages.select("url").collect()}
+    run_extraction_job(spark, b_pages, out_dir, "fp-b", cfg, fail_buckets_above=4)
+    assert {
+        b: _files_under(os.path.join(data, f"bucket={b}")) for b in range(4, 8)
+    } == hooked
+    run_extraction_job(spark, b_pages, out_dir, "fp-b", cfg)
+
+    output = read_output(spark, out_dir)
+    assert {r.url for r in output.select("url").distinct().collect()} <= b_urls
+    b_rows = read_manifest(spark, out_dir).filter(F.col("input_fingerprint") == "fp-b")
+    assert sorted(r.bucket for r in b_rows.collect()) == list(range(8))
+    assert sum(r.rows_out + r.error_rows for r in b_rows.collect()) == output.count()
+
+    with jobs_started(spark) as jobs:
+        _clear_buckets(spark, out_dir, range(8))
+    assert jobs == []
+    assert not _data_files_per_bucket(out_dir)
 
 
 def _plan_lines(df):
