@@ -8,16 +8,25 @@
                                      artifacts off the same gated pages
       → durable extraction          (plans/checkpoint.run_extraction_job:
                                      bucketed write + resume manifests)
-      → curation                    (operators/curate.curate_extracted:
-                                     quarantine drop, gates, exact dedup —
-                                     physical copy or tombstone view)
-      → [--cut-dup-spans]           exact-substring span surgery
-      → [--dedup-paragraphs]        CCNet cross-document paragraph dedup
-      → [--embed]                   hash-embed + dense vector ids →
-                                     embeddings table (the ANN/serving input)
-      → [--semantic-dedup T]        SemDeDup over those embeddings (corpus
-                                     + embeddings both cut)
-      → curated passages table + per-stage stats
+      → curation                    (operators/curate: quarantine drop,
+                                     gates, exact dedup — physical copy,
+                                     tombstone view, or fused into the
+                                     extraction write)
+      → the optional stages, in this order, run by one loop:
+          [--fix-encoding]          mojibake repair          curated_encfix
+          [--dedup-against CORPUS]  cross-snapshot dedup     curated_incremental
+          [--cut-dup-spans]         exact-substring surgery  curated_cut
+          [--dedup-paragraphs MODE] CCNet paragraph dedup    curated_paradedup
+          [--quality-filter]        Gopher/C4 rule gate      curated_quality
+          [--decontaminate P]       n-gram decontamination ┐ curated_hygiene
+          [--redact-pii]            PII redaction          ┘
+          [--quality-classifier P]  learned quality filter   curated_classifier
+          [--dsir-target P]         DSIR resampling          curated_dsir
+          [--train-bpe N]           BPE tokenizer + counts   curated_bpe
+          [--embed]                 embeddings + vector ids  embeddings
+          [--semantic-dedup T]      SemDeDup                 curated_semdedup
+          [--pack-seqlen N]         LM sequence packing      chunk_map
+      → curated passages table + per-stage counters (the summary dict)
 
 This is the composition a reference user runs end to end (the reference's
 gen-sods-doc-image-ray.py indexing flow, minus its head-node funnels);
@@ -43,14 +52,15 @@ import json
 import os
 import sys
 
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
+from functools import partial
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from document_automation_spark.plans.checkpoint import (
     PARQUET_WRITE_OPTIONS,
+    _hadoop_path,
     read_output,
     run_extraction_job,
 )
@@ -77,6 +87,25 @@ def _rederive_identities(df: DataFrame, text_col: str = "content") -> DataFrame:
     return df.withColumn(
         "doc_id", F.sha2(F.concat(F.col("url"), F.col(text_col)), 256)
     ).withColumn("content_sha", F.unhex(F.sha2(F.col(text_col), 256)))
+
+
+def _write_table(df: DataFrame, path: str, partition_col: str | None = None) -> None:
+    """Writes one pipeline table (curated corpus, embeddings, chunk map)
+    with the data-table parquet policy."""
+    writer = df.write.mode("overwrite").options(**PARQUET_WRITE_OPTIONS)
+    if partition_col:
+        writer = writer.partitionBy(partition_col)
+    writer.parquet(path)
+
+
+def _write_curation_stats(spark: SparkSession, output_path: str, stats_row: dict) -> None:
+    """The one-row ``_curation_stats`` sidecar, written the same way in
+    every curated mode."""
+    from document_automation_spark.operators.curate import _stats_frame
+
+    _stats_frame(spark, stats_row).write.mode("overwrite").parquet(
+        os.path.join(output_path, "_curation_stats")
+    )
 
 
 def run_ingest_pipeline(
@@ -120,6 +149,9 @@ def run_ingest_pipeline(
 ) -> dict:
     """Run the whole recipe; returns a summary dict (stage counters).
 
+    Every setting is validated before the first Spark job, so a rejected
+    call starts no job and leaves nothing persisted.
+
     ``curated_mode``: ``"copy"`` (default) materializes the curated
     passages as a second physical table — right for a one-shot training
     dump read many times.  ``"view"`` materializes only the dup-loser
@@ -132,9 +164,9 @@ def run_ingest_pipeline(
     rows retained with ``error`` set — filter ``error IS NULL`` to read
     the curated view); fastest wall-clock at small/medium scale, at the
     cost of persisting the extracted rows for the job's duration (the
-    dup-loser subquery reads them twice).  ``cut_dup_spans`` requires
-    ``"copy"`` (span surgery rewrites text, so a physical table exists
-    anyway).
+    dup-loser subquery reads them twice).  Of the optional stages only
+    ``embed`` runs outside ``"copy"``; the others rewrite or re-read the
+    corpus table and are rejected there.
 
     ``from_text=True`` takes the WET path (documents_from_text over the
     pre-extracted ``text`` column) instead of HTML/PDF extraction; both
@@ -142,188 +174,28 @@ def run_ingest_pipeline(
     parameter), so the WET path gets the identical durable write, resume
     manifests, and real per-bucket counters.
 
-    ``cut_dup_spans=True`` appends exact-substring span surgery (Lee et
-    al. 2022, ``operators.dedup.duplicate_spans``/``cut_spans``): every
-    ≥``span_k``-char window occurring in ≥2 curated passages is cut from
-    ALL of them (the policy of Lee et al.'s released ExactSubstr tool —
-    cross-document repeated substrings at this length are boilerplate).
-    Runs over the WRITTEN curated table (one extra corpus read/write; the
-    gram explode is the operator's inherent cost) and re-derives BOTH
-    content-derived identities (``doc_id``, ``content_sha``) for surgered
-    rows; the summary gains ``cut_chars`` /
-    ``spanned_passages`` and ``curated_path`` points at the surgered
-    table.
-
-    ``dedup_paragraphs_mode`` appends CCNet-style cross-document
-    PARAGRAPH dedup (``operators.dedup.dedup_paragraphs``) over the
-    curated passages: ``'first'`` keeps the globally-first copy of every
-    duplicated paragraph, ``'common[:MIN_DOCS]'`` cuts paragraphs shared
-    by ≥ MIN_DOCS distinct passages everywhere (template boilerplate —
-    cookie banners, navigation stubs); a ``'+norm'`` suffix on either
-    mode keys on the CCNet hash normalization (case / accents / digits /
-    unicode punctuation folded) so boilerplate VARIANTS dedup together.
-    Passages emptied by the cut are
-    dropped; identities re-derived as in the span stage.  Summary gains
-    ``dropped_paragraphs`` / ``para_deduped_passages`` /
-    ``para_emptied_passages``.  Requires ``curated_mode='copy'``.
-
     ``robots_path`` prepends the robots-exclusion opt-out gate
     (``operators.robots``): pages whose host's robots.txt disallows
     ``robots_agent`` (Google-REP precedence) are dropped BEFORE url dedup
     and extraction — the retroactive opt-out pass a responsible LLM
     pipeline runs against a robots snapshot table ``(host, robots_txt)``.
-    Summary gains ``robots_blocked``.
+    Summary gains ``robots_blocked``.  ``link_graph`` writes the
+    PageRank artifacts of :func:`_link_graph_stage` (html pages only).
 
-    ``semantic_dedup_threshold`` appends SemDeDup
-    (``operators.similarity.semantic_dedup``) over the embeddings the
-    ``embed`` stage just wrote: k-means clusters
-    (``semantic_clusters``), within-cluster cosine pairs ≥ threshold,
-    keep the farthest-from-centroid member of every semantic group.
-    Loser PASSAGES are anti-joined out of the corpus AND the embeddings
-    table (vector ids keep their values — gaps mark dedup losers), so
-    the ANN/serving input never serves dropped content.  Runs before
-    ``pack_seqlen`` so chunk maps are built over the deduped corpus.
-    Summary gains ``semdedup_dropped`` and ``n_vectors`` shrinks to the
-    survivors.  Requires ``embed=True`` and ``curated_mode='copy'``.
-
-    ``quality_filter=True`` appends the Gopher/C4 repetition gate
-    (``operators.webtext_quality.filter_by_quality``; thresholds from
-    ``quality_rules``, default the published Gopher bounds) over the
-    final curated table — a zero-shuffle expression gate whose per-rule
-    drop counters ride the write as Observation metrics (summary gains
-    ``quality_n_docs`` / ``quality_n_kept`` / ``quality_drop_<rule>``
-    and ``curated_path`` moves to the filtered table).  Requires
-    ``curated_mode='copy'`` like span surgery (the gate re-reads text).
-
-    ``decontaminate_path`` / ``pii_redact`` append the corpus-HYGIENE
-    stage: GPT-3-style n-gram benchmark decontamination (drop every doc
-    sharing a ``decontaminate_ngram``-gram with the eval-set parquet at
-    ``decontaminate_path`` — ``operators.decontaminate``) and/or PII
-    redaction (``operators.pii.redact_pii``; content-derived identities
-    re-derived after the rewrite).  Both compose into ONE plan + ONE
-    write; counters land in the summary as ``decontam_*`` / ``pii_*``.
-    Requires ``curated_mode='copy'``.
-
-    ``classifier_good_path`` appends the GPT-3-style learned quality
-    filter (``operators.quality_classifier``): train reference-vs-crawl
-    logistic regression (positives = the trusted parquet's ``text``
-    column, negatives = a deterministic hash-sample of the corpus
-    itself), score every curated doc in the same map pass as the write,
-    keep iff ``pareto(classifier_alpha) > 1 - score`` (importance
-    sampling, not a hard cut).  Summary gains ``classifier_n_docs`` /
-    ``classifier_n_kept``; ``curated_path`` moves to the filtered table
-    which carries a ``quality_score`` column.  Requires
-    ``curated_mode='copy'``.
-
-    ``fix_encoding=True`` appends the encoding-repair stage
-    (``operators.encoding.repair_mojibake``): ftfy-style
-    UTF-8-as-cp1252 mojibake repair as one single-pass JVM expression
-    over the curated text.  Runs FIRST among the optional stages —
-    before cross-snapshot dedup (a re-crawled page stored corrupted
-    must match its repaired copy in the prior corpus, so content
-    identity is made canonical before any comparison), before
-    span/paragraph dedup (repaired variants of the same text must dedup
-    together) and before every scoring stage (the LM / quality /
-    classifier legs never see corrupted bytes); identities re-derived
-    as in every rewriting stage, and (when ``drop_exact_dups``) the exact
-    keeper rule is re-applied on the repaired shas — curation's dedup
-    keyed on UNREPAIRED content, so a clean copy and a corrupted copy of
-    the same text in one snapshot both survived it and collide only
-    here.  Summary gains ``mojibake_repaired`` (surviving repaired rows
-    — a repaired row that then loses the re-applied dedup counts in) +
-    ``mojibake_dedup_losers``.  Requires ``curated_mode='copy'``.
-
-    ``dedup_against_path`` appends cross-snapshot incremental dedup
-    (``operators.curate.dedup_against_corpus``): drop every curated row
-    whose content already exists in the previously-published corpus at
-    that path — the Common-Crawl monthly-snapshot recipe (most of each
-    snapshot is carry-over; dropping it here spares every later stage).
-    ``trust_existing_sha=True`` prunes the existing-corpus scan to its
-    ``content_sha`` column alone (pass it only for corpora written by
-    this engine's durable writer).  Summary gains ``xsnap_rows_in`` /
-    ``xsnap_rows_kept``.  Requires ``curated_mode='copy'``.  Runs right
-    after curation (only encoding repair precedes it, to canonicalize
-    content identity first) so carried-over rows never reach span
-    surgery / quality / hygiene / classifier.
-
-    ``dsir_target_path`` appends DSIR importance resampling
-    (``operators.dsir``): fit hashed-ngram bucket models to the trusted
-    target parquet vs the curated corpus itself, score every doc by the
-    log-ratio sum, and Gumbel-top-k the best ``dsir_keep_frac`` of the
-    corpus — distribution matching where the classifier stage is quality
-    thresholding; they compose (classifier first, then DSIR).  Uses the
-    xxhash64 fast path (the oracle-parity md5 leg lives in the
-    ``dsir_selection`` seat).  Summary gains ``dsir_n_docs`` /
-    ``dsir_n_kept``.  Requires ``curated_mode='copy'``.
-
-    ``train_bpe_merges`` appends the tokenizer stage (``operators.bpe``):
-    train a BPE merge table on the final curated corpus (one corpus pass
-    for word frequencies, ``bpe_min_freq`` hapax prune, then merge rounds
-    on the word table alone), persist it as the reusable
-    ``bpe_merges/`` artifact, and annotate every corpus row with its BPE
-    token count (``n_tokens_bpe`` — counts only; token streams are the
-    loader's job via ``encode_documents``).  When ``pack_seqlen`` also
-    runs, packing sizes chunks by BPE tokens instead of whitespace
-    tokens — the tokenizer→budget→pack chain a real LM data pipeline
-    runs.  Summary gains ``bpe_n_merges`` / ``bpe_vocab_words`` /
-    ``bpe_total_tokens``.  Requires ``curated_mode='copy'``.
-
-    ``pack_seqlen`` appends the LM-batcher stage: concat-chop sequence
-    packing (``operators.packing.pack_sequences``) over the final curated
-    passages, sharded by the durable ``bucket`` column (the output-file
-    granularity, so every shard's window is bounded) and ordered by the
-    deterministic (doc_id, passage_idx) key; writes the (passage × chunk)
-    segment map to ``chunk_map/`` — the table a training loader joins to
-    materialise fixed-``pack_seqlen``-token batches.  Summary gains
-    ``pack_n_chunks`` / ``pack_n_segments`` / ``pack_n_tokens``.
-    Requires ``curated_mode='copy'`` (reads the final text).
+    The optional stages after curation form one ordered list (see the
+    module docstring); each is a ``_*_stage`` function of this module,
+    whose docstring gives its settings, its output table and the summary
+    keys it adds.  One loop reads the current corpus for each enabled
+    stage, calls it, and merges the dict it returns into the summary; a
+    stage that writes a new corpus table returns it as ``curated_path``.
     """
-    from document_automation_spark.operators.curate import curate_extracted
     from document_automation_spark.operators.extract import ExtractConfig
-    from document_automation_spark.operators.urls import dedup_by_url
-
-    cfg = cfg or ExtractConfig()
-    robots_blocked = None
-    if robots_path:
-        # robots opt-out gate FIRST: blocked pages must never reach url
-        # dedup / extraction.  The blocked count is one extra pass over the
-        # pruned (url) projection — the html payload is untouched by both
-        # the count and the gate filter (row-local after the host join).
-        # Deliberately NOT an Observation riding the extraction write: a
-        # CollectMetrics node between the gate and the downstream url-dedup
-        # would pin this subplan and block the allowed-filter/projection
-        # pushdown that keeps the payload-light dedup path narrow; the
-        # count pass costs one host join over urls, far below that risk.
-        from document_automation_spark.operators.robots import parse_robots, robots_gate
-
-        rules = parse_robots(spark.read.parquet(robots_path))
-        gated = robots_gate(pages, rules, agent=robots_agent)
-        robots_blocked = (
-            gated.where(~F.col("allowed")).select(F.lit(1)).count()
-        )
-        pages = gated.where(F.col("allowed")).drop("allowed")
-
-    url_cache: list = []
-    if url_dedup:
-        # payload-light path: ranking runs on a narrow projection and only
-        # the (few) superseded re-crawl / double-ingest keys touch payloads
-        # — the html column of clean rows never enters a shuffle
-        # (see operators/urls.py)
-        pages = dedup_by_url(
-            pages, shuffle_payloads=False, cache_registry=url_cache
-        ).drop("canonical_url")
 
     if curated_mode not in ("copy", "view", "fused"):
         raise ValueError(
             f"curated_mode must be 'copy', 'view' or 'fused', got {curated_mode!r}"
         )
-    if cut_dup_spans and curated_mode != "copy":
-        raise ValueError("cut_dup_spans rewrites text and needs curated_mode='copy'")
     if dedup_paragraphs_mode is not None:
-        if curated_mode != "copy":
-            raise ValueError(
-                "dedup_paragraphs rewrites text and needs curated_mode='copy'"
-            )
         _para_mode, _, _para_k = dedup_paragraphs_mode.partition(":")
         _para_mode, _, _para_flag = _para_mode.partition("+")
         if (
@@ -338,49 +210,119 @@ def run_ingest_pipeline(
                 "dedup_paragraphs_mode must be 'first[+norm]' or "
                 f"'common[+norm][:MIN_DOCS]', got {dedup_paragraphs_mode!r}"
             )
-    if semantic_dedup_threshold is not None:
-        if not embed:
-            raise ValueError(
-                "semantic_dedup needs the embeddings the --embed stage writes"
-            )
-        if curated_mode != "copy":
-            raise ValueError(
-                "semantic_dedup rewrites the corpus and needs curated_mode='copy'"
-            )
+    if semantic_dedup_threshold is not None and not embed:
+        raise ValueError(
+            "semantic_dedup needs the embeddings the --embed stage writes"
+        )
     if link_graph and from_text:
         raise ValueError(
             "link_graph needs html pages (WET text carries no anchors)"
         )
-    if quality_filter and curated_mode != "copy":
-        raise ValueError("quality_filter re-reads text and needs curated_mode='copy'")
-    if (decontaminate_path or pii_redact) and curated_mode != "copy":
-        raise ValueError(
-            "decontaminate/pii_redact rewrite text and need curated_mode='copy'"
-        )
-    if pack_seqlen is not None and curated_mode != "copy":
-        raise ValueError("pack_seqlen reads the final text and needs curated_mode='copy'")
-    if classifier_good_path and curated_mode != "copy":
-        raise ValueError(
-            "classifier_good_path re-reads the corpus and needs curated_mode='copy'"
-        )
-    if dedup_against_path and curated_mode != "copy":
-        raise ValueError(
-            "dedup_against_path re-reads the corpus and needs curated_mode='copy'"
-        )
-    if dsir_target_path and curated_mode != "copy":
-        raise ValueError(
-            "dsir_target_path re-reads the corpus and needs curated_mode='copy'"
-        )
     if not 0.0 < dsir_keep_frac <= 1.0:
         raise ValueError(f"dsir_keep_frac must be in (0, 1], got {dsir_keep_frac}")
-    if train_bpe_merges is not None and curated_mode != "copy":
-        raise ValueError(
-            "train_bpe_merges re-reads the corpus and needs curated_mode='copy'"
+
+    # (setting that enables it, stage): the order is the run order
+    stages = [
+        (name, stage)
+        for name, enabled, stage in (
+            (
+                "fix_encoding",
+                fix_encoding,
+                partial(_fix_encoding_stage, drop_exact_dups=drop_exact_dups),
+            ),
+            (
+                "dedup_against_path",
+                dedup_against_path,
+                partial(
+                    _dedup_against_stage,
+                    existing_path=dedup_against_path,
+                    trust_existing_sha=trust_existing_sha,
+                    after_fix_encoding=fix_encoding,
+                ),
+            ),
+            ("cut_dup_spans", cut_dup_spans, partial(_span_cut_stage, k=span_k)),
+            (
+                "dedup_paragraphs_mode",
+                dedup_paragraphs_mode is not None,
+                partial(_paragraph_dedup_stage, mode=dedup_paragraphs_mode),
+            ),
+            ("quality_filter", quality_filter, partial(_quality_stage, rules=quality_rules)),
+            (
+                "decontaminate_path/pii_redact",
+                decontaminate_path or pii_redact,
+                partial(
+                    _hygiene_stage,
+                    bench_path=decontaminate_path,
+                    ngram=decontaminate_ngram,
+                    redact=pii_redact,
+                ),
+            ),
+            (
+                "classifier_good_path",
+                classifier_good_path,
+                partial(_classifier_stage, good_path=classifier_good_path, alpha=classifier_alpha),
+            ),
+            (
+                "dsir_target_path",
+                dsir_target_path,
+                partial(_dsir_stage, target_path=dsir_target_path, keep_frac=dsir_keep_frac),
+            ),
+            (
+                "train_bpe_merges",
+                train_bpe_merges is not None,
+                partial(_bpe_stage, n_merges=train_bpe_merges, min_freq=bpe_min_freq),
+            ),
+            ("embed", embed, partial(_embed_stage, dim=embed_dim)),
+            (
+                "semantic_dedup_threshold",
+                semantic_dedup_threshold is not None,
+                partial(
+                    _semantic_dedup_stage,
+                    threshold=semantic_dedup_threshold,
+                    n_clusters=semantic_clusters,
+                ),
+            ),
+            (
+                "pack_seqlen",
+                pack_seqlen is not None,
+                partial(
+                    _pack_stage,
+                    seq_len=pack_seqlen,
+                    tokens_col="n_tokens_bpe" if train_bpe_merges is not None else None,
+                ),
+            ),
         )
-    if fix_encoding and curated_mode != "copy":
+        if enabled
+    ]
+    # only the embeddings stage reads the curated view; every other stage
+    # rewrites or re-reads the physical curated table
+    copy_only = [name for name, _ in stages if name != "embed"]
+    if copy_only and curated_mode != "copy":
         raise ValueError(
-            "fix_encoding rewrites text and needs curated_mode='copy'"
+            f"{', '.join(copy_only)} rewrite or re-read the corpus table and "
+            f"need curated_mode='copy', got {curated_mode!r}"
         )
+
+    cfg = cfg or ExtractConfig()
+    summary: dict = {}
+    if robots_path:
+        # robots opt-out gate FIRST: blocked pages must never reach url
+        # dedup / extraction.  The blocked count is one extra pass over the
+        # pruned (url) projection — the html payload is untouched by both
+        # the count and the gate filter (row-local after the host join).
+        # Deliberately NOT an Observation riding the extraction write: a
+        # CollectMetrics node between the gate and the downstream url-dedup
+        # would pin this subplan and block the allowed-filter/projection
+        # pushdown that keeps the payload-light dedup path narrow; the
+        # count pass costs one host join over urls, far below that risk.
+        from document_automation_spark.operators.robots import parse_robots, robots_gate
+
+        rules = parse_robots(spark.read.parquet(robots_path))
+        gated = robots_gate(pages, rules, agent=robots_agent)
+        summary["robots_blocked"] = (
+            gated.where(~F.col("allowed")).select(F.lit(1)).count()
+        )
+        pages = gated.where(F.col("allowed")).drop("allowed")
 
     if from_text:
         from document_automation_spark.operators.extract import documents_from_text
@@ -388,103 +330,46 @@ def run_ingest_pipeline(
         docs_fn = documents_from_text
     else:
         docs_fn = None  # default: HTML/PDF extraction
-
-    fused_cache: list = []
+    gates = dict(min_chars=min_chars, scripts=scripts, drop_exact_dups=drop_exact_dups)
+    caches: list = []  # persisted frames, released once extraction is done
     fused_stats: dict = {}
     if curated_mode == "fused":
-        # FUSED mode: curation (gates + exact dedup) runs BETWEEN the
-        # extraction kernel and the one durable write — the corpus table
-        # IS the curated table, so the composed ingest pays a single
-        # write instead of write-read-write (measured: the curated copy
-        # pass alone is ~5 s of the 200k-page composed job).  Quarantine
-        # rows are RETAINED in the table (filter ``error IS NULL`` to
-        # read the curated view) so the audit trail survives without a
-        # side write.  The dup-loser subquery re-reads the extraction
-        # lineage, so the extracted docs persist for the job's duration —
-        # the memory-footprint trade that makes this the small/medium-
-        # scale mode: at 100 TB prefer 'view' (metadata-only curation) or
-        # 'copy' (write-then-curate, nothing persisted).
-        from pyspark import StorageLevel
+        docs_fn = _fused_docs_fn(docs_fn, caches, fused_stats, gates)
 
-        from document_automation_spark.operators.extract import extract_documents
-
-        base_fn = docs_fn or extract_documents
-
-        def fused_docs_fn(pages_, cfg_):
-            docs = base_fn(pages_, cfg_).persist(StorageLevel.MEMORY_AND_DISK)
-            fused_cache.append(docs)
-            curated, collect = curate_extracted(
-                docs,
-                min_chars=min_chars,
-                scripts=scripts,
-                drop_exact_dups=drop_exact_dups,
-                keep_quarantined=True,
-            )
-            fused_stats["collect"] = collect
-            return curated
-
-        docs_fn = fused_docs_fn
-
-    lg_summary: dict = {}
-    if link_graph:
-        # runs on the SAME gated+deduped pages the extractor consumes —
-        # blocked hosts contribute no edges, re-crawls don't double-count;
-        # running BEFORE extraction warms the url-dedup persist both share
-        lg_summary = _link_graph_stage(
-            spark, pages, output_path, n_iters=pagerank_iters
-        )
-
-    # both payload paths run through the SAME durable writer: bucketed
-    # dynamic-overwrite data commit + per-bucket resume manifests + real
-    # counter totals (a crashed --wet run resumes exactly like --warc)
     try:
-        extract_summary = run_extraction_job(
-            spark, pages, output_path, input_fingerprint, cfg, docs_fn=docs_fn
-        )
-    finally:
-        for handle in url_cache:  # the dedup key table served the extract job
-            handle.unpersist()
-        for handle in fused_cache:
-            handle.unpersist()
-    if robots_blocked is not None:
-        extract_summary["robots_blocked"] = robots_blocked
-    extract_summary.update(lg_summary)
+        if url_dedup:
+            from document_automation_spark.operators.urls import dedup_by_url
 
-    if curated_mode == "fused":
-        stats_path = os.path.join(output_path, "_curation_stats")
-        stats = None
-        if "collect" not in fused_stats:
-            # every bucket was already committed, so no curation plan was
-            # built: the counters are the committing run's, unless it died
-            # before writing them — then re-count into a noop sink
-            try:
-                stats = spark.read.parquet(stats_path)
-            except AnalysisException:
-                try:
-                    fused_docs_fn(pages, cfg).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                finally:
-                    for handle in fused_cache:
-                        handle.unpersist()
-        if stats is None:
-            stats = fused_stats["collect"]()
-            stats.repartition(1).write.mode("overwrite").parquet(stats_path)
-        stats_row = stats.first().asDict()
-        summary = {
-            **extract_summary,
-            **stats_row,
-            "curated_mode": "fused",
-            "curated_path": os.path.join(output_path, "data"),
-        }
-        if embed:
-            curated_docs = read_output(spark, output_path).filter(
-                F.col("error").isNull()
-            )
+            # payload-light path: ranking runs on a narrow projection and
+            # only the (few) superseded re-crawl / double-ingest keys touch
+            # payloads — the html column of clean rows never enters a
+            # shuffle (see operators/urls.py)
+            pages = dedup_by_url(
+                pages, shuffle_payloads=False, cache_registry=caches
+            ).drop("canonical_url")
+        if link_graph:
+            # runs on the SAME gated+deduped pages the extractor consumes —
+            # blocked hosts contribute no edges, re-crawls don't
+            # double-count; running BEFORE extraction warms the url-dedup
+            # persist both share
             summary.update(
-                _embed_stage(spark, curated_docs, output_path, embed_dim)
+                _link_graph_stage(spark, pages, output_path, n_iters=pagerank_iters)
             )
-        return summary
+        # both payload paths run through the SAME durable writer: bucketed
+        # dynamic-overwrite data commit + per-bucket resume manifests + real
+        # counter totals (a crashed --wet run resumes exactly like --warc)
+        summary.update(
+            run_extraction_job(
+                spark, pages, output_path, input_fingerprint, cfg, docs_fn=docs_fn
+            )
+        )
+        if curated_mode == "fused":
+            summary.update(
+                _fused_curation(spark, output_path, lambda: docs_fn(pages, cfg), fused_stats)
+            )
+    finally:
+        for handle in caches:
+            handle.unpersist()
 
     # Stage-appropriate input split size: extraction wants FINE splits
     # (the per-row kernel is CPU-bound, so callers often set
@@ -495,483 +380,455 @@ def run_ingest_pipeline(
     # a 4 MB split vs 4.2-4.6 s at 128/32 MB.  32 MB keeps ~4x more tasks
     # in flight than the 128 MB default at this corpus size (straggler
     # headroom) at the same measured cost; the caller's value is restored
-    # after the pipeline (it may be extraction-tuned).
-    with _conf_override(spark, "spark.sql.files.maxPartitionBytes", "32m"):
-        raw_docs = read_output(spark, output_path, with_sha=True)
-
-        # content_sha completeness: THIS run's writer populates content_sha for
-        # every row it writes — but a RESUMED run keeps already-done buckets
-        # verbatim, and those may predate the sha-writing writer (NULL shas).
-        # Keying curation on a NULL sha would collapse every legacy row into one
-        # dedup group and silently drop all but one.  Only trust the pruned-scan
-        # path when zero buckets were carried over from a previous run; a resumed
-        # run falls back to curate's coalesce(sha, re-hash) guard.
-        sha_complete = extract_summary.get("buckets_skipped", 0) == 0
-
-        if curated_mode == "view":
-            from document_automation_spark.operators.curate import curation_tombstones
-
-            losers, collect_in_counts = curation_tombstones(
-                raw_docs,
-                min_chars=min_chars,
-                scripts=scripts,
-                drop_exact_dups=drop_exact_dups,
-                sha_is_complete=sha_complete,
-            )
-            losers_path = os.path.join(output_path, "curation_losers")
-            # no separate stats action: the input counters AND the loser
-            # count both ride the loser write as Observations (a re-read +
-            # count() after the write would be one more full job — at small
-            # scale these fixed action costs dominate the composed wall)
-            obs_losers = Observation("loser_count")
-            losers.observe(
-                obs_losers, F.count(F.lit(1)).alias("n_losers")
-            ).write.mode("overwrite").parquet(losers_path)
-            n_losers = int(obs_losers.get["n_losers"] or 0)
-            in_counts = collect_in_counts()
-            rows_out = (
-                in_counts["rows_in"]
-                - in_counts["quarantined"]
-                - in_counts["gated"]
-                - n_losers
-            )
-            stats_row = {
-                **in_counts,
-                "deduped": n_losers,
-                "rows_out": rows_out,
-            }
-            # persist the gate config so read_curated applies the SAME policy;
-            # both one-row sidecars are JVM literals (a createDataFrame of a
-            # local list would run a Python-worker job per write)
-            one_row = spark.range(1, numPartitions=1)
-            one_row.select(
-                F.lit(min_chars).cast("int").alias("min_chars"),
-                F.lit(",".join(scripts) if scripts else None)
-                .cast("string")
-                .alias("scripts"),
-            ).write.mode("overwrite").json(
-                os.path.join(output_path, "_curation_config")
-            )
-            one_row.select(
-                *(
-                    F.lit(stats_row[k]).cast("long").alias(k)
-                    for k in ("rows_in", "quarantined", "gated", "deduped", "rows_out")
+    # after the pipeline (it may be extraction-tuned).  Fused mode curated
+    # inside the extraction write and reads under the caller's value.
+    with (
+        nullcontext()
+        if curated_mode == "fused"
+        else _conf_override(spark, "spark.sql.files.maxPartitionBytes", "32m")
+    ):
+        if curated_mode != "fused":
+            # content_sha completeness: THIS run's writer populates
+            # content_sha for every row it writes — but a RESUMED run keeps
+            # already-done buckets verbatim, and those may predate the
+            # sha-writing writer (NULL shas).  Keying curation on a NULL sha
+            # would collapse every legacy row into one dedup group and
+            # silently drop all but one.  Only trust the pruned-scan path
+            # when zero buckets were carried over from a previous run; a
+            # resumed run falls back to curate's coalesce(sha, re-hash) guard.
+            curate = _curate_view if curated_mode == "view" else _curate_copy
+            summary.update(
+                curate(
+                    spark,
+                    read_output(spark, output_path, with_sha=True),
+                    output_path,
+                    sha_is_complete=summary["buckets_skipped"] == 0,
+                    **gates,
                 )
-            ).write.mode("overwrite").parquet(
-                os.path.join(output_path, "_curation_stats")
             )
-            summary = {
-                **extract_summary,
-                **stats_row,
-                "curated_mode": "view",
-                "losers_path": losers_path,
-            }
-            if embed:
-                summary.update(
-                    _embed_stage(spark, read_curated(spark, output_path), output_path, embed_dim)
+        for _, stage in stages:
+            summary.update(
+                stage(
+                    spark,
+                    _read_corpus(spark, output_path, curated_mode, summary),
+                    output_path,
+                    summary,
                 )
-            return summary
+            )
+    return summary
 
-        curated, collect_stats = curate_extracted(
-            raw_docs,
-            min_chars=min_chars,
-            scripts=scripts,
-            drop_exact_dups=drop_exact_dups,
-            sha_is_complete=sha_complete,
+
+def _read_corpus(
+    spark: SparkSession, output_path: str, curated_mode: str, summary: dict
+) -> DataFrame:
+    """The current curated corpus, the input of the next optional stage."""
+    if curated_mode == "view":
+        return read_curated(spark, output_path)
+    if curated_mode == "fused":
+        return read_output(spark, output_path).filter(F.col("error").isNull())
+    return spark.read.parquet(summary["curated_path"])
+
+
+def _fused_docs_fn(base_fn, caches: list, fused_stats: dict, gates: dict):
+    """The FUSED-mode documents builder: curation (gates + exact dedup)
+    runs BETWEEN the extraction kernel and the one durable write — the
+    corpus table IS the curated table, so the composed ingest pays a
+    single write instead of write-read-write (measured: the curated copy
+    pass alone is ~5 s of the 200k-page composed job).  Quarantine rows
+    are RETAINED in the table (filter ``error IS NULL`` to read the
+    curated view) so the audit trail survives without a side write.  The
+    dup-loser subquery re-reads the extraction lineage, so the extracted
+    docs persist for the job's duration (registered in ``caches``) — the
+    memory-footprint trade that makes this the small/medium-scale mode: at
+    100 TB prefer 'view' (metadata-only curation) or 'copy'
+    (write-then-curate, nothing persisted).  Each build leaves its stats
+    callable in ``fused_stats["collect"]``."""
+    from pyspark import StorageLevel
+
+    from document_automation_spark.operators.curate import curate_extracted
+    from document_automation_spark.operators.extract import extract_documents
+
+    base_fn = base_fn or extract_documents
+
+    def fused_docs_fn(pages_, cfg_):
+        docs = base_fn(pages_, cfg_).persist(StorageLevel.MEMORY_AND_DISK)
+        caches.append(docs)
+        curated, collect = curate_extracted(docs, keep_quarantined=True, **gates)
+        fused_stats["collect"] = collect
+        return curated
+
+    return fused_docs_fn
+
+
+def _fused_curation(
+    spark: SparkSession, output_path: str, build_curated, fused_stats: dict
+) -> dict:
+    """Fused mode's curation counters.  When every bucket was already
+    committed no curation plan was built: the counters are the committing
+    run's ``_curation_stats``, unless it died before writing them — then
+    ``build_curated()`` is re-counted into a noop sink."""
+    stats_path = os.path.join(output_path, "_curation_stats")
+    stats_row = None
+    if "collect" not in fused_stats:
+        fs, jpath = _hadoop_path(spark, stats_path)
+        if fs.exists(jpath):
+            stats_row = spark.read.parquet(stats_path).first().asDict()
+        else:
+            build_curated().write.format("noop").mode("overwrite").save()
+    if stats_row is None:
+        stats_row = fused_stats["collect"]().first().asDict()
+        _write_curation_stats(spark, output_path, stats_row)
+    return {
+        **stats_row,
+        "curated_mode": "fused",
+        "curated_path": os.path.join(output_path, "data"),
+    }
+
+
+def _curate_copy(
+    spark: SparkSession, raw_docs: DataFrame, output_path: str, **gates
+) -> dict:
+    """Copy mode: the curated passages become the ``curated`` table."""
+    from document_automation_spark.operators.curate import curate_extracted
+
+    curated, collect_stats = curate_extracted(raw_docs, **gates)
+    curated_path = os.path.join(output_path, "curated")
+    # ONE action runs the whole curation: stage counters ride the write as
+    # CollectMetrics observations (collect_stats() reads them afterwards).
+    _write_table(curated, curated_path)
+    stats_row = collect_stats().first().asDict()
+    _write_curation_stats(spark, output_path, stats_row)
+    return {**stats_row, "curated_path": curated_path}
+
+
+def _curate_view(
+    spark: SparkSession,
+    raw_docs: DataFrame,
+    output_path: str,
+    min_chars=None,
+    scripts=None,
+    **gates,
+) -> dict:
+    """View mode: only the dup-loser tombstones (``curation_losers``) and
+    the gate config (``_curation_config``) are written;
+    :func:`read_curated` rebuilds the curated view from them."""
+    from document_automation_spark.operators.curate import curation_tombstones
+
+    losers, collect_in_counts = curation_tombstones(
+        raw_docs, min_chars=min_chars, scripts=scripts, **gates
+    )
+    losers_path = os.path.join(output_path, "curation_losers")
+    # no separate stats action: the input counters AND the loser count both
+    # ride the loser write as Observations (a re-read + count() after the
+    # write would be one more full job — at small scale these fixed action
+    # costs dominate the composed wall)
+    obs_losers = Observation("loser_count")
+    losers.observe(
+        obs_losers, F.count(F.lit(1)).alias("n_losers")
+    ).write.mode("overwrite").parquet(losers_path)
+    n_losers = int(obs_losers.get["n_losers"] or 0)
+    in_counts = collect_in_counts()
+    rows_out = (
+        in_counts["rows_in"] - in_counts["quarantined"] - in_counts["gated"] - n_losers
+    )
+    stats_row = {**in_counts, "deduped": n_losers, "rows_out": rows_out}
+    # persist the gate config so read_curated applies the SAME policy, as
+    # JVM literals like the stats sidecar
+    spark.range(1, numPartitions=1).select(
+        F.lit(min_chars).cast("int").alias("min_chars"),
+        F.lit(",".join(scripts) if scripts else None).cast("string").alias("scripts"),
+    ).write.mode("overwrite").json(os.path.join(output_path, "_curation_config"))
+    _write_curation_stats(spark, output_path, stats_row)
+    return {**stats_row, "curated_mode": "view", "losers_path": losers_path}
+
+
+def _fix_encoding_stage(
+    spark: SparkSession,
+    corpus: DataFrame,
+    output_path: str,
+    summary: dict,
+    *,
+    drop_exact_dups: bool,
+) -> dict:
+    """``fix_encoding=True``: ftfy-style UTF-8-as-cp1252 mojibake repair
+    (``operators.encoding.repair_mojibake``) as one single-pass JVM
+    expression over the curated text, written to ``curated_encfix``.
+
+    Runs FIRST among the optional stages — before cross-snapshot dedup (a
+    re-crawled page stored corrupted must match its repaired copy in the
+    prior corpus, so content identity is made canonical before any
+    comparison), before span/paragraph dedup (repaired variants of the
+    same text must dedup together) and before every scoring stage (the LM
+    / quality / classifier legs never see corrupted bytes).  Identities
+    are re-derived as in every rewriting stage, and (when
+    ``drop_exact_dups``) the exact keeper rule is re-applied on the
+    repaired shas — curation's dedup keyed on UNREPAIRED content, so a
+    clean copy and a corrupted copy of the same text in one snapshot both
+    survived it and collide only here.  Summary gains
+    ``mojibake_repaired`` (surviving repaired rows — a repaired row that
+    then loses the re-applied dedup counts in) + ``mojibake_dedup_losers``.
+    Map-only read→write apart from that dedup; the counters ride the
+    write as an Observation."""
+    from document_automation_spark.operators.encoding import repair_mojibake
+
+    repaired = repair_mojibake(
+        corpus.withColumnRenamed("content", "text"),
+        text_col="text",
+        # passes=2 also heals generation-2 mojibake ("Ã¢â‚¬â„¢" — a corrupted
+        # page re-crawled through another bad proxy); a pass over clean
+        # text is a no-op, so this is free for the common case
+        passes=2,
+    ).withColumnRenamed("text", "content")
+    repaired = _rederive_identities(repaired)
+    if drop_exact_dups:
+        # re-apply curation's keeper rule (min (url, passage_idx) per
+        # content key) on the repaired shas.  Curate's byte-identical (url,
+        # passage_idx) collision guard is intentionally omitted:
+        # post-curation rows have unique (url, passage_idx) by construction
+        # (extraction emits one row per passage), so two rows can never tie
+        # on the min key here.  A future caller feeding NON-unique keys
+        # through this stage must add the guard back.
+        keep = repaired.groupBy("content_sha").agg(
+            F.min(F.struct("url", "passage_idx")).alias("_keep")
         )
-        curated_path = os.path.join(output_path, "curated")
-        # ONE action runs the whole curation: stage counters ride the write as
-        # CollectMetrics observations (collect_stats() reads them afterwards).
-        (
-            curated.write.mode("overwrite")
-            .options(**PARQUET_WRITE_OPTIONS)
-            .parquet(curated_path)
+        repaired = (
+            repaired.join(keep, "content_sha")
+            .filter(
+                (F.col("url") == F.col("_keep.url"))
+                & (F.col("passage_idx") == F.col("_keep.passage_idx"))
+            )
+            .drop("_keep")
         )
-        stats = collect_stats()
-        stats_row = stats.first().asDict()
-        stats.repartition(1).write.mode("overwrite").parquet(
-            os.path.join(output_path, "_curation_stats")
+    obs_enc = Observation("fix_encoding")
+    enc_path = os.path.join(output_path, "curated_encfix")
+    _write_table(
+        repaired.observe(
+            obs_enc,
+            F.sum(F.col("was_mojibake").cast("long")).alias("n_repaired"),
+            F.count(F.lit(1)).alias("n_rows"),
+        ).drop("was_mojibake"),
+        enc_path,
+    )
+    # Counter contract: the Observation rides the post-dedup write, so a
+    # repaired row that then loses the re-applied exact dedup is counted in
+    # mojibake_dedup_losers, not in mojibake_repaired.  Observing pre-dedup
+    # instead would pin a CollectMetrics node into a plan the keeper-rule
+    # self-join reads twice; the losers counter already carries the
+    # collapsed rows, so the pair (repaired, dedup_losers) is complete.
+    return {
+        "mojibake_repaired": int(obs_enc.get["n_repaired"] or 0),
+        "mojibake_dedup_losers": int(
+            (summary.get("rows_out") or 0) - (obs_enc.get["n_rows"] or 0)
+        ),
+        "curated_path": enc_path,
+    }
+
+
+def _dedup_against_stage(
+    spark: SparkSession,
+    corpus: DataFrame,
+    output_path: str,
+    summary: dict,
+    *,
+    existing_path: str,
+    trust_existing_sha: bool,
+    after_fix_encoding: bool,
+) -> dict:
+    """``dedup_against_path``: cross-snapshot incremental dedup
+    (``operators.curate.dedup_against_corpus``) — drop every curated row
+    whose content already exists in the previously-published corpus at
+    ``existing_path``, the Common-Crawl monthly-snapshot recipe (most of
+    each snapshot is carry-over; dropping it here spares every later
+    stage).  Runs right after curation (only encoding repair precedes it,
+    so the comparison sees REPAIRED content and corrupted carry-over rows
+    cannot leak back in as "fresh").  ``trust_existing_sha=True`` prunes
+    the existing-corpus scan to its ``content_sha`` column alone (pass it
+    only for corpora written by this engine's durable writer).  Writes
+    ``curated_incremental``; summary gains ``xsnap_rows_in`` (the
+    curation's ``rows_out``) / ``xsnap_rows_kept``."""
+    from document_automation_spark.operators.curate import dedup_against_corpus
+
+    fresh = dedup_against_corpus(
+        corpus,
+        spark.read.parquet(existing_path),
+        # a RESUMED extraction can carry pre-content_sha buckets through
+        # untouched (buckets_skipped > 0) — null shas would silently bypass
+        # the anti-join, so only trust the pruned path when this run
+        # materialized every bucket itself OR when the encoding-repair
+        # stage just re-derived every row's sha from scratch
+        new_sha_complete=summary["buckets_skipped"] == 0 or after_fix_encoding,
+        existing_sha_complete=trust_existing_sha,
+    )
+    obs_x = Observation("xsnap")
+    xsnap_path = os.path.join(output_path, "curated_incremental")
+    _write_table(fresh.observe(obs_x, F.count(F.lit(1)).alias("rows_kept")), xsnap_path)
+    return {
+        "xsnap_rows_in": int(summary.get("rows_out") or 0),
+        "xsnap_rows_kept": int(obs_x.get["rows_kept"] or 0),
+        "curated_path": xsnap_path,
+    }
+
+
+def _span_cut_stage(
+    spark: SparkSession, corpus: DataFrame, output_path: str, summary: dict, *, k: int
+) -> dict:
+    """``cut_dup_spans=True``: exact-substring span surgery (Lee et al.
+    2022, ``operators.dedup.duplicate_spans``/``cut_spans``) — every
+    ≥``k``-char window occurring in ≥2 curated passages is cut from ALL of
+    them (the policy of Lee et al.'s released ExactSubstr tool —
+    cross-document repeated substrings at this length are boilerplate).
+    One extra corpus read/write (the gram explode is the operator's
+    inherent cost); both content-derived identities are re-derived.
+    Writes ``curated_cut``; summary gains ``cut_chars`` /
+    ``spanned_passages``."""
+    from document_automation_spark.operators.dedup import cut_spans, duplicate_spans
+
+    as_docs = corpus.withColumnRenamed("content", "text")
+    span_cache: list = []
+    spans = duplicate_spans(as_docs, k=k, min_docs=2, cache_registry=span_cache)
+    obs_cut = Observation("span_cut")
+    surgered = (
+        cut_spans(as_docs, spans)
+        .observe(
+            obs_cut,
+            F.sum("n_cut_chars").alias("cut_chars"),
+            F.sum((F.col("n_cut_chars") > 0).cast("long")).alias("spanned_passages"),
         )
-        summary = {**extract_summary, **stats_row, "curated_path": curated_path}
+        .withColumnRenamed("text", "content")
+        .drop("n_cut_chars")
+    )
+    cut_path = os.path.join(output_path, "curated_cut")
+    try:
+        _write_table(_rederive_identities(surgered), cut_path)
+    finally:
+        for handle in span_cache:  # targeted: never clearCache() the session
+            handle.unpersist()
+    return {
+        "cut_chars": int(obs_cut.get["cut_chars"] or 0),
+        "spanned_passages": int(obs_cut.get["spanned_passages"] or 0),
+        "curated_path": cut_path,
+    }
 
-        if fix_encoding:
-            # ftfy-style UTF-8-as-cp1252 mojibake repair
-            # (operators/encoding.py) — runs BEFORE span/paragraph dedup
-            # so repaired variants of the same text dedup together, and
-            # before every scoring stage so LM/quality/classifier never
-            # see corrupted bytes.  Map-only read→write; the repaired-row
-            # counter rides the write as an Observation.
-            from document_automation_spark.operators.encoding import repair_mojibake
 
-            corpus = spark.read.parquet(summary["curated_path"])
-            repaired = (
-                repair_mojibake(
-                    corpus.withColumnRenamed("content", "text"),
-                    text_col="text",
-                    # passes=2 also heals generation-2 mojibake
-                    # ("Ã¢â‚¬â„¢" — a corrupted page re-crawled through
-                    # another bad proxy); a pass over clean text is a
-                    # no-op, so this is free for the common case
-                    passes=2,
-                )
-                .withColumnRenamed("text", "content")
-            )
-            # re-derive both content-derived identities over the
-            # (possibly) rewritten text — same contract as span
-            # surgery / PII redaction
-            repaired = _rederive_identities(repaired)
-            if drop_exact_dups:
-                # curation's exact dedup keyed on the UNREPAIRED content,
-                # so a clean copy and a corrupted copy of the same text in
-                # ONE snapshot both survived it and became byte-identical
-                # here — re-apply the same keeper rule (min (url,
-                # passage_idx) per content key) on the repaired shas.
-                # Curate's byte-identical (url, passage_idx) collision
-                # guard is intentionally omitted: post-curation rows have
-                # unique (url, passage_idx) by construction (extraction
-                # emits one row per passage), so two rows can never tie on
-                # the min key here.  A future caller feeding NON-unique
-                # keys through this stage must add the guard back.
-                keep = repaired.groupBy("content_sha").agg(
-                    F.min(F.struct("url", "passage_idx")).alias("_keep")
-                )
-                repaired = (
-                    repaired.join(keep, "content_sha")
-                    .filter(
-                        (F.col("url") == F.col("_keep.url"))
-                        & (F.col("passage_idx") == F.col("_keep.passage_idx"))
-                    )
-                    .drop("_keep")
-                )
-            obs_enc = Observation("fix_encoding")
-            enc_path = os.path.join(output_path, "curated_encfix")
-            (
-                repaired.observe(
-                    obs_enc,
-                    F.sum(F.col("was_mojibake").cast("long")).alias("n_repaired"),
-                    F.count(F.lit(1)).alias("n_rows"),
-                )
-                .drop("was_mojibake")
-                .write.mode("overwrite")
-                .options(**PARQUET_WRITE_OPTIONS)
-                .parquet(enc_path)
-            )
-            # Counter contract: mojibake_repaired counts SURVIVING repaired
-            # rows (the Observation rides the post-dedup write), so a
-            # repaired row that then loses the re-applied exact dedup — the
-            # corrupted-copy-collides-with-clean-copy case — is counted in
-            # mojibake_dedup_losers, not here.  Observing pre-dedup instead
-            # would pin a CollectMetrics node into a plan the keeper-rule
-            # self-join reads twice; the losers counter already carries the
-            # collapsed rows, so the pair (repaired, dedup_losers) is
-            # complete.
-            summary["mojibake_repaired"] = int(obs_enc.get["n_repaired"] or 0)
-            summary["mojibake_dedup_losers"] = int(
-                (stats_row.get("rows_out") or 0) - (obs_enc.get["n_rows"] or 0)
-            )
-            summary["curated_path"] = enc_path
+def _paragraph_dedup_stage(
+    spark: SparkSession, corpus: DataFrame, output_path: str, summary: dict, *, mode: str
+) -> dict:
+    """``dedup_paragraphs_mode``: CCNet-style cross-document PARAGRAPH
+    dedup (``operators.dedup.dedup_paragraphs``) over the curated
+    passages: ``'first'`` keeps the globally-first copy of every
+    duplicated paragraph, ``'common[:MIN_DOCS]'`` cuts paragraphs shared
+    by ≥ MIN_DOCS (default 2) distinct passages everywhere (template
+    boilerplate — cookie banners, navigation stubs); a ``'+norm'`` suffix
+    on either mode keys on the CCNet hash normalization (case / accents /
+    digits / unicode punctuation folded) so boilerplate VARIANTS dedup
+    together.  Passages emptied by the cut are dropped; identities are
+    re-derived.  Writes ``curated_paradedup``; summary gains
+    ``dropped_paragraphs`` / ``para_deduped_passages`` /
+    ``para_emptied_passages``."""
+    from document_automation_spark.operators.dedup import dedup_paragraphs
 
-        if dedup_against_path:
-            from document_automation_spark.operators.curate import (
-                dedup_against_corpus,
-            )
+    mode, _, k_str = mode.partition(":")
+    mode, _, flag = mode.partition("+")
+    as_docs = corpus.withColumnRenamed("content", "text").withColumn(
+        # passages share doc_id — the dedup row key must be unique (and
+        # deterministically ordered for 'first' mode)
+        "_row_key",
+        F.concat_ws(":", "doc_id", "passage_idx"),
+    )
+    out = dedup_paragraphs(
+        as_docs,
+        mode=mode,
+        min_docs=int(k_str or 2),
+        id_col="_row_key",
+        normalize=flag == "norm",
+    )
+    obs_para = Observation("para_dedup")
+    surgered = (
+        out.observe(
+            obs_para,
+            F.sum("n_dropped_paragraphs").alias("dropped_paragraphs"),
+            F.sum((F.col("n_dropped_paragraphs") > 0).cast("long")).alias(
+                "para_deduped_passages"
+            ),
+            F.sum((F.trim("text") == "").cast("long")).alias("para_emptied_passages"),
+        )
+        # a passage whose every paragraph was boilerplate is gone
+        .where(F.trim("text") != "")
+        .drop("_row_key", "n_dropped_paragraphs")
+        .withColumnRenamed("text", "content")
+    )
+    para_path = os.path.join(output_path, "curated_paradedup")
+    _write_table(_rederive_identities(surgered), para_path)
+    return {
+        **{k: int(v or 0) for k, v in obs_para.get.items()},
+        "curated_path": para_path,
+    }
 
-            existing = spark.read.parquet(dedup_against_path)
-            fresh = dedup_against_corpus(
-                # summary["curated_path"], NOT the raw curated_path local:
-                # when fix_encoding ran, the comparison must see REPAIRED
-                # content or every corrupted carry-over row leaks back in
-                # as a "fresh" duplicate (pinned by the ordering test)
-                spark.read.parquet(summary["curated_path"]),
-                existing,
-                # the curated table was just written, but a RESUMED
-                # extraction can carry pre-content_sha buckets through
-                # untouched (buckets_skipped > 0) — null shas would
-                # silently bypass the anti-join, so only trust the pruned
-                # path when this run materialized every bucket itself
-                # (round-4 advisory) OR when the encoding-repair stage
-                # just re-derived every row's sha from scratch
-                new_sha_complete=sha_complete or fix_encoding,
-                existing_sha_complete=trust_existing_sha,
-            )
-            obs_x = Observation("xsnap")
-            xsnap_path = os.path.join(output_path, "curated_incremental")
-            (
-                fresh.observe(obs_x, F.count(F.lit(1)).alias("rows_kept"))
-                .write.mode("overwrite")
-                .options(**PARQUET_WRITE_OPTIONS)
-                .parquet(xsnap_path)
-            )
-            summary["xsnap_rows_in"] = int(stats_row.get("rows_out") or 0)
-            summary["xsnap_rows_kept"] = int(obs_x.get["rows_kept"] or 0)
-            summary["curated_path"] = xsnap_path
 
-        if cut_dup_spans:
-            from document_automation_spark.operators.dedup import (
-                cut_spans,
-                duplicate_spans,
-            )
+def _quality_stage(
+    spark: SparkSession, corpus: DataFrame, output_path: str, summary: dict, *, rules
+) -> dict:
+    """``quality_filter=True``: the Gopher/C4 repetition gate
+    (``operators.webtext_quality.filter_by_quality``; thresholds from
+    ``rules``, default the published Gopher bounds) — a zero-shuffle
+    expression gate whose per-rule drop counters ride the write as
+    Observation metrics.  Writes ``curated_quality``; summary gains
+    ``quality_n_docs`` / ``quality_n_kept`` / ``quality_drop_<rule>``."""
+    from document_automation_spark.operators.webtext_quality import (
+        QualityRules,
+        filter_by_quality,
+    )
 
-            corpus = spark.read.parquet(summary["curated_path"])
-            as_docs = corpus.withColumnRenamed("content", "text")
-            span_cache: list = []
-            spans = duplicate_spans(
-                as_docs, k=span_k, min_docs=2, cache_registry=span_cache
-            )
-            obs_cut = Observation("span_cut")
-            surgered = (
-                cut_spans(as_docs, spans)
-                .observe(
-                    obs_cut,
-                    F.sum("n_cut_chars").alias("cut_chars"),
-                    F.sum((F.col("n_cut_chars") > 0).cast("long")).alias(
-                        "spanned_passages"
-                    ),
-                )
-                .withColumnRenamed("text", "content")
-                .drop("n_cut_chars")
-            )
-            # surgery rewrote text → re-derive both content-derived ids
-            surgered = _rederive_identities(surgered)
-            cut_path = os.path.join(output_path, "curated_cut")
-            try:
-                (
-                    surgered.write.mode("overwrite")
-                    .options(**PARQUET_WRITE_OPTIONS)
-                    .parquet(cut_path)
-                )
-            finally:
-                for handle in span_cache:  # targeted: never clearCache() the session
-                    handle.unpersist()
-            summary["cut_chars"] = int(obs_cut.get["cut_chars"] or 0)
-            summary["spanned_passages"] = int(obs_cut.get["spanned_passages"] or 0)
-            summary["curated_path"] = cut_path
+    kept, obs_q = filter_by_quality(
+        corpus.withColumnRenamed("content", "text"), rules=rules or QualityRules()
+    )
+    quality_path = os.path.join(output_path, "curated_quality")
+    _write_table(kept.withColumnRenamed("text", "content"), quality_path)
+    return {
+        **{f"quality_{k}": int(v or 0) for k, v in obs_q.get.items()},
+        "curated_path": quality_path,
+    }
 
-        if dedup_paragraphs_mode is not None:
-            # CCNet-style cross-document paragraph dedup over the curated
-            # passages: 'first' keeps the globally-first copy of every
-            # duplicated paragraph, 'common[:K]' cuts paragraphs shared by
-            # >= K distinct passages everywhere (template boilerplate).
-            from document_automation_spark.operators.dedup import dedup_paragraphs
 
-            mode, _, k_str = dedup_paragraphs_mode.partition(":")
-            mode, _, flag = mode.partition("+")  # '+norm' = CCNet key norm
-            corpus = spark.read.parquet(summary["curated_path"])
-            as_docs = corpus.withColumnRenamed("content", "text").withColumn(
-                # passages share doc_id — the dedup row key must be unique
-                # (and deterministically ordered for 'first' mode)
-                "_row_key",
-                F.concat_ws(":", "doc_id", "passage_idx"),
-            )
-            out = dedup_paragraphs(
-                as_docs,
-                mode=mode,
-                min_docs=int(k_str or 2),
-                id_col="_row_key",
-                normalize=flag == "norm",
-            )
-            obs_para = Observation("para_dedup")
-            surgered = (
-                out.observe(
-                    obs_para,
-                    F.sum("n_dropped_paragraphs").alias("dropped_paragraphs"),
-                    F.sum((F.col("n_dropped_paragraphs") > 0).cast("long")).alias(
-                        "para_deduped_passages"
-                    ),
-                    F.sum((F.trim("text") == "").cast("long")).alias(
-                        "para_emptied_passages"
-                    ),
-                )
-                # a passage whose every paragraph was boilerplate is gone
-                .where(F.trim("text") != "")
-                .drop("_row_key", "n_dropped_paragraphs")
-                .withColumnRenamed("text", "content")
-            )
-            # text rewritten → re-derive both content-derived identities
-            surgered = _rederive_identities(surgered)
-            para_path = os.path.join(output_path, "curated_paradedup")
-            (
-                surgered.write.mode("overwrite")
-                .options(**PARQUET_WRITE_OPTIONS)
-                .parquet(para_path)
-            )
-            summary["dropped_paragraphs"] = int(
-                obs_para.get["dropped_paragraphs"] or 0
-            )
-            summary["para_deduped_passages"] = int(
-                obs_para.get["para_deduped_passages"] or 0
-            )
-            summary["para_emptied_passages"] = int(
-                obs_para.get["para_emptied_passages"] or 0
-            )
-            summary["curated_path"] = para_path
+def _hygiene_stage(
+    spark: SparkSession,
+    corpus: DataFrame,
+    output_path: str,
+    summary: dict,
+    *,
+    bench_path: str | None,
+    ngram: int,
+    redact: bool,
+) -> dict:
+    """``decontaminate_path`` / ``pii_redact``: the corpus-HYGIENE stage.
+    GPT-3-style n-gram benchmark decontamination drops every doc sharing
+    an ``ngram``-gram with the eval-set parquet at ``bench_path``
+    (``operators.decontaminate``); PII redaction
+    (``operators.pii.redact_pii``) rewrites text, and the content-derived
+    identities are re-derived after it.  Both compose into ONE plan + ONE
+    write to ``curated_hygiene``; counters land in the summary as
+    ``decontam_*`` / ``pii_*``."""
+    from document_automation_spark.operators.decontaminate import decontaminate
+    from document_automation_spark.operators.pii import redact_pii
 
-        if quality_filter:
-            from document_automation_spark.operators.webtext_quality import (
-                QualityRules,
-                filter_by_quality,
-            )
-
-            corpus = spark.read.parquet(summary["curated_path"])
-            kept, obs_q = filter_by_quality(
-                corpus.withColumnRenamed("content", "text"),
-                rules=quality_rules or QualityRules(),
-            )
-            quality_path = os.path.join(output_path, "curated_quality")
-            (
-                kept.withColumnRenamed("text", "content")
-                .write.mode("overwrite")
-                .options(**PARQUET_WRITE_OPTIONS)
-                .parquet(quality_path)
-            )
-            summary.update(
-                {f"quality_{k}": int(v or 0) for k, v in obs_q.get.items()}
-            )
-            summary["curated_path"] = quality_path
-
-        if decontaminate_path or pii_redact:
-            # corpus-hygiene stage: benchmark decontamination (drop) then
-            # PII redaction (rewrite) composed into ONE plan + ONE write —
-            # both stages' counters ride that write as Observations.
-            from document_automation_spark.operators.decontaminate import decontaminate
-            from document_automation_spark.operators.pii import redact_pii
-
-            corpus = spark.read.parquet(summary["curated_path"]).withColumnRenamed(
-                "content", "text"
-            )
-            obs_d = obs_p = None
-            if decontaminate_path:
-                bench = spark.read.parquet(decontaminate_path).select("text")
-                corpus, obs_d = decontaminate(
-                    corpus, bench, n=decontaminate_ngram, doc_id_col="doc_id"
-                )
-            if pii_redact:
-                corpus, obs_p = redact_pii(corpus, count_cols=False)
-                # redaction rewrites text → re-derive both identities
-                corpus = _rederive_identities(corpus, text_col="text")
-            hygiene_path = os.path.join(output_path, "curated_hygiene")
-            (
-                corpus.withColumnRenamed("text", "content")
-                .write.mode("overwrite")
-                .options(**PARQUET_WRITE_OPTIONS)
-                .parquet(hygiene_path)
-            )
-            if obs_d is not None:
-                summary.update(
-                    {f"decontam_{k}": int(v or 0) for k, v in obs_d.get.items()}
-                )
-            if obs_p is not None:
-                summary.update({f"pii_{k}": int(v or 0) for k, v in obs_p.get.items()})
-            summary["curated_path"] = hygiene_path
-
-        if classifier_good_path:
-            summary.update(
-                _classifier_stage(
-                    spark,
-                    spark.read.parquet(summary["curated_path"]),
-                    output_path,
-                    classifier_good_path,
-                    classifier_alpha,
-                )
-            )
-            summary["curated_path"] = summary["classifier_path"]
-
-        if dsir_target_path:
-            summary.update(
-                _dsir_stage(
-                    spark,
-                    spark.read.parquet(summary["curated_path"]),
-                    output_path,
-                    dsir_target_path,
-                    dsir_keep_frac,
-                )
-            )
-            summary["curated_path"] = summary["dsir_path"]
-
-        if train_bpe_merges is not None:
-            summary.update(
-                _bpe_stage(
-                    spark,
-                    spark.read.parquet(summary["curated_path"]),
-                    output_path,
-                    train_bpe_merges,
-                    bpe_min_freq,
-                )
-            )
-            summary["curated_path"] = summary["bpe_path"]
-
-        if embed:
-            summary.update(
-                _embed_stage(
-                    spark, spark.read.parquet(summary["curated_path"]), output_path, embed_dim
-                )
-            )
-
-        if semantic_dedup_threshold is not None:
-            # SemDeDup over the embeddings the --embed stage just wrote:
-            # cluster, pair within cluster, keep the farthest-from-centroid
-            # member of every semantic group; drop the loser PASSAGES from
-            # both the corpus and the embeddings table (doc_id is a
-            # content-derived per-passage key, so the anti-join is row-exact)
-            from document_automation_spark.operators.similarity import semantic_dedup
-
-            emb = spark.read.parquet(summary["embeddings_path"]).withColumnRenamed(
-                "vector_id", "vec_id"
-            )
-            sem_cache: list = []
-            flags = semantic_dedup(
-                emb,
-                n_clusters=semantic_clusters,
-                threshold=semantic_dedup_threshold,
-                cache_registry=sem_cache,
-            )
-            losers = flags.where(~F.col("kept")).select("doc_id")
-            corpus = spark.read.parquet(summary["curated_path"])
-            sem_path = os.path.join(output_path, "curated_semdedup")
-            obs_sem = Observation("semantic_dedup")
-            (
-                corpus.join(losers, "doc_id", "left_anti")
-                .observe(obs_sem, F.count(F.lit(1)).alias("kept_rows"))
-                .write.mode("overwrite")
-                .options(**PARQUET_WRITE_OPTIONS)
-                .parquet(sem_path)
-            )
-            kept_rows = int(obs_sem.get["kept_rows"] or 0)
-            # embeddings table follows the corpus (the ANN/serving input
-            # must not serve dropped passages); original dense vector_ids
-            # are kept — gaps mark dedup losers, order is untouched
-            emb_sem_path = os.path.join(output_path, "embeddings_semdedup")
-            try:
-                (
-                    flags.where(F.col("kept"))
-                    .withColumnRenamed("vec_id", "vector_id")
-                    .drop("bucket", "centroid_sim", "kept")
-                    .write.mode("overwrite")
-                    .options(**PARQUET_WRITE_OPTIONS)
-                    .parquet(emb_sem_path)
-                )
-            finally:
-                for handle in sem_cache:  # targeted: never clearCache()
-                    handle.unpersist()
-            summary["semdedup_dropped"] = summary["n_vectors"] - kept_rows
-            summary["n_vectors"] = kept_rows
-            summary["curated_path"] = sem_path
-            summary["embeddings_path"] = emb_sem_path
-
-        if pack_seqlen is not None:
-            summary.update(
-                _pack_stage(
-                    spark,
-                    spark.read.parquet(summary["curated_path"]),
-                    output_path,
-                    pack_seqlen,
-                    tokens_col=(
-                        "n_tokens_bpe" if train_bpe_merges is not None else None
-                    ),
-                )
-            )
-
-        return summary
+    corpus = corpus.withColumnRenamed("content", "text")
+    obs = {}
+    if bench_path:
+        bench = spark.read.parquet(bench_path).select("text")
+        corpus, obs["decontam"] = decontaminate(corpus, bench, n=ngram, doc_id_col="doc_id")
+    if redact:
+        corpus, obs["pii"] = redact_pii(corpus, count_cols=False)
+        corpus = _rederive_identities(corpus, text_col="text")
+    hygiene_path = os.path.join(output_path, "curated_hygiene")
+    _write_table(corpus.withColumnRenamed("text", "content"), hygiene_path)
+    return {
+        **{
+            f"{tag}_{k}": int(v or 0)
+            for tag, o in obs.items()
+            for k, v in o.get.items()
+        },
+        "curated_path": hygiene_path,
+    }
 
 
 def _link_graph_stage(
@@ -1022,16 +879,21 @@ def _classifier_stage(
     spark: SparkSession,
     curated: DataFrame,
     output_path: str,
+    summary: dict,
+    *,
     good_path: str,
     alpha: float,
 ) -> dict:
-    """GPT-3-style learned quality filter as one more pipeline stage:
-    positives = the trusted reference parquet, negatives = a ~2×-positive
+    """``classifier_good_path``: the GPT-3-style learned quality filter
+    (``operators.quality_classifier``).  Positives = the trusted
+    reference parquet's ``text`` column, negatives = a ~2×-positive
     deterministic hash-sample of the corpus itself (the GPT-3 recipe —
-    raw crawl IS the negative class), score inline on the corpus scan
-    (map-only MLlib transform, no re-join), pareto-importance keep."""
-    from pyspark.sql import functions as F
-
+    raw crawl IS the negative class); every curated doc is scored inline
+    on the corpus scan (map-only MLlib transform, no re-join) and kept
+    iff ``pareto(alpha) > 1 - score`` (importance sampling, not a hard
+    cut).  Writes ``curated_classifier`` with a ``quality_score`` column
+    and the model to ``quality_classifier_model``; summary gains
+    ``classifier_n_docs`` / ``classifier_n_kept`` / ``classifier_n_pos``."""
     from document_automation_spark.operators.mixing import uniform_hash_col
     from document_automation_spark.operators.quality_classifier import (
         pareto_importance_filter,
@@ -1061,21 +923,19 @@ def _classifier_stage(
     kept = pareto_importance_filter(scored, alpha=alpha)
     classifier_path = os.path.join(output_path, "curated_classifier")
     # the kept count rides the write as an Observation — no re-read job
-
     obs = Observation("classifier_stage")
-    (
-        kept.withColumnRenamed("text", "content")
-        .observe(obs, F.count(F.lit(1)).alias("n_kept"))
-        .write.mode("overwrite")
-        .options(**PARQUET_WRITE_OPTIONS)
-        .parquet(classifier_path)
+    _write_table(
+        kept.withColumnRenamed("text", "content").observe(
+            obs, F.count(F.lit(1)).alias("n_kept")
+        ),
+        classifier_path,
     )
-    n_kept = obs.get["n_kept"]
     return {
         "classifier_path": classifier_path,
         "classifier_n_docs": int(n_docs),
-        "classifier_n_kept": int(n_kept),
+        "classifier_n_kept": int(obs.get["n_kept"]),
         "classifier_n_pos": int(n_pos),
+        "curated_path": classifier_path,
     }
 
 
@@ -1083,16 +943,22 @@ def _dsir_stage(
     spark: SparkSession,
     curated: DataFrame,
     output_path: str,
+    summary: dict,
+    *,
     target_path: str,
     keep_frac: float,
 ) -> dict:
-    """DSIR as a pipeline stage: target = the trusted parquet, raw = the
-    curated corpus itself; keep the Gumbel-top-``keep_frac`` fraction.
-    Production path uses xxhash64 bucketing (the md5 parity leg is the
-    oracle seat's job); k derives from an exact corpus count, which the
-    scoring pass needs anyway."""
-    from pyspark.sql import functions as F
-
+    """``dsir_target_path``: DSIR importance resampling
+    (``operators.dsir``) — fit hashed-ngram bucket models to the trusted
+    target parquet vs the curated corpus itself, score every doc by the
+    log-ratio sum, and Gumbel-top-k the best ``keep_frac`` of the corpus.
+    Distribution matching where the classifier stage is quality
+    thresholding; they compose (classifier first, then DSIR).  Uses the
+    xxhash64 fast path (the md5 parity leg is the ``dsir_selection``
+    oracle seat's job); k derives from an exact doc count, which the
+    scoring pass needs anyway.  Writes ``curated_dsir`` with a
+    ``dsir_score`` column; summary gains ``dsir_n_docs`` /
+    ``dsir_n_kept``."""
     from document_automation_spark.operators.dsir import (
         dsir_resample,
         dsir_scores,
@@ -1112,17 +978,14 @@ def _dsir_stage(
     k = max(1, int(n_docs * keep_frac))
     kept_ids = dsir_resample(scored, k=k).select("doc_id", "dsir_score")
     dsir_path = os.path.join(output_path, "curated_dsir")
-    (
-        corpus.join(kept_ids, "doc_id")
-        .withColumnRenamed("text", "content")
-        .write.mode("overwrite")
-        .options(**PARQUET_WRITE_OPTIONS)
-        .parquet(dsir_path)
+    _write_table(
+        corpus.join(kept_ids, "doc_id").withColumnRenamed("text", "content"), dsir_path
     )
     return {
         "dsir_path": dsir_path,
         "dsir_n_docs": int(n_docs),
         "dsir_n_kept": int(min(k, n_docs)),
+        "curated_path": dsir_path,
     }
 
 
@@ -1130,16 +993,22 @@ def _bpe_stage(
     spark: SparkSession,
     curated: DataFrame,
     output_path: str,
+    summary: dict,
+    *,
     n_merges: int,
     min_freq: int,
 ) -> dict:
-    """Tokenizer stage: train BPE on the curated corpus, persist the
-    merge table (the reusable tokenizer artifact — rank order IS the
-    tokenizer), annotate every row with its BPE token count.  Counts
-    only: the packer sizes chunks from budgets; loaders that need token
-    STREAMS replay ``encode_documents`` with the persisted merges."""
-    from pyspark.sql import functions as F
-
+    """``train_bpe_merges``: the tokenizer stage (``operators.bpe``).
+    Train a BPE merge table on the final curated corpus (one corpus pass
+    for word frequencies, ``min_freq`` hapax prune, then merge rounds on
+    the word table alone), persist it as the reusable ``bpe_merges/``
+    artifact (rank order IS the tokenizer), and annotate every corpus row
+    with its BPE token count in ``curated_bpe`` (``n_tokens_bpe`` — counts
+    only; loaders that need token STREAMS replay ``encode_documents``
+    with the persisted merges).  When ``pack_seqlen`` also runs, packing
+    sizes chunks by these counts instead of whitespace tokens — the
+    tokenizer→budget→pack chain a real LM data pipeline runs.  Summary
+    gains ``bpe_n_merges`` / ``bpe_vocab_words`` / ``bpe_total_tokens``."""
     from document_automation_spark.operators.bpe import (
         count_tokens,
         learn_bpe,
@@ -1170,26 +1039,113 @@ def _bpe_stage(
     )
     bpe_path = os.path.join(output_path, "curated_bpe")
     # total-token counter rides the write as an Observation — no re-read
-
     obs = Observation("bpe_stage")
-    (
+    _write_table(
         corpus.withColumn("_rk", row_key)
         .join(counts, "_rk", "left")
         .drop("_rk")
         .withColumn("n_tokens_bpe", F.coalesce("n_tokens_bpe", F.lit(0)))
         .withColumnRenamed("text", "content")
-        .observe(obs, F.sum("n_tokens_bpe").alias("tot"))
-        .write.mode("overwrite")
-        .options(**PARQUET_WRITE_OPTIONS)
-        .parquet(bpe_path)
+        .observe(obs, F.sum("n_tokens_bpe").alias("tot")),
+        bpe_path,
     )
-    stats = obs.get
     return {
         "bpe_path": bpe_path,
         "bpe_merges_path": merges_path,
         "bpe_n_merges": int(len(merges)),
         "bpe_vocab_words": int(wf.count()),
-        "bpe_total_tokens": int(stats["tot"] or 0),
+        "bpe_total_tokens": int(obs.get["tot"] or 0),
+        "curated_path": bpe_path,
+    }
+
+
+def _embed_stage(
+    spark: SparkSession, curated: DataFrame, output_path: str, summary: dict, *, dim: int
+) -> dict:
+    """``embed=True``: the reference's post-extraction EMBEDDING phase
+    (the reference's gen-sods-doc-image-ray.py:203-231: embed every
+    passage, assign the global dense vector_id, push to the index) as one
+    more distributed stage of the same spark-submit: hash-embed the
+    curated passages (the model slot — swap ``embed_documents`` for
+    ``embed_with_model`` + a real encoder factory and nothing else
+    changes), assign dense 0-based vector ids WITHOUT a global
+    single-partition window, write the ``embeddings`` table.  The ANN
+    operators (similarity/ivf) and the serving layer read this table
+    as-is.  The one optional stage that also runs in view and fused
+    mode.  Summary gains ``embeddings_path`` / ``n_vectors``."""
+    from document_automation_spark.functions.embed import (
+        assign_dense_vector_ids,
+        embed_documents,
+    )
+
+    docs = curated.select("doc_id", F.col("content").alias("text"))
+    embedded = embed_documents(docs, dim=dim)
+    cache = []
+    with_ids = assign_dense_vector_ids(embedded, order_col="doc_id", cache_registry=cache)
+    embeddings_path = os.path.join(output_path, "embeddings")
+    _write_table(with_ids, embeddings_path)
+    for handle in cache:
+        handle.unpersist()
+    n_vectors = spark.read.parquet(embeddings_path).count()
+    return {"embeddings_path": embeddings_path, "n_vectors": n_vectors}
+
+
+def _semantic_dedup_stage(
+    spark: SparkSession,
+    corpus: DataFrame,
+    output_path: str,
+    summary: dict,
+    *,
+    threshold: float,
+    n_clusters: int,
+) -> dict:
+    """``semantic_dedup_threshold``: SemDeDup
+    (``operators.similarity.semantic_dedup``) over the embeddings the
+    embed stage just wrote — k-means clusters (``n_clusters``),
+    within-cluster cosine pairs ≥ ``threshold``, keep the
+    farthest-from-centroid member of every semantic group.  Loser
+    PASSAGES are anti-joined out of the corpus (``curated_semdedup``) AND
+    the embeddings table (``embeddings_semdedup``; vector ids keep their
+    values — gaps mark dedup losers), so the ANN/serving input never
+    serves dropped content; doc_id is a content-derived per-passage key,
+    so the anti-join is row-exact.  Runs before packing so chunk maps are
+    built over the deduped corpus.  Summary gains ``semdedup_dropped``
+    and ``n_vectors`` shrinks to the survivors."""
+    from document_automation_spark.operators.similarity import semantic_dedup
+
+    emb = spark.read.parquet(summary["embeddings_path"]).withColumnRenamed(
+        "vector_id", "vec_id"
+    )
+    sem_cache: list = []
+    flags = semantic_dedup(
+        emb, n_clusters=n_clusters, threshold=threshold, cache_registry=sem_cache
+    )
+    losers = flags.where(~F.col("kept")).select("doc_id")
+    sem_path = os.path.join(output_path, "curated_semdedup")
+    emb_sem_path = os.path.join(output_path, "embeddings_semdedup")
+    obs_sem = Observation("semantic_dedup")
+    try:
+        _write_table(
+            corpus.join(losers, "doc_id", "left_anti").observe(
+                obs_sem, F.count(F.lit(1)).alias("kept_rows")
+            ),
+            sem_path,
+        )
+        _write_table(
+            flags.where(F.col("kept"))
+            .withColumnRenamed("vec_id", "vector_id")
+            .drop("bucket", "centroid_sim", "kept"),
+            emb_sem_path,
+        )
+    finally:
+        for handle in sem_cache:  # targeted: never clearCache()
+            handle.unpersist()
+    kept_rows = int(obs_sem.get["kept_rows"] or 0)
+    return {
+        "semdedup_dropped": summary["n_vectors"] - kept_rows,
+        "n_vectors": kept_rows,
+        "curated_path": sem_path,
+        "embeddings_path": emb_sem_path,
     }
 
 
@@ -1197,19 +1153,23 @@ def _pack_stage(
     spark: SparkSession,
     curated: DataFrame,
     output_path: str,
+    summary: dict,
+    *,
     seq_len: int,
     tokens_col: str | None = None,
 ) -> dict:
-    """The LM-batcher stage: pack the curated passages into
-    fixed-``seq_len``-token chunks, sharded by the durable ``bucket``
-    column (each shard's cumulative window is bucket-bounded — never
-    corpus-global) with the deterministic (doc_id, passage_idx) order
-    key.  Writes the segment map (the loader's join table) partitioned
-    by bucket like the corpus itself.  ``tokens_col`` switches the chunk
-    budget from whitespace counts to a precomputed column (the BPE
-    stage's ``n_tokens_bpe``)."""
-    from pyspark.sql import functions as F
-
+    """``pack_seqlen``: the LM-batcher stage — concat-chop sequence
+    packing (``operators.packing.pack_sequences``) of the final curated
+    passages into fixed-``seq_len``-token chunks, sharded by the durable
+    ``bucket`` column (the output-file granularity, so every shard's
+    cumulative window is bounded — never corpus-global) and ordered by
+    the deterministic (doc_id, passage_idx) key.  Writes the (passage ×
+    chunk) segment map to ``chunk_map/``, partitioned by shard like the
+    corpus itself — the table a training loader joins to materialise
+    batches.  ``tokens_col`` switches the chunk budget from whitespace
+    counts to a precomputed column (the BPE stage's ``n_tokens_bpe``).
+    Summary gains ``pack_n_chunks`` / ``pack_n_segments`` /
+    ``pack_n_tokens``."""
     from document_automation_spark.operators.packing import chunk_stats, pack_sequences
 
     packed_in = curated.select(
@@ -1230,12 +1190,7 @@ def _pack_stage(
         tokens_col=tokens_col,
     )
     pack_path = os.path.join(output_path, "chunk_map")
-    (
-        segments.write.mode("overwrite")
-        .partitionBy("shard")
-        .options(**PARQUET_WRITE_OPTIONS)
-        .parquet(pack_path)
-    )
+    _write_table(segments, pack_path, partition_col="shard")
     stats = (
         chunk_stats(spark.read.parquet(pack_path), shard_col="shard", id_col="pack_id")
         .agg(
@@ -1252,42 +1207,6 @@ def _pack_stage(
         "pack_n_tokens": int(stats["n_tokens"] or 0),
         "pack_n_segments": int(n_segments),
     }
-
-
-def _embed_stage(
-    spark: SparkSession, curated: DataFrame, output_path: str, dim: int
-) -> dict:
-    """The reference's post-extraction EMBEDDING phase
-    (/root/reference/src/gen-sods-doc-image-ray.py:203-231: embed every
-    passage, assign the global dense vector_id, push to the index) as one
-    more distributed stage of the same spark-submit: hash-embed the
-    curated passages (the model slot — swap ``embed_documents`` for
-    ``embed_with_model`` + a real encoder factory and nothing else
-    changes), assign dense 0-based vector ids WITHOUT a global
-    single-partition window, write the embeddings table.  The ANN
-    operators (similarity/ivf) and the serving layer read this table
-    as-is."""
-    from pyspark.sql import functions as F
-
-    from document_automation_spark.functions.embed import (
-        assign_dense_vector_ids,
-        embed_documents,
-    )
-
-    docs = curated.select("doc_id", F.col("content").alias("text"))
-    embedded = embed_documents(docs, dim=dim)
-    cache = []
-    with_ids = assign_dense_vector_ids(embedded, order_col="doc_id", cache_registry=cache)
-    embeddings_path = os.path.join(output_path, "embeddings")
-    (
-        with_ids.write.mode("overwrite")
-        .options(**PARQUET_WRITE_OPTIONS)
-        .parquet(embeddings_path)
-    )
-    for handle in cache:
-        handle.unpersist()
-    n_vectors = spark.read.parquet(embeddings_path).count()
-    return {"embeddings_path": embeddings_path, "n_vectors": n_vectors}
 
 
 def read_curated(spark: SparkSession, output_path: str) -> DataFrame:

@@ -49,6 +49,18 @@ STATS_SCHEMA = (
 )
 
 
+def _stats_frame(spark, counts: dict) -> DataFrame:
+    """The one-row :data:`STATS_SCHEMA` frame of ``counts``, built from JVM
+    literals: a ``createDataFrame`` of local rows would run a Python-worker
+    job every time the frame is read or written."""
+    return spark.range(1, numPartitions=1).select(
+        *(
+            F.lit(counts[name]).cast(kind).alias(name)
+            for name, kind in (field.split() for field in STATS_SCHEMA.split(","))
+        )
+    )
+
+
 def _script_of(content_col) -> "F.Column":
     # the SAME expression object as operators.text_analysis (one definition,
     # cannot drift from the detect_script oracle)
@@ -165,8 +177,6 @@ def curate_extracted(
         obs_out, F.sum((~quarantined_f).cast("long")).alias("rows_out")
     )
 
-    spark = documents.sparkSession
-
     def collect_stats() -> DataFrame:
         gi, go = obs_in.get, obs_out.get  # blocks until the first action
         total = int(gi["total"])
@@ -174,9 +184,15 @@ def curate_extracted(
         n_gated_out = int(gi["gated"] or 0)
         n_curated = int(go["rows_out"] or 0)  # sum() is NULL on empty input
         n_gated_in = total - n_quarantined - n_gated_out
-        return spark.createDataFrame(
-            [(total, n_quarantined, n_gated_out, n_gated_in - n_curated, n_curated)],
-            STATS_SCHEMA,
+        return _stats_frame(
+            documents.sparkSession,
+            {
+                "rows_in": total,
+                "quarantined": n_quarantined,
+                "gated": n_gated_out,
+                "deduped": n_gated_in - n_curated,
+                "rows_out": n_curated,
+            },
         )
 
     return curated, collect_stats

@@ -501,6 +501,25 @@ class TestIngestPipeline:
         # quarantine rows retained for audit
         assert fused_tbl.filter(F.col("error").isNotNull()).count() == s_f["quarantined"]
 
+        # every mode writes the same _curation_stats sidecar: STATS_SCHEMA,
+        # one row, the summary's values
+        from pyspark.sql.types import _parse_datatype_string
+
+        from document_automation_spark.operators.curate import STATS_SCHEMA
+
+        out_v = str(tmp_path / "view")
+        s_v = run_ingest_pipeline(
+            spark, pages, out_v, "fp", cfg=ExtractConfig(n_buckets=8),
+            curated_mode="view",
+        )
+        counters = ("rows_in", "quarantined", "gated", "deduped", "rows_out")
+        for out, s in ((out_c, s_c), (out_v, s_v), (out_f, s_f)):
+            stats = spark.read.parquet(os.path.join(out, "_curation_stats"))
+            assert stats.schema == _parse_datatype_string(STATS_SCHEMA), out
+            assert [r.asDict() for r in stats.collect()] == [
+                {k: s[k] for k in counters}
+            ], out
+
     def test_fused_mode_crash_resume(self, spark, tmp_path):
         """A fused-mode run resumes through the same per-bucket manifests:
         crash (buckets missing) → resume completes → rows match a fresh
@@ -1313,6 +1332,39 @@ class TestKitchenSink:
             "link_graph_host_nodes", "link_graph_domain_nodes",
         ):
             assert key in summary, f"missing stage counter: {key}"
+        # and nothing else: a dropped or renamed key fails here too
+        assert set(summary) == {
+            "run_id", "buckets_processed", "buckets_skipped", "robots_blocked",
+            "link_graph_host_nodes", "link_graph_host_rank_path",
+            "link_graph_domain_nodes", "link_graph_domain_rank_path",
+            "rows_in", "quarantined", "gated", "deduped", "rows_out",
+            "curated_path",
+            "mojibake_repaired", "mojibake_dedup_losers",
+            "xsnap_rows_in", "xsnap_rows_kept",
+            "cut_chars", "spanned_passages",
+            "dropped_paragraphs", "para_deduped_passages", "para_emptied_passages",
+            "quality_n_docs", "quality_n_kept",
+            *(
+                f"quality_drop_{rule}"
+                for rule in (
+                    "bullet_line_frac", "dup_5gram_frac", "dup_line_char_frac",
+                    "dup_line_frac", "ellipsis_line_frac", "max_mean_word_len",
+                    "max_words", "min_alpha_word_frac", "min_mean_word_len",
+                    "min_words", "symbol_word_ratio", "top_bigram_char_frac",
+                )
+            ),
+            "decontam_n_docs_in", "decontam_n_docs_dropped",
+            "pii_n_docs_with_pii", "pii_n_email", "pii_n_ipv4", "pii_n_phone",
+            "pii_n_ssn",
+            "classifier_path", "classifier_n_docs", "classifier_n_kept",
+            "classifier_n_pos",
+            "dsir_path", "dsir_n_docs", "dsir_n_kept",
+            "bpe_path", "bpe_merges_path", "bpe_n_merges", "bpe_vocab_words",
+            "bpe_total_tokens",
+            "embeddings_path", "n_vectors", "semdedup_dropped",
+            "pack_path", "pack_seq_len", "pack_n_chunks", "pack_n_tokens",
+            "pack_n_segments",
+        }
 
         # front-end accounting still closes with robots in front
         assert summary["rows_in"] == (
@@ -1347,6 +1399,36 @@ class TestKitchenSink:
         for tag in ("host", "domain"):
             ranks = spark.read.parquet(summary[f"link_graph_{tag}_rank_path"])
             assert abs(sum(r["rank"] for r in ranks.collect()) - 1.0) < 1e-9
+
+
+class TestSettingsValidation:
+    def test_rejected_call_starts_no_job_and_persists_nothing(self, spark, tmp_path):
+        """Every setting is checked before the first Spark job: a call the
+        pipeline rejects runs neither the robots count nor url dedup's
+        build-time probes, and leaves no persisted frame in the session."""
+        pages = pages_df(spark, 40, partitions=2)
+        robots_path = str(tmp_path / "robots")
+        spark.createDataFrame(
+            [("example.com", "User-agent: *\nDisallow: /")],
+            "host string, robots_txt string",
+        ).write.parquet(robots_path)
+        sc = spark.sparkContext
+        persisted = sc._jsc.getPersistentRDDs().size()
+        group = "ingest-rejected-call"
+        sc.setJobGroup(group, group)
+        try:
+            with pytest.raises(ValueError, match="fix_encoding"):
+                run_ingest_pipeline(
+                    spark, pages, str(tmp_path / "x"), "fp",
+                    cfg=ExtractConfig(n_buckets=2),
+                    robots_path=robots_path,
+                    curated_mode="view", fix_encoding=True,
+                )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert sc._jsc.getPersistentRDDs().size() == persisted
 
 
 class TestFixEncodingStage:

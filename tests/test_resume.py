@@ -353,3 +353,66 @@ def test_partial_resume_filters_buckets_below_python_stage(
         (r.url, r.passage_idx, r.content) for r in read_output(spark, out_dir).collect()
     )
     assert got == expected
+
+
+class _ManifestAppendCrash(RuntimeError):
+    pass
+
+
+def _rows(spark, out_dir):
+    return sorted(
+        repr(tuple(r)) for r in read_output(spark, out_dir, with_sha=True).collect()
+    )
+
+
+@pytest.mark.parametrize("partial_commit_first", [False, True], ids=["fresh", "partial"])
+@pytest.mark.parametrize(
+    "docs_fn", [extract_documents, documents_from_text],
+    ids=["extract_documents", "documents_from_text"],
+)
+def test_crash_between_data_write_and_manifest_append_resumes_clean(
+    spark, tmp_path, out_dir, monkeypatch, docs_fn, partial_commit_first
+):
+    """The second crash point: the data files of the pending buckets are
+    written, then the job dies before their manifest rows are appended.
+    Those buckets stay pending, so the resume writes them again and the
+    table equals a clean run row for row, with one manifest row per
+    bucket under the fingerprint."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    pages = pages_df(spark, N_PAGES, partitions=4)
+    cfg = ExtractConfig(n_buckets=8)
+    clean = str(tmp_path / "clean")
+    run_extraction_job(spark, pages, clean, FP, cfg, docs_fn=docs_fn)
+
+    committed = set()
+    if partial_commit_first:
+        run_extraction_job(spark, pages, out_dir, FP, cfg, fail_buckets_above=4, docs_fn=docs_fn)
+        committed = set(done_buckets(spark, out_dir, FP))
+        assert committed and max(committed) < 4
+
+    write_parquet = DataFrameWriter.parquet
+
+    def crash_on_manifest(self, path, *args, **kwargs):
+        if path == manifest_path(out_dir):
+            raise _ManifestAppendCrash(path)
+        return write_parquet(self, path, *args, **kwargs)
+
+    with monkeypatch.context() as patched:
+        patched.setattr(DataFrameWriter, "parquet", crash_on_manifest)
+        with pytest.raises(_ManifestAppendCrash):
+            run_extraction_job(spark, pages, out_dir, FP, cfg, docs_fn=docs_fn)
+    # the data write happened: every bucket has a directory again
+    assert len(_data_files_per_bucket(out_dir)) == len(_data_files_per_bucket(clean))
+    assert set(done_buckets(spark, out_dir, FP)) == committed
+
+    resumed = run_extraction_job(spark, pages, out_dir, FP, cfg, docs_fn=docs_fn)
+    assert resumed["buckets_skipped"] == len(committed)
+    assert resumed["buckets_processed"] == 8 - len(committed)
+    assert _rows(spark, out_dir) == _rows(spark, clean)
+    manifest = read_manifest(spark, out_dir).filter(F.col("input_fingerprint") == FP)
+    assert sorted(r.bucket for r in manifest.collect()) == list(range(8))
+    assert (
+        sum(r.rows_out + r.error_rows for r in manifest.collect())
+        == read_output(spark, out_dir).count()
+    )

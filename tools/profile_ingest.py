@@ -1,8 +1,12 @@
-"""Phase-level profile of the composed ingest pipeline (round-4 perf work).
+"""Phase-level profile of the front of the composed ingest pipeline.
 
-Replicates jobs/ingest_pipeline.run_ingest_pipeline with a timer around each
-phase so the durable-path tuning (write partitioning, curation plan shape)
-is measured, not guessed.  Every write uses the production writer options,
+Times the first three phases of jobs/ingest_pipeline.run_ingest_pipeline in
+copy mode with default settings — url dedup → durable extraction → curation
+(the curated copy write, then its stats) — so the durable-path tuning
+(write partitioning, curation plan shape) is measured, not guessed.  It
+runs none of the optional stages, the robots gate or the link graph, and
+it does not write the ``_curation_stats`` sidecar.  Every write uses the
+production writer options,
 ``plans.checkpoint.PARQUET_WRITE_OPTIONS``; to A/B a codec, edit that
 constant, which moves every writer the pipeline runs at once.
 
