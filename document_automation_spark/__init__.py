@@ -16,9 +16,8 @@ intel/document-automation's Ray/Haystack indexing kit, re-expressed Spark-first:
   metrics (recall@k, MRR with the reference's 20000 miss sentinel), top-k
   windows, dedup (exact / minhash-LSH / simhash / n-gram Jaccard /
   embedding-cosine), similarity search, text analysis.
-* ``plans``      — per-partition checkpoint manifests + resume anti-join,
-  observation metrics.
-* ``streaming``  — Structured Streaming variant of the extraction pipeline.
+* ``plans``      — per-bucket checkpoint manifests; resume re-extracts
+  only the buckets the manifest does not list as committed.
 
 Reference behavior studied at /root/reference (intel/document-automation);
 file:line citations in docstrings point there for parity checking only —

@@ -754,43 +754,3 @@ def dedup_paragraphs(
     n_dropped = F.coalesce(F.size("_drop_pos"), F.lit(0)).cast("long")
     return joined.select(*out_cols, n_dropped.alias("n_dropped_paragraphs"))
 
-
-def hot_paragraph_keys(
-    documents: DataFrame,
-    min_docs: int = 2,
-    sep: str = "\n",
-    cap: int = 4096,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    normalize: bool = False,
-) -> DataFrame:
-    """The batch-trained artifact behind the STREAMING paragraph cut: the
-    top-``cap`` boilerplate paragraphs by distinct-document count (every
-    one in ≥ ``min_docs`` docs), as ``(pkey = sha2(trimmed paragraph),
-    n_docs)``.  Same candidate derivation as :func:`dedup_paragraphs`
-    (``mode='common'``), so cutting these keys reproduces the batch
-    common-cut exactly for every paragraph that made the cap.
-
-    ``cap`` bounds the table so it can collapse to a plan literal on a
-    stream (the DSIR weight-table pattern) — boilerplate frequency is
-    Zipfian, so the head IS the cut that matters; ties at the cap break
-    by key for determinism."""
-    if not sep or "\\E" in sep:
-        raise ValueError(f"sep must be a non-empty literal without '\\E', got {sep!r}")
-    lit_sep = "\\Q" + sep + "\\E"
-    cand = (
-        fan_out(documents)
-        .select(
-            F.col(id_col),
-            F.explode(F.split(F.col(text_col), lit_sep)).alias("_para"),
-        )
-        .where(F.trim("_para") != "")
-        .select(id_col, _paragraph_key(F.trim(F.col("_para")), normalize).alias("pkey"))
-    )
-    return (
-        cand.groupBy("pkey")
-        .agg(F.countDistinct(id_col).alias("n_docs"))
-        .where(F.col("n_docs") >= min_docs)
-        .orderBy(F.col("n_docs").desc(), "pkey")
-        .limit(cap)
-    )

@@ -28,7 +28,7 @@ counts only what the earlier, more specific categories left behind.
 
 from __future__ import annotations
 
-from typing import Sequence, Tuple, Union
+from typing import Sequence, Tuple
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -70,7 +70,7 @@ def redact_pii(
     text_col: str = "text",
     categories: Sequence[Tuple[str, str, str]] = PII_CATEGORIES,
     count_cols: bool = True,
-) -> Tuple[DataFrame, Union[Observation, str]]:
+) -> Tuple[DataFrame, Observation]:
     """Redact PII in ``text_col``, count matches per category.
 
     Returns ``(redacted, observation)``:
@@ -98,10 +98,7 @@ def redact_pii(
     others = [c for c in documents.columns if c != text_col]
     redacted = documents.select(*others, cur.alias(text_col), *out_cols)
     names = [f"n_{name}" for name, _, _ in categories]
-    # streaming plans take the string-named observe form (Observation is
-    # batch-only); counters then surface per micro-batch in
-    # StreamingQueryProgress.observedMetrics['redact_pii']
-    obs = "redact_pii" if documents.isStreaming else Observation("redact_pii")
+    obs = Observation("redact_pii")
     redacted = redacted.observe(
         obs,
         *[F.coalesce(F.sum(F.col(c)), F.lit(0)).alias(c) for c in names],

@@ -3,7 +3,7 @@
 Demonstrates the engine's relational breadth on the TPC-H-ish tables:
 aggregation pipelines (A1-A3), semi/anti joins (F8/J7, F10/J8), distinct
 (A6), max-per-group (A2), broadcast dimension joins, windowed top-k (T1),
-and event-time bucketing (the batch analogue of the streaming path).
+event-time bucketing and sessionization.
 
 Every function takes already-loaded DataFrames and returns a DataFrame with
 stable aliased columns so the DuckDB oracle can hash-match it.
@@ -90,9 +90,7 @@ def distinct_sources(documents: DataFrame) -> DataFrame:
 
 
 def hourly_event_rollup(events: DataFrame) -> DataFrame:
-    """Event-time bucketing: tumbling-hour counts/sums per event type — the
-    batch twin of the Structured Streaming pipeline (streaming/pipeline.py
-    runs the same aggregation incrementally)."""
+    """Event-time bucketing: tumbling-hour counts/sums per event type."""
     return (
         events.groupBy(
             F.date_trunc("hour", F.col("ts")).alias("hour"),
@@ -124,8 +122,8 @@ def sessionize_events(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     running sum of the new-session flags numbers the sessions.  Returns
     one row per session with start/end/count.  At scale: single hash
     shuffle on user_id; skewed power-users split fine under AQE because
-    the window partition is the user — pathological single-user skew
-    would move to `applyInPandasWithState` in the streaming path."""
+    the window partition is the user, so a single pathological user
+    stays one window partition (one task)."""
     from pyspark.sql import Window
 
     w_user = Window.partitionBy("user_id").orderBy("ts", "event_id")

@@ -411,19 +411,8 @@ def filter_by_quality(
     its ``violations`` array<string> — the audit/routing mode (send
     violators to a quarantine sink, grade rule aggressiveness) — with
     the same counters attached.
-
-    Streaming input is supported (the gate is stateless, so it drops
-    straight into a ``readStream`` plan): the counters attach via the
-    string-named ``observe`` form (the ``Observation`` class is
-    batch-only) and surface per micro-batch in
-    ``StreamingQueryProgress.observedMetrics['quality_filter']``; the
-    returned observation handle is the metric NAME.  The perplexity rule
-    needs the batch LM aggregation and is rejected on streams.
     """
     from pyspark.sql import Observation
-
-    if documents.isStreaming and rules.max_ppl is not None:
-        raise ValueError("max_ppl rule is batch-only (LM scoring aggregates)")
 
     d, feats = _feature_frame(documents, text_col, documents.columns)
 
@@ -475,12 +464,8 @@ def filter_by_quality(
             for name in rule_names
         ],
     ]
-    if documents.isStreaming:
-        obs = "quality_filter"
-        observed = flagged.observe(obs, *metrics)
-    else:
-        obs = Observation("quality_filter")
-        observed = flagged.observe(obs, *metrics)
+    obs = Observation("quality_filter")
+    observed = flagged.observe(obs, *metrics)
     if annotate_only:
         return observed, obs
     return observed.filter(F.size("violations") == 0).drop("violations"), obs

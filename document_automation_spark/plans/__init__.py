@@ -1,1 +1,1 @@
-"""Job-level planning: checkpoint manifests, resume, observation metrics."""
+"""Job-level planning: per-bucket checkpoint manifests and resume of the pending buckets."""

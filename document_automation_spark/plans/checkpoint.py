@@ -21,9 +21,10 @@ writers:
   wall_ms, committed_at)`` — lineage + counter metrics required by the
   north rule;
 * on resume, pending work = the buckets of ``range(n_buckets)`` NOT IN
-  the done manifest buckets (for the same input fingerprint), a literal
-  ``isin`` filter — below the Python kernel for row-local plan builders,
-  so committed pages are never decoded again (:func:`pending_documents`);
+  the done buckets (those whose latest manifest row carries the same
+  input fingerprint, :func:`done_buckets`), a literal ``isin`` filter —
+  below the Python kernel for row-local plan builders, so committed pages
+  are never decoded again (:func:`pending_documents`);
   a job whose every bucket is committed returns before building any plan.
   A crash between data write and manifest append re-runs that bucket;
   overwrite makes that harmless.
@@ -134,18 +135,21 @@ def read_manifest(spark: SparkSession, output_path: str) -> DataFrame:
 
 
 def done_buckets(spark: SparkSession, output_path: str, input_fingerprint: str) -> list[int]:
-    """Buckets committed under ``input_fingerprint``, ascending.  One scan
-    job, no shuffle (the manifest is O(n_buckets × runs) rows, so the
-    de-duplication happens on the driver); no job at all on a fresh output."""
+    """Buckets whose latest manifest row is under ``input_fingerprint``,
+    ascending.  A bucket a later run committed under another fingerprint
+    holds that run's files, so an earlier commit under this fingerprint no
+    longer counts (fingerprint A, then B, then A again re-runs every
+    bucket).  One scan job, no shuffle (the manifest is O(n_buckets × runs)
+    rows, so the latest row per bucket is picked on the driver); no job at
+    all on a fresh output."""
     manifest = _manifest_or_none(spark, output_path)
     if manifest is None:
         return []
-    rows = (
-        manifest.filter(F.col("input_fingerprint") == input_fingerprint)
-        .select("bucket")
-        .collect()
-    )
-    return sorted({r.bucket for r in rows})
+    latest: dict = {}
+    for r in manifest.select("bucket", "committed_at", "input_fingerprint").collect():
+        if r.bucket not in latest or r.committed_at > latest[r.bucket][0]:
+            latest[r.bucket] = (r.committed_at, r.input_fingerprint)
+    return sorted(b for b, (_, fp) in latest.items() if fp == input_fingerprint)
 
 
 def pending_documents(

@@ -150,43 +150,6 @@ class TestResample:
         assert out.count() == 7
 
 
-class TestStreamingDsir:
-    def test_stream_scores_match_batch_and_gate(self, spark, corpora, tmp_path):
-        """The stateless streaming fold reproduces the batch scorer's
-        values (up to float summation order under the 6-dp round) and
-        the threshold gate keeps exactly the above-min_score docs."""
-        from document_automation_spark.streaming.pipeline import (
-            start_streaming_dsir_filter,
-        )
-
-        t, r = corpora
-        docs = t.unionByName(r)
-        w = train_dsir_weights(t, r)
-        batch = {
-            row["doc_id"]: row["dsir_score"]
-            for row in dsir_scores(docs, w).collect()
-        }
-        min_score = sorted(batch.values())[len(batch) // 2]  # median gate
-
-        input_dir = str(tmp_path / "docs_in")
-        output_dir = str(tmp_path / "kept_out")
-        docs.write.parquet(input_dir)
-        q = start_streaming_dsir_filter(
-            spark, input_dir, output_dir, str(tmp_path / "ckpt"),
-            weights=w, min_score=min_score, hash_impl="md5",
-        )
-        q.processAllAvailable()
-        q.stop()
-
-        got = {
-            row["doc_id"]: row["dsir_score"]
-            for row in spark.read.parquet(output_dir).collect()
-        }
-        want = {i: s for i, s in batch.items() if s > min_score}
-        assert set(got) == set(want)
-        assert got == pytest.approx(want, abs=2e-6)
-
-
 class TestComposedSelect:
     def test_matches_granular_composition(self, spark, corpora):
         """dsir_select (one hash pass, one count shuffle) must be

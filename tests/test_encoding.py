@@ -122,46 +122,6 @@ class TestRepair:
         assert "PythonUDF" not in plan and "mapInPandas" not in plan.lower()
 
 
-class TestStreamingRepair:
-    def test_streaming_repair_matches_batch(self, spark, tmp_path):
-        """Mojibake repair on a readStream plan: output rows identical to
-        the batch operator, repaired-row counter in observedMetrics."""
-        from document_automation_spark.streaming.pipeline import (
-            start_streaming_encoding_repair,
-        )
-
-        clean = ["It’s a café — über €9", "plain ascii", "naïve «quote» …"]
-        rows = [
-            (i, c.encode("utf-8").decode("cp1252") if i % 2 == 0 else c)
-            for i, c in enumerate(clean)
-        ]
-        docs = spark.createDataFrame(rows, "doc_id long, text string")
-        input_dir = str(tmp_path / "docs_in")
-        output_dir = str(tmp_path / "docs_fixed")
-        docs.repartition(2).write.parquet(input_dir)
-        q = start_streaming_encoding_repair(
-            spark, input_dir, output_dir, str(tmp_path / "ckpt")
-        )
-        try:
-            q.processAllAvailable()
-            progress = [
-                p.observedMetrics["fix_encoding"]
-                for p in q.recentProgress
-                if "fix_encoding" in (p.observedMetrics or {})
-            ]
-        finally:
-            q.stop()
-        streamed = {
-            (r.doc_id, r.text) for r in spark.read.parquet(output_dir).collect()
-        }
-        batch = repair_mojibake(docs).drop("was_mojibake")
-        assert streamed == {(r.doc_id, r.text) for r in batch.collect()}
-        # doc 0 and 2 were corrupted and repaired back to clean
-        assert dict(streamed)[0] == clean[0]
-        assert dict(streamed)[2] == clean[2]
-        assert sum(p.n_repaired or 0 for p in progress) == 2
-
-
 class TestMultiPass:
     def test_generation2_mojibake_needs_two_passes(self, spark):
         """Each pass inverts the outermost corruption generation: gen-2
@@ -198,13 +158,3 @@ class TestNulSemantics:
         out = {r.text: r.was_mojibake for r in repair_mojibake(df).collect()}
         assert out["cleantext"] is False          # NUL gone, not flagged
         assert out["café with  nul"] is True      # real repair still flags
-
-    def test_streaming_default_matches_batch_stage_depth(self):
-        import inspect
-
-        from document_automation_spark.streaming.pipeline import (
-            start_streaming_encoding_repair,
-        )
-
-        sig = inspect.signature(start_streaming_encoding_repair)
-        assert sig.parameters["passes"].default == 2

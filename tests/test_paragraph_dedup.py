@@ -129,15 +129,6 @@ class TestNormalizedKeys:
         assert out[1] == ("Café’s 3 Comments\nunique one", 0)
         assert out[2] == ("unique two", 1)
 
-    def test_hot_keys_merge_variants(self, spark):
-        from document_automation_spark.operators.dedup import hot_paragraph_keys
-
-        rows = [(1, "SIGN UP 12\nbody a"), (2, "sign  up 98\nbody b")]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        assert hot_paragraph_keys(df, min_docs=2).count() == 0
-        hot = hot_paragraph_keys(df, min_docs=2, normalize=True).collect()
-        assert len(hot) == 1 and hot[0].n_docs == 2
-
 
 class TestRandomizedReplay:
     """Operator vs an independent pure-Python CCNet replay on a randomized
@@ -256,59 +247,3 @@ class TestRandomizedReplay:
             for r in dedup_paragraphs(df, mode=mode, **kw).collect()
         }
         assert got == self._replay(rows, mode, kw.get("min_docs", 2), key_fn)
-
-
-class TestStreamingParagraphCut:
-    def test_stream_matches_batch_common_cut(self, spark, tmp_path):
-        """The stateless streaming cut (batch-trained hot set as a plan
-        literal) reproduces dedup_paragraphs(mode='common') byte-for-byte
-        when every hot paragraph fits the cap."""
-        from document_automation_spark.operators.dedup import hot_paragraph_keys
-        from document_automation_spark.streaming.pipeline import (
-            start_streaming_paragraph_cut,
-        )
-
-        rows = TestRandomizedReplay._corpus(seed=11, n_docs=120)
-        docs = spark.createDataFrame(rows, "doc_id long, text string")
-        hot = hot_paragraph_keys(docs, min_docs=3)
-        batch = {
-            r.doc_id: (r.text, r.n_dropped_paragraphs)
-            for r in dedup_paragraphs(docs, mode="common", min_docs=3).collect()
-        }
-
-        input_dir = str(tmp_path / "docs_in")
-        output_dir = str(tmp_path / "cut_out")
-        docs.write.parquet(input_dir)
-        q = start_streaming_paragraph_cut(
-            spark, input_dir, output_dir, str(tmp_path / "ckpt"), hot_keys=hot
-        )
-        q.processAllAvailable()
-        q.stop()
-        got = {
-            r.doc_id: (r.text, r.n_dropped_paragraphs)
-            for r in spark.read.parquet(output_dir).collect()
-        }
-        assert got == batch
-
-    def test_cap_bounds_the_cut(self, spark, tmp_path):
-        """With cap=1 only the single hottest paragraph is cut on the
-        stream — the documented head-of-the-Zipf trade."""
-        from document_automation_spark.operators.dedup import hot_paragraph_keys
-        from document_automation_spark.streaming.pipeline import (
-            start_streaming_paragraph_cut,
-        )
-
-        rows = [(1, "aa\nbb"), (2, "aa\nbb"), (3, "aa\nbb"), (4, "aa")]
-        docs = spark.createDataFrame(rows, "doc_id long, text string")
-        hot = hot_paragraph_keys(docs, min_docs=2, cap=1)
-        assert hot.count() == 1  # 'aa' (4 docs) beats 'bb' (3 docs)
-        input_dir = str(tmp_path / "in2")
-        output_dir = str(tmp_path / "out2")
-        docs.write.parquet(input_dir)
-        q = start_streaming_paragraph_cut(
-            spark, input_dir, output_dir, str(tmp_path / "ck2"), hot_keys=hot
-        )
-        q.processAllAvailable()
-        q.stop()
-        got = {r.doc_id: r.text for r in spark.read.parquet(output_dir).collect()}
-        assert got == {1: "bb", 2: "bb", 3: "bb", 4: ""}

@@ -91,35 +91,3 @@ class TestRedaction:
             for _, pat, repl in PII_CATEGORIES:
                 cur = re.sub(pat, repl, cur)
             assert got[row.doc_id] == cur, row.doc_id
-
-
-class TestStreamingRedaction:
-    def test_streaming_gate_matches_batch(self, spark, tmp_path, docs):
-        """PII redaction on a readStream plan: output rows identical to
-        the batch operator, per-category counters in observedMetrics."""
-        from document_automation_spark.streaming.pipeline import (
-            start_streaming_pii_redaction,
-        )
-
-        input_dir = str(tmp_path / "docs_in")
-        output_dir = str(tmp_path / "docs_red")
-        docs.repartition(2).write.parquet(input_dir)
-        q = start_streaming_pii_redaction(
-            spark, input_dir, output_dir, str(tmp_path / "ckpt")
-        )
-        try:
-            q.processAllAvailable()
-            progress = [
-                p.observedMetrics["redact_pii"]
-                for p in q.recentProgress
-                if "redact_pii" in (p.observedMetrics or {})
-            ]
-        finally:
-            q.stop()
-        streamed = {
-            (r.doc_id, r.text) for r in spark.read.parquet(output_dir).collect()
-        }
-        batch, _ = redact_pii(docs, count_cols=False)
-        assert streamed == {(r.doc_id, r.text) for r in batch.collect()}
-        assert sum(p.n_email for p in progress) == 2
-        assert sum(p.n_docs_with_pii for p in progress) == 5

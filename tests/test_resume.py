@@ -2,11 +2,14 @@
 
 from __future__ import annotations
 
+import functools
 import os
 import uuid
 from contextlib import contextmanager
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from document_automation_spark.operators.extract import (
@@ -416,3 +419,88 @@ def test_crash_between_data_write_and_manifest_append_resumes_clean(
         sum(r.rows_out + r.error_rows for r in manifest.collect())
         == read_output(spark, out_dir).count()
     )
+
+
+@pytest.fixture(scope="module")
+def fingerprint_runs(spark, tmp_path_factory):
+    """``(inputs, clean)`` by fingerprint: the inputs a fingerprint
+    sequence draws from (40 pages, 3 pages, and 6 pages whose text is
+    under the gate, so every bucket commits empty), and the ``_rows`` of a
+    clean run of each into a fresh output."""
+    inputs = {
+        "pages40": pages_df(spark, 40, partitions=2),
+        "pages3": pages_df(spark, 3, partitions=1),
+        "gated6": spark.createDataFrame(
+            [{**gen_page(i), "text": "hi"} for i in range(6)], PAGES_SCHEMA
+        ),
+    }
+    clean = {}
+    for fp, pages in inputs.items():
+        out = str(tmp_path_factory.mktemp(f"clean-{fp}"))
+        run_extraction_job(
+            spark, pages, out, fp, ExtractConfig(n_buckets=8), docs_fn=documents_from_text
+        )
+        clean[fp] = _rows(spark, out)
+    return inputs, clean
+
+
+def _crash_then_resume(spark, pages, out_dir, fp, crash_point):
+    """One run of ``fp`` that dies at ``crash_point``, then its resume."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    cfg = ExtractConfig(n_buckets=8)
+    run = functools.partial(
+        run_extraction_job, spark, pages, out_dir, fp, cfg, docs_fn=documents_from_text
+    )
+    if crash_point == "before_data_write":
+        run(fail_buckets_above=4)
+    else:
+        write_parquet = DataFrameWriter.parquet
+
+        def crash_on_manifest(self, path, *args, **kwargs):
+            if path == manifest_path(out_dir):
+                raise _ManifestAppendCrash(path)
+            return write_parquet(self, path, *args, **kwargs)
+
+        # a re-submit of an input whose buckets are all committed writes
+        # nothing, so it has no manifest append to die in
+        finished = len(done_buckets(spark, out_dir, fp)) == cfg.n_buckets
+        with pytest.MonkeyPatch.context() as patched:
+            patched.setattr(DataFrameWriter, "parquet", crash_on_manifest)
+            if finished:
+                run()
+            else:
+                with pytest.raises(_ManifestAppendCrash):
+                    run()
+    run()
+
+
+@settings(max_examples=7, derandomize=True, deadline=None, database=None)
+# the derandomized draws never bring a fingerprint back after another one
+@example(crash_point="between_write_and_manifest", fingerprints=["pages40", "pages3", "pages40"])
+@given(
+    crash_point=st.sampled_from(["before_data_write", "between_write_and_manifest"]),
+    fingerprints=st.lists(
+        st.sampled_from(["pages40", "pages3", "gated6"]), min_size=1, max_size=3
+    ),
+)
+def test_every_crash_point_and_fingerprint_sequence_resumes_clean(
+    spark, tmp_path_factory, fingerprint_runs, crash_point, fingerprints
+):
+    """Property over (crash point, fingerprint sequence) on 8 buckets: each
+    fingerprint of the sequence runs into the same output, dies at the
+    crash point and is resumed.  After every resume the table equals a
+    clean run of that input row for row, and the latest manifest row of
+    every bucket is under that fingerprint, with counters that add up to
+    the table.  A fingerprint that comes back after another one re-runs
+    every bucket: the other one's files replaced its own."""
+    inputs, clean = fingerprint_runs
+    out_dir = str(tmp_path_factory.mktemp("sequence") / "out")
+    for fp in fingerprints:
+        _crash_then_resume(spark, inputs[fp], out_dir, fp, crash_point)
+        assert _rows(spark, out_dir) == clean[fp], (fp, fingerprints)
+        manifest = sorted(read_manifest(spark, out_dir).collect(), key=lambda r: r.committed_at)
+        latest = {r.bucket: r for r in manifest}
+        assert sorted(latest) == list(range(8))
+        assert {r.input_fingerprint for r in latest.values()} == {fp}
+        assert sum(r.rows_out + r.error_rows for r in latest.values()) == len(clean[fp])

@@ -87,54 +87,6 @@ class TestGate:
             assert robots_gate(pages, rules, agent=agent).collect()[0].allowed is False
 
 
-class TestStreamingRobotsGate:
-    def test_stream_matches_batch_gate(self, spark, snapshot, tmp_path):
-        """The stream-static twin keeps exactly the pages the batch gate
-        allows (same rules table, same agent)."""
-        import datetime
-
-        from document_automation_spark.streaming.pipeline import (
-            start_streaming_robots_gate,
-        )
-
-        hosts = ["a.com", "b.com", "c.com", "t.com", "u.com", "v.com", "x.com"]
-        paths = ["/private/no", "/private/ok/x", "/dir/x", "/all", ""]
-        rows = [
-            (
-                f"http://{h}{p}",
-                datetime.datetime(2024, 1, 1),
-                None,
-                f"text {h}{p}",
-                "en",
-            )
-            for h in hosts
-            for p in paths
-        ]
-        schema = "url string, warc_ts timestamp, html binary, text string, lang string"
-        pages = spark.createDataFrame(rows, schema)
-        rules = parse_robots(snapshot)
-        batch_kept = {
-            r.url
-            for r in robots_gate(pages, rules, agent="CCBot")
-            .where(F.col("allowed"))
-            .collect()
-        }
-        input_dir = str(tmp_path / "pages_in")
-        output_dir = str(tmp_path / "gated_out")
-        pages.write.parquet(input_dir)
-        q = start_streaming_robots_gate(
-            spark, input_dir, output_dir, str(tmp_path / "ckpt"),
-            rules=rules, agent="CCBot",
-        )
-        q.processAllAvailable()
-        q.stop()
-        out = spark.read.parquet(output_dir)
-        assert {r.url for r in out.collect()} == batch_kept
-        assert "allowed" not in out.columns
-        # the gate actually blocked something and kept something
-        assert 0 < len(batch_kept) < len(rows)
-
-
 class TestRandomizedReplay:
     """Operator vs an independent pure-Python REP replay on randomized
     snapshots + urls."""

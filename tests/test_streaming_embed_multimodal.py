@@ -1,4 +1,5 @@
-"""Streaming extraction, hashing embedder, multimodal plumbing."""
+"""Hashing embedder and dense vector ids; multimodal plumbing (sniff,
+decode, crop, media metadata and pixel features)."""
 
 from __future__ import annotations
 
@@ -13,124 +14,12 @@ from document_automation_spark.functions.embed import (
     embed_text,
     missing_embeddings,
 )
-from document_automation_spark.operators.extract import ExtractConfig, extract_documents
 from document_automation_spark.operators.multimodal import (
     crop_box,
     decode_image,
     media_metadata,
     sniff_format,
 )
-from document_automation_spark.sources.pages import PAGES_SCHEMA, pages_df
-from document_automation_spark.streaming.pipeline import (
-    start_streaming_extraction,
-    streaming_event_rollup,
-)
-
-
-class TestStreamingExtraction:
-    def test_stream_matches_batch(self, spark, tmp_path):
-        input_dir = str(tmp_path / "pages_in")
-        output_dir = str(tmp_path / "docs_out")
-        checkpoint = str(tmp_path / "ckpt")
-
-        pages = pages_df(spark, 80, partitions=4)
-        pages.write.parquet(input_dir)
-
-        q = start_streaming_extraction(
-            spark, input_dir, output_dir, checkpoint, ExtractConfig(n_buckets=4)
-        )
-        q.processAllAvailable()
-        q.stop()
-
-        got = sorted(
-            (r.url, r.passage_idx, r.content)
-            for r in spark.read.parquet(output_dir).collect()
-        )
-        expected = sorted(
-            (r.url, r.passage_idx, r.content)
-            for r in extract_documents(pages, ExtractConfig(n_buckets=4)).collect()
-        )
-        assert got == expected
-
-    def test_event_rollup_watermarked(self, spark, sf_dir, tmp_path):
-        # the streaming file source wants a directory of drops
-        events_dir = str(tmp_path / "events_in")
-        spark.read.parquet(f"{sf_dir}/events.parquet").write.parquet(events_dir)
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-            )
-            .parquet(events_dir)
-        )
-        agg = streaming_event_rollup(stream)
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("rollup_out")
-            .option("checkpointLocation", str(tmp_path / "ckpt2"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        got = spark.sql("SELECT * FROM rollup_out")
-        batch = (
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-            .groupBy(F.date_trunc("hour", "ts").alias("hour"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-        )
-        # append mode only emits windows closed by the watermark; every
-        # emitted row must match the batch aggregate exactly.
-        got_rows = {(r.hour, r.event_type): r.n_events for r in got.collect()}
-        batch_rows = {(r.hour, r.event_type): r.n_events for r in batch.collect()}
-        assert got_rows
-        for key, n in got_rows.items():
-            assert batch_rows[key] == n
-
-
-class TestStatefulStreaming:
-    def test_user_totals_match_batch(self, spark, sf_dir, tmp_path):
-        from document_automation_spark.streaming.pipeline import streaming_user_totals
-
-        events_dir = str(tmp_path / "ev_state_in")
-        spark.read.parquet(f"{sf_dir}/events.parquet").write.parquet(events_dir)
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(events_dir)
-        )
-        q = (
-            streaming_user_totals(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("user_totals")
-            .option("checkpointLocation", str(tmp_path / "ckpt_state"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        # memory sink in update mode accumulates intermediate rows; the row
-        # with the highest n_events per user is the final state
-        latest = {}
-        for r in spark.sql("SELECT * FROM user_totals").collect():
-            prev = latest.get(r.user_id)
-            if prev is None or r.n_events > prev[0]:
-                latest[r.user_id] = (r.n_events, r.sum_value)
-        expected = {
-            r.user_id: (r.n, round(r.s, 6))
-            for r in spark.read.parquet(f"{sf_dir}/events.parquet")
-            .groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.coalesce(F.col("value"), F.lit(0.0))).alias("s"),
-            )
-            .collect()
-        }
-        assert set(latest) == set(expected)
-        for uid, (n, s) in expected.items():
-            assert latest[uid][0] == n, uid
-            assert abs(latest[uid][1] - s) < 1e-6, uid
 
 
 class TestEmbed:
@@ -313,45 +202,6 @@ class TestMediaFeatures:
         assert got["m2"].error is not None
 
 
-class TestStreamingDedup:
-    def test_cross_batch_duplicates_dropped(self, spark, tmp_path):
-        """Two file drops with overlapping payloads: the second drop's
-        re-crawls must be suppressed by the cross-batch hash state."""
-        from document_automation_spark.streaming.pipeline import streaming_dedup_pages
-
-        input_dir = tmp_path / "pages_dedup_in"
-        input_dir.mkdir()
-        pages = pages_df(spark, 60, partitions=2).cache()
-        # drop 1: pages 0..39;  drop 2: pages 20..59 (20..39 are re-crawls)
-        pages.filter(F.col("url").rlike("/(\\d|[12]\\d|3\\d)\\.html$")).write.parquet(
-            str(input_dir / "drop1")
-        )
-        pages.filter(F.col("url").rlike("/([2-5]\\d)\\.html$")).write.parquet(
-            str(input_dir / "drop2")
-        )
-
-        stream = (
-            spark.readStream.schema(PAGES_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(input_dir / "*"))
-        )
-        deduped = streaming_dedup_pages(stream, watermark="30 days")
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("dedup_out")
-            .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-        got = spark.sql("SELECT content_hash, count(*) AS n FROM dedup_out GROUP BY 1")
-        assert got.filter(F.col("n") > 1).count() == 0  # no hash emitted twice
-        n_unique = pages.select(F.sha2(F.col("html"), 256)).distinct().count()
-        assert spark.sql("SELECT count(*) FROM dedup_out").first()[0] == n_unique
-
-
 class TestDenseIdInvariance:
     def test_ids_invariant_to_partitioning(self, spark, sf_dir):
         """Partition-offset id assignment must equal the global row_number
@@ -368,234 +218,6 @@ class TestDenseIdInvariance:
                 for r in assign_dense_vector_ids(src, num_partitions=n).collect()
             }
             assert got == expected, n
-
-
-class TestStreamingLsh:
-    def test_cross_batch_pairs_match_batch_operator(self, spark, tmp_path):
-        """Near-dup pairs spanning micro-batches: doc A arrives in drop 1,
-        its near-dup B in drop 2 — the stateful band buckets must emit the
-        pair; the union over batches equals the batch self-join exactly."""
-        from document_automation_spark.operators.dedup import minhash_lsh_candidates
-        from document_automation_spark.streaming.pipeline import streaming_lsh_candidates
-
-        base = "the quick brown fox jumps over the lazy dog again and again "
-        rows = [
-            (1, base * 5),
-            (2, base * 5),                                # exact dup of 1
-            (3, (base * 5).replace("lazy", "tired")),     # near dup of 1/2
-            (4, "entirely different text about distributed joins " * 6),
-            (5, (base * 5).replace("quick", "rapid")),    # near dup, later drop
-        ]
-        docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-        in_dir = tmp_path / "lsh_in"
-        in_dir.mkdir()
-        docs.filter(F.col("doc_id") <= 3).coalesce(1).write.parquet(str(in_dir / "d1"))
-        docs.filter(F.col("doc_id") >= 4).coalesce(1).write.parquet(str(in_dir / "d2"))
-
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(in_dir / "*"))
-        )
-        q = (
-            streaming_lsh_candidates(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("lsh_pairs")
-            .option("checkpointLocation", str(tmp_path / "ckpt_lsh"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-        streamed = {
-            (r.doc_a, r.doc_b)
-            for r in spark.sql("SELECT DISTINCT doc_a, doc_b FROM lsh_pairs").collect()
-        }
-        batch = {(r.doc_a, r.doc_b) for r in minhash_lsh_candidates(docs).collect()}
-        assert streamed == batch
-        # the doc-5 pairs REQUIRE cross-batch state (its dups are in drop 1)
-        assert any(b == 5 for _, b in streamed)
-
-
-class TestStreamingLshStress:
-    """Round-2 verdict #7: streaming LSH at bench scale — ≥50 micro-batches
-    with the TTL armed, bounded state, exact batch parity on the union.
-
-    Test mechanics: with a processing-time TTL armed, Spark keeps
-    scheduling 'cleaning up state' micro-batches even under
-    trigger(availableNow=True) (the query never self-terminates), so these
-    tests poll for their completion condition and stop() explicitly."""
-
-    @staticmethod
-    def _poll(q, predicate, timeout_s):
-        import time as _time
-
-        deadline = _time.time() + timeout_s
-        while _time.time() < deadline:
-            try:
-                if predicate():
-                    return True
-            except Exception:
-                # reading the memory sink races the concurrent streaming
-                # commit occasionally (planner-phase internal error) —
-                # transient, retry on the next tick
-                pass
-            _time.sleep(0.5)
-        return False
-
-    def test_50_micro_batches_bounded_state_batch_parity(self, spark, tmp_path):
-        import hashlib as _hashlib
-        import time as _time
-
-        from document_automation_spark.operators.dedup import minhash_lsh_candidates
-        from document_automation_spark.streaming.pipeline import streaming_lsh_candidates
-
-        # 50 drops × 20 docs; doc i belongs to near-dup family i % 100, so
-        # every family accumulates 10 members spread over the whole run —
-        # cross-batch pairs are the COMMON case here, not the corner case.
-        # Family texts use disjoint md5-gibberish vocabularies: no shared
-        # template → no cross-family band collisions → exactly C(10,2)
-        # pairs per family.
-        n_batches, per_batch = 50, 20
-        fam_text = {
-            f: " ".join(
-                _hashlib.md5(f"fam{f}-w{i}".encode()).hexdigest()[:10]
-                for i in range(25)
-            )
-            for f in range(100)
-        }
-        all_rows = [
-            (b * per_batch + j, fam_text[(b * per_batch + j) % 100])
-            for b in range(n_batches)
-            for j in range(per_batch)
-        ]
-        docs = spark.createDataFrame(all_rows, "doc_id long, text string")
-        batch_pairs = {(r.doc_a, r.doc_b) for r in minhash_lsh_candidates(docs).collect()}
-        assert len(batch_pairs) == 100 * 45  # 100 families × C(10,2), no cross-family
-
-        in_dir = tmp_path / "stress_in"
-        in_dir.mkdir()
-        for b in range(n_batches):
-            rows = all_rows[b * per_batch : (b + 1) * per_batch]
-            spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-                1
-            ).write.parquet(str(in_dir / f"d{b:03d}"))
-
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(in_dir / "*"))
-        )
-        # TTL armed (the continuous-run configuration) but far longer than
-        # the run, so no eviction perturbs the batch-parity check below.
-        # Poll+stop pattern: a TTL-armed query keeps scheduling cleanup
-        # batches forever, so processAllAvailable would never return.
-        q = (
-            streaming_lsh_candidates(stream, state_ttl_minutes=60)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("lsh_stress")
-            .option("checkpointLocation", str(tmp_path / "ckpt_stress"))
-            .start()
-        )
-        t0 = _time.time()
-        try:
-            def all_pairs_arrived():
-                n = spark.sql(
-                    "SELECT COUNT(DISTINCT struct(doc_a, doc_b)) AS n FROM lsh_stress"
-                ).first().n
-                return n >= len(batch_pairs)
-
-            assert self._poll(q, all_pairs_arrived, 540), "pairs did not all arrive"
-            wall = _time.time() - t0
-            progress = q.lastProgress
-            # ≥50 genuine micro-batches (maxFilesPerTrigger=1 over 50 drops)
-            assert progress["batchId"] >= n_batches - 1
-            # bounded state: one state row per ACTIVE band bucket — ≤
-            # families × bands (+hash collisions), nowhere near pair count
-            state = progress["stateOperators"][0]
-            assert state["numRowsTotal"] <= 100 * 8 + 16
-        finally:
-            q.stop()
-
-        streamed = {
-            (r.doc_a, r.doc_b)
-            for r in spark.sql("SELECT DISTINCT doc_a, doc_b FROM lsh_stress").collect()
-        }
-        assert streamed == batch_pairs  # exact parity over the union of 50 batches
-        print(f"\nstreaming-lsh stress: {len(streamed)} pairs in {wall:.1f}s "
-              f"({len(streamed)/wall:.0f} pairs/s), state rows {state['numRowsTotal']}")
-
-    def test_ttl_evicts_idle_buckets(self, spark, tmp_path):
-        """Processing-time TTL: a bucket idle past the TTL is evicted and a
-        later family member no longer pairs with the evicted members — the
-        documented forward-only trade that bounds state at O(arrivals per
-        TTL window).  One continuous query: the TTL cleanup loop keeps
-        firing micro-batches on its own, so eviction is observed by polling
-        numRowsTotal → 0, then new drops are picked up live."""
-        from document_automation_spark.streaming.pipeline import streaming_lsh_candidates
-
-        text = "ttl eviction family shares this exact sentence " * 6
-        in_dir = tmp_path / "ttl_in"
-        in_dir.mkdir()
-
-        def drop(name, rows):
-            spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-                1
-            ).write.parquet(str(in_dir / name))
-
-        drop("d0", [(1, text)])
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(in_dir / "*"))
-        )
-        q = (
-            streaming_lsh_candidates(stream, state_ttl_minutes=0.03)  # 1.8 s
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("lsh_ttl")
-            .option("checkpointLocation", str(tmp_path / "ckpt_ttl"))
-            .start()
-        )
-        try:
-            def state_evicted():
-                p = q.lastProgress
-                return bool(
-                    p
-                    and p.get("stateOperators")
-                    and p["numInputRows"] == 0
-                    and p["stateOperators"][0]["numRowsTotal"] == 0
-                )
-
-            # once the 1.8 s TTL lapses, doc 1's band buckets get the
-            # hasTimedOut call in a cleanup batch and are removed
-            assert self._poll(q, state_evicted, 120), "TTL never evicted"
-
-            drop("d1", [(2, text)])
-            drop("d2", [(3, text)])
-
-            def got_pair():
-                return (
-                    spark.sql(
-                        "SELECT COUNT(*) AS n FROM lsh_ttl "
-                        "WHERE doc_a = 2 AND doc_b = 3"
-                    ).first().n
-                    > 0
-                )
-
-            assert self._poll(q, got_pair, 120), "(2, 3) pair never emitted"
-        finally:
-            q.stop()
-
-        pairs = {
-            (r.doc_a, r.doc_b)
-            for r in spark.sql("SELECT DISTINCT doc_a, doc_b FROM lsh_ttl").collect()
-        }
-        assert (1, 2) not in pairs and (1, 3) not in pairs
-        assert (2, 3) in pairs
 
 
 class TestPixelFeatures:

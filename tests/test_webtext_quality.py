@@ -316,46 +316,6 @@ class TestQualityFilterGate:
         kept2, _ = filter_by_quality(docs2, rules=with_stop)
         assert {r.doc_id for r in kept2.collect()} == {9}
 
-    def test_streaming_gate_matches_batch(self, spark, tmp_path, corpus):
-        """The gate on a readStream plan: kept rows identical to batch,
-        per-rule counters appear in the micro-batch observedMetrics."""
-        from document_automation_spark.streaming.pipeline import (
-            start_streaming_quality_filter,
-        )
-
-        input_dir = str(tmp_path / "docs_in")
-        output_dir = str(tmp_path / "docs_kept")
-        corpus.repartition(2).write.parquet(input_dir)
-        q = start_streaming_quality_filter(
-            spark, input_dir, output_dir, str(tmp_path / "ckpt")
-        )
-        try:
-            q.processAllAvailable()
-            progress = [
-                p.observedMetrics["quality_filter"]
-                for p in q.recentProgress
-                if "quality_filter" in (p.observedMetrics or {})
-            ]
-        finally:
-            q.stop()
-        streamed = {r.doc_id for r in spark.read.parquet(output_dir).collect()}
-        batch, _ = filter_by_quality(corpus)
-        assert streamed == {r.doc_id for r in batch.collect()} == {1}
-        assert sum(m["n_docs"] for m in progress) == 4
-        assert sum(m["n_kept"] for m in progress) == 1
-        assert sum(m["drop_symbol_word_ratio"] for m in progress) == 1
-
-    def test_streaming_rejects_ppl_rule(self, spark, tmp_path, corpus):
-        input_dir = str(tmp_path / "docs_in2")
-        corpus.write.parquet(input_dir)
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .parquet(input_dir)
-        )
-        lm = train_bigram_lm(corpus)
-        with pytest.raises(ValueError, match="batch-only"):
-            filter_by_quality(stream, rules=QualityRules(max_ppl=10.0), lm=lm)
-
     def test_ingest_pipeline_stage(self, spark, tmp_path):
         """--quality-filter over the composed ingest: final table holds
         only rule-passing passages, summary carries the per-rule drops."""
