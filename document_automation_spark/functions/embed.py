@@ -133,7 +133,7 @@ def embed_with_model(
       contract, independent of ``spark.sql.execution.arrow.
       maxRecordsPerBatch``;
     * weights travel by **broadcast** when the factory closes over one —
-      see :func:`make_projection_model_factory` for the pattern.
+      see ``functions.encoder.make_encoder_model_factory`` for the pattern.
 
     Returns ``(id_col, embedding: array<double>)``.  Swap the factory for
     a sentence-transformers load and nothing else changes."""
@@ -194,44 +194,6 @@ def embed_with_model(
             yield flush(len(buf_txt))
 
     return documents.select(id_col, text_col).mapInPandas(gen, schema)
-
-
-def make_projection_model_factory(
-    spark, dim_in: int = 256, dim_out: int = 64, seed: int = 7
-):
-    """Deterministic tiny-matrix default for :func:`embed_with_model`:
-    hashed bag-of-tokens (crc32 buckets) × a seeded random projection.
-
-    The weight matrix is built DRIVER-side and shipped via
-    ``sc.broadcast`` — the same weights-to-every-worker mechanics a real
-    checkpoint uses (torch state_dicts broadcast identically); the worker
-    materializes it once per process through the model cache.  Returns
-    ``(factory, cache_key)``."""
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    weights = rng.standard_normal((dim_in, dim_out)).astype("float64")
-    b_weights = spark.sparkContext.broadcast(weights)
-    key = f"projection-model-{dim_in}x{dim_out}-seed{seed}"
-
-    def factory():
-        import zlib
-
-        W = np.asarray(b_weights.value)
-
-        def model(texts):
-            X = np.zeros((len(texts), dim_in), dtype="float64")
-            for row, text in enumerate(texts):
-                for token in _TOKEN.findall((text or "").lower()):
-                    X[row, zlib.crc32(token.encode("utf-8")) % dim_in] += 1.0
-            Y = X @ W
-            norms = np.linalg.norm(Y, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            return Y / norms
-
-        return model
-
-    return factory, key
 
 
 def assign_dense_vector_ids(

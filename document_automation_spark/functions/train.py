@@ -166,18 +166,15 @@ def rank_eval(samples: DataFrame, weights: np.ndarray, dim: int = 256) -> dict:
     }
 
 
-def _pair_features(
-    pairs: DataFrame, dim_in: int, row_id_expr=None
-):
-    """Featurize positive pairs once into a persistable frame
-    ``(row_id, shard?, xa, xb)``.
+def _pair_features(pairs: DataFrame, dim_in: int, n_shards: int):
+    """Featurize positive pairs once into a persisted frame
+    ``(row_id, shard, xa, xb)``: pair ``pair_id`` goes to shard
+    ``pair_id % n_shards`` at row ``pair_id // n_shards`` of that shard's
+    contrastive head.
 
     Dense ids come from :func:`assign_dense_vector_ids` over ``text_a``
     (no single-partition window) unless the caller already carries a
-    dense 0-based ``pair_id``.  ``row_id_expr``, when given, maps
-    ``pair_id`` to the matrix row index used by the contrastive head
-    (identity for full-batch; ``pair_id // n_shards`` for sharded) and
-    may add a ``shard`` column.
+    dense 0-based ``pair_id``.
     """
     from pyspark import StorageLevel
 
@@ -193,36 +190,29 @@ def _pair_features(
             cache_registry=id_cache,
         ).withColumnRenamed("vector_id", "pair_id")
 
-    has_shard = False
-    if row_id_expr is not None:
-        row_id, shard = row_id_expr
-        pairs = pairs.withColumn("row_id", row_id).withColumn("shard", shard)
-        cols = [F.col("row_id"), F.col("shard"), F.col("text_a"), F.col("text_b")]
-        schema = "row_id long, shard int, xa array<double>, xb array<double>"
-        has_shard = True
-    else:
-        pairs = pairs.withColumn("row_id", F.col("pair_id"))
-        cols = [F.col("row_id"), F.col("text_a"), F.col("text_b")]
-        schema = "row_id long, xa array<double>, xb array<double>"
+    pairs = pairs.select(
+        (F.col("pair_id") / n_shards).cast("long").alias("row_id"),
+        (F.col("pair_id") % n_shards).cast("int").alias("shard"),
+        "text_a",
+        "text_b",
+    )
 
     def feat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
             if not len(batch):
                 continue
-            out = {
-                "row_id": batch["row_id"].astype("int64"),
-                "xa": list(featurize(batch["text_a"].tolist(), dim_in)),
-                "xb": list(featurize(batch["text_b"].tolist(), dim_in)),
-            }
-            if has_shard:
-                out["shard"] = batch["shard"].astype("int32")
-            yield pd.DataFrame(out)
+            yield pd.DataFrame(
+                {
+                    "row_id": batch["row_id"].astype("int64"),
+                    "shard": batch["shard"].astype("int32"),
+                    "xa": list(featurize(batch["text_a"].tolist(), dim_in)),
+                    "xb": list(featurize(batch["text_b"].tolist(), dim_in)),
+                }
+            )
 
-    feats = (
-        pairs.select(*cols)
-        .mapInPandas(feat_batches, schema)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    feats = pairs.mapInPandas(
+        feat_batches, "row_id long, shard int, xa array<double>, xb array<double>"
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     n = feats.count()
     for handle in id_cache:
         handle.unpersist()
@@ -338,6 +328,7 @@ def train_contrastive_distributed(
     epochs: int = 800,
     lr: float = 0.5,
     temp: float = 0.07,
+    n_shards: int = 1,
 ):
     """Distributed symmetric-InfoNCE training of the TinyDualEncoder —
     the same objective, init, and update rule as
@@ -370,13 +361,18 @@ def train_contrastive_distributed(
     gradients up, samples never move) with the one extra round-trip that
     in-batch negatives force.  The N×N head is driver-side, so the
     practical full-batch cap is N ≈ 10k pairs (S is N² doubles); above
-    that, :func:`train_contrastive_sharded` runs the same loop per
-    driver-sized shard (mini-batch SGD with in-shard negatives — the
-    standard scale recipe).
+    that, ``n_shards > 1`` runs the same step once per driver-sized shard
+    and updates the weights between shards (mini-batch SGD with in-shard
+    negatives — the standard scale recipe).  Shards are deterministic
+    (``pair_id % n_shards``); per-step driver memory is
+    (N/n_shards)² doubles, so size shards to ~4-8k pairs.  The featurized
+    frame is built and persisted ONCE; each shard step filters it.  The
+    loss history records the mean per-shard loss per epoch.
 
-    Matches the driver-side trainer to float-association tolerance
-    (pinned by tests/test_train_encoder.py: same weights at 1e-8 after
-    multiple epochs, parallelism-invariant at 1e-6).
+    With ``n_shards=1`` (full batch) it matches the driver-side trainer to
+    float-association tolerance (pinned by tests/test_train_encoder.py:
+    same weights at 1e-8 after multiple epochs); any shard count is
+    parallelism-invariant at 1e-6.
 
     ``pairs`` needs columns ``text_a, text_b``; row order is made
     deterministic by dense ids over ``text_a`` (must be unique — doc
@@ -385,63 +381,10 @@ def train_contrastive_distributed(
     """
     from document_automation_spark.functions.encoder import TinyDualEncoder
 
-    sc = pairs.sparkSession.sparkContext
-    feats, N = _pair_features(pairs, dim_in)
-    if N == 0:
-        raise ValueError("need non-empty positive-pair DataFrame")
-    W1, b1, W2 = _init_encoder_weights(dim_in, hidden, dim_out, seed)
-    history: List[float] = []
-    for _ in range(epochs):
-        W1, b1, W2, loss = _contrastive_step(sc, feats, N, W1, b1, W2, lr, temp)
-        history.append(loss)
-    feats.unpersist()
-    return TinyDualEncoder(W1=W1, b1=b1, W2=W2), history
-
-
-def train_contrastive_sharded(
-    pairs: DataFrame,
-    n_shards: int,
-    dim_in: int = 512,
-    hidden: int = 128,
-    dim_out: int = 16,
-    seed: int = 7,
-    epochs: int = 800,
-    lr: float = 0.5,
-    temp: float = 0.07,
-):
-    """Mini-batch InfoNCE for pair sets too large for one driver-side
-    N×N head: the corpus is split into ``n_shards`` deterministic shards
-    (``pair_id % n_shards`` — dense ids make shard-local row indices the
-    arithmetic ``pair_id // n_shards``, no second id pass), and each
-    epoch runs :func:`_contrastive_step` once per shard, updating the
-    weights between shards.  In-batch negatives come from the SAME shard
-    — the standard mini-batch contrastive trade (smaller negative pools
-    per step, more steps); ``n_shards=1`` is exactly
-    :func:`train_contrastive_distributed`.
-
-    Per-step driver memory is (N/n_shards)² doubles — size shards to
-    ~4-8k pairs.  The featurized frame is built and persisted ONCE;
-    every shard step filters the cached frame (a scan of an in-memory
-    table, no re-featurization).  Loss history records the mean
-    per-shard loss per epoch.  Deterministic for a given input + seed
-    regardless of parallelism (same tolerance argument as the full-batch
-    trainer: float-sum association only).
-
-    Returns ``(TinyDualEncoder, loss_history)``.
-    """
-    from document_automation_spark.functions.encoder import TinyDualEncoder
-
     if n_shards < 1:
         raise ValueError("n_shards must be >= 1")
     sc = pairs.sparkSession.sparkContext
-    feats, N = _pair_features(
-        pairs,
-        dim_in,
-        row_id_expr=(
-            (F.col("pair_id") / n_shards).cast("long"),
-            (F.col("pair_id") % n_shards).cast("int"),
-        ),
-    )
+    feats, N = _pair_features(pairs, dim_in, n_shards)
     if N == 0:
         raise ValueError("need non-empty positive-pair DataFrame")
     # shard s holds ids {s, s+n, s+2n, ...}: M_s = |{i < N : i ≡ s (mod n)}|

@@ -229,25 +229,6 @@ def count_tokens(
     )
 
 
-def decode_documents(
-    encoded: DataFrame,
-    tokens_col: str = "tokens",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """``(id_col, text)`` — invert :func:`encode_documents`: concatenate
-    the token stream and turn each end-of-word marker back into a space.
-    Round-trip contract (pinned in tests): for any input document,
-    ``decode(encode(text)) == " ".join(text.split())`` — i.e. exact up
-    to whitespace normalization, which the whitespace pre-tokenizer
-    discards by design.  One Project, zero shuffles."""
-    return encoded.select(
-        F.col(id_col),
-        F.rtrim(
-            F.translate(F.concat_ws("", F.col(tokens_col)), END_OF_WORD, " ")
-        ).alias("text"),
-    )
-
-
 def encode_documents(
     documents: DataFrame,
     vocab: DataFrame,

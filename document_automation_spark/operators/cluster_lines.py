@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from document_automation_spark.kernels.cluster import cluster_lines, postprocess_lines
+from document_automation_spark.kernels.cluster import cluster_lines
 from document_automation_spark.kernels.fingerprint import rolling_fingerprint
 
 _SCHEMA = T.StructType(
@@ -71,40 +71,3 @@ def kmeans_line_clusters(
             )
 
     return documents.select("doc_id", "text").mapInPandas(batches, _SCHEMA)
-
-
-_DISPATCH_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("branch", T.StringType()),
-        T.StructField("unit_idx", T.LongType()),
-        T.StructField("n_chars", T.LongType()),
-        T.StructField("fingerprint", T.LongType()),
-    ]
-)
-
-
-def postprocess_dispatch(
-    documents: DataFrame,
-    line_width: int = 80,
-    **kwargs,
-) -> DataFrame:
-    """All four K10 dispatcher branches over every document — one narrow
-    map emitting (branch, unit_idx, size, fingerprint) per output unit."""
-    branches = [("split_cluster", True, True), ("split", True, False),
-                ("cluster", False, True), ("none", False, False)]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in it:
-            rows = []
-            for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                lines = split_fixed_lines(text, line_width)
-                for name, split_doc, cluster_doc in branches:
-                    units = postprocess_lines(lines, split_doc, cluster_doc, **kwargs)
-                    for i, u in enumerate(units):
-                        rows.append((doc_id, name, i, len(u), rolling_fingerprint(u)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "branch", "unit_idx", "n_chars", "fingerprint"]
-            )
-
-    return documents.select("doc_id", "text").mapInPandas(batches, _DISPATCH_SCHEMA)

@@ -76,44 +76,6 @@ def duplicate_groups(documents: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures(
-    documents: DataFrame,
-    num_perm: int = 32,
-    k: int = 5,
-    seed: int = 42,
-    hash_impl: str = "md5",
-) -> DataFrame:
-    """(doc_id, signature:array<long>) via the Arrow-batched MinHash kernel."""
-    import pandas as pd
-
-    from document_automation_spark.kernels.fingerprint import minhash_signature
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("signature", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    def sig_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for batch in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": batch["doc_id"].values,
-                    "signature": [
-                        minhash_signature(
-                            t, num_perm=num_perm, k=k, seed=seed, hash_impl=hash_impl
-                        )
-                        for t in batch["text"]
-                    ],
-                }
-            )
-
-    # the Python MinHash kernel fuses with the scan: fan an under-split
-    # input out so every core runs a worker (no-op at corpus scale)
-    return fan_out(documents).select("doc_id", "text").mapInPandas(sig_batches, schema)
-
-
 def minhash_lsh_candidates(
     documents: DataFrame,
     num_perm: int = 32,

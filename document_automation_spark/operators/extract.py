@@ -174,16 +174,6 @@ def with_bucket(pages: DataFrame, n_buckets: int) -> DataFrame:
     return pages.withColumn("bucket", bucket_of(n_buckets))
 
 
-def passage_counts(documents: DataFrame) -> DataFrame:
-    """Per-url passage accounting (reference print at
-    /root/reference/src/utils.py:342 → a queryable metrics aggregate)."""
-    return documents.groupBy("url").agg(
-        F.max("n_passages").alias("n_passages"),
-        F.count(F.col("doc_id")).alias("rows_emitted"),
-        F.max(F.when(F.col("error").isNotNull(), F.col("error"))).alias("error"),
-    )
-
-
 def documents_from_text(
     pages: DataFrame, cfg: ExtractConfig = ExtractConfig()
 ) -> DataFrame:

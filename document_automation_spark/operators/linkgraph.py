@@ -154,15 +154,6 @@ def host_link_edges(
     one shuffle — keyed by (src, dst) host pairs, i.e. already
     aggregated far below page cardinality.
     """
-    return _host_edges_raw(pages, url_col, html_col, html_is_binary).distinct()
-
-
-def _host_edges_raw(
-    pages: DataFrame, url_col: str, html_col: str, html_is_binary: bool
-) -> DataFrame:
-    """Pre-distinct (src, dst) host pairs — the scan-stage edge stream
-    shared by the host- and domain-level graphs (each applies its own
-    fold/distinct so only ONE shuffle runs per granularity)."""
     from document_automation_spark.operators.domains import NO_HOST, host_col
 
     html_str = _lossy_html_str(html_col, html_is_binary)
@@ -173,41 +164,26 @@ def _host_edges_raw(
         ).alias("href"),
     )
     dst = _href_dst_host(F.col("href"), F.col("src"))
-    return exploded.select("src", dst.alias("dst")).where(
-        (F.col("src") != NO_HOST) & (F.col("dst") != NO_HOST)
-    )
-
-
-def domain_link_edges(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-    html_is_binary: bool = True,
-) -> DataFrame:
-    """Distinct registrable-DOMAIN→domain hyperlink edges — the
-    domain-level companion of :func:`host_link_edges` (Common Crawl
-    publishes both granularities of its crawl graph; domain-level is the
-    one that survives subdomain spam, where a link farm fans out over
-    thousands of throwaway subdomains of one registration).
-
-    Same scan-stage extraction; each endpoint folds through
-    ``operators.domains.registrable_domain_col`` BEFORE the distinct, so
-    the one shuffle is keyed on the (smaller) domain pair set.  www/host
-    aliases collapsing onto their registration turn into self-edges and
-    are kept — :func:`pagerank` treats self-loops as ordinary edges, the
-    same contract as the host graph."""
-    return fold_edges_to_domains(
-        _host_edges_raw(pages, url_col, html_col, html_is_binary)
+    return (
+        exploded.select("src", dst.alias("dst"))
+        .where((F.col("src") != NO_HOST) & (F.col("dst") != NO_HOST))
+        .distinct()
     )
 
 
 def fold_edges_to_domains(edges: DataFrame) -> DataFrame:
     """(src, dst) host edges → distinct registrable-domain edges — the
-    ONE definition of the host→domain edge fold (shared by
-    :func:`domain_link_edges` and the ingest ``--link-graph`` stage, so
-    the artifact and the operator cannot diverge).  Works on raw or
-    already-distinct host edges: the fold is deterministic per pair, so
-    fold-then-distinct commutes with a prior host-level distinct."""
+    ONE definition of the host→domain edge fold, used by the ingest
+    ``--link-graph`` stage on :func:`host_link_edges`.  Common Crawl
+    publishes both granularities of its crawl graph; the domain level is
+    the one that survives subdomain spam (a link farm over thousands of
+    throwaway subdomains of one registration folds onto one node).  Each
+    endpoint folds through ``operators.domains.registrable_domain_col``;
+    www/host aliases collapsing onto their registration turn into
+    self-edges and are kept — :func:`pagerank` treats self-loops as
+    ordinary edges.  Works on raw or already-distinct host edges: the
+    fold is deterministic per pair, so fold-then-distinct commutes with a
+    prior host-level distinct."""
     from document_automation_spark.operators.domains import registrable_domain_col
 
     return edges.select(

@@ -117,49 +117,6 @@ def pack_sequences(
     )
 
 
-def materialize_chunks(
-    docs: DataFrame,
-    segments: DataFrame,
-    shard_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Turn the segment map into actual per-chunk token arrays.
-
-    Entirely JVM-side: tokenize once (same whitespace split as the count),
-    join segments to their doc's token array on ``id_col`` (narrow,
-    broadcast- or shuffle-join on the doc key), ``slice`` out each
-    segment, then ONE shuffle keyed (shard, chunk_id) assembles chunks —
-    ``array_sort`` on (chunk_token_offset, seg) structs orders segments
-    without a window, ``flatten`` concatenates.  Output: (shard_col,
-    chunk_id, tokens, n_tokens).
-
-    Invariant (pinned in tests): concatenating a shard's chunks in
-    chunk_id order reproduces the concatenation of its docs' tokens in
-    id order, exactly.
-    """
-    toks = docs.where(F.length(F.trim(F.col(text_col))) > 0).select(
-        id_col, F.split(F.trim(F.col(text_col)), r"\s+").alias("toks")
-    )
-    seg = segments.join(toks, id_col).select(
-        shard_col,
-        "chunk_id",
-        F.struct(
-            F.col("chunk_token_offset"),
-            F.slice(
-                F.col("toks"),
-                (F.col("doc_token_offset") + 1).cast("int"),
-                F.col("seg_tokens").cast("int"),
-            ).alias("seg_toks"),
-        ).alias("seg"),
-    )
-    return seg.groupBy(shard_col, "chunk_id").agg(
-        F.flatten(
-            F.transform(F.array_sort(F.collect_list("seg")), lambda s: s.seg_toks)
-        ).alias("tokens")
-    ).withColumn("n_tokens", F.size("tokens").cast("long"))
-
-
 def chunk_stats(
     segments: DataFrame, shard_col: str = "source", id_col: str = "doc_id"
 ) -> DataFrame:

@@ -1,4 +1,4 @@
-"""Skew-aware aggregation: two-phase salted group-by + host utilities.
+"""Skew-aware aggregation and joins: two-phase salted group-by, salted join.
 
 The reference has NO skew handling (SURVEY.md §4 — ``batch_size=1`` is its
 only crude guard); at 10^12 Common-Crawl rows, host-level Zipf skew is the
@@ -11,44 +11,17 @@ AQE's runtime skew-join splitting:
   ``groupBy(key)`` merges the partials.  Correct for any algebraic
   aggregate (sum/count/min/max); result is IDENTICAL to the naive plan,
   so the DuckDB oracle is the plain GROUP BY.
-* ``hot_keys`` — data-dependent hot-key detection by sampling: salt ONLY
-  keys above a frequency threshold (salting cold keys doubles their
-  shuffle volume for nothing).
-* ``host_of`` — url → host, the natural skew key of web corpora.
+* ``salted_join`` — the explicit hot-key join lever: the fact side is
+  salted per task and the dim side replicated ``n_salt`` ways, so one hot
+  key spreads over ``n_salt`` reducers.
 """
 
 from __future__ import annotations
 
-from typing import List, Sequence
+from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def host_of(url_col: Column) -> Column:
-    """url → host (``parse_url`` runs JVM-side, no UDF)."""
-    return F.parse_url(url_col, F.lit("HOST"))
-
-
-def hot_keys(
-    df: DataFrame, key_col: str, threshold_fraction: float = 0.01, sample_fraction: float = 0.1
-) -> List:
-    """Sample-estimate keys owning more than ``threshold_fraction`` of rows.
-
-    One cheap sampled aggregation; the returned list is driver-sized by
-    construction (at most 1/threshold_fraction keys can exceed the
-    threshold)."""
-    sample = df.sample(fraction=sample_fraction, seed=42)
-    total = sample.count()
-    if total == 0:
-        return []
-    counts = (
-        sample.groupBy(key_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= total * threshold_fraction)
-        .collect()
-    )
-    return [row[key_col] for row in counts]
 
 
 def salted_agg(
@@ -56,28 +29,17 @@ def salted_agg(
     key_cols: Sequence[str],
     aggs: dict,
     n_salt: int = 16,
-    salt_only: List | None = None,
 ) -> DataFrame:
     """Two-phase salted aggregation, result-identical to a plain groupBy.
 
     ``aggs`` maps output column name → ("sum"|"count"|"min"|"max",
     input column) — the algebraic aggregates whose partials re-merge with
-    the same function (count partials re-merge with SUM).
-
-    ``salt_only``: restrict salting to these (hot) key values; cold keys
-    get salt 0 and skip the extra split.  Phase 2's input has at most
-    ``n_groups × n_salt`` rows — always tiny.
+    the same function (count partials re-merge with SUM).  Phase 2's input
+    has at most ``n_groups × n_salt`` rows — always tiny.
     """
-    first_key = F.col(key_cols[0])
-    if salt_only is None:
-        # partition-id salt: deterministic per task, uniform enough to
-        # split any hot group across ~n_salt reducers
-        salt = F.pmod(F.spark_partition_id().cast("long"), F.lit(n_salt))
-    else:
-        salt = F.when(
-            first_key.isin(list(salt_only)),
-            F.pmod(F.spark_partition_id().cast("long"), F.lit(n_salt)),
-        ).otherwise(F.lit(0))
+    # partition-id salt: deterministic per task, uniform enough to split
+    # any hot group across ~n_salt reducers
+    salt = F.pmod(F.spark_partition_id().cast("long"), F.lit(n_salt))
 
     phase1_aggs = []
     phase2_aggs = []
@@ -107,7 +69,6 @@ def salted_join(
     dim: DataFrame,
     key_cols: Sequence[str],
     n_salt: int = 16,
-    salt_only: List | None = None,
     how: str = "inner",
 ) -> DataFrame:
     """Skew-proof equi-join, result-identical to ``fact.join(dim, key_cols,
@@ -122,24 +83,16 @@ def salted_join(
     ways (dims are the small side by definition — replication is cheap);
     the join keys on (key…, salt), splitting each hot key across
     ``n_salt`` reducers.  Each fact row still matches exactly one dim
-    replica, so multiplicities are unchanged.  ``salt_only`` restricts
-    salting to known-hot key values (cold keys keep salt 0 — no extra dim
-    replicas matched, no shuffle inflation).
+    replica, so multiplicities are unchanged.
 
     ``right``/``full`` joins are rejected: an unmatched dim row would
     surface once per replica.
     """
     if how not in ("inner", "left"):
         raise ValueError(f"salted_join supports inner/left, got {how!r}")
-    first_key = F.col(key_cols[0])
-    task_salt = F.pmod(F.spark_partition_id().cast("long"), F.lit(n_salt))
-    if salt_only is None:
-        fact_salt = task_salt
-    else:
-        fact_salt = F.when(first_key.isin(list(salt_only)), task_salt).otherwise(
-            F.lit(0)
-        )
-    salted_fact = fact.withColumn("__salt", fact_salt)
+    salted_fact = fact.withColumn(
+        "__salt", F.pmod(F.spark_partition_id().cast("long"), F.lit(n_salt))
+    )
     salted_dim = dim.withColumn(
         "__salt", F.explode(F.array(*[F.lit(i).cast("long") for i in range(n_salt)]))
     )

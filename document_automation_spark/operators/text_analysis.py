@@ -31,8 +31,7 @@ def _fingerprint_expr(text_col: str = "text"):
     """Polynomial rolling hash over code points as ONE shared fold
     expression — ``h = (h*31 + cp) % (~2^47)`` via ``F.aggregate``,
     identical math to kernels.fingerprint.rolling_fingerprint and to the
-    DuckDB list_reduce oracle twin (token_stats and
-    rolling_fingerprint_col must never drift apart)."""
+    DuckDB list_reduce oracle twin."""
     return F.aggregate(
         F.split(F.col(text_col), ""),
         F.lit(0).cast("long"),
@@ -99,12 +98,6 @@ def detect_language_script(documents: DataFrame) -> DataFrame:
     )
 
 
-def rolling_fingerprint_col(documents: DataFrame) -> DataFrame:
-    """Standalone (doc_id, fingerprint) projection of the shared
-    :func:`_fingerprint_expr` fold."""
-    return documents.select("doc_id", _fingerprint_expr().alias("fingerprint"))
-
-
 def quality_features(documents: DataFrame) -> DataFrame:
     """Composite quality scoring via the Python kernel (Arrow-batched).
 
@@ -141,19 +134,6 @@ def quality_features(documents: DataFrame) -> DataFrame:
             )
 
     return fan_out(documents).select("doc_id", "text").mapInPandas(score_batches, schema)
-
-
-def bpe_token_counts(documents: DataFrame) -> DataFrame:
-    """BPE-ish token counting (words / numbers / CJK chars / punctuation)
-    via the kernel regex — the tokenizer-budget estimator for training-data
-    pipelines; Arrow-batched."""
-    from document_automation_spark.kernels.textstats import count_tokens_bpe_ish
-
-    @F.pandas_udf(T.LongType())
-    def bpe_udf(texts: pd.Series) -> pd.Series:
-        return texts.map(count_tokens_bpe_ish)
-
-    return documents.select("doc_id", bpe_udf(F.col("text")).alias("n_tokens_bpe"))
 
 
 def language_id_kernel(documents: DataFrame) -> DataFrame:

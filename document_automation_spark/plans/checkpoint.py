@@ -10,10 +10,11 @@ writers:
   (the column the extraction operator already emits) and written with
   dynamic partition overwrite, so re-processing a bucket REPLACES its
   files — write idempotency;
-* before the data write, the directories of the pending buckets are
-  deleted (Hadoop FS calls, no Spark job): dynamic overwrite replaces
-  only the buckets that get rows, so a pending bucket that writes none
-  would otherwise keep an earlier run's files;
+* before the data write, the pending buckets are recorded in the
+  ``_inflight`` file and their directories are deleted (Hadoop FS calls,
+  no Spark job): dynamic overwrite replaces only the buckets that get
+  rows, so a pending bucket that writes none would otherwise keep an
+  earlier run's files;
 * after the data commit, one manifest row per bucket the run had pending
   is appended — buckets that got no output rows (no pages, or every page
   under the gate) included, with zero counters:
@@ -26,14 +27,17 @@ writers:
   below the Python kernel for row-local plan builders, so committed pages
   are never decoded again (:func:`pending_documents`);
   a job whose every bucket is committed returns before building any plan.
-  A crash between data write and manifest append re-runs that bucket;
-  overwrite makes that harmless.
+  A crash between data write and manifest append re-runs that bucket,
+  under any fingerprint: the bucket stays in the ``_inflight`` record,
+  which the run clears only after its append, and overwrite makes the
+  re-run harmless.
 
 On Iceberg the manifest append and data commit would share a transaction
 (snapshot id recorded in the manifest); with plain parquet the
-crash-window is closed by overwrite-idempotency instead.  Scale note: the
-manifest is O(n_buckets) rows — thousands, not billions — so the done set
-is always small enough to inline as a literal list.
+crash-window is closed by the in-flight record and overwrite-idempotency
+instead.  Scale note: the manifest is O(n_buckets) rows — thousands, not
+billions — so the done set is always small enough to inline as a literal
+list.
 """
 
 from __future__ import annotations
@@ -119,37 +123,57 @@ def _clear_buckets(spark: SparkSession, output_path: str, buckets: Collection[in
         fs.delete(status.getPath(), True)
 
 
-def _manifest_or_none(spark: SparkSession, output_path: str) -> DataFrame | None:
-    path = manifest_path(output_path)
-    fs, jpath = _hadoop_path(spark, path)
-    if not fs.exists(jpath):  # first run: no manifest yet
-        return None
-    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
+def _inflight_path(output_path: str) -> str:
+    return os.path.join(output_path, "_inflight")
 
 
-def read_manifest(spark: SparkSession, output_path: str) -> DataFrame:
-    manifest = _manifest_or_none(spark, output_path)
-    if manifest is None:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
-    return manifest
+def _read_buckets(fs, jpath) -> set[int]:
+    """The bucket ids in the record at ``jpath``; none when it is absent."""
+    if not fs.exists(jpath):
+        return set()
+    stream = fs.open(jpath)
+    try:
+        text = bytes(stream.readAllBytes()).decode("ascii")
+    finally:
+        stream.close()
+    return {int(b) for b in text.split(",") if b}
+
+
+def _write_buckets(fs, jpath, buckets: Collection[int]) -> None:
+    stream = fs.create(jpath, True)
+    try:
+        stream.write(",".join(map(str, sorted(buckets))).encode("ascii"))
+    finally:
+        stream.close()
 
 
 def done_buckets(spark: SparkSession, output_path: str, input_fingerprint: str) -> list[int]:
     """Buckets whose latest manifest row is under ``input_fingerprint``,
-    ascending.  A bucket a later run committed under another fingerprint
-    holds that run's files, so an earlier commit under this fingerprint no
-    longer counts (fingerprint A, then B, then A again re-runs every
-    bucket).  One scan job, no shuffle (the manifest is O(n_buckets × runs)
-    rows, so the latest row per bucket is picked on the driver); no job at
-    all on a fresh output."""
-    manifest = _manifest_or_none(spark, output_path)
-    if manifest is None:
+    ascending, minus the in-flight ones.  A bucket a later run committed
+    under another fingerprint holds that run's files, so an earlier commit
+    under this fingerprint no longer counts (fingerprint A, then B, then A
+    again re-runs every bucket).  A bucket in the in-flight record
+    (:func:`run_extraction_job` writes it before it deletes the pending
+    buckets' files and clears it after their manifest rows) may hold the
+    files of a run that died before its append, whatever its latest row
+    says, so it is never done.  One scan job, no shuffle (the manifest is
+    O(n_buckets × runs) rows, so the latest row per bucket is picked on
+    the driver) and one ``exists`` for the record; no job at all on a
+    fresh output."""
+    path = manifest_path(output_path)
+    fs, jpath = _hadoop_path(spark, path)
+    if not fs.exists(jpath):  # first run: no manifest yet
         return []
     latest: dict = {}
+    manifest = spark.read.schema(MANIFEST_SCHEMA).parquet(path)
     for r in manifest.select("bucket", "committed_at", "input_fingerprint").collect():
         if r.bucket not in latest or r.committed_at > latest[r.bucket][0]:
             latest[r.bucket] = (r.committed_at, r.input_fingerprint)
-    return sorted(b for b, (_, fp) in latest.items() if fp == input_fingerprint)
+    inflight = _path_class(spark.sparkContext._jvm)(_inflight_path(output_path))
+    dirty = _read_buckets(fs, inflight)
+    return sorted(
+        b for b, (_, fp) in latest.items() if fp == input_fingerprint and b not in dirty
+    )
 
 
 def pending_documents(
@@ -260,6 +284,12 @@ def run_extraction_job(
     write_partitions = spark.sparkContext.defaultParallelism * 4
     salt_k = max(1, write_partitions // cfg.n_buckets)
 
+    # the in-flight record: the pending buckets, plus those of a run that
+    # died before its append and that this run leaves out, stay not-done
+    # until the manifest commits them
+    fs, inflight = _hadoop_path(spark, _inflight_path(output_path))
+    left_out = _read_buckets(fs, inflight) - set(pending)
+    _write_buckets(fs, inflight, left_out | set(pending))
     _clear_buckets(spark, output_path, pending)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     started = time.time()
@@ -342,6 +372,10 @@ def run_extraction_job(
         .write.mode("append")
         .parquet(manifest_path(output_path))
     )
+    if left_out:
+        _write_buckets(fs, inflight, left_out)
+    else:
+        fs.delete(inflight, False)
     return summary
 
 

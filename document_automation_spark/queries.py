@@ -1876,8 +1876,7 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _token_stats_sql() -> str:
     # n_tokens_bpe + the rolling-hash fingerprint folded in (each was its
     # own registry entry in earlier rounds — merged to free seats under
-    # the driver's 50-entry report cap; the standalone operators
-    # bpe_token_counts / rolling_fingerprint_col remain available).
+    # the driver's 50-entry report cap).
     # Since round 5 session 3 the quality_features seat is folded in the
     # same way (doc_id join — both operators still run in full): the
     # DuckDB twin recomputes the entire Python scoring policy in the
@@ -1965,11 +1964,6 @@ _SCRIPT_CASE_SQL = """
                 WHEN regexp_matches(text, '[Ѐ-ӿ]') THEN 'ru'
                 ELSE 'latin' END AS detected_script
 """
-
-
-# (rolling_fingerprint no longer has its own registry entry: the
-# fingerprint column is checked inside token_stats — seat freed for
-# duplicate_spans; rolling_fingerprint_col remains available.)
 
 
 def _duplicate_spans_sql(k: int = 32, min_docs: int = 2) -> str:
@@ -2104,11 +2098,6 @@ _BPE_RE_SQL = (
     r"[A-Za-z]+(?:''[A-Za-z]+)?|[0-9]+|[\x{4e00}-\x{9fff}]"
     r"|[^\sA-Za-z0-9\x{4e00}-\x{9fff}]"
 )
-
-
-# (bpe_token_counts no longer has its own registry entry: its column is
-# checked inside token_stats — seat freed for simhash_near_dup_pairs under
-# the driver's 50-entry report cap.)
 
 
 # whitespace tokens of trim'd text, as the kernel's re.split(r"\s+") does
@@ -2657,8 +2646,9 @@ def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     onto their registration, 2-level ccTLD suffixes kept, IPv4 literals
     verbatim) and ranks the DOMAIN graph — the fold and the iteration
     both replayed by the DuckDB oracle with the same suffix list.  The
-    production edge sources are :func:`linkgraph.host_link_edges` /
-    :func:`linkgraph.domain_link_edges` over the extraction output —
+    production edge sources are :func:`linkgraph.host_link_edges` and
+    its :func:`linkgraph.fold_edges_to_domains` over the extraction
+    output (the ingest ``--link-graph`` stage) —
     pinned against numpy power iteration in tests/test_linkgraph.py;
     this seat pins the distributed iteration cross-engine
     (per-iteration 12-dp rounding makes the doubles identical)."""

@@ -177,23 +177,6 @@ class TestEncodeDocuments:
         }
         assert via_count == via_encode
 
-    def test_decode_roundtrip(self, spark, docs):
-        """decode(encode(text)) == whitespace-normalized text, as a
-        zero-shuffle Project over the encoded table."""
-        from document_automation_spark.operators.bpe import decode_documents
-
-        wf = word_frequencies(docs)
-        vocab = segment_vocabulary(wf, learn_bpe(wf, 12))
-        enc = encode_documents(docs, vocab)
-        got = {r["doc_id"]: r["text"] for r in decode_documents(enc).collect()}
-        assert got == {d: " ".join(t.split()) for d, t in CORPUS}
-        import contextlib, io
-
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            decode_documents(enc.localCheckpoint()).explain("formatted")
-        assert "Exchange" not in buf.getvalue()
-
     def test_unseen_word_falls_back_to_characters(self, spark, docs):
         wf = word_frequencies(docs)
         vocab = segment_vocabulary(wf, learn_bpe(wf, 12))

@@ -130,10 +130,3 @@ class TestDistributed:
         one = kmeans_line_clusters(docs.coalesce(1)).collect()
         many = kmeans_line_clusters(docs.repartition(16)).collect()
         assert sorted(map(tuple, one)) == sorted(map(tuple, many))
-
-    def test_dispatch_operator_runs_all_branches(self, spark, sf_dir):
-        from document_automation_spark.operators.cluster_lines import postprocess_dispatch
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(20)
-        out = postprocess_dispatch(docs).groupBy("branch").count().collect()
-        assert {r.branch for r in out} == {"split_cluster", "split", "cluster", "none"}

@@ -11,14 +11,12 @@ from document_automation_spark.kernels.fingerprint import (
     char_shingles,
     jaccard,
     lsh_band_keys,
-    minhash_signature,
     simhash64,
 )
 from document_automation_spark.operators.dedup import (
     duplicate_groups,
     exact_dedup,
     minhash_lsh_candidates,
-    minhash_signatures,
     ngram_jaccard_pairs,
     simhash_fingerprints,
 )
@@ -56,12 +54,6 @@ class TestExactDedup:
 
 
 class TestMinHash:
-    def test_signatures_match_kernel(self, docs):
-        got = {r.doc_id: list(r.signature) for r in minhash_signatures(docs).collect()}
-        rows = docs.collect()
-        for r in rows:
-            assert got[r.doc_id] == minhash_signature(r.text), r.doc_id
-
     def test_lsh_finds_near_dups_not_far(self, docs):
         pairs = {(r.doc_a, r.doc_b) for r in minhash_lsh_candidates(docs).collect()}
         assert (1, 2) in pairs  # exact dup always a candidate

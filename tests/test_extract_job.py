@@ -14,7 +14,6 @@ from document_automation_spark.operators.extract import (
     ExtractConfig,
     documents_from_text,
     extract_documents,
-    passage_counts,
 )
 from document_automation_spark.sources.pages import PAGES_SCHEMA, gen_page, pages_df
 
@@ -117,19 +116,6 @@ def test_spans_reconstruct_extracted_text(spark_rows):
         for a, b in zip(ok_rows, ok_rows[1:]):
             assert b.char_start <= a.char_end
             assert len(a.content) == a.char_end - a.char_start
-
-
-def test_passage_counts_aggregate(spark, oracle_rows):
-    df = extract_documents(pages_df(spark, 100, SEED), ExtractConfig(n_buckets=4))
-    counts = {r.url: r for r in passage_counts(df).collect()}
-    for i in range(100):
-        page = gen_page(i, SEED)
-        expected = extract_page(page["url"], page["html"])
-        if not expected:
-            assert page["url"] not in counts
-            continue
-        row = counts[page["url"]]
-        assert row.n_passages == expected[0].n_passages
 
 
 def test_parallelism_invariance(spark):

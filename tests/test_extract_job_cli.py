@@ -5,7 +5,7 @@ from __future__ import annotations
 import json
 
 from document_automation_spark.jobs.extract_job import main
-from document_automation_spark.plans.checkpoint import read_manifest, read_output
+from document_automation_spark.plans.checkpoint import manifest_path, read_output
 
 
 def test_cli_synthesize_run_and_resume(spark, tmp_path, capsys):
@@ -27,7 +27,7 @@ def test_cli_synthesize_run_and_resume(spark, tmp_path, capsys):
 
     docs = read_output(spark, out)
     assert docs.count() > 0
-    manifest = read_manifest(spark, out)
+    manifest = spark.read.parquet(manifest_path(out))
     assert manifest.filter("input_fingerprint = 'cli-test'").count() == 4
 
 

@@ -73,10 +73,9 @@ def test_training_data_curation_stack(spark, passages):
     compose on one lineage without schema/contract friction."""
     from document_automation_spark.operators.dedup import near_dup_dedup
     from document_automation_spark.operators.text_analysis import (
-        bpe_token_counts,
         language_id_kernel,
         quality_features,
-        rolling_fingerprint_col,
+        token_stats,
     )
 
     quality = quality_features(passages)
@@ -93,8 +92,6 @@ def test_training_data_curation_stack(spark, passages):
     n_unique = deduped.count()
     assert 0 < n_unique <= n_gated
 
-    budget = bpe_token_counts(deduped).agg(F.sum("n_tokens_bpe")).first()[0]
-    assert budget > 0
-
-    fps = rolling_fingerprint_col(deduped)
-    assert fps.select("fingerprint").distinct().count() == n_unique  # no collisions here
+    stats = token_stats(deduped, include_bpe=True, include_fingerprint=True)
+    assert stats.agg(F.sum("n_tokens_bpe")).first()[0] > 0
+    assert stats.select("fingerprint").distinct().count() == n_unique  # no collisions here

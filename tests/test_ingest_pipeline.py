@@ -116,7 +116,7 @@ class TestIngestPipeline:
         from document_automation_spark.kernels.warc import build_wet
         from document_automation_spark.operators.extract import documents_from_text
         from document_automation_spark.plans.checkpoint import (
-            read_manifest,
+            manifest_path,
             run_extraction_job,
         )
         from document_automation_spark.sources.pages import gen_rows
@@ -141,7 +141,7 @@ class TestIngestPipeline:
         assert (
             resumed["buckets_skipped"] + resumed["buckets_processed"] == 8
         )
-        manifest = read_manifest(spark, out)
+        manifest = spark.read.parquet(manifest_path(out))
         # counters are real, not fabricated: rows_in sums to the number of
         # urls that emit rows (docs below the min-chars gate emit nothing)
         docs = documents_from_text(pages, cfg)
@@ -569,6 +569,52 @@ class TestIngestPipeline:
             for r in spark.read.parquet(s2["curated_path"]).select("url", "passage_idx").collect()
         }
         assert rows_a == rows_b
+
+    def test_fused_crash_between_write_and_manifest_append_resumes_clean(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The fused builder at the second crash point: the curated data
+        files are written, then the job dies before the manifest append.
+        The resume rewrites those buckets and the corpus table equals a
+        clean fused run row for row."""
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        from document_automation_spark.plans.checkpoint import manifest_path, read_output
+
+        pages = pages_df(spark, 80, partitions=4)
+        cfg = ExtractConfig(n_buckets=8)
+        out = str(tmp_path / "fused_crash")
+        write_parquet = DataFrameWriter.parquet
+
+        class ManifestAppendCrash(RuntimeError):
+            pass
+
+        def crash_on_manifest(self, path, *args, **kwargs):
+            if path == manifest_path(out):
+                raise ManifestAppendCrash(path)
+            return write_parquet(self, path, *args, **kwargs)
+
+        with monkeypatch.context() as patched:
+            patched.setattr(DataFrameWriter, "parquet", crash_on_manifest)
+            with pytest.raises(ManifestAppendCrash):
+                run_ingest_pipeline(
+                    spark, pages, out, "fp-fc", cfg=cfg, curated_mode="fused"
+                )
+        assert os.listdir(os.path.join(out, "data"))  # the data write happened
+
+        resumed = run_ingest_pipeline(
+            spark, pages, out, "fp-fc", cfg=cfg, curated_mode="fused"
+        )
+        assert resumed["buckets_processed"] == 8
+        clean = str(tmp_path / "fused_clean")
+        run_ingest_pipeline(spark, pages, clean, "fp-fc", cfg=cfg, curated_mode="fused")
+
+        def table(path):
+            return sorted(
+                repr(tuple(r)) for r in read_output(spark, path, with_sha=True).collect()
+            )
+
+        assert table(out) == table(clean)
 
     def test_fused_resume_dedups_across_committed_buckets(self, spark, tmp_path):
         """Fused curation picks one exact-dedup winner across ALL buckets,

@@ -110,7 +110,7 @@ class TestDomainLinkEdges:
         """A link farm fanning out over subdomains of one registration
         collapses to registrable-domain edges — host-level sees N distinct
         sources, domain-level sees one."""
-        from document_automation_spark.operators.linkgraph import domain_link_edges
+        from document_automation_spark.operators.linkgraph import fold_edges_to_domains
 
         html = b'<a href="https://victim.co.uk/page">x</a>'
         rows = [
@@ -120,7 +120,7 @@ class TestDomainLinkEdges:
         host_edges = sorted((r.src, r.dst) for r in host_link_edges(df).collect())
         assert len(host_edges) == 7  # every subdomain its own source
         dom_edges = sorted(
-            (r.src, r.dst) for r in domain_link_edges(df).collect()
+            (r.src, r.dst) for r in fold_edges_to_domains(host_link_edges(df)).collect()
         )
         assert dom_edges == [
             ("farm.com", "victim.co.uk"),

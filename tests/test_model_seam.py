@@ -11,10 +11,20 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from document_automation_spark.functions.embed import (
-    embed_with_model,
-    make_projection_model_factory,
+from document_automation_spark.functions.embed import embed_with_model
+from document_automation_spark.functions.encoder import (
+    make_encoder_model_factory,
+    train_contrastive,
 )
+
+
+def _encoder_factory(spark, dim_in, dim_out, seed):
+    """The seat's broadcast-weights factory over a seeded, untrained
+    encoder (``epochs=0`` keeps the init weights)."""
+    enc = train_contrastive(
+        ["a"], ["b"], dim_in=dim_in, hidden=8, dim_out=dim_out, seed=seed, epochs=0
+    )
+    return make_encoder_model_factory(spark, enc)
 
 
 def _docs(spark, n, parts):
@@ -92,10 +102,10 @@ class TestModelSeam:
         assert first  # job 1 did initialize somewhere
 
     def test_projection_model_broadcast_and_determinism(self, spark):
-        """Default seeded random-projection model: weights broadcast from
-        the driver; output independent of partitioning AND batch size
-        (per-row math), pinned to 9 dp to stay clear of BLAS-shape noise."""
-        factory, key = make_projection_model_factory(spark, dim_in=64, dim_out=8, seed=3)
+        """The encoder factory: weights broadcast from the driver; output
+        independent of partitioning AND batch size (per-row math), pinned
+        to 9 dp to stay clear of BLAS-shape noise."""
+        factory, key = _encoder_factory(spark, dim_in=64, dim_out=8, seed=3)
 
         def canon(rows):
             return {
@@ -113,14 +123,14 @@ class TestModelSeam:
             ).collect()
         )
         assert a == b
-        # unit-norm rows (the factory L2-normalizes)
+        # unit-norm rows (the encoder L2-normalizes)
         import math
 
         for vec in a.values():
             assert abs(math.sqrt(sum(v * v for v in vec)) - 1.0) < 1e-6
 
     def test_empty_and_null_texts(self, spark):
-        factory, key = make_projection_model_factory(spark, dim_in=32, dim_out=4, seed=1)
+        factory, key = _encoder_factory(spark, dim_in=32, dim_out=4, seed=1)
         df = spark.createDataFrame(
             [(1, "hello world"), (2, ""), (3, None)], "doc_id long, text string"
         )
@@ -136,7 +146,7 @@ class TestStringIds:
         """Round-4 review: the extraction corpus has string content-hash
         doc_ids; the seam must follow the input id type like
         embed_documents does (LongType coercion would crash Arrow)."""
-        factory, key = make_projection_model_factory(spark, dim_in=32, dim_out=4, seed=2)
+        factory, key = _encoder_factory(spark, dim_in=32, dim_out=4, seed=2)
         df = spark.createDataFrame(
             [("sha-abc", "hello world"), ("sha-def", "more text")],
             "doc_id string, text string",

@@ -142,41 +142,3 @@ class TestPlanShape:
         assert plan.count("- Exchange") == 1, plan
         assert plan.count("hashpartitioning(source") == 1, plan
         assert "SinglePartition" not in plan, plan
-
-
-class TestMaterializeChunks:
-    def test_chunks_reproduce_the_token_stream(self, spark):
-        """Concatenating a shard's chunks in chunk order == concatenating
-        its docs' tokens in id order — the end-to-end guarantee a training
-        loader relies on."""
-        from document_automation_spark.operators.packing import materialize_chunks
-
-        rows = [
-            (i, f"s{i % 2}", " ".join(f"w{i}_{j}" for j in range(i % 9 + 1)))
-            for i in range(30)
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-        segs = pack_sequences(df, seq_len=7)
-        chunks = materialize_chunks(df, segs).collect()
-        got: dict[str, list[str]] = {}
-        for r in sorted(chunks, key=lambda r: (r["source"], r["chunk_id"])):
-            got.setdefault(r["source"], []).extend(r["tokens"])
-            assert r["n_tokens"] == len(r["tokens"])
-            assert r["n_tokens"] <= 7
-        want: dict[str, list[str]] = {}
-        for doc_id, source, text in sorted(rows):
-            want.setdefault(source, []).extend(text.split())
-        assert got == want
-
-    def test_chunk_sizes_match_segment_map(self, docs):
-        from document_automation_spark.operators.packing import materialize_chunks
-
-        segs = pack_sequences(docs, seq_len=SEQ)
-        chunks = materialize_chunks(docs, segs)
-        from pyspark.sql import functions as F
-        joined = (
-            segs.groupBy("source", "chunk_id").agg(F.sum("seg_tokens").alias("want"))
-            .join(chunks.select("source", "chunk_id", "n_tokens"), ["source", "chunk_id"])
-        )
-        bad = joined.where(F.col("want") != F.col("n_tokens")).count()
-        assert bad == 0

@@ -22,7 +22,6 @@ from document_automation_spark.plans.checkpoint import (
     done_buckets,
     manifest_path,
     pending_documents,
-    read_manifest,
     read_output,
     run_extraction_job,
 )
@@ -50,6 +49,10 @@ def jobs_started(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
         ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _manifest(spark, out_dir):
+    return spark.read.parquet(manifest_path(out_dir))
 
 
 def _files_under(path):
@@ -101,7 +104,7 @@ def test_crash_then_resume_completes_without_duplicates(spark, out_dir):
 def test_manifest_lineage_counters(spark, out_dir):
     pages = pages_df(spark, N_PAGES, partitions=4)
     run_extraction_job(spark, pages, out_dir, FP, ExtractConfig(n_buckets=8))
-    manifest = read_manifest(spark, out_dir)
+    manifest = _manifest(spark, out_dir)
     rows = manifest.collect()
     assert rows
     assert all(r.input_fingerprint == FP for r in rows)
@@ -162,7 +165,7 @@ def _gated_buckets_are_committed(spark, out_dir, gated, rows_in):
     )
     assert first["buckets_processed"] == 8
     assert done_buckets(spark, out_dir, FP) == list(range(8))
-    manifest = read_manifest(spark, out_dir).collect()
+    manifest = _manifest(spark, out_dir).collect()
     assert sum(r.rows_in for r in manifest) == rows_in
     assert sum(r.rows_out + r.error_rows for r in manifest) == (
         read_output(spark, out_dir).count()
@@ -268,7 +271,7 @@ def test_resume_rescans_only_the_pending_buckets(spark, out_dir):
     assert resumed["buckets_processed"] == 32
     assert len(_data_files_per_bucket(out_dir)) > 32  # the whole table is larger
     assert len(jobs) <= 5
-    manifest = read_manifest(spark, out_dir)
+    manifest = _manifest(spark, out_dir)
     assert sum(r.rows_out + r.error_rows for r in manifest.collect()) == (
         read_output(spark, out_dir).count()
     )
@@ -295,7 +298,7 @@ def test_pending_buckets_drop_files_of_an_earlier_fingerprint(spark, out_dir):
 
     output = read_output(spark, out_dir)
     assert {r.url for r in output.select("url").distinct().collect()} <= b_urls
-    b_rows = read_manifest(spark, out_dir).filter(F.col("input_fingerprint") == "fp-b")
+    b_rows = _manifest(spark, out_dir).filter(F.col("input_fingerprint") == "fp-b")
     assert sorted(r.bucket for r in b_rows.collect()) == list(range(8))
     assert sum(r.rows_out + r.error_rows for r in b_rows.collect()) == output.count()
 
@@ -413,7 +416,7 @@ def test_crash_between_data_write_and_manifest_append_resumes_clean(
     assert resumed["buckets_skipped"] == len(committed)
     assert resumed["buckets_processed"] == 8 - len(committed)
     assert _rows(spark, out_dir) == _rows(spark, clean)
-    manifest = read_manifest(spark, out_dir).filter(F.col("input_fingerprint") == FP)
+    manifest = _manifest(spark, out_dir).filter(F.col("input_fingerprint") == FP)
     assert sorted(r.bucket for r in manifest.collect()) == list(range(8))
     assert (
         sum(r.rows_out + r.error_rows for r in manifest.collect())
@@ -499,8 +502,47 @@ def test_every_crash_point_and_fingerprint_sequence_resumes_clean(
     for fp in fingerprints:
         _crash_then_resume(spark, inputs[fp], out_dir, fp, crash_point)
         assert _rows(spark, out_dir) == clean[fp], (fp, fingerprints)
-        manifest = sorted(read_manifest(spark, out_dir).collect(), key=lambda r: r.committed_at)
+        manifest = sorted(_manifest(spark, out_dir).collect(), key=lambda r: r.committed_at)
         latest = {r.bucket: r for r in manifest}
         assert sorted(latest) == list(range(8))
         assert {r.input_fingerprint for r in latest.values()} == {fp}
         assert sum(r.rows_out + r.error_rows for r in latest.values()) == len(clean[fp])
+
+
+def test_resubmit_after_another_fingerprint_died_before_its_append(
+    spark, tmp_path_factory, fingerprint_runs
+):
+    """Fingerprint A runs clean; B rewrites every bucket and dies before
+    its manifest append, so A's rows stay the latest in the manifest while
+    the files are B's.  A re-submit of A must re-run every bucket, not
+    serve B's rows as A's."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    inputs, clean = fingerprint_runs
+    out_dir = str(tmp_path_factory.mktemp("a_b_a") / "out")
+    cfg = ExtractConfig(n_buckets=8)
+
+    def run(fp):
+        return run_extraction_job(
+            spark, inputs[fp], out_dir, fp, cfg, docs_fn=documents_from_text
+        )
+
+    run("pages40")
+    write_parquet = DataFrameWriter.parquet
+
+    def crash_on_manifest(self, path, *args, **kwargs):
+        if path == manifest_path(out_dir):
+            raise _ManifestAppendCrash(path)
+        return write_parquet(self, path, *args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as patched:
+        patched.setattr(DataFrameWriter, "parquet", crash_on_manifest)
+        with pytest.raises(_ManifestAppendCrash):
+            run("pages3")
+    assert done_buckets(spark, out_dir, "pages40") == []
+
+    resubmit = run("pages40")
+    assert resubmit["buckets_processed"] == 8
+    assert _rows(spark, out_dir) == clean["pages40"]
+    assert done_buckets(spark, out_dir, "pages40") == list(range(8))
+    assert not os.path.exists(os.path.join(out_dir, "_inflight"))

@@ -1,11 +1,11 @@
-"""Salted aggregation + hot-key detection vs naive results."""
+"""Salted aggregation and salted join vs naive results."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from document_automation_spark.operators.skew import hot_keys, host_of, salted_agg
+from document_automation_spark.operators.skew import salted_agg
 
 
 @pytest.fixture(scope="module")
@@ -45,19 +45,6 @@ def test_salted_agg_identical_to_naive(skewed):
     assert salted == naive
 
 
-def test_salted_agg_hot_only(skewed):
-    hot = hot_keys(skewed, "k", threshold_fraction=0.05, sample_fraction=0.5)
-    assert hot == ["hot-host"]
-    out = {
-        r.k: r.n
-        for r in salted_agg(
-            skewed, ["k"], {"n": ("count", "*")}, n_salt=8, salt_only=hot
-        ).collect()
-    }
-    naive = {r.k: r.n for r in skewed.groupBy("k").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert out == naive
-
-
 def test_salted_agg_splits_hot_group(skewed):
     """The phase-1 partial table must contain >1 row for the hot key."""
     from pyspark.sql import functions as F2
@@ -69,14 +56,6 @@ def test_salted_agg_splits_hot_group(skewed):
     )
     hot_parts = partials.filter(F2.col("k") == "hot-host").count()
     assert hot_parts > 1
-
-
-def test_host_of(spark):
-    df = spark.createDataFrame(
-        [("https://host07.example.com/p/1.html",), ("http://a.b.c/x",)], "url string"
-    )
-    got = [r[0] for r in df.select(host_of(F.col("url"))).collect()]
-    assert got == ["host07.example.com", "a.b.c"]
 
 
 def test_salted_agg_rejects_non_algebraic(skewed):
@@ -120,14 +99,6 @@ class TestSaltedJoin:
         assert (
             salted.filter(F.col("key") == "k3").filter(F.col("dim_v").isNotNull()).count() == 0
         )
-
-    def test_salt_only_restricts_replication_matches(self, spark):
-        from document_automation_spark.operators.skew import salted_join
-
-        fact, dim = self._skewed(spark)
-        plain_n = fact.join(dim, ["key"]).count()
-        salted = salted_join(fact, dim, ["key"], n_salt=8, salt_only=["hot"])
-        assert salted.count() == plain_n
 
     def test_right_full_rejected(self, spark):
         from document_automation_spark.operators.skew import salted_join

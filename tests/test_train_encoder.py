@@ -3,7 +3,9 @@
 train_contrastive_distributed re-expresses encoder.train_contrastive as
 the weights-down / gradients-up Spark loop; these tests pin that the two
 compute the SAME training run (same init, same full-batch gradient, same
-update), differing only by float-sum association across partitions.
+update), differing only by float-sum association across partitions.  The
+default ``n_shards=1`` is that full-batch run; ``n_shards > 1`` is the
+mini-batch variant with in-shard negatives.
 """
 
 import numpy as np
@@ -82,34 +84,14 @@ class TestDistributedTrainerParity:
 
 
 class TestShardedTrainer:
-    def test_one_shard_equals_full_batch(self, pairs_df):
-        from document_automation_spark.functions.train import (
-            train_contrastive_sharded,
-        )
-
-        hp = {**HP, "epochs": 2}
-        full, h_full = train_contrastive_distributed(pairs_df, **hp)
-        one, h_one = train_contrastive_sharded(pairs_df, n_shards=1, **hp)
-        np.testing.assert_allclose(one.W1, full.W1, atol=1e-8)
-        np.testing.assert_allclose(one.W2, full.W2, atol=1e-8)
-        assert h_one == pytest.approx(h_full, abs=1e-9)
-
     def test_sharded_descends_and_is_parallelism_invariant(self, pairs_df):
-        from document_automation_spark.functions.train import (
-            train_contrastive_sharded,
-        )
-
         hp = {**HP, "epochs": 3, "lr": 0.3}
-        enc2, h2 = train_contrastive_sharded(pairs_df.repartition(2), n_shards=3, **hp)
-        enc8, h8 = train_contrastive_sharded(pairs_df.repartition(8), n_shards=3, **hp)
+        enc2, h2 = train_contrastive_distributed(pairs_df.repartition(2), n_shards=3, **hp)
+        enc8, h8 = train_contrastive_distributed(pairs_df.repartition(8), n_shards=3, **hp)
         assert h2[-1] < h2[0]
         np.testing.assert_allclose(enc2.W1, enc8.W1, atol=1e-6)
         assert h2 == pytest.approx(h8, abs=1e-8)
 
     def test_too_many_shards_raises(self, pairs_df):
-        from document_automation_spark.functions.train import (
-            train_contrastive_sharded,
-        )
-
         with pytest.raises(ValueError, match="empty shards"):
-            train_contrastive_sharded(pairs_df, n_shards=10_000, **HP)
+            train_contrastive_distributed(pairs_df, n_shards=10_000, **HP)

@@ -10,9 +10,9 @@ that disappears was host noise.
 
     python tools/drift_measure.py [reps] [row ...]
 
-Rows default to the flagship trio.  Rows come from the same callables
-bench.py times (tools/profile_queries.bench_callables), at
-$SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS with the bench session confs.
+Rows default to the flagship trio.  Rows are the ones bench.py times
+(``bench.BenchRows``), at $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS in the
+bench session.
 """
 
 from __future__ import annotations
@@ -24,29 +24,18 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import FLAGSHIP_ROWS, BenchRows, bench_session, noop_sink, sf_of  # noqa: E402
+
 
 def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 5
-    rows = sys.argv[2:] or ["extraction_pipeline", "extraction_durable", "ingest_durable"]
+    names = sys.argv[2:] or list(FLAGSHIP_ROWS)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-    from document_automation_spark.session import build_session
-
-    spark = build_session(
-        app_name="drift-measure",
-        master=f"local[{cpus}]",
-        shuffle_partitions=max(cpus, 8),
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": "4m",
-            "spark.sql.files.openCostInBytes": "262144",
-        },
-    )
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-    def sink(df) -> None:
-        df.write.mode("overwrite").format("noop").save()
+    spark = bench_session("drift-measure", cpus)
+    rows = BenchRows(spark, sf_dir, cpus)
 
     def sentinel() -> float:
         """Fixed pure-JVM workload: codegen'd aggregation over a range —
@@ -54,77 +43,23 @@ def main() -> None:
         from pyspark.sql import functions as F
 
         t0 = time.time()
-        sink(
+        noop_sink(
             spark.range(30_000_000).select(
                 (F.col("id") * 2654435761 % 1000003).alias("k")
             ).groupBy("k").count()
         )
         return time.time() - t0
 
-    # bench-row callables, including the bare-operator overrides and the
-    # durable/ingest flagship rows (reconstructed like bench.py does)
-    import shutil
-    import tempfile
-
-    from document_automation_spark.operators.extract import (
-        ExtractConfig,
-        extract_documents,
-    )
-    from document_automation_spark.plans.checkpoint import run_extraction_job
-    from document_automation_spark.jobs.ingest_pipeline import run_ingest_pipeline
-    from tools.profile_queries import bench_callables
-
-    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0)
-    n_pages = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", max(1000, int(2_000_000 * sf))))
-    from document_automation_spark.sources.pages import FIXTURE_VERSION, pages_df
-
-    pages_path = os.path.join(
-        tempfile.gettempdir(), f"bench_pages_v{FIXTURE_VERSION}_sf{sf}_n{n_pages}"
-    )
-    if not os.path.exists(os.path.join(pages_path, "_SUCCESS")):
-        pages_df(spark, n_pages, partitions=cpus * 2).write.mode("overwrite").parquet(
-            pages_path
-        )
-    pages = spark.read.parquet(pages_path)
-    cfg = ExtractConfig(n_buckets=max(64, cpus * 2))
-
-    def _flagship(spark_, _sf_dir):
-        return extract_documents(pages, cfg)
-
-    def _durable(spark_, _sf_dir):
-        out = tempfile.mkdtemp(prefix="drift_durable_")
-        shutil.rmtree(out, ignore_errors=True)
-        run_extraction_job(spark_, pages, out, f"drift-{time.time_ns()}", cfg)
-        shutil.rmtree(out, ignore_errors=True)
-        return None
-
-    def _ingest(spark_, _sf_dir):
-        out = tempfile.mkdtemp(prefix="drift_ingest_")
-        shutil.rmtree(out, ignore_errors=True)
-        run_ingest_pipeline(spark_, pages, out, f"drift-{time.time_ns()}", cfg=cfg)
-        shutil.rmtree(out, ignore_errors=True)
-        return None
-
-    qs = bench_callables(spark, sf_dir)
-    qs["extraction_pipeline"] = _flagship
-    qs["extraction_durable"] = _durable
-    qs["ingest_durable"] = _ingest
-
-    sink(extract_documents(pages, cfg))  # python-pool + codegen warm-up
+    rows.time("extraction_pipeline")  # python-pool + codegen warm-up
     sentinel()  # sentinel codegen warm-up
 
-    samples: dict = {name: [] for name in rows}
+    samples: dict = {name: [] for name in names}
     sentinels: list = []
     for rep in range(reps):
         s = sentinel()
         sentinels.append(round(s, 3))
-        for name in rows:
-            t0 = time.time()
-            result = qs[name](spark, sf_dir)
-            if result is not None:
-                sink(result)
-            samples[name].append(round(time.time() - t0, 3))
-            spark.catalog.clearCache()
+        for name in names:
+            samples[name].append(round(rows.time(name), 3))
 
     best_sentinel = min(sentinels)
     calm = [i for i, s in enumerate(sentinels) if s <= best_sentinel * 1.25]
@@ -139,9 +74,9 @@ def main() -> None:
             }
             for name, vals in samples.items()
         },
-        "n_pages": n_pages,
+        "n_pages": rows.n_pages,
         "cpus": cpus,
-        "sf": sf,
+        "sf": sf_of(sf_dir),
     }
     print(json.dumps(report))
     spark.stop()

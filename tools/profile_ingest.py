@@ -23,6 +23,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import bench_pages, bench_session  # noqa: E402
+
 
 def main() -> None:
     n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
@@ -36,28 +38,9 @@ def main() -> None:
         read_output,
         run_extraction_job,
     )
-    from document_automation_spark.session import build_session
-    from document_automation_spark.sources.pages import FIXTURE_VERSION, pages_df
 
-    spark = build_session(
-        app_name="profile-ingest",
-        master=f"local[{cpus}]",
-        shuffle_partitions=max(cpus, 8),
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": "4m",
-            "spark.sql.files.openCostInBytes": "262144",
-        },
-    )
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-    pages_path = os.path.join(
-        tempfile.gettempdir(), f"bench_pages_v{FIXTURE_VERSION}_sf0.1_n{n_pages}"
-    )
-    if not os.path.exists(os.path.join(pages_path, "_SUCCESS")):
-        pages_df(spark, n_pages, partitions=cpus * 2).write.mode("overwrite").parquet(
-            pages_path
-        )
-    pages = spark.read.parquet(pages_path)
+    spark = bench_session("profile-ingest", cpus)
+    pages = bench_pages(spark, n_pages, "sf0.1")
     cfg = ExtractConfig(n_buckets=max(64, cpus * 2))
 
     reps = int(os.environ.get("PROFILE_INGEST_REPS", "2"))

@@ -1,15 +1,14 @@
 """Per-query profiler for the optimization rounds (guide §1: measure first).
 
-Runs selected bench queries in a bench-identical session (same confs as
-bench.py, but with the UI enabled) to a noop sink, then pulls per-stage
-metrics from the Spark REST API so the seconds can be attributed to
-stages/operators instead of guessed at.  Also dumps ``explain("formatted")``
-per query to ``plans/r06/<query>_<tag>.txt`` when ``--plans <tag>`` is given.
+Runs selected bench rows (``bench.BenchRows``: the flagship rows, the
+registry seats and the bare-operator rows that override them) in the bench
+session with the UI enabled, then pulls per-stage metrics from the Spark
+REST API so the seconds can be attributed to stages/operators instead of
+guessed at.  Also dumps ``explain("formatted")`` per query to
+``plans/r06/<query>_<tag>.txt`` when ``--plans <tag>`` is given.
 
 Usage:
     python tools/profile_queries.py [--plans before] [--reps 2] query [query ...]
-
-This file is measurement tooling only — bench.py stays the frozen scorer.
 """
 
 from __future__ import annotations
@@ -18,26 +17,11 @@ import argparse
 import json
 import os
 import sys
-import time
 import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def build_profiling_session(cpus: int):
-    from document_automation_spark.session import build_session
-
-    return build_session(
-        app_name="profile-queries",
-        master=f"local[{cpus}]",
-        shuffle_partitions=max(cpus, 8),
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": "4m",
-            "spark.sql.files.openCostInBytes": "262144",
-            "spark.ui.enabled": "true",
-            "spark.ui.port": "4057",
-        },
-    )
+from bench import BenchRows, bench_session  # noqa: E402
 
 
 def rest(path: str):
@@ -69,146 +53,6 @@ def stage_report(since_stage_id: int) -> list[dict]:
     return sorted(rows, key=lambda r: -r["run_ms"])
 
 
-def bench_callables(spark, sf_dir):
-    """The same query callables bench.py times (bare-operator overrides
-    included), reconstructed without touching the frozen bench."""
-    import document_automation_spark.queries as registry
-
-    qs = dict(registry.queries())
-
-    # bench.py wraps overrides inside main(); re-declare the handful used here
-    from document_automation_spark.operators.dedup import (
-        exact_dedup,
-        duplicate_spans,
-        simhash_fingerprints,
-    )
-    from document_automation_spark.queries import _docs_with_dups
-
-    def _duplicate_spans_only(spark, sf_dir):
-        return duplicate_spans(_docs_with_dups(spark, sf_dir), k=32, min_docs=2)
-
-    def _exact_dedup_only(spark, sf_dir):
-        return exact_dedup(_docs_with_dups(spark, sf_dir))
-
-    def _simhash_fp_only(spark, sf_dir):
-        return simhash_fingerprints(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-    def _bpe_train_encode(spark, sf_dir):
-        from document_automation_spark.operators.bpe import (
-            encode_documents,
-            learn_bpe,
-            segment_vocabulary,
-            word_frequencies,
-        )
-        from pyspark.sql import functions as F
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        wf = word_frequencies(docs, min_freq=2)
-        vocab = segment_vocabulary(wf, learn_bpe(wf, 16))
-        return encode_documents(docs, vocab, broadcast_vocab=True)
-
-    def _quality_classifier(spark, sf_dir):
-        from document_automation_spark.operators.mixing import uniform_hash_col
-        from document_automation_spark.operators.quality_classifier import (
-            pareto_importance_filter,
-            score_quality,
-            train_quality_classifier,
-        )
-        from pyspark.sql import functions as F
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        u = uniform_hash_col("doc_id")
-        model = train_quality_classifier(
-            docs.where(u < 0.1).select("text"),
-            docs.where((u >= 0.1) & (u < 0.3)).select("text"),
-        )
-        return pareto_importance_filter(score_quality(docs, model))
-
-    def _lm_perplexity_only(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from document_automation_spark.operators.webtext_quality import (
-            score_with_bigram_lm,
-            train_bigram_lm,
-        )
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        lm = train_bigram_lm(docs.filter(F.col("lang") == "en"), cache_registry=[])
-        return score_with_bigram_lm(docs, lm)
-
-    def _host_pagerank_only(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from document_automation_spark.operators.linkgraph import pagerank
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        d = F.col("doc_id")
-        edges = docs.select(
-            ((d * 7 + 3) % 97).alias("src"), ((d * 31 + 11) % 97).alias("dst")
-        ).distinct()
-        return pagerank(edges, n_iters=5, damping=0.85)
-
-    def _token_stats_only(spark, sf_dir):
-        from document_automation_spark.operators.text_analysis import token_stats
-
-        return token_stats(
-            spark.read.parquet(f"{sf_dir}/documents.parquet"),
-            include_bpe=True,
-            include_fingerprint=True,
-        )
-
-    def _bm25_topk_only(spark, sf_dir):
-        from document_automation_spark.operators.bm25 import bm25_topk
-        from document_automation_spark.queries import _bm25_query_terms
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return bm25_topk(docs.select("doc_id", "text"), _bm25_query_terms(docs), k=10)
-
-    def _embedding_near_dup_only(spark, sf_dir):
-        from document_automation_spark.operators.similarity import (
-            embedding_near_dup_pairs,
-        )
-
-        return embedding_near_dup_pairs(
-            spark.read.parquet(f"{sf_dir}/embeddings.parquet"), threshold=0.3
-        )
-
-    def _hash_embeddings_only(spark, sf_dir):
-        import pyspark.sql.functions as F
-        from document_automation_spark.functions.embed import (
-            assign_dense_vector_ids,
-            embed_documents,
-        )
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        out = assign_dense_vector_ids(embed_documents(docs))
-        serialize = F.array_join(
-            F.transform(
-                F.col("embedding"),
-                lambda x: F.round(x * 1e6).cast("long").cast("string"),
-            ),
-            "|",
-        )
-        return out.select("doc_id", "vector_id", serialize.alias("emb_micro"))
-
-    qs.update(
-        {
-            "duplicate_spans": _duplicate_spans_only,
-            "exact_dedup": _exact_dedup_only,
-            "simhash_fingerprints": _simhash_fp_only,
-            "bpe_train_encode": _bpe_train_encode,
-            "quality_classifier": _quality_classifier,
-            "lm_perplexity": _lm_perplexity_only,
-            "host_pagerank": _host_pagerank_only,
-            "token_stats": _token_stats_only,
-            "bm25_topk": _bm25_topk_only,
-            "embedding_near_dup": _embedding_near_dup_only,
-            "hash_embeddings": _hash_embeddings_only,
-        }
-    )
-    return qs
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
@@ -219,18 +63,15 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_profiling_session(cpus)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    qs = bench_callables(spark, sf_dir)
-
-    def sink(df):
-        df.write.mode("overwrite").format("noop").save()
+    spark = bench_session(
+        "profile-queries", cpus, {"spark.ui.enabled": "true", "spark.ui.port": "4057"}
+    )
+    rows = BenchRows(spark, sf_dir, cpus)
 
     for name in args.queries:
-        fn = qs[name]
         if args.plans:
             os.makedirs("plans/r06", exist_ok=True)
-            df = fn(spark, sf_dir)
+            df = rows.queries[name](spark, sf_dir)
             plan = df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                     "formatted"
@@ -249,10 +90,7 @@ def main() -> None:
         times = []
         for rep in range(args.reps):
             spark.sparkContext.setJobDescription(f"{name} rep{rep}")
-            t0 = time.time()
-            sink(fn(spark, sf_dir))
-            times.append(round(time.time() - t0, 3))
-            spark.catalog.clearCache()
+            times.append(round(rows.time(name), 3))
         spark.sparkContext.setJobDescription(None)
         print(f"== {name}: {times} (best {min(times)})")
         if args.stages:

@@ -31,21 +31,17 @@ import sys
 
 RUNNER = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
-from document_automation_spark.session import build_session
+sys.path.insert(0, sys.argv[4])
+from bench import bench_pages, bench_session, noop_sink
 from document_automation_spark.operators.extract import ExtractConfig, extract_documents
 
-cpus = int(sys.argv[1]); pages_path = sys.argv[2]; reps = int(sys.argv[3])
-spark = build_session(app_name=f"scale-{cpus}", master=f"local[{cpus}]",
-                      shuffle_partitions=cpus,
-                      extra_conf={"spark.sql.files.maxPartitionBytes": "4m",
-                                  "spark.sql.files.openCostInBytes": "262144"})
-pages = spark.read.parquet(pages_path)
-n_pages = pages.count()
+cpus = int(sys.argv[1]); n_pages = int(sys.argv[2]); reps = int(sys.argv[3])
+spark = bench_session(f"scale-{cpus}", cpus)
+pages = bench_pages(spark, n_pages, "scaling")
 cfg = ExtractConfig(n_buckets=128)
 
 def run():
-    extract_documents(pages, cfg).write.mode("overwrite").format("noop").save()
+    noop_sink(extract_documents(pages, cfg))
 
 run()  # warm-up: python worker pool + codegen + Arrow init
 best = float("inf")
@@ -58,7 +54,7 @@ spark.stop()
 
 CALIBRATOR = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[4])
 from multiprocessing import Pool
 from document_automation_spark.sources.pages import gen_rows
 from document_automation_spark.kernels.page import extract_page
@@ -119,24 +115,23 @@ def main() -> None:
     )
     args = parser.parse_args()
 
-    sys.path.insert(0, "/root/repo")
-    from document_automation_spark.sources.pages import FIXTURE_VERSION
-    pages_path = f"/tmp/bench_pages_v{FIXTURE_VERSION}_scaling_n{args.pages}"
-    if not os.path.exists(os.path.join(pages_path, "_SUCCESS")):
-        from document_automation_spark.session import build_session
-        from document_automation_spark.sources.pages import pages_df
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, repo)
+    from bench import bench_pages, bench_session, pages_path
 
-        spark = build_session(app_name="gen", master="local[32]", shuffle_partitions=32)
-        pages_df(spark, args.pages, partitions=64).write.mode("overwrite").parquet(pages_path)
+    # materialized once, 64 files, so both levels read the same layout
+    pages_dir = pages_path(args.pages, "scaling")
+    if not os.path.exists(os.path.join(pages_dir, "_SUCCESS")):
+        spark = bench_session("gen", 32)
+        bench_pages(spark, args.pages, "scaling")
         spark.stop()
 
-    low = run_sub(RUNNER, str(args.low), pages_path, str(args.reps), cpus=args.low)
-    high = run_sub(RUNNER, str(args.high), pages_path, str(args.reps), cpus=args.high)
-    calib_low = run_sub(
-        CALIBRATOR, str(min(args.pages, 40_000)), str(args.low), str(args.low), cpus=args.low
-    )
+    low = run_sub(RUNNER, str(args.low), str(args.pages), str(args.reps), repo, cpus=args.low)
+    high = run_sub(RUNNER, str(args.high), str(args.pages), str(args.reps), repo, cpus=args.high)
+    n_calib = str(min(args.pages, 40_000))
+    calib_low = run_sub(CALIBRATOR, n_calib, str(args.low), str(args.low), repo, cpus=args.low)
     calib_high = run_sub(
-        CALIBRATOR, str(min(args.pages, 40_000)), str(args.high), str(args.high), cpus=args.high
+        CALIBRATOR, n_calib, str(args.high), str(args.high), repo, cpus=args.high
     )
     calib = {str(args.low): calib_low[str(args.low)], str(args.high): calib_high[str(args.high)]}
 
@@ -168,8 +163,9 @@ def main() -> None:
     if args.json_only:
         return
 
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/BASELINE.md", "w") as fh:
+    baseline_md = os.path.join(repo, "BENCH", "BASELINE.md")
+    os.makedirs(os.path.dirname(baseline_md), exist_ok=True)
+    with open(baseline_md, "w") as fh:
         fh.write(
             f"""# BENCH/BASELINE — extraction throughput + scaling evidence
 
@@ -179,8 +175,8 @@ same job on the same input at `local[{args.low}]` vs `local[{args.high}]`
 (no real cluster in this sandbox — per the task brief).
 
 - Input: {args.pages:,} deterministic synthetic Common-Crawl-style pages
-  (seed 42, FIXTURES.md §1), pre-materialized parquet at `{pages_path}`
-  ({os.popen(f'du -sh {pages_path}').read().split()[0] if os.path.exists(pages_path) else '?'}).
+  (seed 42, FIXTURES.md §1), pre-materialized parquet at `{pages_dir}`
+  ({os.popen(f'du -sh {pages_dir}').read().split()[0] if os.path.exists(pages_dir) else '?'}).
 - Job: map-only `mapInPandas` extraction (HTML boilerplate strip / PDF
   parse / ad filter / 500-10-5 passage split, quarantine rows), noop sink,
   scan splits 4 MB (≈1 s of kernel work per task).
@@ -237,7 +233,7 @@ Regenerate:
 `python tools/run_scaling_bench.py --pages {args.pages} --reps {args.reps} --low {args.low} --high {args.high}`.
 """
         )
-    print("wrote /root/repo/BENCH/BASELINE.md", file=sys.stderr)
+    print(f"wrote {baseline_md}", file=sys.stderr)
 
 
 if __name__ == "__main__":
