@@ -46,15 +46,14 @@ def main() -> None:
     timings: dict[str, float] = {}
 
     # -- flagship rows: the input is sized so kernel compute dominates
-    # Spark's fixed per-job overhead (~1 s), and the first full-pipeline
-    # pass (python-worker pool spin-up, codegen, Arrow init) is a
-    # discarded warm-up.  Best-of-3 for all three: the round-5 calm
+    # Spark's fixed per-job overhead (~1 s), after the discarded warm-up
+    # (BenchRows.warm_up).  Best-of-3 for all three: the round-5 calm
     # re-measure caught a best-of-2 pair reading 17.6 s where the true
     # calm floor is 9.8 s (BENCH/BASELINE.md round-5 confirmations) — two
     # bad draws in a row are common enough on this shared host to need a
     # third.  The ingest row runs warm (the durable row spun up the
     # python pool + codegen).
-    rows.time("extraction_pipeline")  # warm-up, not scored
+    rows.warm_up()
     flagship = {name: rows.best_of(name, 3) for name in FLAGSHIP_ROWS}
     timings.update((name, round(s, 3)) for name, s in flagship.items())
     docs_per_sec = rows.n_pages / flagship["extraction_pipeline"]
@@ -567,6 +566,11 @@ class BenchRows:
         self.spark.catalog.clearCache()
         shutil.rmtree(out, ignore_errors=True)
         return seconds
+
+    def warm_up(self) -> None:
+        """One discarded full-pipeline pass: python-worker pool spin-up,
+        codegen and Arrow init, so the first scored rep is warm."""
+        self.time("extraction_pipeline")
 
     def best_of(self, name: str, reps: int) -> float:
         return min(self.time(name) for _ in range(reps))

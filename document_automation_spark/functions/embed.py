@@ -112,7 +112,6 @@ def embed_with_model(
     model_factory,
     batch_size: int = 50,
     id_col: str = "doc_id",
-    text_col: str = "text",
     cache_key: str | None = None,
 ) -> DataFrame:
     """The batched-MODEL inference slot (K8): any ``model_factory() ->
@@ -187,19 +186,18 @@ def embed_with_model(
 
         for batch in batches:
             buf_ids.extend(batch[id_col])
-            buf_txt.extend(batch[text_col])
+            buf_txt.extend(batch["text"])
             while len(buf_txt) >= batch_size:
                 yield flush(batch_size)
         if buf_txt:
             yield flush(len(buf_txt))
 
-    return documents.select(id_col, text_col).mapInPandas(gen, schema)
+    return documents.select(id_col, "text").mapInPandas(gen, schema)
 
 
 def assign_dense_vector_ids(
     embedded: DataFrame,
     order_col: str = "doc_id",
-    num_partitions: int | None = None,
     cache_registry: list | None = None,
 ) -> DataFrame:
     """Dense 0-based vector_id over a deterministic total order (A9).
@@ -226,7 +224,7 @@ def assign_dense_vector_ids(
     from pyspark import StorageLevel
 
     spark = embedded.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
+    n = spark.sparkContext.defaultParallelism
     parts = (
         embedded.repartitionByRange(n, order_col)
         .sortWithinPartitions(order_col)

@@ -72,11 +72,11 @@ def extraction_golden_rows(
 
 
 @lru_cache(maxsize=None)
-def extraction_golden_sql(n_pages: int = N_GOLDEN_PAGES) -> str:
+def extraction_golden_sql() -> str:
     vals = ",\n".join(
         f"({_sql_str(u)},{_sql_int(pi)},{_sql_str(m)},{_sql_int(cs)},"
         f"{_sql_int(ce)},{_sql_int(np_)},{_sql_str(err)})"
-        for (u, pi, m, cs, ce, np_, err) in extraction_golden_rows(n_pages)
+        for (u, pi, m, cs, ce, np_, err) in extraction_golden_rows(N_GOLDEN_PAGES)
     )
     return f"""
     SELECT url,
@@ -99,18 +99,13 @@ def oracle_sf_dir() -> str:
 
 
 @lru_cache(maxsize=None)
-def kmeans_golden_sql(
-    sf_dir: Optional[str] = None,
-    line_width: int = 80,
-    passage_len: int = 500,
-    n_components: int = 2,
-    seed: int = 42,
-) -> Optional[str]:
-    """Expected ``kmeans_line_clusters`` output over ``sf_dir`` documents,
-    computed by the pure seeded kernel (kernels/cluster.py) row by row.
+def kmeans_golden_sql() -> Optional[str]:
+    """Expected ``kmeans_line_clusters`` output over the oracle sf dir's
+    documents, computed by the pure seeded kernel (kernels/cluster.py) row
+    by row.
 
     Returns None (→ rows-only check) when the parquet isn't readable."""
-    path = os.path.join(sf_dir or oracle_sf_dir(), "documents.parquet")
+    path = os.path.join(oracle_sf_dir(), "documents.parquet")
     try:
         import pyarrow.parquet as pq
 
@@ -126,10 +121,8 @@ def kmeans_golden_sql(
     for doc_id, text in zip(
         table.column("doc_id").to_pylist(), table.column("text").to_pylist()
     ):
-        lines = split_fixed_lines(text, line_width)
-        clusters = cluster_lines(
-            lines, passage_len=passage_len, n_components=n_components, seed=seed
-        )
+        lines = split_fixed_lines(text, 80)
+        clusters = cluster_lines(lines, passage_len=500)
         for c, ctext in enumerate(clusters):
             rows.append((doc_id, c, len(ctext), len(lines), rolling_fingerprint(ctext)))
     vals = ",\n".join(f"({d},{c},{n},{m},{f})" for d, c, n, m, f in rows)
@@ -145,17 +138,12 @@ def kmeans_golden_sql(
 
 
 @lru_cache(maxsize=None)
-def ivf_centroids(
-    n_centroids: int = 8,
-    sample_size: int = 4096,
-    seed: int = 42,
-    sf_dir: Optional[str] = None,
-):
+def ivf_centroids(n_centroids: int = 8):
     """Train the IVF centroids EXACTLY as operators/ivf.train_centroids does
-    (lowest ``sample_size`` vec_ids, float32→float64 upcast, seeded
+    (lowest 4096 vec_ids, float32→float64 upcast, seeded
     kmeans_fit) but from a plain pyarrow read — same bytes in, same numpy
     ops, bit-identical centers; returns None when the parquet is absent."""
-    path = os.path.join(sf_dir or oracle_sf_dir(), "embeddings.parquet")
+    path = os.path.join(oracle_sf_dir(), "embeddings.parquet")
     try:
         import pyarrow.parquet as pq
 
@@ -168,9 +156,9 @@ def ivf_centroids(
 
     pairs = sorted(
         zip(table.column("vec_id").to_pylist(), table.column("embedding").to_pylist())
-    )[:sample_size]
+    )[:4096]
     X = np.array([e for _, e in pairs], dtype=np.float64)
-    centers, _ = kmeans_fit(X, n_centroids, seed=seed)
+    centers, _ = kmeans_fit(X, n_centroids, seed=42)
     return centers
 
 
@@ -199,18 +187,10 @@ def _graph_ann_build(graph_k: int, n_rounds: int, sf_dir: Optional[str]):
     return ids, X, knn_graph_py(ids, X, k=graph_k, n_rounds=n_rounds)
 
 
-def graph_ann_rows(
-    k: int = 10,
-    graph_k: int = 12,
-    n_rounds: int = 2,
-    n_seeds: int = 8,
-    beam: int = 6,
-    n_hops: int = 3,
-    n_queries: int = 5,
-    sf_dir: Optional[str] = None,
-):
+def graph_ann_rows(n_rounds: int = 2, beam: int = 6):
     """Pinned rows for the graph-ANN method in the ``ann_recall_eval``
-    seat: per query ``(query_vec_id, n_hits, n_scanned)`` computed by the
+    seat: per query ``(query_vec_id, n_hits, n_scanned)`` for the first 5
+    vec_ids (top-10, 12-NN graph, 8 seeds, 3 hops), computed by the
     pure kernel mirror (kernels/graph — LSH-init NN-descent build +
     fixed-hop beam search, fold-exact cosines, round6, id tie-breaks).
     Graph traversal is iterative/stateful — not single-SQL-expressible —
@@ -218,25 +198,20 @@ def graph_ann_rows(
     extraction and kmeans seats; the Spark twin is additionally pinned
     edge-for-edge by tests/test_graph_ann.py.  Returns None when the
     parquet is absent."""
-    # normalize sf_dir before the cached call so default and explicit
-    # spellings of the same fixture share one build
-    built = _graph_ann_build(graph_k, n_rounds, sf_dir or oracle_sf_dir())
+    built = _graph_ann_build(12, n_rounds, oracle_sf_dir())
     if built is None:
         return None
     ids, X, G = built
 
     from document_automation_spark.kernels.graph import _Cos, graph_search_py
 
-    query_ids = [v for v in ids if v < n_queries]
-    res = graph_search_py(
-        ids, X, G, query_ids=query_ids, k=k,
-        n_seeds=n_seeds, beam=beam, n_hops=n_hops,
-    )
+    query_ids = [v for v in ids if v < 5]
+    res = graph_search_py(ids, X, G, query_ids=query_ids, k=10, n_seeds=8, beam=beam, n_hops=3)
     cos = _Cos(ids, X)
     rows = []
     for q in query_ids:
         row = cos.row(q)
-        brute = set(sorted(ids, key=lambda j: (-row[j], j))[:k])
+        brute = set(sorted(ids, key=lambda j: (-row[j], j))[:10])
         topk, n_scanned = res[q]
         n_hits = len({v for v, _, _ in topk} & brute)
         rows.append((q, n_hits, n_scanned))
@@ -244,7 +219,7 @@ def graph_ann_rows(
 
 
 @lru_cache(maxsize=None)
-def learned_encoder_rows(sf_dir: Optional[str] = None):
+def learned_encoder_rows():
     """Pinned rows for the ``learned_encoder_eval`` seat: per held-out
     query ``(method, doc_id, true_rank, rr)`` computed by the pure
     mirror — the SAME cached trained encoder the Spark seat broadcasts
@@ -253,7 +228,7 @@ def learned_encoder_rows(sf_dir: Optional[str] = None):
     the same hash-embedding kernel, and fold-exact round6 cosine ranking
     (kernels.graph fold helpers).  Returns None when the fixture is
     absent."""
-    sf = sf_dir or oracle_sf_dir()
+    sf = oracle_sf_dir()
     from document_automation_spark.functions.encoder import (
         load_eval_split,
         split_halves,

@@ -55,9 +55,7 @@ def pca_project(X: np.ndarray, n_components: int) -> np.ndarray:
     return Xc @ Vt[:k].T
 
 
-def kmeans_fit(
-    X: np.ndarray, k: int, seed: int = DEFAULT_SEED, max_iter: int = _KMEANS_MAX_ITER
-) -> tuple:
+def kmeans_fit(X: np.ndarray, k: int, seed: int = DEFAULT_SEED) -> tuple:
     """Seeded deterministic k-means++ + Lloyd iterations → (centers, labels).
 
     Determinism contract: same (X, k, seed) → same result on every process
@@ -76,7 +74,7 @@ def kmeans_fit(
         centers[c] = X[int(rng.choice(n, p=d2 / total))]
         d2 = np.minimum(d2, ((X - centers[c]) ** 2).sum(axis=1))
     labels = np.zeros(n, dtype=np.int64)
-    for _ in range(max_iter):
+    for _ in range(_KMEANS_MAX_ITER):
         dists = ((X[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
         labels = np.argmin(dists, axis=1)
         new_centers = centers.copy()
@@ -90,11 +88,9 @@ def kmeans_fit(
     return centers, labels
 
 
-def kmeans_labels(
-    X: np.ndarray, k: int, seed: int = DEFAULT_SEED, max_iter: int = _KMEANS_MAX_ITER
-) -> np.ndarray:
+def kmeans_labels(X: np.ndarray, k: int, seed: int = DEFAULT_SEED) -> np.ndarray:
     """Labels-only convenience wrapper over :func:`kmeans_fit`."""
-    return kmeans_fit(X, k, seed=seed, max_iter=max_iter)[1]
+    return kmeans_fit(X, k, seed=seed)[1]
 
 
 def n_clusters_for(lines: List[str], passage_len: Optional[int]) -> int:
@@ -108,7 +104,6 @@ def cluster_lines(
     lines: List[str],
     passage_len: Optional[int] = None,
     n_components: int = DEFAULT_N_COMPONENTS,
-    dim: int = 16,
     seed: int = DEFAULT_SEED,
 ) -> List[str]:
     """K9: embed lines → PCA → KMeans → per-cluster concatenation.
@@ -122,7 +117,7 @@ def cluster_lines(
     n_cluster = n_clusters_for(lines, passage_len)
     if n_cluster > len(lines):
         return list(lines)
-    X = np.array([embed_text(w, dim) for w in lines], dtype=np.float64)
+    X = np.array([embed_text(w, 16) for w in lines], dtype=np.float64)
     projected = pca_project(X, n_components)
     labels = kmeans_labels(projected, n_cluster, seed=seed)
     out = [""] * n_cluster

@@ -15,9 +15,9 @@ container's SQL oracle engine (DuckDB) can recompute — which turns MinHash
 signatures, LSH candidate pairs, SimHash fingerprints and the whole
 near-dup pipeline into *driver-checkable* queries instead of trust-me
 Python.  At 100 TB, if verification is handled elsewhere, pass
-``hash_impl='crc32'`` (a TESTED switch on every fingerprint kernel and the
-dedup operators above them — :func:`fast_hash64`) — every downstream
-contract (permutation math, banding, Hamming buckets) is hash-agnostic.
+``hash_impl='crc32'`` (a TESTED switch on :func:`minhash_signature` and
+``dedup.minhash_lsh_candidates`` above it — :func:`fast_hash64`) — the
+permutation math and the banding are hash-agnostic.
 """
 
 from __future__ import annotations
@@ -94,7 +94,6 @@ def fast_hash60(s: str) -> int:
 
 
 _HASH60 = {"md5": stable_hash60, "crc32": fast_hash60}
-_HASH64 = {"md5": stable_hash64, "crc32": fast_hash64}
 
 
 def char_shingles(text: str, k: int = 5) -> List[str]:
@@ -115,37 +114,34 @@ def _perm_params(num_perm: int, seed: int = 42) -> List[tuple]:
     return params
 
 
-_PERM_CACHE: dict = {}
+@lru_cache(maxsize=None)
+def _perm_vectors() -> tuple:
+    params = _perm_params(32, 42)
+    return (
+        np.array([a for a, _ in params], dtype=np.uint64),
+        np.array([b for _, b in params], dtype=np.uint64),
+    )
 
 
-def minhash_signature(
-    text: str, num_perm: int = 32, k: int = 5, seed: int = 42, hash_impl: str = "md5"
-) -> List[int]:
-    """MinHash signature over character k-shingles.
+def minhash_signature(text: str, hash_impl: str = "md5") -> List[int]:
+    """32-permutation MinHash signature (seed 42) over character 5-shingles.
 
     ``sig[i] = min over shingles of (a_i·h(shingle) + b_i) mod (2^31-1)``.
     Empty text → all-_MAX_HASH sentinel signature.
 
     Fully numpy-vectorized: with the permutation field at p = 2^31-1,
     every product ``a·h + b`` stays below 2^63, so the whole
-    (num_perm × n_shingles) sweep runs as native uint64 ops — ~50× the
+    (32 × n_shingles) sweep runs as native uint64 ops — ~50× the
     scalar loop.  The shingle base hash is md5-top-60-bits (cached,
     SQL-reproducible — see module docstring) by default;
     ``hash_impl='crc32'`` is the flagged fast path (:func:`fast_hash60`).
     """
-    key = (num_perm, seed)
-    if key not in _PERM_CACHE:
-        params = _perm_params(num_perm, seed)
-        _PERM_CACHE[key] = (
-            np.array([a for a, _ in params], dtype=np.uint64),
-            np.array([b for _, b in params], dtype=np.uint64),
-        )
-    a_vec, b_vec = _PERM_CACHE[key]
+    a_vec, b_vec = _perm_vectors()
     base_hash = _HASH60[hash_impl]
 
-    shingles = set(char_shingles(text, k))
+    shingles = set(char_shingles(text, 5))
     if not shingles:
-        return [_MAX_HASH] * num_perm
+        return [_MAX_HASH] * 32
     h = np.fromiter(
         (base_hash(s) % MERSENNE_31 for s in shingles),
         dtype=np.uint64,
@@ -156,17 +152,17 @@ def minhash_signature(
     return [int(v) for v in sig]
 
 
-def lsh_band_keys(signature: Sequence[int], bands: int = 8) -> List[str]:
-    """Split a signature into ``bands`` equal bands; key = band idx + band hash.
+def lsh_band_keys(signature: Sequence[int]) -> List[str]:
+    """Split a signature into 8 equal bands; key = band idx + band hash.
 
     Two documents sharing ANY band key are LSH candidates (the classic
     banding construction: P(candidate) = 1 - (1 - J^r)^b for r rows/band).
     """
-    if len(signature) % bands != 0:
-        raise ValueError("signature length must be divisible by bands")
-    rows = len(signature) // bands
+    if len(signature) % 8 != 0:
+        raise ValueError("signature length must be divisible by 8 bands")
+    rows = len(signature) // 8
     keys = []
-    for b in range(bands):
+    for b in range(8):
         band = ",".join(str(v) for v in signature[b * rows : (b + 1) * rows])
         # raw band string (no hash compression) — the key is shuffle-local
         # and this keeps the banding SQL-reproducible
@@ -174,17 +170,17 @@ def lsh_band_keys(signature: Sequence[int], bands: int = 8) -> List[str]:
     return keys
 
 
-def simhash64(text: str, k: int = 3, hash_impl: str = "md5") -> int:
-    """64-bit SimHash over character k-shingles (unweighted).
+def simhash64(text: str) -> int:
+    """64-bit SimHash over character 3-shingles (unweighted, md5 base
+    hash).
 
     Vectorized: shingle hashes → (n, 64) bit matrix via numpy shifts; the
     fingerprint bit is set where the column-sum of bits exceeds n/2."""
-    shingles = set(char_shingles(text, k))
+    shingles = set(char_shingles(text, 3))
     if not shingles:
         return 0
-    base_hash = _HASH64[hash_impl]
     h = np.fromiter(
-        (base_hash(s) for s in shingles), dtype=np.uint64, count=len(shingles)
+        (stable_hash64(s) for s in shingles), dtype=np.uint64, count=len(shingles)
     )
     bits = (h[:, None] >> np.arange(64, dtype=np.uint64)[None, :]) & np.uint64(1)
     ones = bits.sum(axis=0, dtype=np.int64)
@@ -199,16 +195,22 @@ def hamming64(a: int, b: int) -> int:
     return bin(a ^ b).count("1")
 
 
-def rolling_fingerprint(text: str, base: int = 31, mod: int = 140737488355213) -> int:
-    """Polynomial rolling hash over code points: ``h = (h*base + cp) % mod``.
+ROLLING_BASE = 31
+ROLLING_MOD = 140_737_488_355_213  # ≈2^47: intermediates stay < 2^53
 
-    ``mod`` ≈ 2^47 keeps every intermediate < 2^53, so the identical fold is
-    expressible in Spark (``F.aggregate``) and DuckDB (``list_reduce``)
-    without bigint overflow — used as a cross-engine oracle check.
+
+def rolling_fingerprint(text: str) -> int:
+    """Polynomial rolling hash over code points:
+    ``h = (h*ROLLING_BASE + cp) % ROLLING_MOD``.
+
+    ``ROLLING_MOD`` ≈ 2^47 keeps every intermediate < 2^53, so the identical
+    fold is expressible in Spark (``F.aggregate``) and DuckDB
+    (``list_reduce``) without bigint overflow — used as a cross-engine
+    oracle check.
     """
     h = 0
     for ch in text:
-        h = (h * base + ord(ch)) % mod
+        h = (h * ROLLING_BASE + ord(ch)) % ROLLING_MOD
     return h
 
 

@@ -105,12 +105,10 @@ def knn_graph_py(
     ids: Sequence[int],
     X: np.ndarray,
     k: int = 12,
-    n_planes: int = 4,
-    n_tables: int = 2,
     n_rounds: int = 2,
-    seed: int = 42,
 ) -> Dict[int, List[Tuple[int, float]]]:
-    """Deterministic kNN graph: LSH-bucket init + NN-descent rounds.
+    """Deterministic kNN graph: LSH-bucket init (2 tables of 4 hyperplanes,
+    seeds 42 and 43) + NN-descent rounds.
 
     Returns {src_id: [(dst_id, cosine)] sorted by (-cosine, dst_id),
     length ≤ k}.  Mirrors ``operators/graph_ann.knn_graph`` exactly.
@@ -120,8 +118,8 @@ def knn_graph_py(
     cos = _Cos(ids, X)
 
     edges: set[Tuple[int, int]] = set()
-    for t in range(n_tables):
-        buckets = lsh_buckets(X, X.shape[1], n_planes, seed + t)
+    for t in range(2):
+        buckets = lsh_buckets(X, X.shape[1], 4, 42 + t)
         members: Dict[int, List[int]] = {}
         for vid, b in zip(ids, buckets):
             members.setdefault(int(b), []).append(vid)

@@ -62,10 +62,11 @@ class Bm25Index:
         self.unpersist()
 
 
-def tokenize(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Whitespace tokenization, lowercased (identical in the SQL oracle)."""
+def tokenize(df: DataFrame) -> DataFrame:
+    """Whitespace tokenization of ``text``, lowercased (identical in the SQL
+    oracle)."""
     return df.withColumn(
-        "term", F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
+        "term", F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
     ).filter(F.col("term") != "")
 
 
@@ -103,14 +104,10 @@ def build_bm25_index(documents: DataFrame) -> Bm25Index:
     return Bm25Index(tf=tf, doclen=doclen, idf=idf, stats=stats)
 
 
-def bm25_scores_from_index(
-    index: Bm25Index,
-    query_terms: DataFrame,
-    k1: float = K1,
-    b: float = B,
-) -> DataFrame:
-    """Score (query_id, term) pairs against a prebuilt index — zero new
-    cached state per call, so a serving loop can run queries indefinitely."""
+def bm25_scores_from_index(index: Bm25Index, query_terms: DataFrame) -> DataFrame:
+    """Score (query_id, term) pairs against a prebuilt index (``K1``,
+    ``B``) — zero new cached state per call, so a serving loop can run
+    queries indefinitely."""
     # vocabulary + query side are small → broadcast both into the postings
     matched = (
         index.tf.join(F.broadcast(query_terms), "term")
@@ -120,8 +117,8 @@ def bm25_scores_from_index(
     )
 
     term_score = F.col("idf") * (
-        F.col("tf") * (k1 + 1.0)
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
+        F.col("tf") * (K1 + 1.0)
+        / (F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / F.col("avgdl")))
     )
     return (
         matched.withColumn("term_score", term_score)
@@ -130,41 +127,24 @@ def bm25_scores_from_index(
     )
 
 
-def bm25_scores(
-    documents: DataFrame,
-    query_terms: DataFrame,
-    k1: float = K1,
-    b: float = B,
-    index: Bm25Index | None = None,
-) -> DataFrame:
+def bm25_scores(documents: DataFrame, query_terms: DataFrame) -> DataFrame:
     """BM25 score per (query_id, doc_id) — one-shot convenience.
 
     ``documents``: (doc_id, text); ``query_terms``: (query_id, term).
     Returns (query_id, doc_id, bm25:double) for docs matching ≥1 term.
-    NOTE: when ``index`` is not supplied, this builds (and leaves
-    persisted) a fresh index per call — the returned plan is lazy, so the
-    cache cannot be dropped before the caller consumes it.  Callers issuing
-    repeated queries against one corpus should ``build_bm25_index`` once
-    and pass it here (or use ``bm25_scores_from_index`` directly /
-    ``serving.retrieval.build_retrieval_state``), unpersisting via the
-    index's context-manager form when retired.
+    NOTE: this builds (and leaves persisted) a fresh index per call — the
+    returned plan is lazy, so the cache cannot be dropped before the
+    caller consumes it.  Callers issuing repeated queries against one
+    corpus should ``build_bm25_index`` once and score with
+    ``bm25_scores_from_index`` (or ``serving.retrieval.build_retrieval_state``),
+    unpersisting via the index's context-manager form when retired.
     """
-    return bm25_scores_from_index(
-        index if index is not None else build_bm25_index(documents),
-        query_terms,
-        k1=k1,
-        b=b,
-    )
+    return bm25_scores_from_index(build_bm25_index(documents), query_terms)
 
 
-def bm25_topk(
-    documents: DataFrame,
-    query_terms: DataFrame,
-    k: int = 10,
-    index: Bm25Index | None = None,
-) -> DataFrame:
+def bm25_topk(documents: DataFrame, query_terms: DataFrame, k: int = 10) -> DataFrame:
     """Top-k BM25 hits per query with deterministic tie-break."""
-    scored = bm25_scores(documents, query_terms, index=index)
+    scored = bm25_scores(documents, query_terms)
     w = Window.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))

@@ -57,17 +57,16 @@ from pyspark.sql import functions as F
 from document_automation_spark.partitioning import fan_out
 
 END_OF_WORD = "▁"  # sentencepiece-style word-boundary marker
+MIN_PAIR_COUNT = 2  # learn_bpe stops once no pair occurs this often
 
 
-def word_frequencies(
-    documents: DataFrame, text_col: str = "text", min_freq: int = 1
-) -> DataFrame:
-    """``(word, freq)`` over whitespace pre-tokenization — the one
+def word_frequencies(documents: DataFrame, min_freq: int = 1) -> DataFrame:
+    """``(word, freq)`` over whitespace pre-tokenization of ``text`` — the one
     corpus-scale pass.  ``min_freq`` prunes the hapax tail (at web scale
     the distinct-word table is dominated by typos/ids seen once; BPE
     statistics barely move, cardinality drops ~10x)."""
     words = fan_out(documents).select(
-        F.explode(F.split(F.col(text_col), r"\s+")).alias("word")
+        F.explode(F.split(F.col("text"), r"\s+")).alias("word")
     ).where(F.col("word") != "")
     freqs = words.groupBy("word").agg(F.count("*").alias("freq"))
     if min_freq > 1:
@@ -107,18 +106,14 @@ def _initial_symbols(word: F.Column) -> F.Column:
     )
 
 
-def learn_bpe(
-    word_freqs: DataFrame,
-    n_merges: int,
-    min_pair_count: int = 2,
-) -> list[tuple[str, str, str, int]]:
+def learn_bpe(word_freqs: DataFrame, n_merges: int) -> list[tuple[str, str, str, int]]:
     """Learn up to ``n_merges`` BPE merges from a ``(word, freq)`` table.
 
     Returns the merge table as a list of ``(a, b, merged, pair_count)``
     in rank order (list, not DataFrame: it's driver-bounded at n_merges
     rows and every consumer — encoder, broadcast, vocab file — wants it
     ordered and small).  Stops early when no pair reaches
-    ``min_pair_count``.
+    :data:`MIN_PAIR_COUNT`.
     """
     if n_merges < 0:
         raise ValueError(f"n_merges must be >= 0, got {n_merges}")
@@ -157,7 +152,7 @@ def learn_bpe(
             .agg(F.sum("freq").alias("n"))
         )
         best = pairs.orderBy(F.desc("n"), F.asc("a"), F.asc("b")).head(1)
-        if not best or best[0]["n"] < min_pair_count:
+        if not best or best[0]["n"] < MIN_PAIR_COUNT:
             break
         a, b, n = best[0]["a"], best[0]["b"], int(best[0]["n"])
         merges.append((a, b, a + b, n))
@@ -199,11 +194,10 @@ def segment_vocabulary(
 def count_tokens(
     documents: DataFrame,
     vocab: DataFrame,
-    text_col: str = "text",
     id_col: str = "doc_id",
     broadcast_vocab: bool = False,
 ) -> DataFrame:
-    """``(id_col, n_tokens_bpe)`` — the counting-only half of
+    """``(id_col, n_tokens_bpe)`` over ``text`` — the counting-only half of
     :func:`encode_documents`, for consumers that need token BUDGETS, not
     token streams (the sequence packer sizes chunks from counts alone).
     The vocab side collapses to ``(word, token count)`` before the join,
@@ -216,7 +210,7 @@ def count_tokens(
     if broadcast_vocab:
         sizes = F.broadcast(sizes)
     words = documents.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), r"\s+")).alias("word")
+        F.col(id_col), F.explode(F.split(F.col("text"), r"\s+")).alias("word")
     ).where(F.col("word") != "")
     return (
         words.join(sizes, "word", "left")
@@ -230,14 +224,10 @@ def count_tokens(
 
 
 def encode_documents(
-    documents: DataFrame,
-    vocab: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    broadcast_vocab: bool = False,
+    documents: DataFrame, vocab: DataFrame, broadcast_vocab: bool = False
 ) -> DataFrame:
-    """``(id_col, tokens, n_tokens)`` — tokenize every document via the
-    per-word segmentation join.
+    """``(doc_id, tokens, n_tokens)`` — tokenize every document's ``text``
+    via the per-word segmentation join.
 
     The corpus side explodes to ``(doc_id, pos, word)`` — the document
     string itself never shuffles, only its positional word pieces, which
@@ -253,18 +243,18 @@ def encode_documents(
     if broadcast_vocab:
         voc = F.broadcast(voc)
     exploded = fan_out(documents).select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), r"\s+")).alias("pos", "word"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), r"\s+")).alias("pos", "word"),
     ).where(F.col("word") != "")
     joined = exploded.join(voc, "word", "left").select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("pos"),
         F.coalesce(
             F.col("tokens"), _initial_symbols(F.col("word"))
         ).alias("tokens"),
     )
     return (
-        joined.groupBy(id_col)
+        joined.groupBy("doc_id")
         .agg(
             F.flatten(
                 F.transform(
@@ -275,5 +265,5 @@ def encode_documents(
                 )
             ).alias("tokens")
         )
-        .select(id_col, "tokens", F.size("tokens").alias("n_tokens"))
+        .select("doc_id", "tokens", F.size("tokens").alias("n_tokens"))
     )

@@ -15,7 +15,7 @@ concatenation per cluster) is identical whatever the line source.
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional
+from typing import Iterator, List
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -41,14 +41,9 @@ def split_fixed_lines(text: str, width: int) -> List[str]:
     return [text[i : i + width] for i in range(0, len(text), width)] or [""]
 
 
-def kmeans_line_clusters(
-    documents: DataFrame,
-    line_width: int = 80,
-    passage_len: Optional[int] = 500,
-    n_components: int = 2,
-    seed: int = 42,
-) -> DataFrame:
-    """One row per (doc, cluster): cluster size + rolling-hash fingerprint.
+def kmeans_line_clusters(documents: DataFrame) -> DataFrame:
+    """One row per (doc, cluster): cluster size + rolling-hash fingerprint,
+    over 80-char lines clustered at ``passage_len=500``.
 
     The fingerprint pins the exact cluster TEXT (concatenation order
     included) without shipping it — pytest re-derives it from the kernel."""
@@ -57,10 +52,8 @@ def kmeans_line_clusters(
         for batch in it:
             rows = []
             for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                lines = split_fixed_lines(text, line_width)
-                clusters = cluster_lines(
-                    lines, passage_len=passage_len, n_components=n_components, seed=seed
-                )
+                lines = split_fixed_lines(text, 80)
+                clusters = cluster_lines(lines, passage_len=500)
                 for c, ctext in enumerate(clusters):
                     rows.append(
                         (doc_id, c, len(ctext), len(lines), rolling_fingerprint(ctext))

@@ -78,14 +78,12 @@ def duplicate_groups(documents: DataFrame) -> DataFrame:
 
 def minhash_lsh_candidates(
     documents: DataFrame,
-    num_perm: int = 32,
-    bands: int = 8,
-    k: int = 5,
-    seed: int = 42,
     max_bucket_size: int | None = None,
     hash_impl: str = "md5",
 ) -> DataFrame:
     """LSH candidate pairs: signature → band keys → explode → self-group.
+    Signatures are :func:`kernels.fingerprint.minhash_signature` (32
+    permutations over 5-shingles), split into 8 bands.
 
     The only shuffle is the groupBy on band key; pairs are emitted inside
     each bucket (sorted doc_id pairs, deduped across bands).  Bucket-size
@@ -113,10 +111,8 @@ def minhash_lsh_candidates(
         for batch in batches:
             ids, keys = [], []
             for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                sig = minhash_signature(
-                    text, num_perm=num_perm, k=k, seed=seed, hash_impl=hash_impl
-                )
-                for key in lsh_band_keys(sig, bands=bands):
+                sig = minhash_signature(text, hash_impl=hash_impl)
+                for key in lsh_band_keys(sig):
                     ids.append(doc_id)
                     keys.append(key)
             yield pd.DataFrame({"doc_id": ids, "band_key": keys})
@@ -225,18 +221,17 @@ def connected_components(edges: DataFrame, max_iterations: int = 30) -> DataFram
 def near_dup_dedup(
     documents: DataFrame,
     jaccard_threshold: float = 0.8,
-    num_perm: int = 32,
-    bands: int = 8,
-    shingle_k: int = 5,
-    seed: int = 42,
     canonicalize: str = "greedy",
     cc_max_iterations: int = 30,
-    hash_impl: str = "md5",
 ) -> DataFrame:
     """The production near-dup pipeline, end to end:
 
         MinHash → LSH band candidates → exact n-gram-Jaccard VERIFY →
         drop every doc that near-duplicates a lower-id doc.
+
+    Candidates and verify both use 5-char shingles; the candidates are
+    :func:`minhash_lsh_candidates` at its defaults (32 permutations, 8
+    bands, md5 base hash — the SQL-reproducible one).
 
     Candidate generation bounds the pair count (no all-pairs join); the
     verify stage runs only on candidates.  Duplicate resolution
@@ -252,10 +247,7 @@ def near_dup_dedup(
 
     Returns the surviving documents (same schema as the input).
     """
-    candidates = minhash_lsh_candidates(
-        documents, num_perm=num_perm, bands=bands, k=shingle_k, seed=seed,
-        hash_impl=hash_impl,
-    )
+    candidates = minhash_lsh_candidates(documents)
     # verify-stage set algebra runs on 8-byte xxhash64 gram hashes, not the
     # gram strings: identical Jaccard values absent collisions (per-pair
     # union ≤ ~1k grams → P(collision) ≈ 1e-14/pair; a collision can only
@@ -263,8 +255,8 @@ def near_dup_dedup(
     # beats string comparisons — the measured 1.3× on the verify stage.
     grams = F.array_distinct(
         F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length("text") - (shingle_k - 1), F.lit(1))),
-            lambda i: F.xxhash64(F.col("text").substr(i, F.lit(shingle_k))),
+            F.sequence(F.lit(1), F.greatest(F.length("text") - 4, F.lit(1))),
+            lambda i: F.xxhash64(F.col("text").substr(i, F.lit(5))),
         )
     )
     with_grams = fan_out(documents).select("doc_id", grams.alias("grams")).persist()
@@ -288,10 +280,9 @@ def near_dup_dedup(
     return documents.join(dropped, "doc_id", "left_anti")
 
 
-def simhash_fingerprints(
-    documents: DataFrame, k: int = 3, hash_impl: str = "md5"
-) -> DataFrame:
-    """(doc_id, simhash:long) — 64-bit fingerprint, bucketable directly.
+def simhash_fingerprints(documents: DataFrame) -> DataFrame:
+    """(doc_id, simhash:long) — 64-bit fingerprint over 3-char shingles
+    (md5 base hash), bucketable directly.
 
     Stored as signed int64 (bit-pattern reinterpret) to stay Spark/Parquet
     native."""
@@ -302,24 +293,18 @@ def simhash_fingerprints(
 
     @F.pandas_udf(T.LongType())
     def simhash_udf(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: to_signed64(simhash64(t, k=k, hash_impl=hash_impl)))
+        return texts.map(lambda t: to_signed64(simhash64(t)))
 
     return fan_out(documents).select(
         "doc_id", simhash_udf(F.col("text")).alias("simhash")
     )
 
 
-def simhash_near_dup_pairs(
-    documents: DataFrame,
-    max_hamming: int = 3,
-    k: int = 3,
-    n_bands: int = 4,
-    hash_impl: str = "md5",
-) -> DataFrame:
+def simhash_near_dup_pairs(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance — banded multi-probe.
 
-    Pigeonhole construction: split the 64-bit fingerprint into ``n_bands``
-    bit-bands; any pair with Hamming ≤ ``max_hamming`` < n_bands must agree
+    Pigeonhole construction: split the 64-bit fingerprint into 4 16-bit
+    bands; any pair with Hamming ≤ ``max_hamming`` < 4 must agree
     on at least one whole band, so candidates form ONLY inside band-value
     buckets (an equi-join on (band, bits) — no all-pairs).  Candidates are
     then verified with the exact popcount, entirely JVM-side
@@ -331,22 +316,16 @@ def simhash_near_dup_pairs(
     loop callers should compute fingerprints once and bucket externally
     (or ``spark.catalog.clearCache()`` between rounds).
     """
-    if max_hamming >= n_bands:
-        raise ValueError("pigeonhole needs max_hamming < n_bands")
-    width = 64 // n_bands
+    if max_hamming >= 4:
+        raise ValueError("pigeonhole needs max_hamming < 4 bands")
 
     def band_bits(b: int):
-        shifted = F.shiftright("simhash", b * width)
-        if width >= 64:  # single band: the whole fingerprint, no mask
-            return shifted
-        return shifted.bitwiseAND(F.lit((1 << width) - 1))
+        return F.shiftright("simhash", b * 16).bitwiseAND(F.lit(0xFFFF))
 
     # empty text → sentinel fingerprint 0 for ALL of them: they are exact
     # dups (exact_dedup's job), and would otherwise bucket-collide m² ways
     fps = simhash_fingerprints(
-        documents.filter(F.col("text").isNotNull() & (F.length("text") > 0)),
-        k=k,
-        hash_impl=hash_impl,
+        documents.filter(F.col("text").isNotNull() & (F.length("text") > 0))
     )
     banded = fps.select(
         "doc_id",
@@ -355,7 +334,7 @@ def simhash_near_dup_pairs(
             F.array(
                 *[
                     F.struct(F.lit(b).alias("band"), band_bits(b).alias("bits"))
-                    for b in range(n_bands)
+                    for b in range(4)
                 ]
             )
         ).alias("bb"),

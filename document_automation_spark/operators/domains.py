@@ -111,12 +111,10 @@ def registrable_domain_col(host) -> F.Column:
 def domain_stats(
     documents: DataFrame,
     *,
-    url_col: str = "url",
-    text_col: str = "text",
     level: str = "host",
 ) -> DataFrame:
-    """Per-host corpus datasheet: volume, size and shape of each domain's
-    contribution.
+    """Per-host corpus datasheet over ``url`` and ``text``: volume, size
+    and shape of each domain's contribution.
 
     Output (one row per host)::
 
@@ -137,13 +135,13 @@ def domain_stats(
     """
     if level not in ("host", "domain"):
         raise ValueError(f"level must be 'host' or 'domain', got {level!r}")
-    key = host_col(url_col)
+    key = host_col("url")
     if level == "domain":
         key = registrable_domain_col(key)
     per_doc = documents.select(
         key.alias("host"),
-        F.length(F.col(text_col)).cast("long").alias("_chars"),
-        F.col(url_col).alias("_url"),
+        F.length(F.col("text")).cast("long").alias("_chars"),
+        F.col("url").alias("_url"),
     )
     return per_doc.groupBy("host").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -157,13 +155,13 @@ def domain_stats(
 def filter_by_domain(
     documents: DataFrame,
     *,
-    url_col: str = "url",
     blocklist: Optional[Sequence[str]] = None,
     allowlist: Optional[Sequence[str]] = None,
     block_subdomains: bool = True,
 ) -> Tuple[DataFrame, Observation]:
-    """Gate documents by host against a block list (or keep-only allow
-    list).  Exactly one of ``blocklist`` / ``allowlist`` must be given.
+    """Gate documents by the host of ``url`` against a block list (or
+    keep-only allow list).  Exactly one of ``blocklist`` / ``allowlist``
+    must be given.
 
     ``block_subdomains=True`` also matches any subdomain of a listed
     host (``ads.example.com`` matches a listed ``example.com``): the
@@ -193,7 +191,7 @@ def filter_by_domain(
             "and broadcast-join instead (see docstring)"
         )
 
-    host = host_col(url_col)
+    host = host_col("url")
     if block_subdomains:
         # suffix candidates: host itself + every parent domain
         # ("a.b.example.com" -> [a.b.example.com, b.example.com,

@@ -13,16 +13,16 @@ quality-thresholding.
 Spark shape, stage by stage:
 
 * features: unigrams + bigrams of the lowercased ``\\s+`` tokenization,
-  hashed into ``n_buckets`` — a row-local JVM expression chain (split →
+  hashed into ``DEFAULT_N_BUCKETS`` (4096) — a row-local JVM expression chain (split →
   transform → concat → hash), no Python;
 * :func:`train_dsir_weights` — the only training-time shuffles are two
-  map-side-combined bucket counts (output cardinality = n_buckets,
+  map-side-combined bucket counts (output cardinality = 4096,
   thousands, regardless of corpus size) joined onto a ``spark.range``
   bucket spine; totals ride a 1-row broadcast.  Per-bucket log-ratio is
   rounded to 9 dp (the engine-parity discipline shared with the CCNet
   LM scorer);
 * :func:`dsir_scores` — ONE map-side-combined shuffle: explode grams,
-  broadcast-join the (tiny, n_buckets-row) weight table, sum per doc.
+  broadcast-join the (tiny, 4096-row) weight table, sum per doc.
   The corpus text never shuffles — only (doc_id, bucket) pairs;
 * :func:`dsir_resample` — Gumbel-top-k with the Gumbel draw derived
   from the engine-wide deterministic md5 uniform (salted, so it is
@@ -68,26 +68,26 @@ def _grams(text_col: F.Column) -> F.Column:
     return F.concat(ws, bigrams)
 
 
-def _bucket(gram: F.Column, n_buckets: int, hash_impl: str) -> F.Column:
+def _bucket(gram: F.Column, hash_impl: str) -> F.Column:
     if hash_impl == "md5":
         h = F.conv(F.substring(F.md5(gram), 1, 15), 16, 10).cast("long")
-        return (h % n_buckets).alias("bucket")
+        return (h % DEFAULT_N_BUCKETS).alias("bucket")
     if hash_impl == "xxhash64":
-        return F.pmod(F.xxhash64(gram), F.lit(n_buckets)).alias("bucket")
+        return F.pmod(F.xxhash64(gram), F.lit(DEFAULT_N_BUCKETS)).alias("bucket")
     raise ValueError(f"unknown hash_impl {hash_impl!r}")
 
 
-def _weights_from_counts(counts: DataFrame, n_buckets: int, alpha: float) -> DataFrame:
+def _weights_from_counts(counts: DataFrame) -> DataFrame:
     """``(bucket, ct, cr)`` — one row per bucket — → ``(bucket, lr)``.
 
     The ONE definition of the smoothed 9-dp DSIR log-ratio (the oracle
     seat pins this rounding contract): both the granular trainer and the
     composed slice-target path derive from it, so a smoothing or rounding
-    change cannot make them silently diverge."""
+    change cannot make them silently diverge.  Smoothing α = 1."""
     totals = counts.agg(
         F.sum("ct").cast("double").alias("nt"), F.sum("cr").cast("double").alias("nr")
     )
-    a, b = F.lit(float(alpha)), F.lit(float(alpha * n_buckets))
+    a, b = F.lit(1.0), F.lit(float(DEFAULT_N_BUCKETS))
     return counts.crossJoin(F.broadcast(totals)).select(
         "bucket",
         F.round(
@@ -98,42 +98,36 @@ def _weights_from_counts(counts: DataFrame, n_buckets: int, alpha: float) -> Dat
     )
 
 
-def _score_bucketed(bucketed, weights: DataFrame, id_col: str) -> DataFrame:
-    """(id, bucket) rows × broadcast weight table → ``(id, dsir_score)``
-    — the shared 6-dp scoring aggregation."""
+def _score_bucketed(bucketed, weights: DataFrame) -> DataFrame:
+    """(doc_id, bucket) rows × broadcast weight table → ``(doc_id,
+    dsir_score)`` — the shared 6-dp scoring aggregation."""
     return (
         bucketed.join(F.broadcast(weights), "bucket")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.round(F.sum("lr"), 6).alias("dsir_score"))
     )
 
 
-def train_dsir_weights(
-    target: DataFrame,
-    raw: DataFrame,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-    text_col: str = "text",
-    alpha: float = 1.0,
-    hash_impl: str = "md5",
-) -> DataFrame:
-    """Per-bucket importance log-ratio table: ``(bucket, lr)`` with
-    ``lr = ln((c_t+α)/(N_t+αB)) − ln((c_r+α)/(N_r+αB))``, one row for
-    EVERY bucket (absent buckets get the pure-smoothing ratio), rounded
-    to 9 dp.  Output is n_buckets rows — always broadcastable."""
+def train_dsir_weights(target: DataFrame, raw: DataFrame, hash_impl: str = "md5") -> DataFrame:
+    """Per-bucket importance log-ratio table over the ``text`` grams:
+    ``(bucket, lr)`` with ``lr = ln((c_t+α)/(N_t+αB)) − ln((c_r+α)/(N_r+αB))``
+    (α = 1, B = :data:`DEFAULT_N_BUCKETS`), one row for EVERY bucket
+    (absent buckets get the pure-smoothing ratio), rounded to 9 dp.
+    Output is B rows — always broadcastable."""
 
     def bucket_counts(df: DataFrame, out: str) -> DataFrame:
         # gram-md5 is the expensive row-local pass — spread an under-split
         # scan across the cluster first (no-op at real-corpus scale)
         return (
             fan_out(df)
-            .select(F.explode(_grams(F.col(text_col))).alias("g"))
-            .select(_bucket(F.col("g"), n_buckets, hash_impl))
+            .select(F.explode(_grams(F.col("text"))).alias("g"))
+            .select(_bucket(F.col("g"), hash_impl))
             .groupBy("bucket")
             .agg(F.count(F.lit(1)).alias(out))
         )
 
     spark = target.sparkSession
-    spine = spark.range(n_buckets).select(F.col("id").alias("bucket"))
+    spine = spark.range(DEFAULT_N_BUCKETS).select(F.col("id").alias("bucket"))
     counts = (
         spine.join(bucket_counts(target, "ct"), "bucket", "left")
         .join(bucket_counts(raw, "cr"), "bucket", "left")
@@ -143,37 +137,20 @@ def train_dsir_weights(
             F.coalesce("cr", F.lit(0)).alias("cr"),
         )
     )
-    return _weights_from_counts(counts, n_buckets, alpha)
+    return _weights_from_counts(counts)
 
 
-def dsir_scores(
-    docs: DataFrame,
-    weights: DataFrame,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_impl: str = "md5",
-) -> DataFrame:
-    """``(id_col, dsir_score)`` — per-document importance weight
-    ``ROUND(Σ_grams lr(bucket(gram)), 6)``.  One map-side-combined
-    shuffle of (doc_id, lr) pairs; weights broadcast."""
+def dsir_scores(docs: DataFrame, weights: DataFrame, hash_impl: str = "md5") -> DataFrame:
+    """``(doc_id, dsir_score)`` — per-document importance weight
+    ``ROUND(Σ_grams lr(bucket(gram)), 6)`` over the ``text`` grams.  One
+    map-side-combined shuffle of (doc_id, lr) pairs; weights broadcast."""
     grams = fan_out(docs).select(
-        F.col(id_col), F.explode(_grams(F.col(text_col))).alias("g")
-    ).select(id_col, _bucket(F.col("g"), n_buckets, hash_impl))
-    return _score_bucketed(grams, weights, id_col)
+        F.col("doc_id"), F.explode(_grams(F.col("text"))).alias("g")
+    ).select("doc_id", _bucket(F.col("g"), hash_impl))
+    return _score_bucketed(grams, weights)
 
 
-def dsir_select(
-    docs: DataFrame,
-    is_target,
-    k: int,
-    n_buckets: int = DEFAULT_N_BUCKETS,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    alpha: float = 1.0,
-    hash_impl: str = "md5",
-    salt: str = "#dsir",
-) -> DataFrame:
+def dsir_select(docs: DataFrame, is_target, k: int) -> DataFrame:
     """Composed train→score→resample when the target is a SLICE of the
     corpus (``is_target`` = boolean Column over ``docs``), e.g. a
     trusted-domain or hash-slice target.  Identical math to the granular
@@ -184,20 +161,21 @@ def dsir_select(
     granular path pays three hash passes + two count shuffles).  The
     persisted table is 12 bytes/gram — materializing it beats re-hashing
     even at corpus scale; it is freed with the session cache
-    (``spark.catalog.clearCache()``) or an explicit unpersist."""
+    (``spark.catalog.clearCache()``) or an explicit unpersist.  Grams
+    bucket by md5, the SQL-reproducible hash."""
     # the gram md5 pass is the operator's entire CPU cost: fan an
     # under-split scan out across the cluster before it (measured on the
     # sf0.1 bench host: 8.9 s fused with a 3-task scan → 1.0 s at 32;
     # no-op when the corpus scan is already parallel)
     bg = fan_out(docs).select(
-        F.col(id_col),
+        F.col("doc_id"),
         is_target.alias("_t"),
-        F.explode(_grams(F.col(text_col))).alias("g"),
-    ).select(id_col, "_t", _bucket(F.col("g"), n_buckets, hash_impl))
+        F.explode(_grams(F.col("text"))).alias("g"),
+    ).select("doc_id", "_t", _bucket(F.col("g"), "md5"))
     bg = bg.persist()
 
     spark = docs.sparkSession
-    spine = spark.range(n_buckets).select(F.col("id").alias("bucket"))
+    spine = spark.range(DEFAULT_N_BUCKETS).select(F.col("id").alias("bucket"))
     counts = (
         spine.join(
             bg.groupBy("bucket").agg(
@@ -212,37 +190,30 @@ def dsir_select(
             F.coalesce("cr", F.lit(0)).alias("cr"),
         )
     )
-    weights = _weights_from_counts(counts, n_buckets, alpha)
-    scored = _score_bucketed(bg, weights, id_col)
-    return dsir_resample(scored, k=k, id_col=id_col, salt=salt)
+    weights = _weights_from_counts(counts)
+    return dsir_resample(_score_bucketed(bg, weights), k=k)
 
 
-def dsir_resample(
-    scored: DataFrame,
-    k: int,
-    score_col: str = "dsir_score",
-    id_col: str = "doc_id",
-    salt: str = "#dsir",
-) -> DataFrame:
+def dsir_resample(scored: DataFrame, k: int) -> DataFrame:
     """Gumbel-top-k importance resampling: keep the k docs with the
-    largest ``score + Gumbel(0,1)``, the standard exponential-races
+    largest ``dsir_score + Gumbel(0,1)``, the standard exponential-races
     equivalence for sampling ∝ exp(score) without replacement.  The
     Gumbel draw is ``-ln(-ln(u))`` over the deterministic md5 uniform
-    of ``id || salt`` — reproducible corpora, and independent of other
-    md5-derived draws on the same ids because of the salt.  Global
+    of ``doc_id || '#dsir'`` — reproducible corpora, and independent of
+    other md5-derived draws on the same ids because of the salt.  Global
     top-k = orderBy().limit(): Spark's TakeOrdered, never a full sort."""
     u = (
         F.conv(
-            F.substring(F.md5(F.concat(F.col(id_col).cast("string"), F.lit(salt))), 1, 15),
+            F.substring(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("#dsir"))), 1, 15),
             16,
             10,
         ).cast("double")
         / F.lit(_TWO_60)
     )
     gumbel = F.round(-F.log(-F.log(u)), 9)
-    key = F.round(F.col(score_col) + gumbel, 6).alias("select_key")
+    key = F.round(F.col("dsir_score") + gumbel, 6).alias("select_key")
     return (
         scored.select("*", key)
-        .orderBy(F.desc("select_key"), F.col(id_col))
+        .orderBy(F.desc("select_key"), F.col("doc_id"))
         .limit(k)
     )

@@ -60,7 +60,7 @@ def comb_sum(
     )
 
 
-def rrf(scores: DataFrame, k: int = 61) -> DataFrame:
+def rrf(scores: DataFrame) -> DataFrame:
     """Reciprocal-rank fusion per (query_id, doc_id).
 
     Rank is 0-based within each (query_id, retriever) ordered by score
@@ -74,7 +74,7 @@ def rrf(scores: DataFrame, k: int = 61) -> DataFrame:
     ranked = scores.withColumn("rank0", F.row_number().over(rank_window) - F.lit(1))
     return (
         ranked.groupBy("query_id", "doc_id")
-        .agg(F.sum(F.lit(1.0) / (F.lit(float(k)) + F.col("rank0"))).alias("rrf_score"))
+        .agg(F.sum(F.lit(1.0) / (F.lit(61.0) + F.col("rank0"))).alias("rrf_score"))
         .select("query_id", "doc_id", F.round("rrf_score", 9).alias("rrf_score"))
     )
 
@@ -99,11 +99,9 @@ def hybrid_image_fusion(
     weight_num: int = 3,
     weight_den: int = 2,
     rerank_topk: int = 10,
-    first: str = "bm25",
-    second: str = "dpr",
 ) -> DataFrame:
     """Image-level ensemble: max passage score per image per retriever
-    (absent → 0), ``final = s_first + (weight_num/weight_den)·s_second``,
+    (absent → 0), ``final = s_bm25 + (weight_num/weight_den)·s_dpr``,
     top ``rerank_topk`` images per query.
 
     Integer-space: final_num = weight_den·s1 + weight_num·s2, ranked on the
@@ -113,11 +111,11 @@ def hybrid_image_fusion(
     order is the cluster-safe equivalent).
     """
     per_image = (
-        scores.filter(F.col("retriever").isin(first, second))
+        scores.filter(F.col("retriever").isin("bm25", "dpr"))
         .groupBy("query_id", "image_id")
         .agg(
-            F.max(F.when(F.col("retriever") == first, F.col("score_num"))).alias("s1"),
-            F.max(F.when(F.col("retriever") == second, F.col("score_num"))).alias("s2"),
+            F.max(F.when(F.col("retriever") == "bm25", F.col("score_num"))).alias("s1"),
+            F.max(F.when(F.col("retriever") == "dpr", F.col("score_num"))).alias("s2"),
         )
         .select(
             "query_id",

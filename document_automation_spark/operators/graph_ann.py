@@ -78,25 +78,21 @@ def _topk_per_src(scored: DataFrame, k: int) -> DataFrame:
 def knn_graph(
     embeddings: DataFrame,
     k: int = 12,
-    n_planes: int = 4,
-    n_tables: int = 2,
     n_rounds: int = 2,
-    seed: int = 42,
-    dim: int = 64,
 ) -> DataFrame:
     """Deterministic kNN graph (src, dst, cosine): LSH-bucket candidate
     init + ``n_rounds`` of NN-descent refinement.
 
     Bucket init: a vector's candidates are its co-bucket members in each
-    of ``n_tables`` hyperplane tables (seeds ``seed+t``) — the same
+    of 2 tables of 4 hyperplanes over 64 dims (seeds 42 and 43) — the same
     deterministic planes as ``lsh_bucketed_topk``, so no RNG anywhere.
     Each refinement round joins the current undirected adjacency with
     itself (2-hop reach), scores the union, and keeps top-k per node.
     """
     emb = embeddings.select("vec_id", "embedding")
     cand = None
-    for t in range(n_tables):
-        planes = hyperplanes(dim, n_planes, seed + t)
+    for t in range(2):
+        planes = hyperplanes(64, 4, 42 + t)
         b = bucket_ids(emb, planes).select("vec_id", "bucket")
         pairs = (
             b.alias("a")

@@ -75,11 +75,10 @@ def _centroid_dists(X: np.ndarray, C: np.ndarray, quantize_dp: int | None) -> np
 def assign_buckets(
     embeddings: DataFrame,
     centers: np.ndarray,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
     quantize_dp: int | None = None,
 ) -> DataFrame:
-    """+bucket column = nearest centroid (L2), one numpy matmul per batch."""
+    """+bucket column = nearest centroid (L2) of ``embedding``, one numpy
+    matmul per batch."""
     spark = embeddings.sparkSession
     b_centers = spark.sparkContext.broadcast(centers)
     fields = embeddings.schema.fields
@@ -91,7 +90,7 @@ def assign_buckets(
         for batch in it:
             if len(batch) == 0:
                 continue
-            X = np.array(list(batch[emb_col]), dtype=np.float64)  # (n, dim)
+            X = np.array(list(batch["embedding"]), dtype=np.float64)  # (n, dim)
             d = _centroid_dists(X, C, quantize_dp)
             out = batch[cols].copy()
             # ties (possible after quantization) → lowest centroid index,
@@ -106,10 +105,10 @@ def probe_buckets_df(
     queries: DataFrame,
     centers: np.ndarray,
     n_probe: int,
-    emb_col: str = "query_embedding",
     quantize_dp: int | None = None,
 ) -> DataFrame:
-    """Each query row → its ``n_probe`` nearest-centroid buckets, one output
+    """Each query row → its ``n_probe`` nearest-centroid buckets of its
+    ``query_embedding``, one output
     row per (query, bucket) — the same broadcast-centers narrow map as
     :func:`assign_buckets` (argsort top-n instead of argmin), so probe
     assignment is fully distributed: no driver collect anywhere in the
@@ -128,7 +127,7 @@ def probe_buckets_df(
         for batch in it:
             if len(batch) == 0:
                 continue
-            X = np.array(list(batch[emb_col]), dtype=np.float64)
+            X = np.array(list(batch["query_embedding"]), dtype=np.float64)
             d = _centroid_dists(X, C, quantize_dp)
             probes = np.argsort(d, axis=1, kind="stable")[:, :eff_probe]  # ties → low cid
             out = batch[cols].iloc[np.repeat(np.arange(len(batch)), eff_probe)].copy()
@@ -144,7 +143,6 @@ def ivf_topk(
     n_centroids: int = 16,
     n_probe: int = 4,
     k: int = 10,
-    sample_size: int = 4096,
     seed: int = 42,
     quantize_dp: int | None = None,
     include_scanned: bool = False,
@@ -157,7 +155,7 @@ def ivf_topk(
     cosines this query evaluated (probed-bucket population), the scan
     budget its recall is bought with.
     """
-    centers = train_centroids(embeddings, n_centroids, sample_size, seed)
+    centers = train_centroids(embeddings, n_centroids, seed=seed)
     assigned = assign_buckets(embeddings, centers, quantize_dp=quantize_dp)
     qdf = probe_buckets_df(
         queries.select("query_vec_id", "query_embedding"),

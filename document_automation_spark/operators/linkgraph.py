@@ -30,15 +30,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _lossy_html_str(html_col: str, html_is_binary: bool) -> Column:
-    """Lossy payload decode: non-UTF-8 payloads (PDF bytes, junk) must
-    yield "no matches", never throw (``F.decode`` raises
+def _lossy_html_str(html_is_binary: bool) -> Column:
+    """Lossy decode of the ``html`` payload: non-UTF-8 payloads (PDF bytes,
+    junk) must yield "no matches", never throw (``F.decode`` raises
     MALFORMED_CHARACTER_CODING under ANSI; cast + ``make_valid_utf8``
     substitutes U+FFFD instead)."""
     return (
-        F.expr(f"make_valid_utf8(cast({html_col} as string))")
+        F.expr("make_valid_utf8(cast(html as string))")
         if html_is_binary
-        else F.col(html_col).cast("string")
+        else F.col("html").cast("string")
     )
 
 
@@ -72,19 +72,17 @@ def pagerank(
     edges: DataFrame,
     n_iters: int = 5,
     damping: float = 0.85,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """Damped PageRank with uniform dangling-mass redistribution.
 
-    ``edges`` is a distinct directed edge list (duplicate edges would
+    ``edges`` is a distinct directed ``(src, dst)`` edge list (duplicate edges would
     weight contributions — callers dedup if that's not intended).
     Returns ``(node, rank)`` with ranks summing to 1 (up to the 12-dp
     per-iteration rounding).  Self-loops count as ordinary edges.
     """
     if n_iters < 0:
         raise ValueError(f"n_iters must be >= 0, got {n_iters}")
-    src, dst = F.col(src_col), F.col(dst_col)
+    src, dst = F.col("src"), F.col("dst")
     nodes = (
         edges.select(src.alias("node"))
         .union(edges.select(dst.alias("node")))
@@ -132,14 +130,9 @@ def pagerank(
     return ranks
 
 
-def host_link_edges(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-    html_is_binary: bool = True,
-) -> DataFrame:
-    """Distinct host→host hyperlink edges straight from the pages table —
-    the crawl's own link graph.
+def host_link_edges(pages: DataFrame) -> DataFrame:
+    """Distinct host→host hyperlink edges straight from the pages table's
+    ``url`` and binary ``html`` columns — the crawl's own link graph.
 
     Entirely JVM-side (no Python in the path): decode the payload,
     ``regexp_extract_all`` the anchor hrefs, explode, resolve
@@ -156,11 +149,10 @@ def host_link_edges(
     """
     from document_automation_spark.operators.domains import NO_HOST, host_col
 
-    html_str = _lossy_html_str(html_col, html_is_binary)
     exploded = pages.select(
-        host_col(url_col).alias("src"),
+        host_col("url").alias("src"),
         F.explode(
-            F.regexp_extract_all(html_str, F.lit('href="([^"]+)"'), 1)
+            F.regexp_extract_all(_lossy_html_str(True), F.lit('href="([^"]+)"'), 1)
         ).alias("href"),
     )
     dst = _href_dst_host(F.col("href"), F.col("src"))
@@ -201,11 +193,7 @@ honest boundary a regex can defend; a DOM pass is the kernel's job."""
 
 
 def anchor_text_terms(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-    html_is_binary: bool = True,
-    min_refs: int = 1,
+    pages: DataFrame, html_is_binary: bool = True, min_refs: int = 1
 ) -> DataFrame:
     """Per-host ANCHOR-TEXT term aggregation — the description other pages
     give a host (the classic search/quality signal: anchor text is
@@ -236,9 +224,9 @@ def anchor_text_terms(
     """
     from document_automation_spark.operators.domains import NO_HOST, host_col
 
-    html_str = _lossy_html_str(html_col, html_is_binary)
+    html_str = _lossy_html_str(html_is_binary)
     pairs = pages.select(
-        host_col(url_col).alias("src"),
+        host_col("url").alias("src"),
         F.explode(
             F.zip_with(
                 F.regexp_extract_all(html_str, F.lit(ANCHOR_RE), 1),

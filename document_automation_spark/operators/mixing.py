@@ -53,7 +53,6 @@ def temperature_rates(
     alpha: float,
     target_rows: int,
     cap_at_one: bool = True,
-    weight_col: str | None = None,
 ) -> DataFrame:
     """Per-group acceptance rates for temperature-``alpha`` resampling.
 
@@ -64,17 +63,8 @@ def temperature_rates(
     a groups-sized self-join — the corpus itself is touched once,
     projected to the group column only.  Rates are rounded to 6 dp
     (cross-engine ``pow`` parity; see module docstring).
-
-    ``weight_col`` switches the group-size measure from row counts to a
-    column sum (e.g. token counts): production mixes weight languages by
-    TOKENS, not documents, so a verbose group can't dominate by document
-    count.  ``n_group`` then holds the group's total weight; the per-row
-    keep/repeat decision is unchanged (row-local), so the expected
-    SAMPLED ROW count per group is ``target_rows·q_g`` with q over
-    weight shares.
     """
-    size = F.count("*") if weight_col is None else F.sum(weight_col)
-    counts = documents.groupBy(group_col).agg(size.cast("long").alias("n_group"))
+    counts = documents.groupBy(group_col).agg(F.count("*").cast("long").alias("n_group"))
     # q_g = (n_g/N)^alpha / Σ_h (n_h/N)^alpha ;  N cancels out of the ratio
     weighted = counts.withColumn("w", F.pow(F.col("n_group").cast("double"), alpha))
     total_w = weighted.agg(F.sum("w").alias("tw"))
@@ -93,24 +83,19 @@ def temperature_resample(
     group_col: str = "lang",
     alpha: float = 0.5,
     target_rows: int = 250,
-    id_col: str = "doc_id",
-    weight_col: str | None = None,
 ) -> DataFrame:
-    """Keep each row iff ``u(id) < rate(group)`` — flattened group mix.
+    """Keep each row iff ``u(doc_id) < rate(group)`` — flattened group mix.
 
-    Output: ``(id_col, group_col, rate)`` for the surviving rows.  The
+    Output: ``(doc_id, group_col, rate)`` for the surviving rows.  The
     corpus-side plan is scan → broadcast-join a tiny rate table → filter:
-    zero corpus shuffles, safe at any scale.  ``weight_col`` measures
-    group sizes by a column sum (tokens) instead of row counts.
+    zero corpus shuffles, safe at any scale.
     """
-    rates = temperature_rates(
-        documents, group_col, alpha, target_rows, weight_col=weight_col
-    )
+    rates = temperature_rates(documents, group_col, alpha, target_rows)
     return (
-        documents.select(id_col, group_col, uniform_hash_col(id_col))
+        documents.select("doc_id", group_col, uniform_hash_col())
         .join(F.broadcast(rates.select(group_col, "rate")), group_col)
         .where(F.col("u") < F.col("rate"))
-        .select(id_col, group_col, "rate")
+        .select("doc_id", group_col, "rate")
     )
 
 
@@ -119,33 +104,29 @@ def upsample_with_repeats(
     group_col: str = "lang",
     alpha: float = 0.3,
     target_rows: int = 600,
-    id_col: str = "doc_id",
-    weight_col: str | None = None,
 ) -> DataFrame:
     """Temperature mixing with UPsampling — the half :func:`temperature_
     resample` can't express: when a flattened group's share calls for more
     rows than it has (rate > 1), its documents repeat (what XLM-R/mT5
     actually do for low-resource languages).
 
-    Each row emits ``floor(rate)`` copies plus one more iff ``u(id) <
+    Each row emits ``floor(rate)`` copies plus one more iff ``u(doc_id) <
     frac(rate)`` — deterministic, expectation exactly ``rate`` per row.
-    Output: one row per copy ``(id_col, group_col, copy_idx, rate)``.
+    Output: one row per copy ``(doc_id, group_col, copy_idx, rate)``.
     Plan shape is identical to the downsampling path (broadcast rate
     table + row-local explode): zero corpus shuffles.
     """
-    rates = temperature_rates(
-        documents, group_col, alpha, target_rows, cap_at_one=False, weight_col=weight_col
-    )
+    rates = temperature_rates(documents, group_col, alpha, target_rows, cap_at_one=False)
     base = F.floor(F.col("rate")).cast("long")
     frac = F.col("rate") - base
     n_copies = base + F.when(F.col("u") < frac, F.lit(1)).otherwise(F.lit(0))
     return (
-        documents.select(id_col, group_col, uniform_hash_col(id_col))
+        documents.select("doc_id", group_col, uniform_hash_col())
         .join(F.broadcast(rates.select(group_col, "rate")), group_col)
         .withColumn("n_copies", n_copies)
         .where(F.col("n_copies") > 0)
         .select(
-            id_col,
+            "doc_id",
             group_col,
             F.explode(F.sequence(F.lit(0).cast("long"), F.col("n_copies") - 1)).alias(
                 "copy_idx"
@@ -159,11 +140,10 @@ def stratified_quota_sample(
     documents: DataFrame,
     group_col: str = "lang",
     quota: int = 40,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Exactly ``min(quota, n_group)`` rows per group, by hash rank.
 
-    Output: ``(id_col, group_col, sample_rank)``; rank is the 1-based
+    Output: ``(doc_id, group_col, sample_rank)``; rank is the 1-based
     position in the group's hash order (ties broken by id — md5 draws can
     collide in principle, never silently reorder).  Costs one per-group
     window; intended for group columns of small cardinality (languages,
@@ -171,10 +151,10 @@ def stratified_quota_sample(
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(group_col).orderBy(F.col("u"), F.col(id_col))
+    w = Window.partitionBy(group_col).orderBy(F.col("u"), F.col("doc_id"))
     return (
-        documents.select(id_col, group_col, uniform_hash_col(id_col))
+        documents.select("doc_id", group_col, uniform_hash_col())
         .withColumn("sample_rank", F.row_number().over(w))
         .where(F.col("sample_rank") <= quota)
-        .select(id_col, group_col, F.col("sample_rank").cast("long"))
+        .select("doc_id", group_col, F.col("sample_rank").cast("long"))
     )

@@ -101,46 +101,48 @@ def crop_box(width: int, height: int) -> Tuple[int, int, int, int]:
     return (0, int(height * 0.05), int(width * 0.70), int(0.9 * height))
 
 
-def resize_spec(width: int, height: int, target_long_side: int = 256) -> Tuple[int, int]:
-    """Aspect-preserving resize target (int truncation, deterministic).
+def resize_spec(width: int, height: int) -> Tuple[int, int]:
+    """Aspect-preserving resize target, long side 256 (int truncation,
+    deterministic).
 
     The pixel op itself needs PIL — this computes the exact output shape
     the real resizer would produce, so downstream schema/logic is testable."""
     long_side = max(width, height)
-    if long_side <= target_long_side:
+    if long_side <= 256:
         return width, height
-    scale = target_long_side / long_side
+    scale = 256 / long_side
     return max(1, int(width * scale)), max(1, int(height * scale))
 
 
-def frame_sample_offsets(n_bytes: int, bytes_per_frame: int = 4096, max_frames: int = 8) -> list:
-    """Evenly-spaced frame byte-offsets for a video-ish payload.
+def frame_sample_offsets(n_bytes: int) -> list:
+    """Evenly-spaced byte-offsets of up to 8 4096-byte frames of a
+    video-ish payload.
 
     Deterministic plumbing for the frame-sample stage: real decoding would
     seek these offsets with ffmpeg; the offset math (even spacing over the
     estimated frame count, first frame always included) is the real part."""
-    n_frames = max(1, n_bytes // bytes_per_frame)
-    k = min(max_frames, n_frames)
+    n_frames = max(1, n_bytes // 4096)
+    k = min(8, n_frames)
     if k == 1:
         return [0]
     step = (n_frames - 1) / (k - 1)
-    return [int(round(i * step)) * bytes_per_frame for i in range(k)]
+    return [int(round(i * step)) * 4096 for i in range(k)]
 
 
-def feature_vector(payload: bytes, dim: int = 8) -> list:
-    """Deterministic byte-level feature sketch (per-bucket byte histogram,
+def feature_vector(payload: bytes) -> list:
+    """Deterministic byte-level feature sketch (8-bucket byte histogram,
     L1-normalized) — the model-free stand-in for an image/audio embedding;
     swap for a real encoder behind the same signature."""
-    counts = [0] * dim
+    counts = [0] * 8
     for b in payload:
-        counts[b % dim] += 1
+        counts[b % 8] += 1
     total = sum(counts) or 1
     return [round(c / total, 6) for c in counts]
 
 
-def pixel_feature_vector(payload: bytes, dim: int = 8) -> list:
+def pixel_feature_vector(payload: bytes) -> list:
     """REAL pixel features for decodable formats (PNG / baseline JPEG /
-    GIF): integer-luma histogram over ``dim`` equal brightness bands,
+    GIF): integer-luma histogram over 8 equal brightness bands,
     L1-normalized — a true image statistic (invariant to the compressed
     byte layout), where :func:`feature_vector` only sketches the bytes.
     Raises ValueError for any payload the decoders reject — including
@@ -173,10 +175,9 @@ def pixel_feature_vector(payload: bytes, dim: int = 8) -> list:
     elif ch == 2:  # gray+alpha
         px, ch = bytes(px[0::2]), 1
     luma = grayscale(w, h, ch, px)
-    counts = [0] * dim
-    band = 256 // dim
+    counts = [0] * 8
     for v in luma:
-        counts[min(dim - 1, v // band)] += 1
+        counts[min(7, v // 32)] += 1
     total = sum(counts) or 1
     return [round(c / total, 6) for c in counts]
 

@@ -28,11 +28,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def whitespace_token_count(text_col: str = "text") -> "F.Column":
-    """The repo's canonical whitespace token count (same expression as
+def whitespace_token_count() -> "F.Column":
+    """The repo's canonical whitespace token count of ``text`` (same expression as
     ``text_analysis.token_stats``'s ``n_tokens_ws`` — kept formula-identical
     so packing and token accounting can never disagree)."""
-    t = F.col(text_col)
+    t = F.col("text")
     return (
         F.when(F.length(F.trim(t)) == 0, F.lit(0))
         .otherwise(F.size(F.split(F.trim(t), r"\s+")))
@@ -46,12 +46,11 @@ def pack_sequences(
     shard_col: str = "source",
     id_col: str = "doc_id",
     tokens_col: str | None = None,
-    text_col: str = "text",
 ) -> DataFrame:
     """Segment map for concat-chop packing at ``seq_len`` tokens per chunk.
 
     ``tokens_col`` names a precomputed token-count column; when ``None``
-    the whitespace count is derived from ``text_col`` in the same scan.
+    the whitespace count is derived from ``text`` in the same scan.
     Zero-token documents contribute nothing to the stream and are dropped
     (documented rule — they'd otherwise emit empty segments).
 
@@ -69,7 +68,7 @@ def pack_sequences(
     n_tok = (
         F.col(tokens_col).cast("long")
         if tokens_col
-        else whitespace_token_count(text_col)
+        else whitespace_token_count()
     )
     sized = docs.select(
         F.col(shard_col), F.col(id_col), n_tok.alias("n_tokens")

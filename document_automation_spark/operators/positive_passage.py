@@ -34,17 +34,17 @@ _SPLIT_SCHEMA = T.StructType(
 )
 
 
-def explode_passages(documents: DataFrame, max_len: int = 500, overlap: int = 10,
-                     min_chars: int = 5) -> DataFrame:
-    """documents (doc_id, text) → one row per split window."""
+def explode_passages(documents: DataFrame) -> DataFrame:
+    """documents (doc_id, text) → one row per split window
+    (:func:`kernels.textproc.split_passages` at its defaults: 500-char
+    windows, 10-char overlap, 5-char minimum)."""
     import pandas as pd
 
     def split_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for batch in batches:
             rows = []
             for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                windows = split_passages(text, max_len=max_len, overlap=overlap,
-                                         min_chars=min_chars)
+                windows = split_passages(text)
                 for p in windows:
                     rows.append((doc_id, p.passage_idx, p.content, len(windows)))
             yield pd.DataFrame(rows, columns=["doc_id", "passage_idx", "passage", "n_passages"])
@@ -52,13 +52,7 @@ def explode_passages(documents: DataFrame, max_len: int = 500, overlap: int = 10
     return documents.select("doc_id", "text").mapInPandas(split_batches, _SPLIT_SCHEMA)
 
 
-def find_positive_passages(
-    documents: DataFrame,
-    qa: DataFrame,
-    max_len: int = 500,
-    overlap: int = 10,
-    min_chars: int = 5,
-) -> DataFrame:
+def find_positive_passages(documents: DataFrame, qa: DataFrame) -> DataFrame:
     """Per (query, document) pick the positive passage.
 
     ``qa``: (query_id, doc_id, answer).  Returns (query_id, doc_id,
@@ -68,7 +62,7 @@ def find_positive_passages(
     ``size(array_intersect(distinct_chars(passage), distinct_chars(answer)))``
     — identical to Python ``len(set(p) & set(answer))``.
     """
-    passages = explode_passages(documents, max_len, overlap, min_chars)
+    passages = explode_passages(documents)
     joined = passages.join(qa, "doc_id")
 
     def chars(col):

@@ -36,19 +36,18 @@ from pyspark.sql import functions as F
 # vocabulary sits far below 65k buckets, so the extra 4× width bought
 # nothing but bytes: held-out separation is identical at both widths
 # (pytest gates pass at 2^14), and the full bench row measured 8.3 s →
-# 4.5 s.  Callers with larger reference corpora pass n_features
-# explicitly.
+# 4.5 s.
 DEFAULT_N_FEATURES = 1 << 16
 
 
-def _feature_pipeline(text_col: str, n_features: int):
+def _feature_pipeline():
     from pyspark.ml import Pipeline
     from pyspark.ml.feature import HashingTF, NGram, RegexTokenizer, SQLTransformer
 
     return Pipeline(
         stages=[
             RegexTokenizer(
-                inputCol=text_col, outputCol="qc_words", pattern=r"\W+", toLowercase=True
+                inputCol="text", outputCol="qc_words", pattern=r"\W+", toLowercase=True
             ),
             NGram(n=2, inputCol="qc_words", outputCol="qc_bigrams"),
             # one hashing space over unigrams + bigrams (fasttext-style)
@@ -56,25 +55,18 @@ def _feature_pipeline(text_col: str, n_features: int):
                 statement="SELECT *, concat(qc_words, qc_bigrams) AS qc_tokens FROM __THIS__"
             ),
             HashingTF(
-                inputCol="qc_tokens", outputCol="qc_features", numFeatures=n_features
+                inputCol="qc_tokens", outputCol="qc_features", numFeatures=DEFAULT_N_FEATURES
             ),
         ]
     )
 
 
-def train_quality_classifier(
-    positive: DataFrame,
-    negative: DataFrame,
-    text_col: str = "text",
-    n_features: int = DEFAULT_N_FEATURES,
-    reg_param: float = 0.01,
-    max_iter: int = 50,
-    tol: float = 1e-4,
-):
-    """Fit the reference-vs-crawl classifier.
+def train_quality_classifier(positive: DataFrame, negative: DataFrame):
+    """Fit the reference-vs-crawl classifier: L2-regularized (0.01)
+    LogisticRegression, at most 50 L-BFGS iterations.
 
     ``positive`` = trusted reference docs (label 1), ``negative`` = raw
-    crawl sample (label 0); both only need ``text_col``.  Returns a
+    crawl sample (label 0); both only need ``text``.  Returns a
     fitted PipelineModel whose last stage is the LogisticRegression —
     pass it to :func:`score_quality`.
     """
@@ -88,8 +80,8 @@ def train_quality_classifier(
     # 12.5 s at 32 partitions on the sf0.1 bench).  The sample is small
     # by construction; iteration overhead dominates, not featurization.
     labelled = positive.select(
-        F.col(text_col), F.lit(1.0).alias("qc_label")
-    ).unionByName(negative.select(F.col(text_col), F.lit(0.0).alias("qc_label")))
+        F.col("text"), F.lit(1.0).alias("qc_label")
+    ).unionByName(negative.select(F.col("text"), F.lit(0.0).alias("qc_label")))
     # The inverse lever, applied only when the sample's scan is ALREADY
     # under-split (< cluster parallelism — i.e., a small sample): coalesce
     # the persisted instances down so the ~maxIter treeAggregate jobs pay
@@ -108,7 +100,7 @@ def train_quality_classifier(
     except Exception:
         pass
     pipeline = Pipeline(
-        stages=_feature_pipeline(text_col, n_features).getStages()
+        stages=_feature_pipeline().getStages()
         + [
             LogisticRegression(
                 featuresCol="qc_features",
@@ -116,8 +108,8 @@ def train_quality_classifier(
                 predictionCol="qc_prediction",
                 probabilityCol="qc_probability",
                 rawPredictionCol="qc_raw",
-                regParam=reg_param,
-                maxIter=max_iter,
+                regParam=0.01,
+                maxIter=50,
                 # every L-BFGS iteration is one cluster-wide treeAggregate
                 # job; at the default 1e-6 the last ~10 iterations move the
                 # objective by < 5e-8 (measured: 0.299814816 vs
@@ -125,7 +117,7 @@ def train_quality_classifier(
                 # probabilistic filter's scores stable to ~1e-6 while
                 # cutting the wasted tail (guide §1.2: don't compute things
                 # you throw away).
-                tol=tol,
+                tol=1e-4,
             )
         ]
     )
@@ -144,13 +136,11 @@ def train_quality_classifier(
 def score_quality(
     docs: DataFrame,
     model,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     keep_all: bool = False,
 ) -> DataFrame:
     """P(reference | doc) per document — map-only MLlib transform.
 
-    Output: ``(id_col, quality_score)`` with the score rounded to 9 dp
+    Output: ``(doc_id, quality_score)`` with the score rounded to 9 dp
     (the repo's double-output convention); ``keep_all=True`` instead
     returns ALL input columns + ``quality_score`` in the same map pass
     (what a pipeline stage wants — scoring inline on the corpus scan, no
@@ -168,17 +158,16 @@ def score_quality(
     if keep_all:
         scored = model.transform(docs)
         return scored.select(*docs.columns, prob)
-    scored = model.transform(docs.select(id_col, text_col))
-    return scored.select(id_col, prob)
+    scored = model.transform(docs.select("doc_id", "text"))
+    return scored.select("doc_id", prob)
 
 
 def pareto_importance_filter(
     scored: DataFrame,
     alpha: float = 9.0,
-    score_col: str = "quality_score",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """GPT-3 Appendix A's keep rule: ``np.random.pareto(alpha) > 1 - score``.
+    """GPT-3 Appendix A's keep rule: ``np.random.pareto(alpha) > 1 -
+    quality_score``.
 
     The pareto draw is the Lomax inverse CDF ``u^(-1/alpha) - 1`` over the
     engine-wide deterministic md5 uniform (so re-runs keep the same docs
@@ -189,6 +178,6 @@ def pareto_importance_filter(
     """
     from document_automation_spark.operators.mixing import uniform_hash_col
 
-    u = uniform_hash_col(id_col)
+    u = uniform_hash_col("doc_id")
     pareto = F.pow(u, F.lit(-1.0 / alpha)) - F.lit(1.0)
-    return scored.where(pareto > (F.lit(1.0) - F.col(score_col)))
+    return scored.where(pareto > (F.lit(1.0) - F.col("quality_score")))

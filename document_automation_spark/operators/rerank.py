@@ -36,13 +36,14 @@ _TOKEN_CACHE_MAX = 65536
 _MICRO2 = 1e12
 
 
-def token_matrix(text: str, dim: int = 16, max_tokens: int = 128) -> np.ndarray:
-    """(n_tokens, dim) int64 matrix of per-token embeddings in micro-units.
+def token_matrix(text: str, dim: int = 16) -> np.ndarray:
+    """(n_tokens, dim) int64 matrix of per-token embeddings in micro-units,
+    over the first 128 whitespace tokens.
 
     Integer matrices make the MaxSim matmul EXACT (no BLAS float-summation
     order), so the distributed scorer, this kernel, and the DuckDB oracle
     agree bit-for-bit."""
-    tokens = text.lower().split()[:max_tokens]
+    tokens = text.lower().split()[:128]
     if not tokens:
         return np.zeros((1, dim), dtype=np.int64)
     return np.array([embed_text_micro(t, dim) for t in tokens], dtype=np.int64)
@@ -62,12 +63,8 @@ def maxsim_score(query_text: str, doc_text: str, dim: int = 16) -> float:
     return maxsim_score_micro2(query_text, doc_text, dim) / _MICRO2
 
 
-def maxsim_rerank(
-    candidates: DataFrame,
-    k: int = 10,
-    dim: int = 16,
-) -> DataFrame:
-    """Rerank candidate pairs by MaxSim.
+def maxsim_rerank(candidates: DataFrame, k: int = 10) -> DataFrame:
+    """Rerank candidate pairs by MaxSim over 16-dim token embeddings.
 
     ``candidates``: (query_id, query_text, doc_id, doc_text).
     Returns (query_id, doc_id, maxsim:double, rank) with rank ≤ k.
@@ -83,7 +80,7 @@ def maxsim_rerank(
     def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
             scores: List[float] = [
-                maxsim_score_micro2(q, d, dim) / _MICRO2
+                maxsim_score_micro2(q, d) / _MICRO2
                 for q, d in zip(batch["query_text"], batch["doc_text"])
             ]
             yield pd.DataFrame(

@@ -89,9 +89,7 @@ def _fold_lines(lines: F.Column) -> F.Column:
     return F.aggregate(lines, empty, step, lambda acc: acc["rules"])
 
 
-def parse_robots(
-    robots: DataFrame, host_col: str = "host", txt_col: str = "robots_txt"
-) -> DataFrame:
+def parse_robots(robots: DataFrame) -> DataFrame:
     """(host, robots_txt) → (host, agent, rule 'A'|'D', path_prefix).
 
     One JVM fold per file (see module docstring), then one explode —
@@ -102,8 +100,8 @@ def parse_robots(
         # hosts are case-insensitive; robots_gate joins on the page's
         # LOWERCASED host, so normalize here or a 'Example.COM' snapshot
         # row would silently never match (fail open)
-        F.lower(F.col(host_col)).alias("host"),
-        F.explode(_fold_lines(F.split(F.col(txt_col), "\n"))).alias("_r"),
+        F.lower(F.col("host")).alias("host"),
+        F.explode(_fold_lines(F.split(F.col("robots_txt"), "\n"))).alias("_r"),
     )
     part = lambda i: F.split(F.col("_r"), "\t")[i]  # noqa: E731
     return rules.select(
@@ -118,10 +116,9 @@ def robots_gate(
     pages: DataFrame,
     rules: DataFrame,
     agent: str,
-    url_col: str = "url",
 ) -> DataFrame:
     """Append ``allowed`` (bool) to ``pages`` under Google-REP precedence
-    for ``agent``.
+    for ``agent``, matching each page's ``url``.
 
     Plan shape: rules collapse to ONE row per host (the matched group's
     rules as a sorted array — exact-agent group wins over ``*`` via a
@@ -157,12 +154,12 @@ def robots_gate(
     # Spark's parser returns '' there (and NULL on unparseable input) —
     # both must normalize to '/' or a host-wide 'Disallow: /' would fail
     # to block its own homepage ('' does not start with '/').
-    raw_path = F.try_parse_url(F.col(url_col), F.lit("PATH"))
+    raw_path = F.try_parse_url(F.col("url"), F.lit("PATH"))
     path = F.when(
         raw_path.isNull() | (raw_path == ""), F.lit("/")
     ).otherwise(raw_path)
     joined = pages.join(
-        per_host, _host_of(url_col) == F.col("host"), "left"
+        per_host, _host_of("url") == F.col("host"), "left"
     ).drop("host")
     best = F.aggregate(
         F.col("_rules"),

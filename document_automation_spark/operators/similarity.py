@@ -144,8 +144,6 @@ def lsh_bucketed_topk(
     queries: DataFrame,
     k: int = 10,
     n_planes: int = 4,
-    dim: int = 64,
-    seed: int = 42,
     probe_bits: int = 0,
     n_tables: int = 1,
     include_scanned: bool = False,
@@ -173,7 +171,8 @@ def lsh_bucketed_topk(
     re-scanned nor re-bucketed: recall rises at the cost of scanning
     ~(1 + n_planes·…)/2^planes of the corpus instead of 1/2^planes.
     ``n_tables`` = independent hash tables (the OTHER classic recall
-    lever): each table uses its own seed-derived hyperplanes, candidates
+    lever): table ``t`` uses its own hyperplanes over the 64 embedding
+    dims (seed ``42 + t``), candidates
     union across tables and de-duplicate before ranking.  Tables
     multiply the candidate-scan budget roughly linearly but draw
     INDEPENDENT bucket boundaries, so they recover neighbours a single
@@ -191,7 +190,7 @@ def lsh_bucketed_topk(
     )
     per_table = []
     for t in range(n_tables):
-        planes = hyperplanes(dim, n_planes, seed + t)
+        planes = hyperplanes(64, n_planes, 42 + t)
         corpus_b = bucket_ids(embeddings, planes)
         queries_b = bucket_ids(q, planes).select(
             "query_vec_id", F.col("embedding").alias("query_embedding"), "bucket"
@@ -234,10 +233,9 @@ def lsh_bucketed_topk(
     )
 
 
-def embedding_near_dup_pairs(
-    embeddings: DataFrame, threshold: float = 0.95, block_col: str = "label"
-) -> DataFrame:
-    """Cosine near-dup pairs within a blocking key (embedding dedup leg).
+def embedding_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95) -> DataFrame:
+    """Cosine near-dup pairs within the ``label`` blocking key (embedding
+    dedup leg).
 
     Norms precomputed once per vector (not once per PAIR — a blocked
     self-join visits each vector |block| times)."""
@@ -246,12 +244,12 @@ def embedding_near_dup_pairs(
     # scan-side parallelism is what spreads the pair-scoring work
     with_norm = fan_out(embeddings).select(
         "vec_id",
-        block_col,
+        "label",
         "embedding",
         _norm(F.col("embedding").cast("array<double>")).alias("nrm"),
     )
     a, b = with_norm.alias("a"), with_norm.alias("b")
-    pairs = a.join(b, on=block_col).filter(F.col("a.vec_id") < F.col("b.vec_id"))
+    pairs = a.join(b, on="label").filter(F.col("a.vec_id") < F.col("b.vec_id"))
     dot = _dot(
         F.col("a.embedding").cast("array<double>"), F.col("b.embedding").cast("array<double>")
     )

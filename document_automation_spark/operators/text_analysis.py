@@ -21,10 +21,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from document_automation_spark.kernels.fingerprint import ROLLING_BASE, ROLLING_MOD
 from document_automation_spark.partitioning import fan_out
 
-ROLLING_BASE = 31
-ROLLING_MOD = 140_737_488_355_213  # ≈2^47: intermediates stay < 2^53
 
 
 def _fingerprint_expr(text_col: str = "text"):
@@ -150,14 +149,14 @@ def language_id_kernel(documents: DataFrame) -> DataFrame:
     )
 
 
-def line_assembly_table(documents: DataFrame, max_tokens: int = 24) -> DataFrame:
+def line_assembly_table(documents: DataFrame) -> DataFrame:
     """Drive the OCR line-assembly kernels (K5/K6/F7) distributively over a
     crafted per-document word stream — the micro-seat that makes their
     quirks driver-visible (round-5 verdict #6; through round 4 they were
     reachable only inside the extraction golden).
 
-    Crafted input, derivable identically in SQL: the doc's first
-    ``max_tokens`` space-split tokens, token ``i`` carrying line_num=i//3,
+    Crafted input, derivable identically in SQL: the doc's first 24
+    space-split tokens, token ``i`` carrying line_num=i//3,
     block_num=i//7; every token with ``(doc_id*7 + i) % 13 == 0`` gets an
     ad marker appended (so the ad filter provably fires).  Three kernel
     behaviors then run per doc inside one Arrow batch:
@@ -192,7 +191,7 @@ def line_assembly_table(documents: DataFrame, max_tokens: int = 24) -> DataFrame
         for batch in it:
             rows = []
             for doc_id, text in zip(batch["doc_id"], batch["text"]):
-                toks = (text or "").split(" ")[:max_tokens]
+                toks = (text or "").split(" ")[:24]
                 crafted = [
                     (
                         w + "广告" if (int(doc_id) * 7 + i) % 13 == 0 else w,

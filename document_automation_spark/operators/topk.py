@@ -24,9 +24,9 @@ def topk_per_group(
     order_col: str,
     k: int,
     tiebreak_col: str,
-    rank_name: str = "rank",
 ) -> DataFrame:
-    """Keep the k highest-``order_col`` rows per group, 1-based rank column.
+    """Keep the k highest-``order_col`` rows per group, 1-based ``rank``
+    column.
 
     ``desc_nulls_last`` reproduces the None→−inf sort; ``tiebreak_col``
     ascending makes the order total (distributed-deterministic — a Python
@@ -36,8 +36,8 @@ def topk_per_group(
         F.desc_nulls_last(order_col), F.asc(tiebreak_col)
     )
     return (
-        df.withColumn(rank_name, F.row_number().over(w))
-        .filter(F.col(rank_name) <= k)
+        df.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
     )
 
 

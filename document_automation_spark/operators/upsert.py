@@ -28,23 +28,23 @@ def merge_documents(
     existing: DataFrame,
     incoming: DataFrame,
     policy: str = "skip",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Merge ``incoming`` into ``existing`` under a duplicate policy.
+    """Merge ``incoming`` into ``existing`` by ``doc_id`` under a duplicate
+    policy.
 
     * ``skip``      — existing wins: existing ∪ (incoming ⟕̸ existing)
     * ``overwrite`` — incoming wins: incoming ∪ (existing ⟕̸ incoming)
     * ``fail``      — raise if any id collides (count is one agg job)
     """
     if policy == "skip":
-        fresh = incoming.join(existing.select(id_col), id_col, "left_anti")
+        fresh = incoming.join(existing.select("doc_id"), "doc_id", "left_anti")
         return existing.unionByName(fresh)
     if policy == "overwrite":
-        kept = existing.join(incoming.select(id_col), id_col, "left_anti")
+        kept = existing.join(incoming.select("doc_id"), "doc_id", "left_anti")
         return incoming.unionByName(kept)
     if policy == "fail":
-        n_dups = incoming.join(existing.select(id_col), id_col, "left_semi").count()
+        n_dups = incoming.join(existing.select("doc_id"), "doc_id", "left_semi").count()
         if n_dups:
-            raise DuplicateDocumentError(f"{n_dups} duplicate {id_col} values")
+            raise DuplicateDocumentError(f"{n_dups} duplicate doc_id values")
         return existing.unionByName(incoming)
     raise ValueError(f"unknown duplicate policy: {policy}")

@@ -99,13 +99,12 @@ def _canonical_url_full(url: Column) -> Column:
 
 def dedup_by_url(
     pages: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
     shuffle_payloads: bool = True,
     cache_registry: list | None = None,
 ) -> DataFrame:
-    """One row per canonical url — the NEWEST crawl wins (re-crawls
-    supersede; ties broken by the raw url string for determinism).
+    """One row per canonical ``url`` — the NEWEST crawl (``warc_ts``) wins
+    (re-crawls supersede; ties broken by the raw url string for
+    determinism).
 
     ``shuffle_payloads=True`` (default): the whole row — including the
     html payload — shuffles on the canonical-url hash; one exchange, the
@@ -131,10 +130,10 @@ def dedup_by_url(
     """
     from pyspark.sql import Window
 
-    canon = canonical_url(F.col(url_col))
+    canon = canonical_url(F.col("url"))
     w = (
         Window.partitionBy("canonical_url")
-        .orderBy(F.desc(ts_col), F.asc(url_col))
+        .orderBy(F.desc("warc_ts"), F.asc("url"))
     )
     if shuffle_payloads:
         return (
@@ -152,7 +151,7 @@ def dedup_by_url(
     # and AQE broadcasts it, so the full corpus' keys are never window-
     # sorted.  (Measured: the full-corpus window + agg was ~3.4 s of the
     # 200k-page composed ingest; the pre-filtered path is ~1 s.)
-    keys = pages.select(url_col, ts_col).withColumn("canonical_url", canon)
+    keys = pages.select("url", "warc_ts").withColumn("canonical_url", canon)
     if cache_registry is not None:
         # the canonicalization expression is the narrow path's main CPU
         # cost and `keys` feeds BOTH the multi-count aggregate and the
@@ -183,10 +182,10 @@ def dedup_by_url(
     # so loop/notebook callers never accumulate pinned state they cannot
     # release.
     special = (
-        ranked.groupBy(url_col, ts_col)
+        ranked.groupBy("url", "warc_ts")
         .agg(F.min("_rn").alias("_mrn"), F.count(F.lit(1)).alias("_n"))
         .filter((F.col("_mrn") > 1) | (F.col("_n") > 1))
-        .select(url_col, ts_col, (F.col("_mrn") > 1).alias("_is_loser"))
+        .select("url", "warc_ts", (F.col("_mrn") > 1).alias("_is_loser"))
     )
     if cache_registry is not None:
         special = special.persist()
@@ -213,23 +212,23 @@ def dedup_by_url(
         # null-safe key equality: a null-ts row CAN be a loser (same
         # canonical as a ts-carrying crawl); plain equality never matches
         l, r = left.alias("_l"), keys.alias("_r")
-        cond = F.col(f"_l.{url_col}").eqNullSafe(F.col(f"_r.{url_col}")) & F.col(
-            f"_l.{ts_col}"
-        ).eqNullSafe(F.col(f"_r.{ts_col}"))
+        cond = F.col("_l.url").eqNullSafe(F.col("_r.url")) & F.col(
+            "_l.warc_ts"
+        ).eqNullSafe(F.col("_r.warc_ts"))
         return l.join(r, cond, how)
 
     # clean path (the overwhelming majority): ONE broadcast anti-join
     # against the whole key table (losers ∪ copy-keys partition it, so
     # dropping every special key at once is equivalent), map-only payloads
     clean = _key_join(
-        pages, special.select(url_col, ts_col), "left_anti"
+        pages, special.select("url", "warc_ts"), "left_anti"
     )
     # collapse physical copies of the surviving keys: only THESE rows'
     # payloads enter a shuffle; survivor is deterministic (row-hash order
     # — byte-identical copies are interchangeable, divergent payloads
     # resolve stably at any parallelism).  copy_keys is typically EMPTY:
     # AQE sees the empty broadcast side and prunes this branch's scan.
-    dup_w = Window.partitionBy(url_col, ts_col).orderBy(
+    dup_w = Window.partitionBy("url", "warc_ts").orderBy(
         F.xxhash64(*[F.col(c) for c in pages.columns])
     )
     dup_survivors = (

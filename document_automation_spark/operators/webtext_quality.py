@@ -21,7 +21,7 @@ heuristics cannot see:
   was designed precisely for MapReduce-style distributed LMs.
 * :func:`filter_by_quality` — the actionable gate over both: Gopher
   thresholds per rule (each overridable/disable-able via
-  :class:`QualityRules`), keep/drop (or annotate-only audit mode), and
+  :class:`QualityRules`), keep/drop, and
   per-rule drop counters that ride the caller's write as ``Observation``
   metrics; wired into the ingest CLI as ``--quality-filter``.
 
@@ -116,10 +116,9 @@ def _frac(num: "F.Column", den: "F.Column") -> "F.Column":
 # ---------------------------------------------------------------------------
 
 
-def repetition_features(
-    documents: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-document repetition/boilerplate features, all JVM expressions.
+def repetition_features(documents: DataFrame) -> DataFrame:
+    """Per-document repetition/boilerplate features of ``text``, keyed by
+    ``doc_id``, all JVM expressions.
 
     Output columns (fractions rounded to 6 dp):
 
@@ -154,16 +153,16 @@ def repetition_features(
     functions; together with binding the sorted arrays as attributes
     this measured 13× faster on 60-word documents).
     """
-    d, feats = _feature_frame(documents, text_col, [id_col])
-    return d.select(id_col, *[expr.alias(name) for name, expr in feats.items()])
+    d, feats = _feature_frame(documents, ["doc_id"])
+    return d.select("doc_id", *[expr.alias(name) for name, expr in feats.items()])
 
 
-def _feature_frame(documents: DataFrame, text_col: str, keep_cols: list):
+def _feature_frame(documents: DataFrame, keep_cols: list):
     """Shared core of :func:`repetition_features` and
     :func:`filter_by_quality`: binds the line/word/ngram arrays as
     columns, then returns ``(frame, ordered {feature name: expression})``
     over those attributes.  ``keep_cols`` are passed through untouched."""
-    text = F.col(text_col)
+    text = F.col("text")
     # the per-row HOF folds below are the whole cost and fuse with the
     # scan — spread an under-split input first (no-op at corpus scale)
     d = fan_out(documents).select(
@@ -387,18 +386,15 @@ def filter_by_quality(
     documents: DataFrame,
     rules: QualityRules = QualityRules(),
     lm: "BigramLM | None" = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    annotate_only: bool = False,
 ):
-    """Apply the repetition/boilerplate rules as a single zero-shuffle
-    gate; returns ``(kept, observation)``.
+    """Apply the repetition/boilerplate rules to ``text`` as a single
+    zero-shuffle gate; returns ``(kept, observation)``.
 
     Every rule evaluates as a JVM expression over the same bound feature
     frame :func:`repetition_features` uses, so the gate fuses into the
     scan — no second pass, no join (except the optional perplexity rule,
     which scores via :func:`score_with_bigram_lm` and joins the per-doc
-    ppl back on ``id_col``: one broadcast-LM pass + one id join, the
+    ppl back on ``doc_id``: one broadcast-LM pass + one id join, the
     price of a corpus-aggregate rule).
 
     ``observation`` is a Spark ``Observation`` that rides the caller's
@@ -406,15 +402,10 @@ def filter_by_quality(
     operators/curate.py — counters cost zero extra corpus passes):
     ``n_docs``, ``n_kept``, and one ``drop_<rule>`` counter per active
     rule (a doc failing several rules counts in each).
-
-    ``annotate_only=True`` skips the filter and returns EVERY row with
-    its ``violations`` array<string> — the audit/routing mode (send
-    violators to a quarantine sink, grade rule aggressiveness) — with
-    the same counters attached.
     """
     from pyspark.sql import Observation
 
-    d, feats = _feature_frame(documents, text_col, documents.columns)
+    d, feats = _feature_frame(documents, documents.columns)
 
     checks = [
         ("dup_line_frac", rules.max_dup_line_frac),
@@ -440,10 +431,8 @@ def filter_by_quality(
     if rules.max_ppl is not None:
         if lm is None:
             raise ValueError("max_ppl rule needs a trained BigramLM")
-        ppl = score_with_bigram_lm(
-            documents, lm, text_col=text_col, id_col=id_col
-        ).select(id_col, "ppl")
-        flagged = flagged.join(ppl, id_col, "left").select(
+        ppl = score_with_bigram_lm(documents, lm).select("doc_id", "ppl")
+        flagged = flagged.join(ppl, "doc_id", "left").select(
             *documents.columns,
             F.when(
                 F.col("ppl").isNotNull() & (F.col("ppl") > F.lit(rules.max_ppl)),
@@ -466,8 +455,6 @@ def filter_by_quality(
     ]
     obs = Observation("quality_filter")
     observed = flagged.observe(obs, *metrics)
-    if annotate_only:
-        return observed, obs
     return observed.filter(F.size("violations") == 0).drop("violations"), obs
 
 
@@ -478,17 +465,14 @@ def filter_by_quality(
 
 def corpus_datasheet(
     documents: DataFrame,
-    group_col: str = "lang",
-    rules: QualityRules = QualityRules(),
     lm: "BigramLM | None" = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     exact_percentiles: bool = False,
 ) -> DataFrame:
-    """Per-group corpus quality report — the "datasheet for a dataset"
+    """Per-language corpus quality report — the "datasheet for a dataset"
     table a corpus release ships (docs/tokens, token-length percentiles,
-    repetition profile, fraction that would fail the quality gate,
-    optional mean perplexity), one row per ``group_col`` value.
+    repetition profile, fraction that would fail the default
+    :class:`QualityRules` gate, optional mean perplexity), one row per
+    ``lang`` value, over the ``doc_id``/``text`` rows.
 
     Plan: the repetition features and the gate verdict evaluate in the
     same zero-shuffle expression frame the gate uses, so the whole
@@ -501,10 +485,9 @@ def corpus_datasheet(
     aggregated per group — one extra explode pass + id-join, the price
     of a corpus-aggregate column.
     """
-    keep = [group_col] + (
-        [id_col] if id_col != group_col and id_col in documents.columns else []
-    )
-    d, feats = _feature_frame(documents, text_col, keep)
+    rules = QualityRules()
+    keep = ["lang"] + (["doc_id"] if "doc_id" in documents.columns else [])
+    d, feats = _feature_frame(documents, keep)
     checks = [
         ("dup_line_frac", rules.max_dup_line_frac),
         ("dup_line_char_frac", rules.max_dup_line_char_frac),
@@ -522,8 +505,8 @@ def corpus_datasheet(
 
     n_tokens = F.size(F.col("_ws"))
     rows = d.select(
-        group_col,
-        *([id_col] if id_col in documents.columns and lm is not None else []),
+        "lang",
+        *(["doc_id"] if "doc_id" in documents.columns and lm is not None else []),
         n_tokens.alias("_nt"),
         would_drop.cast("double").alias("_drop"),
         feats["dup_line_frac"].alias("_dlf"),
@@ -531,10 +514,8 @@ def corpus_datasheet(
         feats["symbol_word_ratio"].alias("_swr"),
     )
     if lm is not None:
-        ppl = score_with_bigram_lm(
-            documents, lm, text_col=text_col, id_col=id_col
-        ).select(id_col, "ppl")
-        rows = rows.join(ppl, id_col, "left")
+        ppl = score_with_bigram_lm(documents, lm).select("doc_id", "ppl")
+        rows = rows.join(ppl, "doc_id", "left")
 
     pct = (
         (lambda c, p: F.expr(f"percentile({c}, {p})"))
@@ -553,12 +534,16 @@ def corpus_datasheet(
     ]
     if lm is not None:
         aggs.append(F.round(F.avg("ppl"), 4).alias("mean_ppl"))
-    return rows.groupBy(group_col).agg(*aggs)
+    return rows.groupBy("lang").agg(*aggs)
 
 
 # ---------------------------------------------------------------------------
 # CCNet-style bigram LM perplexity
 # ---------------------------------------------------------------------------
+
+
+# Stupid-Backoff factor α of score_with_bigram_lm (the oracle replays 0.4)
+BACKOFF_ALPHA = 0.4
 
 
 class BigramLM(NamedTuple):
@@ -572,11 +557,10 @@ class BigramLM(NamedTuple):
 
 def train_bigram_lm(
     corpus: DataFrame,
-    text_col: str = "text",
     min_count: int = 1,
     cache_registry: list | None = None,
 ) -> BigramLM:
-    """Fit bigram + unigram counts over ``corpus`` (the in-domain slice).
+    """Fit bigram + unigram counts over ``corpus.text`` (the in-domain slice).
 
     Two hash aggregations, each map-side partial-combined on a bounded
     string key — the exact shape Brants et al. 2007 distributed over
@@ -592,7 +576,7 @@ def train_bigram_lm(
     # dedup_by_url's contract)
     # tokenization fuses with the scan; fan an under-split corpus out
     # across the cluster first (no-op at real-corpus scale)
-    ws = fan_out(corpus).select(words_col(F.col(text_col)).alias("_ws"))
+    ws = fan_out(corpus).select(words_col(F.col("text")).alias("_ws"))
     uni = (
         ws.select(F.explode("_ws").alias("w"))
         .groupBy("w")
@@ -622,12 +606,10 @@ def train_bigram_lm(
 def score_with_bigram_lm(
     documents: DataFrame,
     lm: BigramLM,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    alpha: float = 0.4,
     broadcast_lm: bool = True,
 ) -> DataFrame:
-    """Score every document by mean Stupid-Backoff log-probability.
+    """Score every document (``doc_id``, ``text``) by mean Stupid-Backoff
+    log-probability, with backoff factor α = :data:`BACKOFF_ALPHA`.
 
     Per consecutive word pair (p, w):
 
@@ -665,13 +647,15 @@ def score_with_bigram_lm(
     )
     uni_lp = lm.unigrams.select(
         "w",
-        F.log(F.lit(alpha) * F.col("uc").cast("double") / F.lit(total)).alias("lp_uni"),
+        F.log(F.lit(BACKOFF_ALPHA) * F.col("uc").cast("double") / F.lit(total)).alias(
+            "lp_uni"
+        ),
     )
     if broadcast_lm:
         bi_lp, uni_lp = F.broadcast(bi_lp), F.broadcast(uni_lp)
-    oov_lp = float(_ln(alpha * alpha / total))
+    oov_lp = float(_ln(BACKOFF_ALPHA * BACKOFF_ALPHA / total))
 
-    ws = words_col(F.col(text_col))
+    ws = words_col(F.col("text"))
     n = F.size(ws)
     pair_structs = F.when(
         n >= 2,
@@ -684,72 +668,54 @@ def score_with_bigram_lm(
         ),
     ).otherwise(F.array().cast("array<struct<pw:string,w:string>>"))
     pairs = fan_out(documents).select(
-        id_col, F.explode(pair_structs).alias("g")
-    ).select(id_col, F.col("g.pw").alias("pw"), F.col("g.w").alias("w"))
+        "doc_id", F.explode(pair_structs).alias("g")
+    ).select("doc_id", F.col("g.pw").alias("pw"), F.col("g.w").alias("w"))
 
     scored = (
         pairs.join(bi_lp, ["pw", "w"], "left")
         .join(uni_lp, "w", "left")
         .select(
-            id_col,
+            "doc_id",
             F.round(
                 F.coalesce(F.col("lp_bi"), F.col("lp_uni"), F.lit(oov_lp)), 9
             ).alias("lp"),
         )
     )
     avg_lp = F.round(F.avg("lp"), 6)
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         avg_lp.alias("avg_logprob"),
         F.round(F.exp(-avg_lp), 4).alias("ppl"),
     )
 
 
-def ccnet_ppl_buckets(
-    scored: DataFrame,
-    ppl_col: str = "ppl",
-    by: str | None = None,
-    labels: tuple = ("head", "middle", "tail"),
-    cuts: tuple = (0.3333333333, 0.6666666667),
-    exact: bool = True,
-) -> DataFrame:
+def ccnet_ppl_buckets(scored: DataFrame, exact: bool = True) -> DataFrame:
     """CCNet's final corpus shape (Wenzek et al. 2020 §4.4): tag every
-    document ``head`` / ``middle`` / ``tail`` by LM perplexity at the
-    1/3 and 2/3 quantile thresholds — head is the cleanest slice LM
-    pretraining oversamples; the paper buckets per language (``by``).
+    document ``head`` / ``middle`` / ``tail`` by LM perplexity (``ppl``)
+    at the 1/3 and 2/3 quantile thresholds — head is the cleanest slice
+    LM pretraining oversamples.  The thresholds are corpus-wide (the
+    paper buckets per language).
 
-    Scale shape: thresholds are an AGGREGATE (two doubles per ``by``
-    group) broadcast back; tagging is a row-local comparison.  No global
+    Scale shape: thresholds are an AGGREGATE (two doubles) broadcast
+    back; tagging is a row-local comparison.  No global
     sort and no corpus-wide window — the naive rank/NTILE formulation
     would funnel the corpus through one partition.  ``exact=True`` uses
-    Spark's exact ``percentile`` (sort-based per group — fine up to a
-    few 10^8 rows per group, and what the DuckDB oracle replays with
+    Spark's exact ``percentile`` (sort-based — fine up to a few 10^8
+    rows, and what the DuckDB oracle replays with
     ``quantile_cont``); pass ``exact=False`` for ``approx_percentile``
     at the 100 TB tier (documented deviation: bucket edges move within
     the sketch's rank error, the three slices keep their meaning).
     Thresholds round to 6 dp on both engines so interpolation-order ulp
     noise can never flip a tag."""
     fn = "percentile" if exact else "approx_percentile"
-    gcols = [by] if by else []
-    th = scored.groupBy(*gcols).agg(
-        F.round(F.expr(f"{fn}({ppl_col}, {cuts[0]})"), 6).alias("_t1"),
-        F.round(F.expr(f"{fn}({ppl_col}, {cuts[1]})"), 6).alias("_t2"),
+    th = scored.agg(
+        F.round(F.expr(f"{fn}(ppl, 0.3333333333)"), 6).alias("_t1"),
+        F.round(F.expr(f"{fn}(ppl, 0.6666666667)"), 6).alias("_t2"),
     )
-    if gcols:
-        # NULL-SAFE join: groupBy puts NULL-keyed docs in their own
-        # threshold group, and a plain equi-join would silently DROP them
-        # (NULL never equals NULL) — corpus shrinkage in the final stage
-        joined = scored.join(
-            F.broadcast(th),
-            [scored[c].eqNullSafe(th[c]) for c in gcols],
-        )
-        for c in gcols:
-            joined = joined.drop(th[c])
-    else:
-        joined = scored.crossJoin(F.broadcast(th))
+    joined = scored.crossJoin(F.broadcast(th))
     bucket = (
-        F.when(F.col(ppl_col) <= F.col("_t1"), F.lit(labels[0]))
-        .when(F.col(ppl_col) <= F.col("_t2"), F.lit(labels[1]))
-        .otherwise(F.lit(labels[2]))
+        F.when(F.col("ppl") <= F.col("_t1"), F.lit("head"))
+        .when(F.col("ppl") <= F.col("_t2"), F.lit("middle"))
+        .otherwise(F.lit("tail"))
     )
     return joined.withColumn("ppl_bucket", bucket).drop("_t1", "_t2")

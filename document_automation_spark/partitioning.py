@@ -25,9 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def fan_out(df: DataFrame, factor: int = 1) -> DataFrame:
-    """Repartition ``df`` up to ``factor × defaultParallelism`` when (and
-    only when) its planned partition count is lower.
+def fan_out(df: DataFrame) -> DataFrame:
+    """Repartition ``df`` up to ``defaultParallelism`` when (and only
+    when) its planned partition count is lower.
 
     Use immediately before CPU-heavy row-local work (gram explodes,
     cryptographic hashing, Python kernels) that would otherwise fuse with
@@ -38,7 +38,7 @@ def fan_out(df: DataFrame, factor: int = 1) -> DataFrame:
         current = df.rdd.getNumPartitions()
     except Exception:  # exotic plans where RDD conversion fails: leave as-is
         return df
-    target = df.sparkSession.sparkContext.defaultParallelism * factor
+    target = df.sparkSession.sparkContext.defaultParallelism
     if current >= target:
         return df
     return df.repartition(target)

@@ -48,7 +48,6 @@ import time
 import uuid
 from typing import Collection
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -107,19 +106,24 @@ def _hadoop_path(spark: SparkSession, path: str):
     return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jpath
 
 
-def _buckets_glob(output_path: str, buckets: Collection[int]) -> str:
-    """One Hadoop glob over the ``bucket=`` directories of ``buckets``;
-    it matches only the directories that exist."""
-    return os.path.join(
-        data_path(output_path), "bucket={" + ",".join(map(str, buckets)) + "}"
+def _bucket_dirs(spark: SparkSession, output_path: str, buckets: Collection[int]):
+    """``(FileSystem, [Path])``: the existing ``bucket=`` directories of
+    ``buckets``, from one Hadoop glob (one listing of the data directory,
+    no Spark job)."""
+    fs, pattern = _hadoop_path(
+        spark,
+        os.path.join(
+            data_path(output_path), "bucket={" + ",".join(map(str, buckets)) + "}"
+        ),
     )
+    return fs, list(fs.globStatus(pattern) or [])
 
 
 def _clear_buckets(spark: SparkSession, output_path: str, buckets: Collection[int]) -> None:
-    """Deletes the data directories of ``buckets``: one listing of the
-    data directory, then one delete per bucket that has a directory."""
-    fs, pattern = _hadoop_path(spark, _buckets_glob(output_path, buckets))
-    for status in fs.globStatus(pattern) or []:
+    """Deletes the data directories of ``buckets``: one delete per bucket
+    that has a directory."""
+    fs, dirs = _bucket_dirs(spark, output_path, buckets)
+    for status in dirs:
         fs.delete(status.getPath(), True)
 
 
@@ -311,9 +315,9 @@ def run_extraction_job(
     wall_ms = int((time.time() - started) * 1000)
 
     # Post-commit accounting, one JVM aggregate appended straight to the
-    # manifest: a second scan of what was just written, read through one
-    # glob over the pending bucket directories (``basePath`` keeps the
-    # bucket partition column), so a partial resume lists O(pending)
+    # manifest: a second scan of what was just written, read from the
+    # pending bucket directories that exist (``basePath`` keeps the bucket
+    # partition column), so a partial resume lists O(pending)
     # directories, not the whole table — up to 32 on the driver, more with
     # one listing task per core (session.build_session).  The scan is
     # PRUNED to the two tiny columns the counters need (reading the full
@@ -335,17 +339,19 @@ def run_extraction_job(
             zero.alias("error_rows"),
         )
     )
-    try:
+    # the directories are passed as a list, not as the glob: a glob path
+    # makes FileStreamSink probe the literal pattern for a _spark_metadata
+    # directory, which fails with a logged stack trace on every call
+    written_dirs = [
+        status.getPath().toString()
+        for status in _bucket_dirs(spark, output_path, pending)[1]
+    ]
+    if written_dirs:  # none: no pending bucket wrote a row
         written = (
             spark.read.schema("passage_idx int, error string, bucket int")
             .option("basePath", data_path(output_path))
-            .parquet(_buckets_glob(output_path, pending))
+            .parquet(*written_dirs)
         )
-    except AnalysisException as e:
-        # the glob matched nothing: no pending bucket wrote a row
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
-    else:
         error = F.col("error").isNotNull()
         counters = written.select(
             "bucket",

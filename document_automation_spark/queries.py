@@ -4131,7 +4131,7 @@ def _bpe_sql(n_merges: int) -> str:
     through a CROSS JOIN of the 1-row best-pair CTE.  When no pair
     reaches count 2 the best-pair CTE degrades to a ('','') sentinel
     that can never match — the SQL analogue of learn_bpe's
-    min_pair_count early stop (once no pair qualifies, the words stop
+    MIN_PAIR_COUNT early stop (once no pair qualifies, the words stop
     changing, so every later round re-derives the same sentinel)."""
     sql = """
     WITH words_pos AS (

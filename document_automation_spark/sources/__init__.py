@@ -1,8 +1,7 @@
-"""Table sources: testdata parquet loaders + deterministic synthetic pages."""
+"""Table sources: deterministic synthetic pages."""
 
 from document_automation_spark.sources.pages import (  # noqa: F401
     PAGES_SCHEMA,
     gen_page,
     pages_df,
 )
-from document_automation_spark.sources.tables import load_tables, register_views  # noqa: F401

@@ -65,7 +65,7 @@ class TestSimHash:
     def test_matches_kernel_signed(self, docs):
         got = {r.doc_id: r.simhash for r in simhash_fingerprints(docs).collect()}
         for r in docs.collect():
-            raw = simhash64(r.text, k=3)
+            raw = simhash64(r.text)
             signed = raw - (1 << 64) if raw >= (1 << 63) else raw
             assert got[r.doc_id] == signed
 
@@ -282,7 +282,7 @@ class TestSimhashNearDup:
         }
         fps = {}
         for r in docs.collect():
-            raw = simhash64(r.text, k=3)
+            raw = simhash64(r.text)
             fps[r.doc_id] = raw
         expected = {}
         ids = sorted(fps)
@@ -298,7 +298,7 @@ class TestSimhashNearDup:
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
         with pytest.raises(ValueError, match="pigeonhole"):
-            simhash_near_dup_pairs(docs, max_hamming=4, n_bands=4)
+            simhash_near_dup_pairs(docs, max_hamming=4)
 
     def test_simhash_near_dup_skips_empty_and_null(self, spark):
         from document_automation_spark.operators.dedup import simhash_near_dup_pairs
@@ -308,18 +308,6 @@ class TestSimhashNearDup:
             "doc_id long, text string",
         )
         assert simhash_near_dup_pairs(docs).count() == 0
-
-    def test_simhash_single_band_exact_match_mode(self, spark):
-        from document_automation_spark.operators.dedup import simhash_near_dup_pairs
-
-        docs = spark.createDataFrame(
-            [(1, "same text content " * 20), (2, "same text content " * 20),
-             (3, "completely different words " * 20)],
-            "doc_id long, text string",
-        )
-        got = {(r.doc_a, r.doc_b) for r in
-               simhash_near_dup_pairs(docs, max_hamming=0, n_bands=1).collect()}
-        assert got == {(1, 2)}
 
     def test_cc_iterations_forwardable(self, spark):
         from document_automation_spark.operators.dedup import near_dup_dedup
@@ -368,12 +356,12 @@ class TestSimhashNearDup:
 
 
 class TestFastHashPath:
-    """hash_impl='crc32' — the flagged 100 TB fast path (VERDICT r2 #6).
+    """The near-dup fixture, and minhash_lsh_candidates(hash_impl='crc32')
+    — the flagged 100 TB fast path (VERDICT r2 #6).
 
     Signature VALUES differ from md5 (only md5 is SQL-reproducible); the
-    CANDIDATE-PAIR SETS and the end-to-end dedup decisions must agree on
-    the near-dup fixture, proving the switch is behavior-preserving where
-    it matters."""
+    CANDIDATE-PAIR SETS must agree on the near-dup fixture, proving the
+    switch is behavior-preserving where it matters."""
 
     @staticmethod
     def _fixture(spark):
@@ -399,46 +387,24 @@ class TestFastHashPath:
         assert (100, 101) in md5_pairs  # exact dups always band-collide
         assert md5_pairs == crc_pairs
 
-    def test_near_dup_dedup_decisions_identical(self, spark):
-        from document_automation_spark.operators.dedup import near_dup_dedup
-
-        docs = self._fixture(spark)
-        keep_md5 = {r.doc_id for r in near_dup_dedup(docs, jaccard_threshold=0.9).collect()}
-        keep_crc = {
-            r.doc_id
-            for r in near_dup_dedup(docs, jaccard_threshold=0.9, hash_impl="crc32").collect()
-        }
-        assert 101 not in keep_md5  # the exact dup is dropped
-        assert keep_md5 == keep_crc
-
-    def test_simhash_pairs_both_impls_find_only_true_near_dups(self, spark):
-        """SimHash Hamming distances are hash-dependent at the margin (a
-        borderline near-dup can sit at hamming 0 under one base hash and 1
-        under another — crc32's GF(2) linearity makes tiny shingle diffs
-        cancel more often), so the invariant is PROPERTY equality, not set
-        equality: both impls must find every exact dup, and every pair
-        either impl reports must be genuinely similar (the whole fixture
-        family shares a base text, so the floor is Jaccard ≥ 0.5) and must
-        never touch the unrelated docs."""
+    def test_simhash_pairs_find_only_true_near_dups(self, spark):
+        """Every exact dup pairs at hamming 0, and every reported pair is
+        genuinely similar (the fixture family shares a base text, so the
+        floor is Jaccard ≥ 0.5) and never touches the unrelated docs."""
         from document_automation_spark.kernels.fingerprint import char_shingles, jaccard
         from document_automation_spark.operators.dedup import simhash_near_dup_pairs
 
         docs = self._fixture(spark)
         texts = {r.doc_id: r.text for r in docs.collect()}
-        for impl in ("md5", "crc32"):
-            pairs = {
-                (r.doc_a, r.doc_b)
-                for r in simhash_near_dup_pairs(
-                    docs, max_hamming=3, hash_impl=impl
-                ).collect()
-            }
-            assert (100, 101) in pairs, impl  # exact dups always hamming-0
-            for a, b in pairs:
-                assert a not in (200, 201) and b not in (200, 201), (impl, a, b)
-                j = jaccard(
-                    set(char_shingles(texts[a], 3)), set(char_shingles(texts[b], 3))
-                )
-                assert j >= 0.5, (impl, a, b, j)
+        pairs = {
+            (r.doc_a, r.doc_b)
+            for r in simhash_near_dup_pairs(docs, max_hamming=3).collect()
+        }
+        assert (100, 101) in pairs
+        for a, b in pairs:
+            assert a not in (200, 201) and b not in (200, 201), (a, b)
+            j = jaccard(set(char_shingles(texts[a], 3)), set(char_shingles(texts[b], 3)))
+            assert j >= 0.5, (a, b, j)
 
 
 class TestDuplicateSpans:

@@ -138,7 +138,7 @@ class TestInference:
 
 
 class TestLearnedBeatsHash:
-    def test_learned_geometry_wins_at_same_budget(self):
+    def test_learned_geometry_wins_at_same_budget(self, monkeypatch):
         """The seat's headline claim: on held-out docs at sf0.01, the
         trained 16-dim encoder beats the 16-dim hash embedder by >2x MRR
         (learned geometry, same dimensionality budget)."""
@@ -146,7 +146,9 @@ class TestLearnedBeatsHash:
 
         from document_automation_spark.golden import learned_encoder_rows
 
-        rows = learned_encoder_rows("/root/testdata/sf0.01")
+        # the default oracle fixture: sf0.01
+        monkeypatch.delenv("SPARK_GRAFT_ORACLE_SF_DIR", raising=False)
+        rows = learned_encoder_rows()
         assert rows is not None
         mrr = {}
         for m in ("learned16", "hash16"):

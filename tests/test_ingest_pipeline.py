@@ -797,7 +797,8 @@ class TestPackStage:
         # token conservation vs the curated corpus itself
         corpus = spark.read.parquet(summary["curated_path"])
         want_tokens = (
-            corpus.select(whitespace_token_count("content").alias("n"))
+            corpus.withColumnRenamed("content", "text")
+            .select(whitespace_token_count().alias("n"))
             .where(F.col("n") > 0).agg(F.sum("n")).first()[0]
         )
         assert summary["pack_n_tokens"] == want_tokens

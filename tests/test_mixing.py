@@ -139,33 +139,3 @@ class TestUpsampleWithRepeats:
         for doc_id, n in copies.items():
             rate = rates[lang_of[doc_id]]
             assert n in (math.floor(rate), math.floor(rate) + 1), (doc_id, n, rate)
-
-
-class TestTokenWeightedMixing:
-    def test_weighted_rates_use_column_sums(self, docs):
-        """weight_col='n_chars': group sizes become char sums — verify the
-        closed form against driver-side sums."""
-        from document_automation_spark.operators.mixing import temperature_rates
-
-        sums = {r["lang"]: r["s"] for r in
-                docs.groupBy("lang").agg({"n_chars": "sum"})
-                .withColumnRenamed("sum(n_chars)", "s").collect()}
-        rows = temperature_rates(
-            docs, "lang", 0.5, 100, weight_col="n_chars"
-        ).collect()
-        tw = sum(math.sqrt(s) for s in sums.values())
-        for r in rows:
-            assert r["n_group"] == sums[r["lang"]]
-            expect = round(min(1.0, 100.0 * (math.sqrt(sums[r["lang"]]) / tw)
-                               / sums[r["lang"]]), 6)
-            assert r["rate"] == pytest.approx(expect, abs=1e-9), r["lang"]
-
-    def test_weighted_resample_runs_and_differs_from_count_based(self, docs):
-        from document_automation_spark.operators.mixing import temperature_rates
-
-        by_count = {r["lang"]: r["rate"]
-                    for r in temperature_rates(docs, "lang", 0.5, 100).collect()}
-        by_chars = {r["lang"]: r["rate"]
-                    for r in temperature_rates(docs, "lang", 0.5, 100,
-                                               weight_col="n_chars").collect()}
-        assert by_count != by_chars

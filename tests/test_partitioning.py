@@ -25,11 +25,6 @@ class TestFanOut:
         # no-op: the SAME plan object comes back — no added Exchange
         assert out is df
 
-    def test_factor_scales_target(self, spark):
-        par = spark.sparkContext.defaultParallelism
-        df = spark.range(1000).coalesce(1)
-        assert fan_out(df, factor=2).rdd.getNumPartitions() == 2 * par
-
     def test_values_identical_through_fan_out(self, spark):
         df = spark.range(500).select(
             F.col("id"), F.sha2(F.col("id").cast("string"), 256).alias("h")

@@ -1,6 +1,7 @@
-"""No public function that only tests call, and one definition per bench row.
+"""No public function that only tests call, no parameter that only tests
+set, and one definition per bench row.
 
-Both checks read source with ``ast`` and start no SparkSession.
+The checks read source with ``ast`` and start no SparkSession.
 """
 
 from __future__ import annotations
@@ -39,6 +40,48 @@ KEPT = {
 }
 
 
+# Defaulted parameters of public package functions that no entry point
+# sets, each kept on purpose, with one of four reasons: (a) a CLI test
+# seam, (b) a test-input builder, (c) a safety cap or scale-tier switch
+# that SCALE.md or COVERAGE.md names and tests switch on, (d) part of a
+# component COVERAGE.md lists.
+KEPT_PARAMS = {
+    "jobs.extract_job.main.argv": "(a) CLI test seam",
+    "jobs.ingest_pipeline.main.argv": "(a) CLI test seam",
+    "sources.pages.pages_df.seed": "(b) test-input builder",
+    "operators.dedup.minhash_lsh_candidates.max_bucket_size": "(c) hot-bucket cap "
+    "(SCALE.md, COVERAGE near-dup rows)",
+    "operators.webtext_quality.score_with_bigram_lm.broadcast_lm": "(c) shuffle-join "
+    "fallback for unprunable LMs (SCALE.md bigram-LM row)",
+    "operators.webtext_quality.ccnet_ppl_buckets.exact": "(c) approx_percentile at the "
+    "100 TB tier (COVERAGE LM quality scoring row)",
+    "operators.webtext_quality.train_bigram_lm.min_count": "(c) LM pruning to "
+    "broadcastable size (SCALE.md bigram-LM row)",
+    "operators.linkgraph.anchor_text_terms.min_refs": "(c) hapax-tail prune of the "
+    "anchor table (SCALE.md anchor-text row)",
+    "operators.webtext_quality.corpus_datasheet.exact_percentiles": "(c) exact "
+    "percentiles instead of the mergeable sketch (COVERAGE corpus datasheet row)",
+    "operators.dedup.near_dup_dedup.canonicalize": "(d) connected-components "
+    "canonicalization (COVERAGE near-dup pipeline row)",
+    "operators.dedup.near_dup_dedup.cc_max_iterations": "(d) its iteration bound",
+    "operators.domains.filter_by_domain.blocklist": "(d) the allow/block gate "
+    "(COVERAGE domain-level curation row)",
+    "operators.domains.filter_by_domain.allowlist": "(d) the allow/block gate",
+    "operators.domains.filter_by_domain.block_subdomains": "(d) subdomain vs exact "
+    "matching (COVERAGE domain-level curation row)",
+    "operators.domains.domain_stats.level": "(d) registrable-domain rollup "
+    "(COVERAGE domain-level curation row)",
+    "operators.skew.salted_join.how": "(d) result-identical inner/left join "
+    "(COVERAGE skew-safe join row)",
+    "operators.positive_passage.dpr_training_samples.hard_negatives": "(d) mined "
+    "negatives of the DPR samples (COVERAGE hard-negative mining, S12)",
+    "operators.webtext_quality.filter_by_quality.lm": "(d) the perplexity rule "
+    "(COVERAGE quality-filter gate row)",
+    "operators.webtext_quality.corpus_datasheet.lm": "(d) the mean-perplexity "
+    "column (COVERAGE corpus datasheet row)",
+}
+
+
 def _py_files(directory: Path):
     return sorted(p for p in directory.rglob("*.py") if not p.name.startswith("test_"))
 
@@ -60,24 +103,107 @@ def _names_used(paths) -> set[str]:
     return used
 
 
-def test_every_public_function_has_a_non_test_caller_or_a_reason():
-    used = _names_used(
+def _callers():
+    """The non-test sources: the package and its entry points."""
+    return (
         _py_files(PACKAGE)
         + _py_files(ROOT / "tools")
         + _py_files(ROOT / "perfbench")
         + [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
     )
-    unreached = set()
+
+
+def _public_functions():
+    """``{module.name: FunctionDef}`` of the top-level package functions
+    whose names start with neither ``_`` nor ``q_``."""
+    out = {}
     for path in _py_files(PACKAGE):
         module = ".".join(path.relative_to(PACKAGE).with_suffix("").parts)
         for node in ast.parse(path.read_text()).body:
-            if (
-                isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
-                and not node.name.startswith(("_", "q_"))
-                and node.name not in used
-            ):
-                unreached.add(f"{module}.{node.name}")
+            if isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef)
+            ) and not node.name.startswith(("_", "q_")):
+                out[f"{module}.{node.name}"] = node
+    return out
+
+
+def test_every_public_function_has_a_non_test_caller_or_a_reason():
+    used = _names_used(_callers())
+    unreached = {q for q, fn in _public_functions().items() if fn.name not in used}
     assert unreached == set(KEPT)
+
+
+def _callee(node) -> str | None:
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    return None
+
+
+def _parameters_set(paths) -> dict[str, set]:
+    """Function name -> what its callers set: keyword names, positional
+    indexes, or ``"*"`` for everything.  A call through
+    ``functools.partial`` sets what the partial binds; a call with
+    ``*``/``**`` expansion, and any use of the function as a value
+    instead of a call by name, sets everything."""
+    setting: dict[str, set] = {}
+    for path in paths:
+        tree = ast.parse(path.read_text())
+        called = set()
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            called.add(id(node.func))
+            name, args = _callee(node.func), node.args
+            if name == "partial" and args:
+                called.add(id(args[0]))
+                name, args = _callee(args[0]), args[1:]
+            if name is None:
+                continue
+            if any(isinstance(a, ast.Starred) for a in args) or any(
+                k.arg is None for k in node.keywords
+            ):
+                setting.setdefault(name, set()).add("*")
+            else:
+                setting.setdefault(name, set()).update(
+                    [*range(len(args)), *(k.arg for k in node.keywords)]
+                )
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, (ast.Name, ast.Attribute))
+                and id(node) not in called
+                and not isinstance(node.ctx, (ast.Store, ast.Del))
+            ):
+                setting.setdefault(_callee(node), set()).add("*")
+    return setting
+
+
+def _unset_defaulted_parameters(paths) -> set[str]:
+    setting = _parameters_set(paths)
+    unset = set()
+    for qualname, fn in _public_functions().items():
+        if qualname in KEPT:
+            continue
+        done = setting.get(fn.name, set())
+        if "*" in done:
+            continue
+        a = fn.args
+        positional = [p.arg for p in a.posonlyargs + a.args]
+        defaulted = positional[len(positional) - len(a.defaults):] + [
+            p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+        ]
+        for param in defaulted:
+            index = positional.index(param) if param in positional else None
+            if param not in done and index not in done:
+                unset.add(f"{qualname}.{param}")
+    return unset
+
+
+def test_every_defaulted_parameter_has_a_non_test_setter_or_a_reason():
+    """A defaulted parameter that no entry point sets has one value in use:
+    it is a constant, or a knob kept for one of the reasons above."""
+    assert _unset_defaulted_parameters(_callers()) == set(KEPT_PARAMS)
 
 
 def _bench():

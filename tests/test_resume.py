@@ -51,6 +51,35 @@ def jobs_started(spark):
         ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
+@contextmanager
+def jvm_log_lines(spark):
+    """Collects the JVM's log lines (``LEVEL Logger: message``) written
+    inside the block.  The JVM inherited its stderr when it started, so
+    pytest's fd capture never sees them; this attaches a log4j appender
+    to the root logger instead."""
+    jvm = spark.sparkContext._jvm
+    core = jvm.org.apache.logging.log4j.core
+    ctx = jvm.org.apache.logging.log4j.LogManager.getContext(False)
+    root = ctx.getConfiguration().getRootLogger()
+    writer = jvm.java.io.StringWriter()
+    name = f"test-{uuid.uuid4().hex}"
+    layout = core.layout.PatternLayout.newBuilder().withPattern("%p %c{1}: %m%n").build()
+    appender = core.appender.WriterAppender.createAppender(
+        layout, None, writer, name, False, True
+    )
+    appender.start()
+    root.addAppender(appender, None, None)
+    ctx.updateLoggers()
+    lines: list = []
+    try:
+        yield lines
+    finally:
+        root.removeAppender(name)
+        ctx.updateLoggers()
+        appender.stop()
+        lines.extend(writer.toString().splitlines())
+
+
 def _manifest(spark, out_dir):
     return spark.read.parquet(manifest_path(out_dir))
 
@@ -190,7 +219,7 @@ def test_buckets_without_output_rows_are_committed(spark, out_dir):
 
 def test_no_bucket_writes_rows(spark, out_dir):
     """Every page under the gate: the write creates no bucket directory,
-    so the manifest re-scan's glob matches nothing and the counters are
+    so the manifest re-scan has no directory to read and the counters are
     the zero rows alone."""
     _gated_buckets_are_committed(spark, out_dir, lambda i: True, rows_in=0)
 
@@ -275,6 +304,27 @@ def test_resume_rescans_only_the_pending_buckets(spark, out_dir):
     assert sum(r.rows_out + r.error_rows for r in manifest.collect()) == (
         read_output(spark, out_dir).count()
     )
+
+
+def test_durable_calls_log_no_metadata_probe(spark, tmp_path, out_dir):
+    """A fresh call and a partial resume read the written buckets as a list
+    of directories: no ``FileStreamSink`` probe of a glob pattern, which
+    logs a failed ``_spark_metadata`` lookup with a stack trace.  The
+    glob read of the same table shows that the capture sees that WARN."""
+    pages = pages_df(spark, N_PAGES, partitions=4)
+    cfg = ExtractConfig(n_buckets=8)
+    with jvm_log_lines(spark) as lines:
+        run_extraction_job(spark, pages, out_dir, FP, cfg)
+        run_extraction_job(spark, pages, str(tmp_path / "partial"), FP, cfg, fail_buckets_above=4)
+        resumed = run_extraction_job(spark, pages, str(tmp_path / "partial"), FP, cfg)
+    assert resumed["buckets_processed"] == 4
+    assert not [line for line in lines if "FileStreamSink" in line]
+
+    with jvm_log_lines(spark) as control:
+        spark.read.option("basePath", os.path.join(out_dir, "data")).parquet(
+            os.path.join(out_dir, "data", "bucket={0,1}")
+        ).count()
+    assert [line for line in control if line.startswith("WARN FileStreamSink")]
 
 
 def test_pending_buckets_drop_files_of_an_earlier_fingerprint(spark, out_dir):
@@ -461,9 +511,13 @@ def _crash_then_resume(spark, pages, out_dir, fp, crash_point):
         write_parquet = DataFrameWriter.parquet
 
         def crash_on_manifest(self, path, *args, **kwargs):
-            if path == manifest_path(out_dir):
-                raise _ManifestAppendCrash(path)
-            return write_parquet(self, path, *args, **kwargs)
+            if path != manifest_path(out_dir):
+                return write_parquet(self, path, *args, **kwargs)
+            if crash_point == "after_manifest_append":
+                # the append commits; the run dies before it rewrites or
+                # deletes the _inflight record
+                write_parquet(self, path, *args, **kwargs)
+            raise _ManifestAppendCrash(path)
 
         # a re-submit of an input whose buckets are all committed writes
         # nothing, so it has no manifest append to die in
@@ -481,8 +535,11 @@ def _crash_then_resume(spark, pages, out_dir, fp, crash_point):
 @settings(max_examples=7, derandomize=True, deadline=None, database=None)
 # the derandomized draws never bring a fingerprint back after another one
 @example(crash_point="between_write_and_manifest", fingerprints=["pages40", "pages3", "pages40"])
+@example(crash_point="after_manifest_append", fingerprints=["pages40", "pages3", "pages40"])
 @given(
-    crash_point=st.sampled_from(["before_data_write", "between_write_and_manifest"]),
+    crash_point=st.sampled_from(
+        ["before_data_write", "between_write_and_manifest", "after_manifest_append"]
+    ),
     fingerprints=st.lists(
         st.sampled_from(["pages40", "pages3", "gated6"]), min_size=1, max_size=3
     ),
@@ -490,9 +547,11 @@ def _crash_then_resume(spark, pages, out_dir, fp, crash_point):
 def test_every_crash_point_and_fingerprint_sequence_resumes_clean(
     spark, tmp_path_factory, fingerprint_runs, crash_point, fingerprints
 ):
-    """Property over (crash point, fingerprint sequence) on 8 buckets: each
-    fingerprint of the sequence runs into the same output, dies at the
-    crash point and is resumed.  After every resume the table equals a
+    """Property over (crash point, fingerprint sequence) on 8 buckets.  The
+    crash points: before the data write, between the data write and the
+    manifest append, and after the append but before the ``_inflight``
+    record is cleared.  Each fingerprint of the sequence runs into the
+    same output, dies at the crash point and is resumed.  After every resume the table equals a
     clean run of that input row for row, and the latest manifest row of
     every bucket is under that fingerprint, with counters that add up to
     the table.  A fingerprint that comes back after another one re-runs

@@ -164,14 +164,14 @@ class TestMediaFeatures:
     def test_resize_spec_math(self):
         from document_automation_spark.operators.multimodal import resize_spec
 
-        assert resize_spec(1024, 512, 256) == (256, 128)
-        assert resize_spec(100, 200, 256) == (100, 200)  # already small
-        assert resize_spec(513, 1000, 256) == (131, 256)
+        assert resize_spec(1024, 512) == (256, 128)
+        assert resize_spec(100, 200) == (100, 200)  # already small
+        assert resize_spec(513, 1000) == (131, 256)
 
     def test_frame_offsets(self):
         from document_automation_spark.operators.multimodal import frame_sample_offsets
 
-        offs = frame_sample_offsets(4096 * 100, bytes_per_frame=4096, max_frames=8)
+        offs = frame_sample_offsets(4096 * 100)
         assert len(offs) == 8
         assert offs[0] == 0
         assert offs == sorted(offs)
@@ -205,17 +205,16 @@ class TestMediaFeatures:
 class TestDenseIdInvariance:
     def test_ids_invariant_to_partitioning(self, spark, sf_dir):
         """Partition-offset id assignment must equal the global row_number
-        regardless of input partitioning or requested partition count."""
+        regardless of input partitioning."""
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         emb = embed_documents(docs)
         expected = {
             r.doc_id: i
             for i, r in enumerate(sorted(emb.collect(), key=lambda r: r.doc_id))
         }
-        for src, n in ((emb.coalesce(1), 1), (emb.repartition(16), 7), (emb, None)):
+        for n, src in enumerate((emb.coalesce(1), emb.repartition(16), emb)):
             got = {
-                r.doc_id: r.vector_id
-                for r in assign_dense_vector_ids(src, num_partitions=n).collect()
+                r.doc_id: r.vector_id for r in assign_dense_vector_ids(src).collect()
             }
             assert got == expected, n
 

@@ -160,26 +160,6 @@ class TestCcnetPplBuckets:
             ["head"] * 3 + ["middle"] * 3 + ["tail"] * 3
         )
 
-    def test_per_language_partition(self, spark):
-        from document_automation_spark.operators.webtext_quality import (
-            ccnet_ppl_buckets,
-        )
-
-        rows = (
-            [(i, "en", float(i)) for i in range(6)]
-            + [(i + 10, "de", float(100 + i)) for i in range(6)]
-            + [(20, None, 5.0), (21, None, 7.0), (22, None, 9.0)]
-        )
-        df = spark.createDataFrame(rows, "doc_id long, lang string, ppl double")
-        got = {r.doc_id: r.ppl_bucket for r in ccnet_ppl_buckets(df, by="lang").collect()}
-        # each language gets its own thresholds: de's low ppls are heads
-        # within de even though they dwarf every en value
-        assert got[0] == "head" and got[10] == "head"
-        assert got[5] == "tail" and got[15] == "tail"
-        # NULL-lang docs form their own group and are NOT dropped
-        assert len(got) == len(rows)
-        assert got[20] == "head" and got[22] == "tail"
-
     def test_approx_path_runs(self, spark):
         from document_automation_spark.operators.webtext_quality import (
             ccnet_ppl_buckets,
@@ -240,17 +220,6 @@ class TestQualityFilterGate:
         assert kept.count() == 4
         assert obs.get == {"n_docs": 4, "n_kept": 4}
 
-    def test_annotate_only_audit_mode(self, spark, corpus):
-        annotated, obs = filter_by_quality(corpus, annotate_only=True)
-        rows = {r.doc_id: r for r in annotated.collect()}
-        assert len(rows) == 4  # nothing filtered
-        assert rows[1].violations == []
-        assert "dup_line_frac" in rows[2].violations
-        assert "dup_line_char_frac" in rows[2].violations
-        assert "top_bigram_char_frac" in rows[3].violations
-        assert "symbol_word_ratio" in rows[4].violations
-        assert obs.get["n_kept"] == 1  # counters identical to filter mode
-
     def test_ppl_rule(self, spark, corpus):
         lm = train_bigram_lm(corpus.filter("doc_id = 1"))
         kept, obs = filter_by_quality(
@@ -297,14 +266,18 @@ class TestQualityFilterGate:
                                 "min_mean_word_len": 3.0,
                                 "max_mean_word_len": 10.0,
                                 "min_alpha_word_frac": 0.8})
-        annotated, obs = filter_by_quality(docs, rules=rules, annotate_only=True)
-        rows = {r.doc_id: list(r.violations) for r in annotated.collect()}
-        assert rows[1] == []
-        assert rows[2] == ["min_words"]
-        assert rows[3] == ["min_mean_word_len"]
-        assert rows[4] == ["max_mean_word_len"]
-        assert rows[5] == ["min_alpha_word_frac"]
-        assert obs.get["drop_min_words"] == 1
+        kept, obs = filter_by_quality(docs, rules=rules)
+        assert {r.doc_id for r in kept.collect()} == {1}
+        drops = {k: v for k, v in obs.get.items() if k.startswith("drop_")}
+        # four dropped docs, four rules fired once each: every crafted doc
+        # trips exactly one rule
+        assert drops == {
+            "drop_min_words": 1,
+            "drop_max_words": 0,
+            "drop_min_mean_word_len": 1,
+            "drop_max_mean_word_len": 1,
+            "drop_min_alpha_word_frac": 1,
+        }
 
         # opt-in stopword rule: doc 1 has zero Gopher stopwords
         with_stop = QualityRules(**{**base, "min_stopword_hits": 2})
@@ -431,7 +404,7 @@ class TestCorpusDatasheet:
         docs = _random_corpus(seed=7, n=60)
         rows = [(doc_id, t, f"g{doc_id % 3}") for doc_id, t in docs]
         return rows, spark.createDataFrame(
-            rows, "doc_id long, text string, grp string"
+            rows, "doc_id long, text string, lang string"
         )
 
     def test_matches_python_mirror(self, spark, grouped):
@@ -443,10 +416,7 @@ class TestCorpusDatasheet:
 
         rows, df = grouped
         got = {
-            r.grp: r
-            for r in corpus_datasheet(
-                df, group_col="grp", exact_percentiles=True
-            ).collect()
+            r.lang: r for r in corpus_datasheet(df, exact_percentiles=True).collect()
         }
         rules = QualityRules()
         for g in ("g0", "g1", "g2"):
@@ -498,9 +468,9 @@ class TestCorpusDatasheet:
         )
 
         rows, df = grouped
-        lm = train_bigram_lm(df.filter("grp = 'g0'"))
-        out = corpus_datasheet(df, group_col="grp", lm=lm).collect()
-        by = {r.grp: r for r in out}
+        lm = train_bigram_lm(df.filter("lang = 'g0'"))
+        out = corpus_datasheet(df, lm=lm).collect()
+        by = {r.lang: r for r in out}
         # the in-domain slice scores itself lower-perplexity than the rest
         assert by["g0"].mean_ppl == min(r.mean_ppl for r in out)
         for r in out:

@@ -50,7 +50,7 @@ def main() -> None:
         )
         return time.time() - t0
 
-    rows.time("extraction_pipeline")  # python-pool + codegen warm-up
+    rows.warm_up()
     sentinel()  # sentinel codegen warm-up
 
     samples: dict = {name: [] for name in names}

@@ -2,7 +2,8 @@
 
 Runs selected bench rows (``bench.BenchRows``: the flagship rows, the
 registry seats and the bare-operator rows that override them) in the bench
-session with the UI enabled, then pulls per-stage metrics from the Spark
+session with the UI enabled, warm (``BenchRows.warm_up``, as in
+``bench.py``), then pulls per-stage metrics from the Spark
 REST API so the seconds can be attributed to stages/operators instead of
 guessed at.  Also dumps ``explain("formatted")`` per query to
 ``plans/r06/<query>_<tag>.txt`` when ``--plans <tag>`` is given.
@@ -67,6 +68,7 @@ def main() -> None:
         "profile-queries", cpus, {"spark.ui.enabled": "true", "spark.ui.port": "4057"}
     )
     rows = BenchRows(spark, sf_dir, cpus)
+    rows.warm_up()
 
     for name in args.queries:
         if args.plans:
