@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from document_automation_spark.partitioning import fan_out
 
-__all__ = ["ngram_contamination", "decontaminate", "tokens_col", "gram_hashes_col"]
+__all__ = ["ngram_contamination", "decontaminate", "tokens_col"]
 
 #: Word tokenizer shared with the oracle twin: letters/digits/underscore
 #: runs over the lower-cased text.  ``\p{L}``/``\p{N}`` parse identically
@@ -56,33 +56,6 @@ _TOKEN_RE = r"[\p{L}\p{N}_]+"
 def tokens_col(text_col: str) -> F.Column:
     """Lower-cased word-token array of ``text_col`` (JVM-side)."""
     return F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(_TOKEN_RE), 0)
-
-
-def gram_hashes_col(tok_hashes: F.Column, n: int) -> F.Column:
-    """One 64-bit hash per ``n``-token window of pre-hashed tokens.
-
-    ``tok_hashes`` must be a MATERIALIZED column of per-token xxhash64
-    longs (see :func:`ngram_contamination`: hashing tokens first is what
-    keeps the window pass O(words·n) integer ops — higher-order functions
-    are interpreted, so an un-materialized subexpression would re-run the
-    tokenizer per window, and building the joined gram *string* per
-    window was measured ~9× slower than this integer fold).  Each window
-    folds its ``n`` token hashes with the order-sensitive combiner
-    ``acc = xxhash64(acc, h)`` — no string allocation, no arithmetic
-    overflow under ANSI mode.  Docs shorter than ``n`` tokens yield an
-    empty array (zero grams, never null).
-    """
-    return F.when(
-        F.size(tok_hashes) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(tok_hashes) - n),
-            lambda i: F.aggregate(
-                F.slice(tok_hashes, i + 1, n),
-                F.lit(42).cast("long"),
-                lambda acc, h: F.xxhash64(acc, h),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
 
 
 def ngram_contamination(

@@ -160,9 +160,17 @@ def extract_documents(pages: DataFrame, cfg: ExtractConfig = ExtractConfig()) ->
     return _documents(pages, cfg, "html", extract_page)
 
 
+def bucket_sql(n_buckets: int) -> str:
+    """The resume/layout bucket of a row as SQL text:
+    ``pmod(xxhash64(url), n_buckets)``.  The one definition of the bucket
+    hash; a predicate over many buckets is built on it as one SQL text
+    (``plans.checkpoint.pending_documents``)."""
+    return f"CAST(pmod(xxhash64(url), {int(n_buckets)}) AS INT)"
+
+
 def bucket_of(n_buckets: int) -> Column:
-    """The resume/layout bucket of a row: ``pmod(xxhash64(url), n_buckets)``."""
-    return F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
+    """The resume/layout bucket of a row (:func:`bucket_sql`)."""
+    return F.expr(bucket_sql(n_buckets))
 
 
 def with_bucket(pages: DataFrame, n_buckets: int) -> DataFrame:

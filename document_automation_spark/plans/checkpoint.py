@@ -20,13 +20,18 @@ writers:
   under the gate) included, with zero counters:
   ``(bucket, run_id, input_fingerprint, rows_in, rows_out, error_rows,
   wall_ms, committed_at)`` — lineage + counter metrics required by the
-  north rule;
+  north rule.  The counters are one Spark aggregate over what was
+  written, collected to the driver (≤ one row per pending bucket); the
+  rows are written as one parquet file per run by the driver, under a
+  hidden name and then renamed into ``_manifest/`` — the rename is the
+  commit point;
 * on resume, pending work = the buckets of ``range(n_buckets)`` NOT IN
   the done buckets (those whose latest manifest row carries the same
-  input fingerprint, :func:`done_buckets`), a literal ``isin`` filter —
-  below the Python kernel for row-local plan builders, so committed pages
-  are never decoded again (:func:`pending_documents`);
-  a job whose every bucket is committed returns before building any plan.
+  input fingerprint, :func:`done_buckets`, read on the driver with no
+  Spark job), one SQL ``IN`` predicate — below the Python kernel for
+  row-local plan builders, so committed pages are never decoded again
+  (:func:`pending_documents`); a job whose every bucket is committed
+  returns before building any plan, having started no Spark job.
   A crash between data write and manifest append re-runs that bucket,
   under any fingerprint: the bucket stays in the ``_inflight`` record,
   which the run clears only after its append, and overwrite makes the
@@ -36,8 +41,10 @@ On Iceberg the manifest append and data commit would share a transaction
 (snapshot id recorded in the manifest); with plain parquet the
 crash-window is closed by the in-flight record and overwrite-idempotency
 instead.  Scale note: the manifest is O(n_buckets) rows — thousands, not
-billions — so the done set is always small enough to inline as a literal
-list.
+billions — so it is driver-side bookkeeping, like ``_inflight``: a Spark
+job's fixed cost (0.1–0.25 s on a 4-core host) is more than reading or
+writing it on the driver, and the done set is always small enough to
+inline as a literal list.
 """
 
 from __future__ import annotations
@@ -46,15 +53,18 @@ import functools
 import os
 import time
 import uuid
+from datetime import datetime, timezone
 from typing import Collection
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from document_automation_spark.operators.extract import (
     DOCUMENTS_SCHEMA,
     ExtractConfig,
-    bucket_of,
+    bucket_sql,
     documents_from_text,
     extract_documents,
 )
@@ -78,9 +88,20 @@ PARQUET_WRITE_OPTIONS = {
     "parquet.compression.codec.zstd.level": "1",
 }
 
-MANIFEST_SCHEMA = (
-    "bucket int, run_id string, input_fingerprint string, rows_in long, "
-    "rows_out long, error_rows long, wall_ms long, committed_at timestamp"
+# one file per run; the column names and types are the ones Spark wrote
+# before the manifest moved to the driver (committed_at as INT96 there), so
+# a Spark read of ``_manifest`` reads old and new files together
+MANIFEST_SCHEMA = pa.schema(
+    [
+        ("bucket", pa.int32()),
+        ("run_id", pa.string()),
+        ("input_fingerprint", pa.string()),
+        ("rows_in", pa.int64()),
+        ("rows_out", pa.int64()),
+        ("error_rows", pa.int64()),
+        ("wall_ms", pa.int64()),
+        ("committed_at", pa.timestamp("us", tz="UTC")),
+    ]
 )
 
 
@@ -131,24 +152,31 @@ def _inflight_path(output_path: str) -> str:
     return os.path.join(output_path, "_inflight")
 
 
+def _read_bytes(fs, jpath) -> bytes:
+    stream = fs.open(jpath)
+    try:
+        return bytes(stream.readAllBytes())
+    finally:
+        stream.close()
+
+
+def _write_bytes(fs, jpath, data: bytes) -> None:
+    stream = fs.create(jpath, True)
+    try:
+        stream.write(data)
+    finally:
+        stream.close()
+
+
 def _read_buckets(fs, jpath) -> set[int]:
     """The bucket ids in the record at ``jpath``; none when it is absent."""
     if not fs.exists(jpath):
         return set()
-    stream = fs.open(jpath)
-    try:
-        text = bytes(stream.readAllBytes()).decode("ascii")
-    finally:
-        stream.close()
-    return {int(b) for b in text.split(",") if b}
+    return {int(b) for b in _read_bytes(fs, jpath).decode("ascii").split(",") if b}
 
 
 def _write_buckets(fs, jpath, buckets: Collection[int]) -> None:
-    stream = fs.create(jpath, True)
-    try:
-        stream.write(",".join(map(str, sorted(buckets))).encode("ascii"))
-    finally:
-        stream.close()
+    _write_bytes(fs, jpath, ",".join(map(str, sorted(buckets))).encode("ascii"))
 
 
 def done_buckets(spark: SparkSession, output_path: str, input_fingerprint: str) -> list[int]:
@@ -160,24 +188,64 @@ def done_buckets(spark: SparkSession, output_path: str, input_fingerprint: str) 
     (:func:`run_extraction_job` writes it before it deletes the pending
     buckets' files and clears it after their manifest rows) may hold the
     files of a run that died before its append, whatever its latest row
-    says, so it is never done.  One scan job, no shuffle (the manifest is
-    O(n_buckets × runs) rows, so the latest row per bucket is picked on
-    the driver) and one ``exists`` for the record; no job at all on a
-    fresh output."""
-    path = manifest_path(output_path)
-    fs, jpath = _hadoop_path(spark, path)
-    if not fs.exists(jpath):  # first run: no manifest yet
-        return []
+    says, so it is never done.
+
+    Starts no Spark job: one Hadoop glob lists the manifest files, each is
+    read whole on the driver and parsed with pyarrow (the manifest is
+    O(n_buckets × runs) rows), and one ``exists`` checks the record.
+    Files Spark wrote before the manifest moved to the driver store
+    ``committed_at`` as INT96, which pyarrow reads as naive nanoseconds in
+    UTC; both kinds are compared as UTC microseconds."""
+    fs, pattern = _hadoop_path(
+        spark, os.path.join(manifest_path(output_path), "part-*.parquet")
+    )
+    committed_at = MANIFEST_SCHEMA.field("committed_at").type
     latest: dict = {}
-    manifest = spark.read.schema(MANIFEST_SCHEMA).parquet(path)
-    for r in manifest.select("bucket", "committed_at", "input_fingerprint").collect():
-        if r.bucket not in latest or r.committed_at > latest[r.bucket][0]:
-            latest[r.bucket] = (r.committed_at, r.input_fingerprint)
+    for status in fs.globStatus(pattern) or []:  # none on a fresh output
+        table = pq.read_table(
+            pa.BufferReader(_read_bytes(fs, status.getPath())),
+            columns=["bucket", "committed_at", "input_fingerprint"],
+        )
+        at_us = table["committed_at"].cast(committed_at).cast(pa.int64())
+        for bucket, at, fp in zip(
+            table["bucket"].to_pylist(),
+            at_us.to_pylist(),
+            table["input_fingerprint"].to_pylist(),
+        ):
+            if bucket not in latest or at > latest[bucket][0]:
+                latest[bucket] = (at, fp)
     inflight = _path_class(spark.sparkContext._jvm)(_inflight_path(output_path))
     dirty = _read_buckets(fs, inflight)
     return sorted(
         b for b, (_, fp) in latest.items() if fp == input_fingerprint and b not in dirty
     )
+
+
+def _append_manifest(spark: SparkSession, output_path: str, run_id: str, table) -> None:
+    """Commits one run's manifest rows (a :data:`MANIFEST_SCHEMA` table) as
+    the file ``_manifest/part-<run_id>.parquet``.  It is written under a
+    ``.``-prefixed name, which neither Spark nor pyarrow lists, then
+    renamed into place: the rename is the commit point, so a run that dies
+    before it leaves no row any reader sees.  No Arrow schema blob in the
+    footer: the file stays no larger than the one Spark wrote."""
+    sink = pa.BufferOutputStream()
+    pq.write_table(table, sink, compression="snappy", store_schema=False)
+    fs, final = _hadoop_path(
+        spark, os.path.join(manifest_path(output_path), f"part-{run_id}.parquet")
+    )
+    hidden = _path_class(spark.sparkContext._jvm)(
+        os.path.join(manifest_path(output_path), f".part-{run_id}.parquet")
+    )
+    _write_bytes(fs, hidden, sink.getvalue().to_pybytes())
+    if not fs.rename(hidden, final):
+        raise OSError(f"could not commit the manifest file {final.toString()}")
+
+
+def _in_buckets(expr: str, buckets: Collection[int]) -> Column:
+    """``expr IN (buckets)`` as one SQL text: one Py4J round trip whatever
+    the bucket count (``Column.isin`` sends about four per bucket).  Spark
+    turns a long list into an ``InSet``."""
+    return F.expr(f"{expr} IN ({','.join(map(str, sorted(buckets)))})")
 
 
 def pending_documents(
@@ -190,7 +258,7 @@ def pending_documents(
     run still has to write (no filter when they cover ``range(n_buckets)``).
 
     For the :data:`ROW_LOCAL_BUILDERS` the predicate is a JVM filter on
-    ``pages``, built on the same :func:`bucket_of` expression the builder
+    ``pages``, built on the same ``bucket_sql`` expression the builder
     attaches, so it sits BELOW the Python stage and a committed page is
     never decoded again (Spark cannot push a filter through
     ``mapInPandas``).  Any other builder gets it on its OUTPUT: fused
@@ -201,8 +269,8 @@ def pending_documents(
     if set(pending) >= set(range(cfg.n_buckets)):
         return build(pages, cfg)
     if build in ROW_LOCAL_BUILDERS:
-        return build(pages.filter(bucket_of(cfg.n_buckets).isin(sorted(pending))), cfg)
-    return build(pages, cfg).filter(F.col("bucket").isin(sorted(pending)))
+        return build(pages.filter(_in_buckets(bucket_sql(cfg.n_buckets), pending)), cfg)
+    return build(pages, cfg).filter(_in_buckets("bucket", pending))
 
 
 def run_extraction_job(
@@ -218,8 +286,9 @@ def run_extraction_job(
 
     Returns a summary dict with processed/skipped bucket counts.  If every
     bucket in ``range(cfg.n_buckets)`` is already committed under
-    ``input_fingerprint`` it returns after the manifest read: no write, no
-    stats scan, no manifest append.  ``fail_buckets_above`` is a test
+    ``input_fingerprint`` it returns after the driver-side manifest read,
+    having started no Spark job: no write, no stats scan, no manifest
+    append.  ``fail_buckets_above`` is a test
     hook: buckets with id >= the value are left unwritten, as if the job
     died before reaching them.  The pending buckets — neither committed
     nor hooked out — are computed once on the driver; they select the
@@ -239,9 +308,14 @@ def run_extraction_job(
     The data files are written with :data:`PARQUET_WRITE_OPTIONS` by
     ``4 × defaultParallelism`` writer tasks; each (bucket, salt) slice goes
     to one task, which writes one file per bucket it holds.  Dynamic
-    partition overwrite is per bucket DIRECTORY, so multi-file buckets
-    resume exactly like single-file ones.  The layout
-    and task count are pinned by tests/test_resume.py.
+    partition overwrite (a writer option; the session's
+    ``partitionOverwriteMode`` is left as it is) is per bucket DIRECTORY,
+    so multi-file buckets resume exactly like single-file ones.  The
+    layout and task count are pinned by tests/test_resume.py.  The
+    manifest append after the write is one Spark aggregate of the
+    counters, collected, and one driver-written file
+    (:func:`_append_manifest`); when no pending bucket wrote a row it
+    starts no Spark job.
     """
     run_id = uuid.uuid4().hex[:12]
     already_done = set(done_buckets(spark, output_path, input_fingerprint))
@@ -295,7 +369,6 @@ def run_extraction_job(
     left_out = _read_buckets(fs, inflight) - set(pending)
     _write_buckets(fs, inflight, left_out | set(pending))
     _clear_buckets(spark, output_path, pending)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     started = time.time()
     (
         # extraction is map-only; the shuffle happens HERE, on the extracted
@@ -308,37 +381,29 @@ def run_extraction_job(
         .repartition(write_partitions, "bucket", "_salt")
         .drop("_salt")
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .options(**PARQUET_WRITE_OPTIONS)
         .partitionBy("bucket")
         .parquet(data_path(output_path))
     )
     wall_ms = int((time.time() - started) * 1000)
 
-    # Post-commit accounting, one JVM aggregate appended straight to the
-    # manifest: a second scan of what was just written, read from the
-    # pending bucket directories that exist (``basePath`` keeps the bucket
-    # partition column), so a partial resume lists O(pending)
-    # directories, not the whole table — up to 32 on the driver, more with
-    # one listing task per core (session.build_session).  The scan is
-    # PRUNED to the two tiny columns the counters need (reading the full
-    # schema cost ~14 s of a 24 s sf0.1 job — the cold re-read of the wide
-    # `content` column; the pruned read is ~1 s), plus one zero row per
-    # pending bucket so a bucket that wrote nothing is committed too.
-    # (Persisting the extracted rows through the write to skip the re-scan
-    # was measured WORSE: caching the wide rows inflated the write phase
-    # 14 s → 32 s.)  No collect and no driver-built frame: a
-    # createDataFrame of local rows runs its own Python-worker job.
-    zero = F.lit(0).cast("long")
-    counters = (
-        spark.range(0, cfg.n_buckets, 1, 1)
-        .filter(F.col("id").isin(pending))
-        .select(
-            F.col("id").cast("int").alias("bucket"),
-            zero.alias("rows_in"),
-            zero.alias("rows_out"),
-            zero.alias("error_rows"),
-        )
-    )
+    # Post-commit accounting: one JVM aggregate, collected — at most one
+    # row per pending bucket, O(pending) on the driver.  It is a second
+    # scan of what was just written, read from the pending bucket
+    # directories that exist (``basePath`` keeps the bucket partition
+    # column), so a partial resume lists O(pending) directories, not the
+    # whole table — up to 32 on the driver, more with one listing task
+    # per core (session.build_session).  The scan is PRUNED to the two
+    # tiny columns the counters need (reading the full schema cost ~14 s
+    # of a 24 s sf0.1 job — the cold re-read of the wide `content` column;
+    # the pruned read is ~1 s).  A pending bucket that wrote nothing gets
+    # zero counters on the driver, so it is committed too.  (Persisting
+    # the extracted rows through the write to skip the re-scan was
+    # measured WORSE: caching the wide rows inflated the write phase 14 s
+    # → 32 s.)  The manifest rows are O(pending) too, so the driver writes
+    # them as one parquet file; a Spark write would add a job's fixed cost.
+    counters = {b: (0, 0, 0) for b in pending}  # keeps the order of pending
     # the directories are passed as a list, not as the glob: a glob path
     # makes FileStreamSink probe the literal pattern for a _spark_metadata
     # directory, which fails with a logged stack trace on every call
@@ -347,37 +412,39 @@ def run_extraction_job(
         for status in _bucket_dirs(spark, output_path, pending)[1]
     ]
     if written_dirs:  # none: no pending bucket wrote a row
+        error = F.col("error").isNotNull()
         written = (
             spark.read.schema("passage_idx int, error string, bucket int")
             .option("basePath", data_path(output_path))
             .parquet(*written_dirs)
+            .groupBy("bucket")
+            .agg(
+                # urls counted without DISTINCT: passage_idx==0 occurs
+                # exactly once per extracted url, error rows once per
+                # failed url
+                F.count_if((F.col("passage_idx") == 0) | error),
+                F.count_if(~error),
+                F.count_if(error),
+            )
         )
-        error = F.col("error").isNotNull()
-        counters = written.select(
-            "bucket",
-            # urls counted without DISTINCT: passage_idx==0 occurs exactly
-            # once per extracted url, error rows once per failed url
-            ((F.col("passage_idx") == 0) | error).cast("long").alias("rows_in"),
-            (~error).cast("long").alias("rows_out"),
-            error.cast("long").alias("error_rows"),
-        ).unionByName(counters)
-    (
-        counters.groupBy("bucket")
-        .agg(*(F.sum(c).alias(c) for c in ("rows_in", "rows_out", "error_rows")))
-        .select(
-            "bucket",
-            F.lit(run_id).alias("run_id"),
-            F.lit(input_fingerprint).alias("input_fingerprint"),
-            "rows_in",
-            "rows_out",
-            "error_rows",
-            F.lit(wall_ms).cast("long").alias("wall_ms"),
-            F.current_timestamp().alias("committed_at"),
-        )
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(manifest_path(output_path))
+        for bucket, *counts in written.collect():
+            counters[bucket] = tuple(counts)
+    rows_in, rows_out, error_rows = zip(*counters.values())
+    n = len(pending)
+    manifest = pa.table(
+        {
+            "bucket": pending,
+            "run_id": [run_id] * n,
+            "input_fingerprint": [input_fingerprint] * n,
+            "rows_in": rows_in,
+            "rows_out": rows_out,
+            "error_rows": error_rows,
+            "wall_ms": [wall_ms] * n,
+            "committed_at": [datetime.now(timezone.utc)] * n,
+        },
+        schema=MANIFEST_SCHEMA,
     )
+    _append_manifest(spark, output_path, run_id, manifest)
     if left_out:
         _write_buckets(fs, inflight, left_out)
     else:

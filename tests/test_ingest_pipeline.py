@@ -577,25 +577,21 @@ class TestIngestPipeline:
         files are written, then the job dies before the manifest append.
         The resume rewrites those buckets and the corpus table equals a
         clean fused run row for row."""
-        from pyspark.sql.readwriter import DataFrameWriter
-
-        from document_automation_spark.plans.checkpoint import manifest_path, read_output
+        from document_automation_spark.plans import checkpoint
+        from document_automation_spark.plans.checkpoint import read_output
 
         pages = pages_df(spark, 80, partitions=4)
         cfg = ExtractConfig(n_buckets=8)
         out = str(tmp_path / "fused_crash")
-        write_parquet = DataFrameWriter.parquet
 
         class ManifestAppendCrash(RuntimeError):
             pass
 
-        def crash_on_manifest(self, path, *args, **kwargs):
-            if path == manifest_path(out):
-                raise ManifestAppendCrash(path)
-            return write_parquet(self, path, *args, **kwargs)
+        def crash_on_manifest(spark_, output_path, *args):
+            raise ManifestAppendCrash(output_path)
 
         with monkeypatch.context() as patched:
-            patched.setattr(DataFrameWriter, "parquet", crash_on_manifest)
+            patched.setattr(checkpoint, "_append_manifest", crash_on_manifest)
             with pytest.raises(ManifestAppendCrash):
                 run_ingest_pipeline(
                     spark, pages, out, "fp-fc", cfg=cfg, curated_mode="fused"

@@ -35,6 +35,14 @@ KEPT = {
     "compare against",
     "kernels.cluster.postprocess_lines": "K10, the reference's four-branch "
     "post-process dispatcher (COVERAGE K10)",
+    "kernels.html_extract.extract_main_text_html": "the DOM-parser reference "
+    "the html_fast parity tests compare against (COVERAGE K1, F7)",
+    "operators.webtext_quality.corpus_datasheet": "COVERAGE's corpus "
+    "datasheet rollup row",
+    "operators.domains.domain_stats": "the per-host datasheet of "
+    "COVERAGE's domain-level curation row",
+    "operators.domains.filter_by_domain": "the allow/block gate of "
+    "COVERAGE's domain-level curation row",
     "kernels.image.encode_png": "test-input builder for the image decoders",
     "kernels.warc.build_wet": "test-input builder for the WET reader",
 }
@@ -59,26 +67,15 @@ KEPT_PARAMS = {
     "broadcastable size (SCALE.md bigram-LM row)",
     "operators.linkgraph.anchor_text_terms.min_refs": "(c) hapax-tail prune of the "
     "anchor table (SCALE.md anchor-text row)",
-    "operators.webtext_quality.corpus_datasheet.exact_percentiles": "(c) exact "
-    "percentiles instead of the mergeable sketch (COVERAGE corpus datasheet row)",
     "operators.dedup.near_dup_dedup.canonicalize": "(d) connected-components "
     "canonicalization (COVERAGE near-dup pipeline row)",
     "operators.dedup.near_dup_dedup.cc_max_iterations": "(d) its iteration bound",
-    "operators.domains.filter_by_domain.blocklist": "(d) the allow/block gate "
-    "(COVERAGE domain-level curation row)",
-    "operators.domains.filter_by_domain.allowlist": "(d) the allow/block gate",
-    "operators.domains.filter_by_domain.block_subdomains": "(d) subdomain vs exact "
-    "matching (COVERAGE domain-level curation row)",
-    "operators.domains.domain_stats.level": "(d) registrable-domain rollup "
-    "(COVERAGE domain-level curation row)",
     "operators.skew.salted_join.how": "(d) result-identical inner/left join "
     "(COVERAGE skew-safe join row)",
     "operators.positive_passage.dpr_training_samples.hard_negatives": "(d) mined "
     "negatives of the DPR samples (COVERAGE hard-negative mining, S12)",
     "operators.webtext_quality.filter_by_quality.lm": "(d) the perplexity rule "
     "(COVERAGE quality-filter gate row)",
-    "operators.webtext_quality.corpus_datasheet.lm": "(d) the mean-perplexity "
-    "column (COVERAGE corpus datasheet row)",
 }
 
 
@@ -86,11 +83,33 @@ def _py_files(directory: Path):
     return sorted(p for p in directory.rglob("*.py") if not p.name.startswith("test_"))
 
 
+def _declarations(tree, path: Path) -> set[int]:
+    """Ids of the nodes that name a function without using it: the
+    ``__all__`` entries, ``Observation("…")`` names and the re-exports of
+    an ``__init__``."""
+    skip: set[int] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Assign, ast.AugAssign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            if any(isinstance(t, ast.Name) and t.id == "__all__" for t in targets):
+                skip.update(map(id, ast.walk(node.value)))
+        elif isinstance(node, ast.Call) and _callee(node.func) == "Observation":
+            skip.update(id(a) for a in node.args[:1])
+        elif path.name == "__init__.py" and isinstance(node, ast.ImportFrom):
+            skip.update(map(id, node.names))
+    return skip
+
+
 def _names_used(paths) -> set[str]:
-    """Names, attributes, imported names and identifier-shaped strings."""
+    """Names, attributes, imported names and identifier-shaped strings,
+    except :func:`_declarations`."""
     used: set[str] = set()
     for path in paths:
-        for node in ast.walk(ast.parse(path.read_text())):
+        tree = ast.parse(path.read_text())
+        skip = _declarations(tree, path)
+        for node in ast.walk(tree):
+            if id(node) in skip:
+                continue
             if isinstance(node, ast.Name):
                 used.add(node.id)
             elif isinstance(node, ast.Attribute):

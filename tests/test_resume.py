@@ -12,11 +12,13 @@ from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from document_automation_spark.jobs.ingest_pipeline import _write_table
 from document_automation_spark.operators.extract import (
     ExtractConfig,
     documents_from_text,
     extract_documents,
 )
+from document_automation_spark.plans import checkpoint
 from document_automation_spark.plans.checkpoint import (
     _clear_buckets,
     done_buckets,
@@ -172,7 +174,7 @@ def test_resume_of_committed_output_only_reads_manifest(spark, out_dir):
         again = run_extraction_job(spark, pages, out_dir, FP, cfg)
     assert again["buckets_processed"] == 0
     assert again["buckets_skipped"] == 8
-    assert len(jobs) <= 1
+    assert jobs == []
     assert _files_under(manifest_path(out_dir)) == manifest_files
 
 
@@ -434,8 +436,6 @@ def test_crash_between_data_write_and_manifest_append_resumes_clean(
     Those buckets stay pending, so the resume writes them again and the
     table equals a clean run row for row, with one manifest row per
     bucket under the fingerprint."""
-    from pyspark.sql.readwriter import DataFrameWriter
-
     pages = pages_df(spark, N_PAGES, partitions=4)
     cfg = ExtractConfig(n_buckets=8)
     clean = str(tmp_path / "clean")
@@ -447,15 +447,11 @@ def test_crash_between_data_write_and_manifest_append_resumes_clean(
         committed = set(done_buckets(spark, out_dir, FP))
         assert committed and max(committed) < 4
 
-    write_parquet = DataFrameWriter.parquet
-
-    def crash_on_manifest(self, path, *args, **kwargs):
-        if path == manifest_path(out_dir):
-            raise _ManifestAppendCrash(path)
-        return write_parquet(self, path, *args, **kwargs)
+    def crash_on_manifest(spark_, output_path, *args):
+        raise _ManifestAppendCrash(output_path)
 
     with monkeypatch.context() as patched:
-        patched.setattr(DataFrameWriter, "parquet", crash_on_manifest)
+        patched.setattr(checkpoint, "_append_manifest", crash_on_manifest)
         with pytest.raises(_ManifestAppendCrash):
             run_extraction_job(spark, pages, out_dir, FP, cfg, docs_fn=docs_fn)
     # the data write happened: every bucket has a directory again
@@ -499,8 +495,6 @@ def fingerprint_runs(spark, tmp_path_factory):
 
 def _crash_then_resume(spark, pages, out_dir, fp, crash_point):
     """One run of ``fp`` that dies at ``crash_point``, then its resume."""
-    from pyspark.sql.readwriter import DataFrameWriter
-
     cfg = ExtractConfig(n_buckets=8)
     run = functools.partial(
         run_extraction_job, spark, pages, out_dir, fp, cfg, docs_fn=documents_from_text
@@ -508,22 +502,20 @@ def _crash_then_resume(spark, pages, out_dir, fp, crash_point):
     if crash_point == "before_data_write":
         run(fail_buckets_above=4)
     else:
-        write_parquet = DataFrameWriter.parquet
+        append = checkpoint._append_manifest
 
-        def crash_on_manifest(self, path, *args, **kwargs):
-            if path != manifest_path(out_dir):
-                return write_parquet(self, path, *args, **kwargs)
+        def crash_on_manifest(spark_, output_path, *args):
             if crash_point == "after_manifest_append":
                 # the append commits; the run dies before it rewrites or
                 # deletes the _inflight record
-                write_parquet(self, path, *args, **kwargs)
-            raise _ManifestAppendCrash(path)
+                append(spark_, output_path, *args)
+            raise _ManifestAppendCrash(output_path)
 
         # a re-submit of an input whose buckets are all committed writes
         # nothing, so it has no manifest append to die in
         finished = len(done_buckets(spark, out_dir, fp)) == cfg.n_buckets
         with pytest.MonkeyPatch.context() as patched:
-            patched.setattr(DataFrameWriter, "parquet", crash_on_manifest)
+            patched.setattr(checkpoint, "_append_manifest", crash_on_manifest)
             if finished:
                 run()
             else:
@@ -575,8 +567,6 @@ def test_resubmit_after_another_fingerprint_died_before_its_append(
     its manifest append, so A's rows stay the latest in the manifest while
     the files are B's.  A re-submit of A must re-run every bucket, not
     serve B's rows as A's."""
-    from pyspark.sql.readwriter import DataFrameWriter
-
     inputs, clean = fingerprint_runs
     out_dir = str(tmp_path_factory.mktemp("a_b_a") / "out")
     cfg = ExtractConfig(n_buckets=8)
@@ -587,15 +577,12 @@ def test_resubmit_after_another_fingerprint_died_before_its_append(
         )
 
     run("pages40")
-    write_parquet = DataFrameWriter.parquet
 
-    def crash_on_manifest(self, path, *args, **kwargs):
-        if path == manifest_path(out_dir):
-            raise _ManifestAppendCrash(path)
-        return write_parquet(self, path, *args, **kwargs)
+    def crash_on_manifest(spark_, output_path, *args):
+        raise _ManifestAppendCrash(output_path)
 
     with pytest.MonkeyPatch.context() as patched:
-        patched.setattr(DataFrameWriter, "parquet", crash_on_manifest)
+        patched.setattr(checkpoint, "_append_manifest", crash_on_manifest)
         with pytest.raises(_ManifestAppendCrash):
             run("pages3")
     assert done_buckets(spark, out_dir, "pages40") == []
@@ -605,3 +592,171 @@ def test_resubmit_after_another_fingerprint_died_before_its_append(
     assert _rows(spark, out_dir) == clean["pages40"]
     assert done_buckets(spark, out_dir, "pages40") == list(range(8))
     assert not os.path.exists(os.path.join(out_dir, "_inflight"))
+
+
+def _spark_append(spark_, output_path, run_id, table):
+    """The manifest append as it was before the manifest moved to the
+    driver: a Spark write of the rows, ``committed_at`` stored as INT96."""
+    spark_.createDataFrame(
+        table.to_pylist(),
+        "bucket int, run_id string, input_fingerprint string, rows_in long, "
+        "rows_out long, error_rows long, wall_ms long, committed_at timestamp",
+    ).coalesce(1).write.mode("append").parquet(manifest_path(output_path))
+
+
+def test_manifest_written_by_spark_resumes_with_driver_appends(
+    spark, tmp_path_factory, fingerprint_runs
+):
+    """An output whose manifest Spark wrote (fingerprint A), then B and A
+    again through the driver-side append: each call resolves its done
+    buckets as a clean run does, and a Spark read of ``_manifest`` sees
+    every row of both file formats."""
+    import pyarrow.parquet as pq
+
+    inputs, clean = fingerprint_runs
+    out_dir = str(tmp_path_factory.mktemp("mixed") / "out")
+    cfg = ExtractConfig(n_buckets=8)
+
+    def run(fp):
+        return run_extraction_job(
+            spark, inputs[fp], out_dir, fp, cfg, docs_fn=documents_from_text
+        )
+
+    with pytest.MonkeyPatch.context() as patched:
+        patched.setattr(checkpoint, "_append_manifest", _spark_append)
+        run("pages40")
+    (spark_file,) = _files_under(manifest_path(out_dir))[-1:]
+    assert "c000" in spark_file
+    assert str(pq.read_schema(spark_file).field("committed_at").type) == "timestamp[ns]"
+    assert done_buckets(spark, out_dir, "pages40") == list(range(8))
+
+    run("pages3")
+    assert done_buckets(spark, out_dir, "pages3") == list(range(8))
+    assert done_buckets(spark, out_dir, "pages40") == []
+    assert run("pages40")["buckets_processed"] == 8
+    assert done_buckets(spark, out_dir, "pages40") == list(range(8))
+    assert done_buckets(spark, out_dir, "pages3") == []
+    assert _rows(spark, out_dir) == clean["pages40"]
+
+    manifest = _manifest(spark, out_dir).collect()
+    assert len(manifest) == 24
+    assert sorted(r.input_fingerprint for r in manifest) == (
+        ["pages3"] * 8 + ["pages40"] * 16
+    )
+    latest = {r.bucket: r for r in sorted(manifest, key=lambda r: r.committed_at)}
+    assert {r.input_fingerprint for r in latest.values()} == {"pages40"}
+    assert sum(r.rows_out + r.error_rows for r in latest.values()) == len(clean["pages40"])
+
+
+def test_crash_before_the_manifest_rename_leaves_no_row(
+    spark, tmp_path_factory, fingerprint_runs
+):
+    """B commits; A's run writes its manifest file under the hidden name
+    and dies before the rename.  No reader sees A's rows — neither
+    ``done_buckets``, nor Spark, nor pyarrow — and the resume of A equals
+    a clean run of A."""
+    import pyarrow.parquet as pq
+
+    inputs, clean = fingerprint_runs
+    out_dir = str(tmp_path_factory.mktemp("rename") / "out")
+    cfg = ExtractConfig(n_buckets=8)
+
+    def run(fp):
+        return run_extraction_job(
+            spark, inputs[fp], out_dir, fp, cfg, docs_fn=documents_from_text
+        )
+
+    run("pages3")
+    write_bytes = checkpoint._write_bytes
+
+    def crash_after_hidden_write(fs, jpath, data):
+        write_bytes(fs, jpath, data)
+        if jpath.getName().startswith(".part-"):
+            raise _ManifestAppendCrash(jpath.toString())
+
+    with pytest.MonkeyPatch.context() as patched:
+        patched.setattr(checkpoint, "_write_bytes", crash_after_hidden_write)
+        with pytest.raises(_ManifestAppendCrash):
+            run("pages40")
+    hidden = [
+        f for f in os.listdir(manifest_path(out_dir))
+        if f.startswith(".part-") and f.endswith(".parquet")
+    ]
+    assert len(hidden) == 1
+    assert done_buckets(spark, out_dir, "pages40") == []
+    assert done_buckets(spark, out_dir, "pages3") == []  # its files are gone
+    assert {r.input_fingerprint for r in _manifest(spark, out_dir).collect()} == {"pages3"}
+    assert pq.read_table(manifest_path(out_dir)).num_rows == 8
+
+    assert run("pages40")["buckets_processed"] == 8
+    assert _rows(spark, out_dir) == clean["pages40"]
+    assert done_buckets(spark, out_dir, "pages40") == list(range(8))
+    assert _manifest(spark, out_dir).count() == 16
+
+
+def test_durable_call_keeps_the_session_overwrite_mode(spark, tmp_path, out_dir):
+    """Dynamic partition overwrite is an option of the durable writer, not
+    a session setting: after a durable call the session's mode is what it
+    was, and a partitioned overwrite of another table still replaces all
+    of its partitions."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    run_extraction_job(
+        spark, pages_df(spark, 20, partitions=1), out_dir, FP, ExtractConfig(n_buckets=4)
+    )
+    assert spark.conf.get(key) == before
+
+    table = str(tmp_path / "chunk_map")
+    three_shards = spark.range(30).withColumn("shard", (F.col("id") % 3).cast("int"))
+    _write_table(three_shards, table, partition_col="shard")
+    _write_table(spark.range(10).withColumn("shard", F.lit(0)), table, partition_col="shard")
+    assert spark.read.parquet(table).count() == 10
+    assert [d for d in os.listdir(table) if d.startswith("shard=")] == ["shard=0"]
+
+
+def _py4j_calls(spark, build) -> tuple:
+    """``(build(), number of Py4J commands it sent)``."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(args[0] if args else None)
+        return send(*args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as patched:
+        patched.setattr(client, "send_command", counting)
+        result = build()
+    return result, len(calls)
+
+
+def test_pending_predicate_of_4096_buckets_is_one_sql_in(spark):
+    """4,096 pending buckets of 8,192: building the predicate sends as many
+    Py4J commands as 32 pending buckets do (one SQL text, not one literal
+    per bucket); it is an ``IN``/``INSET`` below ``MapInPandas`` and
+    selects exactly the pending buckets' rows."""
+    pages = pages_df(spark, N_PAGES, partitions=4)
+    cfg = ExtractConfig(n_buckets=8192)
+    pending = range(0, 8192, 2)
+
+    def build(buckets):
+        return lambda: pending_documents(pages, cfg, buckets)
+
+    _py4j_calls(spark, build(range(0, 64, 2)))  # warm any lazy lookups
+    _, calls_32 = _py4j_calls(spark, build(range(0, 64, 2)))
+    docs, calls_4096 = _py4j_calls(spark, build(pending))
+    assert calls_4096 == calls_32, (calls_32, calls_4096)
+    assert calls_4096 < 100
+
+    lines = _plan_lines(docs)
+    python_stage = next(i for i, ln in enumerate(lines) if "MapInPandas" in ln)
+    bucket_filter = next(
+        i for i, ln in enumerate(lines)
+        if "Filter" in ln and "xxhash64" in ln and (" INSET " in ln or " IN (" in ln)
+    )
+    assert bucket_filter > python_stage, "\n".join(lines)
+
+    every = extract_documents(pages, cfg).collect()
+    assert {r.bucket % 2 for r in every} == {0, 1}  # both halves have rows
+    got = sorted((r.url, r.passage_idx) for r in docs.collect())
+    assert got == sorted((r.url, r.passage_idx) for r in every if r.bucket % 2 == 0)
