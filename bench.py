@@ -270,7 +270,6 @@ def _top_customers_only(spark, sf_dir):
     return top_customers_by_revenue(
         spark.read.parquet(f"{sf_dir}/orders.parquet"),
         spark.read.parquet(f"{sf_dir}/customer.parquet"),
-        k=10,
     )
 
 
@@ -291,7 +290,7 @@ def _duplicate_spans_only(spark, sf_dir):
     from document_automation_spark.operators.dedup import duplicate_spans
     from document_automation_spark.queries import _docs_with_dups
 
-    return duplicate_spans(_docs_with_dups(spark, sf_dir), k=32, min_docs=2)
+    return duplicate_spans(_docs_with_dups(spark, sf_dir), k=32)
 
 
 # hash_embeddings' seat gained the missing-embeddings union leg in
@@ -330,7 +329,7 @@ def _similarity_topk_only(spark, sf_dir):
         F.col("vec_id").alias("query_vec_id"),
         F.col("embedding").alias("query_embedding"),
     )
-    return brute_force_topk(emb, queries_df, k=10)
+    return brute_force_topk(emb, queries_df)
 
 
 # bm25_topk's seat folded into bm25_retrieval_eval in round 5 session 5
@@ -340,7 +339,7 @@ def _bm25_topk_only(spark, sf_dir):
     from document_automation_spark.queries import _bm25_query_terms
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return bm25_topk(docs.select("doc_id", "text"), _bm25_query_terms(docs), k=10)
+    return bm25_topk(docs.select("doc_id", "text"), _bm25_query_terms(docs))
 
 
 # hourly_event_rollup's seat folded into salted_event_type_stats in
@@ -354,9 +353,7 @@ def _hourly_rollup_only(spark, sf_dir):
 def _embedding_near_dup_only(spark, sf_dir):
     from document_automation_spark.operators.similarity import embedding_near_dup_pairs
 
-    return embedding_near_dup_pairs(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), threshold=0.3
-    )
+    return embedding_near_dup_pairs(spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
 
 
 # token_stats' seat gained the quality_features join in round 5
@@ -364,11 +361,7 @@ def _embedding_near_dup_only(spark, sf_dir):
 def _token_stats_only(spark, sf_dir):
     from document_automation_spark.operators.text_analysis import token_stats
 
-    return token_stats(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"),
-        include_bpe=True,
-        include_fingerprint=True,
-    )
+    return token_stats(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 # round-5 additions get their own rows from day one so later rounds
@@ -386,7 +379,7 @@ def _bpe_train_encode(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     wf = word_frequencies(docs, min_freq=2)
     vocab = segment_vocabulary(wf, learn_bpe(wf, 16))
-    return encode_documents(docs, vocab, broadcast_vocab=True)
+    return encode_documents(docs, vocab)
 
 
 def _quality_classifier(spark, sf_dir):
@@ -398,7 +391,7 @@ def _quality_classifier(spark, sf_dir):
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    u = uniform_hash_col("doc_id")
+    u = uniform_hash_col()
     model = train_quality_classifier(
         docs.where(u < 0.1).select("text"),
         docs.where((u >= 0.1) & (u < 0.3)).select("text"),
@@ -419,7 +412,7 @@ def _host_pagerank_only(spark, sf_dir):
     edges = docs.select(
         ((d * 7 + 3) % 97).alias("src"), ((d * 31 + 11) % 97).alias("dst")
     ).distinct()
-    return pagerank(edges, n_iters=5, damping=0.85)
+    return pagerank(edges, n_iters=5)
 
 
 # lm_perplexity's seat gained the CCNet head/middle/tail bucket tag in
@@ -433,7 +426,7 @@ def _lm_perplexity_only(spark, sf_dir):
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    lm = train_bigram_lm(docs.filter(F.col("lang") == "en"), cache_registry=[])
+    lm = train_bigram_lm(docs.filter(F.col("lang") == "en"))
     return score_with_bigram_lm(docs, lm)
 
 

@@ -35,6 +35,10 @@ from document_automation_spark.partitioning import fan_out
 
 _TOKEN = re.compile(r"\w+", re.UNICODE)
 
+#: Texts per model call in :func:`embed_with_model` (the reference
+#: EmbeddingRetriever's ``batch_size=50``).
+BATCH_SIZE = 50
+
 
 def embed_text(text: str, dim: int = 16) -> List[float]:
     """Feature-hashing embedding: token hash → bucket, sign bit, L2 norm.
@@ -110,8 +114,6 @@ _MODEL_CACHE: dict = {}
 def embed_with_model(
     documents: DataFrame,
     model_factory,
-    batch_size: int = 50,
-    id_col: str = "doc_id",
     cache_key: str | None = None,
 ) -> DataFrame:
     """The batched-MODEL inference slot (K8): any ``model_factory() ->
@@ -127,16 +129,21 @@ def embed_with_model(
       per-actor EmbeddingRetriever
       (/root/reference/src/gen-sods-doc-image-ray.py:23-29, batch_size=50);
     * **exact batch sizing** — incoming Arrow batches are re-chunked so
-      every model call sees exactly ``batch_size`` texts (the final
+      every model call sees exactly :data:`BATCH_SIZE` texts (the final
       partial chunk per task excepted): a GPU encoder's throughput
       contract, independent of ``spark.sql.execution.arrow.
       maxRecordsPerBatch``;
     * weights travel by **broadcast** when the factory closes over one —
       see ``functions.encoder.make_encoder_model_factory`` for the pattern.
 
-    Returns ``(id_col, embedding: array<double>)``.  Swap the factory for
-    a sentence-transformers load and nothing else changes."""
+    ``documents`` is ``(id, text)``; returns ``(id, embedding:
+    array<double>)``.  Swap the factory for a sentence-transformers load
+    and nothing else changes."""
     import numpy as np
+
+    (id_col,) = [c for c in documents.columns if c != "text"]
+    # read on the driver: the workers run the closure below, not this module
+    batch_size = BATCH_SIZE
 
     if cache_key is not None:
         key = cache_key
@@ -192,7 +199,7 @@ def embed_with_model(
         if buf_txt:
             yield flush(len(buf_txt))
 
-    return documents.select(id_col, "text").mapInPandas(gen, schema)
+    return documents.mapInPandas(gen, schema)
 
 
 def assign_dense_vector_ids(

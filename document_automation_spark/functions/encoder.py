@@ -198,12 +198,11 @@ def split_halves(text: str):
     return " ".join(toks[:m]), " ".join(toks[m:])
 
 
-#: seat/golden hyperparameters — one source of truth
+#: seat/golden split sizes — one source of truth (the trainer's
+#: hyperparameters are :func:`train_contrastive`'s defaults)
 EVAL_MIN_CHARS = 200
 EVAL_N_TEST = 64
 EVAL_TRAIN_CAP = 512
-EVAL_PARAMS = dict(dim_in=512, hidden=128, dim_out=16, seed=7, epochs=800,
-                   lr=0.5, temp=0.07)
 
 
 def load_eval_split(sf_dir: str):
@@ -247,4 +246,4 @@ def trained_eval_encoder(sf_dir: str):
         return None
     train_rows, _ = split
     ta, tb = zip(*[split_halves(t) for _, t in train_rows])
-    return train_contrastive(list(ta), list(tb), **EVAL_PARAMS)
+    return train_contrastive(list(ta), list(tb))

@@ -163,7 +163,7 @@ def ivf_centroids(n_centroids: int = 8):
 
 
 @lru_cache(maxsize=None)
-def _graph_ann_build(graph_k: int, n_rounds: int, sf_dir: Optional[str]):
+def _graph_ann_build(sf_dir: Optional[str]):
     """Load the embeddings fixture and build the NN-descent kNN graph —
     cached separately from graph_ann_rows so the two seated search rows
     (beam=6 and beam=8 on the SAME graph) pay ONE build, exactly like the
@@ -177,20 +177,21 @@ def _graph_ann_build(graph_k: int, n_rounds: int, sf_dir: Optional[str]):
         return None
     import numpy as np
 
-    from document_automation_spark.kernels.graph import knn_graph_py
+    from document_automation_spark.kernels.graph import GRAPH_K, N_ROUNDS, knn_graph_py
 
     pairs = sorted(
         zip(table.column("vec_id").to_pylist(), table.column("embedding").to_pylist())
     )
     ids = [v for v, _ in pairs]
     X = np.array([e for _, e in pairs], dtype=np.float64)
-    return ids, X, knn_graph_py(ids, X, k=graph_k, n_rounds=n_rounds)
+    return ids, X, knn_graph_py(ids, X, k=GRAPH_K, n_rounds=N_ROUNDS)
 
 
-def graph_ann_rows(n_rounds: int = 2, beam: int = 6):
+def graph_ann_rows(beam: int = 6):
     """Pinned rows for the graph-ANN method in the ``ann_recall_eval``
     seat: per query ``(query_vec_id, n_hits, n_scanned)`` for the first 5
-    vec_ids (top-10, 12-NN graph, 8 seeds, 3 hops), computed by the
+    vec_ids (``kernels.graph``'s constants: top-10, 12-NN graph after 3
+    rounds, 8 seeds, 3 hops), computed by the
     pure kernel mirror (kernels/graph — LSH-init NN-descent build +
     fixed-hop beam search, fold-exact cosines, round6, id tie-breaks).
     Graph traversal is iterative/stateful — not single-SQL-expressible —
@@ -198,20 +199,20 @@ def graph_ann_rows(n_rounds: int = 2, beam: int = 6):
     extraction and kmeans seats; the Spark twin is additionally pinned
     edge-for-edge by tests/test_graph_ann.py.  Returns None when the
     parquet is absent."""
-    built = _graph_ann_build(12, n_rounds, oracle_sf_dir())
+    from document_automation_spark.kernels.graph import TOP_K, _Cos, graph_search_py
+
+    built = _graph_ann_build(oracle_sf_dir())
     if built is None:
         return None
     ids, X, G = built
 
-    from document_automation_spark.kernels.graph import _Cos, graph_search_py
-
     query_ids = [v for v in ids if v < 5]
-    res = graph_search_py(ids, X, G, query_ids=query_ids, k=10, n_seeds=8, beam=beam, n_hops=3)
+    res = graph_search_py(ids, X, G, query_ids=query_ids, beam=beam)
     cos = _Cos(ids, X)
     rows = []
     for q in query_ids:
         row = cos.row(q)
-        brute = set(sorted(ids, key=lambda j: (-row[j], j))[:10])
+        brute = set(sorted(ids, key=lambda j: (-row[j], j))[:TOP_K])
         topk, n_scanned = res[q]
         n_hits = len({v for v, _, _ in topk} & brute)
         rows.append((q, n_hits, n_scanned))

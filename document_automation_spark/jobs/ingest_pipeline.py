@@ -123,7 +123,6 @@ def run_ingest_pipeline(
     span_k: int = 32,
     dedup_paragraphs_mode: str | None = None,
     quality_filter: bool = False,
-    quality_rules=None,
     curated_mode: str = "copy",
     decontaminate_path: str | None = None,
     decontaminate_ngram: int = 13,
@@ -246,7 +245,7 @@ def run_ingest_pipeline(
                 dedup_paragraphs_mode is not None,
                 partial(_paragraph_dedup_stage, mode=dedup_paragraphs_mode),
             ),
-            ("quality_filter", quality_filter, partial(_quality_stage, rules=quality_rules)),
+            ("quality_filter", quality_filter, _quality_stage),
             (
                 "decontaminate_path/pii_redact",
                 decontaminate_path or pii_redact,
@@ -573,7 +572,6 @@ def _fix_encoding_stage(
 
     repaired = repair_mojibake(
         corpus.withColumnRenamed("content", "text"),
-        text_col="text",
         # passes=2 also heals generation-2 mojibake ("Ã¢â‚¬â„¢" — a corrupted
         # page re-crawled through another bad proxy); a pass over clean
         # text is a no-op, so this is free for the common case
@@ -685,7 +683,7 @@ def _span_cut_stage(
 
     as_docs = corpus.withColumnRenamed("content", "text")
     span_cache: list = []
-    spans = duplicate_spans(as_docs, k=k, min_docs=2, cache_registry=span_cache)
+    spans = duplicate_spans(as_docs, k=k, cache_registry=span_cache)
     obs_cut = Observation("span_cut")
     surgered = (
         cut_spans(as_docs, spans)
@@ -766,22 +764,17 @@ def _paragraph_dedup_stage(
 
 
 def _quality_stage(
-    spark: SparkSession, corpus: DataFrame, output_path: str, summary: dict, *, rules
+    spark: SparkSession, corpus: DataFrame, output_path: str, summary: dict
 ) -> dict:
     """``quality_filter=True``: the Gopher/C4 repetition gate
-    (``operators.webtext_quality.filter_by_quality``; thresholds from
-    ``rules``, default the published Gopher bounds) — a zero-shuffle
+    (``operators.webtext_quality.filter_by_quality`` at the published
+    Gopher bounds) — a zero-shuffle
     expression gate whose per-rule drop counters ride the write as
     Observation metrics.  Writes ``curated_quality``; summary gains
     ``quality_n_docs`` / ``quality_n_kept`` / ``quality_drop_<rule>``."""
-    from document_automation_spark.operators.webtext_quality import (
-        QualityRules,
-        filter_by_quality,
-    )
+    from document_automation_spark.operators.webtext_quality import filter_by_quality
 
-    kept, obs_q = filter_by_quality(
-        corpus.withColumnRenamed("content", "text"), rules=rules or QualityRules()
-    )
+    kept, obs_q = filter_by_quality(corpus.withColumnRenamed("content", "text"))
     quality_path = os.path.join(output_path, "curated_quality")
     _write_table(kept.withColumnRenamed("text", "content"), quality_path)
     return {
@@ -815,7 +808,7 @@ def _hygiene_stage(
     obs = {}
     if bench_path:
         bench = spark.read.parquet(bench_path).select("text")
-        corpus, obs["decontam"] = decontaminate(corpus, bench, n=ngram, doc_id_col="doc_id")
+        corpus, obs["decontam"] = decontaminate(corpus, bench, n=ngram)
     if redact:
         corpus, obs["pii"] = redact_pii(corpus, count_cols=False)
         corpus = _rederive_identities(corpus, text_col="text")
@@ -906,7 +899,7 @@ def _classifier_stage(
     n_pos = pos.count()
     n_docs = corpus.count()
     rate = min(1.0, (2.0 * n_pos) / max(n_docs, 1))
-    neg = corpus.select("doc_id", "text").where(uniform_hash_col("doc_id") < rate)
+    neg = corpus.select("doc_id", "text").where(uniform_hash_col() < rate)
     model = train_quality_classifier(pos, neg.select("text"))
 
     # persist the model beside the corpus (the reusable artifact) AND
@@ -1031,12 +1024,7 @@ def _bpe_stage(
     row_key = F.concat_ws(
         "#", "url", F.lpad(F.col("passage_idx").cast("string"), 10, "0")
     )
-    counts = count_tokens(
-        corpus.select(row_key.alias("_rk"), "text"),
-        vocab,
-        id_col="_rk",
-        broadcast_vocab=True,
-    )
+    counts = count_tokens(corpus.select(row_key.alias("_rk"), "text"), vocab)
     bpe_path = os.path.join(output_path, "curated_bpe")
     # total-token counter rides the write as an Observation — no re-read
     obs = Observation("bpe_stage")
@@ -1192,7 +1180,7 @@ def _pack_stage(
     pack_path = os.path.join(output_path, "chunk_map")
     _write_table(segments, pack_path, partition_col="shard")
     stats = (
-        chunk_stats(spark.read.parquet(pack_path), shard_col="shard", id_col="pack_id")
+        chunk_stats(spark.read.parquet(pack_path))
         .agg(
             F.sum("n_chunks").alias("n_chunks"),
             F.sum("n_tokens").alias("n_tokens"),

@@ -40,6 +40,19 @@ from typing import Dict, List, Sequence, Tuple
 
 import numpy as np
 
+#: Hits per query of every top-k vector search (this mirror, the Spark
+#: twin, brute force, LSH and IVF): the ``ann_recall_eval`` seat scores
+#: recall@10 against brute force.
+TOP_K = 10
+#: The seat's graph ANN, shared by this mirror and the Spark twin
+#: (``operators/graph_ann``): a 12-NN graph after 3 NN-descent rounds
+#: (round-5 sweep: 3 rounds dominate 2), searched from the 8 lowest
+#: vec_ids over 3 hops.
+GRAPH_K = 12
+N_ROUNDS = 3
+N_SEEDS = 8
+N_HOPS = 3
+
 
 def round6(x: float) -> float:
     """Spark ``F.round(x, 6)`` semantics: HALF_UP on the shortest decimal
@@ -163,25 +176,23 @@ def graph_search_py(
     X: np.ndarray,
     G: Dict[int, List[Tuple[int, float]]],
     query_ids: Sequence[int],
-    k: int = 10,
-    n_seeds: int = 8,
     beam: int = 6,
-    n_hops: int = 3,
 ) -> Dict[int, Tuple[List[Tuple[int, float, int]], int]]:
-    """Fixed-hop beam search per query.  Seeds = the ``n_seeds`` LOWEST
-    corpus vec_ids (deterministic, id-order — no RNG in the query path).
+    """Fixed-hop beam search per query: top :data:`TOP_K` after
+    :data:`N_HOPS` hops.  Seeds = the :data:`N_SEEDS` LOWEST corpus
+    vec_ids (deterministic, id-order — no RNG in the query path).
 
     Returns {query_id: ([(vec_id, cosine, rank)], n_scanned)} where
     n_scanned counts every vector whose cosine was evaluated (the honest
     scan-budget metric the seat reports)."""
     ids_sorted = sorted(ids)
-    seeds = ids_sorted[:n_seeds]
+    seeds = ids_sorted[:N_SEEDS]
     cos = _Cos(ids, np.asarray(X, dtype=np.float64))
     out = {}
     for q in query_ids:
         row = cos.row(q)
         evaluated = set(seeds)
-        for _ in range(n_hops):
+        for _ in range(N_HOPS):
             frontier = sorted(evaluated, key=lambda j: (-row[j], j))[:beam]
             new = set()
             for node in frontier:
@@ -191,7 +202,7 @@ def graph_search_py(
             if not new:
                 break
             evaluated |= new
-        ranked = sorted(evaluated, key=lambda j: (-row[j], j))[:k]
+        ranked = sorted(evaluated, key=lambda j: (-row[j], j))[:TOP_K]
         out[q] = (
             [(j, row[j], r + 1) for r, j in enumerate(ranked)],
             len(evaluated),

@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 
 K1 = 1.2
 B = 0.75
+#: Hits per query of :func:`bm25_topk`.
+TOP_K = 10
 
 
 @dataclass
@@ -142,12 +144,12 @@ def bm25_scores(documents: DataFrame, query_terms: DataFrame) -> DataFrame:
     return bm25_scores_from_index(build_bm25_index(documents), query_terms)
 
 
-def bm25_topk(documents: DataFrame, query_terms: DataFrame, k: int = 10) -> DataFrame:
-    """Top-k BM25 hits per query with deterministic tie-break."""
+def bm25_topk(documents: DataFrame, query_terms: DataFrame) -> DataFrame:
+    """Top-:data:`TOP_K` BM25 hits per query with deterministic tie-break."""
     scored = bm25_scores(documents, query_terms)
     w = Window.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "doc_id", "bm25", F.col("rank").cast("long").alias("rank"))
     )

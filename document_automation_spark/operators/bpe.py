@@ -191,13 +191,9 @@ def segment_vocabulary(
     return out
 
 
-def count_tokens(
-    documents: DataFrame,
-    vocab: DataFrame,
-    id_col: str = "doc_id",
-    broadcast_vocab: bool = False,
-) -> DataFrame:
-    """``(id_col, n_tokens_bpe)`` over ``text`` — the counting-only half of
+def count_tokens(documents: DataFrame, vocab: DataFrame) -> DataFrame:
+    """``(id, n_tokens_bpe)`` over ``text``, keyed by the one column of
+    ``documents`` besides ``text`` — the counting-only half of
     :func:`encode_documents`, for consumers that need token BUDGETS, not
     token streams (the sequence packer sizes chunks from counts alone).
     The vocab side collapses to ``(word, token count)`` before the join,
@@ -205,10 +201,10 @@ def count_tokens(
     ``(id, word)`` pairs into one map-side-combinable sum.  Words absent
     from ``vocab`` count as their character symbols (``length(word)`` —
     the marker fuses into the last char), matching the encode fallback.
+    The vocab side is broadcast, as in :func:`encode_documents`.
     """
-    sizes = vocab.select("word", F.size("tokens").alias("_wt"))
-    if broadcast_vocab:
-        sizes = F.broadcast(sizes)
+    (id_col,) = [c for c in documents.columns if c != "text"]
+    sizes = F.broadcast(vocab.select("word", F.size("tokens").alias("_wt")))
     words = documents.select(
         F.col(id_col), F.explode(F.split(F.col("text"), r"\s+")).alias("word")
     ).where(F.col("word") != "")
@@ -223,25 +219,20 @@ def count_tokens(
     )
 
 
-def encode_documents(
-    documents: DataFrame, vocab: DataFrame, broadcast_vocab: bool = False
-) -> DataFrame:
+def encode_documents(documents: DataFrame, vocab: DataFrame) -> DataFrame:
     """``(doc_id, tokens, n_tokens)`` — tokenize every document's ``text``
     via the per-word segmentation join.
 
     The corpus side explodes to ``(doc_id, pos, word)`` — the document
     string itself never shuffles, only its positional word pieces, which
-    the per-doc reassembly needs anyway; one equi-join on word (pass
-    ``broadcast_vocab=True`` when
-    the segmented vocab fits the broadcast budget — at web scale a
-    pruned vocab usually does, turning the join map-side); one
+    the per-doc reassembly needs anyway; one broadcast equi-join on word
+    (the segmented vocab fits the broadcast budget — at web scale a
+    pruned vocab does, so the join is map-side); one
     groupBy(doc) reassembly ordered by word position.  Words absent from
     ``vocab`` (e.g. pruned by ``min_freq``) fall back to their initial
     character symbols — BPE's standard open-vocabulary behaviour.
     """
-    voc = vocab.select("word", "tokens")
-    if broadcast_vocab:
-        voc = F.broadcast(voc)
+    voc = F.broadcast(vocab.select("word", "tokens"))
     exploded = fan_out(documents).select(
         F.col("doc_id"),
         F.posexplode(F.split(F.col("text"), r"\s+")).alias("pos", "word"),

@@ -52,6 +52,10 @@ __all__ = ["ngram_contamination", "decontaminate", "tokens_col"]
 #: in Java regex and DuckDB's RE2 (both Unicode property classes).
 _TOKEN_RE = r"[\p{L}\p{N}_]+"
 
+#: Benchmark-gram hits that make a document contaminated (GPT-3's rule:
+#: one 13-gram).
+MIN_HIT_GRAMS = 1
+
 
 def tokens_col(text_col: str) -> F.Column:
     """Lower-cased word-token array of ``text_col`` (JVM-side)."""
@@ -59,16 +63,10 @@ def tokens_col(text_col: str) -> F.Column:
 
 
 def ngram_contamination(
-    documents: DataFrame,
-    benchmark: DataFrame,
-    *,
-    n: int = 13,
-    doc_id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_text_col: str = "text",
-    min_hit_grams: int = 1,
+    documents: DataFrame, benchmark: DataFrame, *, n: int = 13
 ) -> DataFrame:
-    """Per-document benchmark-overlap statistics (the audit half).
+    """Per-document benchmark-overlap statistics (the audit half) of
+    ``documents`` (``doc_id``, ``text``) against ``benchmark.text``.
 
     Returns one row per input document::
 
@@ -80,8 +78,8 @@ def ngram_contamination(
                       benchmark set (each position counted once);
     ``hit_frac``    — ``n_hit_grams / n_grams`` rounded to 9 dp (0.0 for
                       gram-less docs);
-    ``is_contaminated`` — ``n_hit_grams >= min_hit_grams`` (GPT-3's rule
-                      is ``>= 1`` at n=13; raise for fuzzier corpora).
+    ``is_contaminated`` — ``n_hit_grams >= MIN_HIT_GRAMS`` (GPT-3's rule,
+                      ``>= 1`` at n=13).
 
     The benchmark side is deduplicated and broadcast; the corpus side
     explodes ``(doc_id, gram_hash)`` only.  Docs with zero grams are
@@ -117,13 +115,9 @@ def ngram_contamination(
             ).alias("g"),
         )
 
-    bench_grams = _gram_rows(benchmark, [], bench_text_col).distinct()
+    bench_grams = _gram_rows(benchmark, [], "text").distinct()
     hits = (
-        _gram_rows(
-            documents.select(F.col(doc_id_col).alias("doc_id"), text_col),
-            ["doc_id"],
-            text_col,
-        )
+        _gram_rows(documents.select("doc_id", "text"), ["doc_id"], "text")
         .join(F.broadcast(bench_grams), "g")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_hit_grams"))
@@ -131,10 +125,8 @@ def ngram_contamination(
     # the stats branch needs only the token COUNT — no per-token hashing,
     # no gram arrays on this (full-corpus) side
     per_doc = documents.select(
-        F.col(doc_id_col).alias("doc_id"),
-        F.greatest(
-            F.size(tokens_col(text_col)) - (n - 1), F.lit(0)
-        ).alias("n_grams"),
+        "doc_id",
+        F.greatest(F.size(tokens_col("text")) - (n - 1), F.lit(0)).alias("n_grams"),
     )
     n_hits = F.coalesce(F.col("n_hit_grams"), F.lit(0)).cast("long")
     return (
@@ -146,20 +138,13 @@ def ngram_contamination(
             F.when(F.col("n_grams") > 0, F.round(n_hits / F.col("n_grams"), 9))
             .otherwise(F.lit(0.0))
             .alias("hit_frac"),
-            (n_hits >= F.lit(min_hit_grams)).alias("is_contaminated"),
+            (n_hits >= F.lit(MIN_HIT_GRAMS)).alias("is_contaminated"),
         )
     )
 
 
 def decontaminate(
-    documents: DataFrame,
-    benchmark: DataFrame,
-    *,
-    n: int = 13,
-    doc_id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_text_col: str = "text",
-    min_hit_grams: int = 1,
+    documents: DataFrame, benchmark: DataFrame, *, n: int = 13
 ) -> Tuple[DataFrame, Observation]:
     """The action half: drop contaminated docs, count what happened.
 
@@ -174,22 +159,14 @@ def decontaminate(
     count is observable on the same plan.  ``documents`` keeps its full
     schema.
     """
-    stats = ngram_contamination(
-        documents,
-        benchmark,
-        n=n,
-        doc_id_col=doc_id_col,
-        text_col=text_col,
-        bench_text_col=bench_text_col,
-        min_hit_grams=min_hit_grams,
-    )
+    stats = ngram_contamination(documents, benchmark, n=n)
     flagged = (
         stats.filter(F.col("is_contaminated"))
-        .select(F.col("doc_id").alias(doc_id_col))
+        .select("doc_id")
         .withColumn("_contaminated", F.lit(True))
     )
     obs = Observation("decontaminate")
-    marked = documents.join(flagged, doc_id_col, "left").observe(
+    marked = documents.join(flagged, "doc_id", "left").observe(
         obs,
         F.count(F.lit(1)).alias("n_docs_in"),
         F.coalesce(F.sum(F.col("_contaminated").cast("long")), F.lit(0)).alias(

@@ -36,6 +36,17 @@ from pyspark.sql import types as T
 
 from document_automation_spark.partitioning import fan_out
 
+#: 5-shingle Jaccard at which :func:`near_dup_dedup` drops a candidate.
+JACCARD_THRESHOLD = 0.9
+#: Char n-gram size and Jaccard floor of :func:`ngram_jaccard_pairs`.
+PAIR_NGRAM = 3
+PAIR_JACCARD = 0.5
+#: Hamming radius of :func:`simhash_near_dup_pairs`; the 4-band pigeonhole
+#: is exact for any radius below 4.
+MAX_HAMMING = 3
+#: Distinct documents a :func:`duplicate_spans` window must occur in.
+MIN_DOCS = 2
+
 
 def exact_dedup(documents: DataFrame) -> DataFrame:
     """Keep the lowest-doc_id representative of each exact-text group.
@@ -220,14 +231,14 @@ def connected_components(edges: DataFrame, max_iterations: int = 30) -> DataFram
 
 def near_dup_dedup(
     documents: DataFrame,
-    jaccard_threshold: float = 0.8,
     canonicalize: str = "greedy",
     cc_max_iterations: int = 30,
 ) -> DataFrame:
     """The production near-dup pipeline, end to end:
 
-        MinHash → LSH band candidates → exact n-gram-Jaccard VERIFY →
-        drop every doc that near-duplicates a lower-id doc.
+        MinHash → LSH band candidates → exact n-gram-Jaccard VERIFY
+        (≥ :data:`JACCARD_THRESHOLD`) → drop every doc that
+        near-duplicates a lower-id doc.
 
     Candidates and verify both use 5-char shingles; the candidates are
     :func:`minhash_lsh_candidates` at its defaults (32 permutations, 8
@@ -267,7 +278,7 @@ def near_dup_dedup(
     verified = (
         candidates.join(a, "doc_a")
         .join(b, "doc_b")
-        .filter(inter / union >= jaccard_threshold)
+        .filter(inter / union >= JACCARD_THRESHOLD)
     )
     if canonicalize == "cc":
         comps = connected_components(
@@ -300,11 +311,11 @@ def simhash_fingerprints(documents: DataFrame) -> DataFrame:
     )
 
 
-def simhash_near_dup_pairs(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
+def simhash_near_dup_pairs(documents: DataFrame) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance — banded multi-probe.
 
     Pigeonhole construction: split the 64-bit fingerprint into 4 16-bit
-    bands; any pair with Hamming ≤ ``max_hamming`` < 4 must agree
+    bands; any pair with Hamming ≤ :data:`MAX_HAMMING` < 4 must agree
     on at least one whole band, so candidates form ONLY inside band-value
     buckets (an equi-join on (band, bits) — no all-pairs).  Candidates are
     then verified with the exact popcount, entirely JVM-side
@@ -316,8 +327,6 @@ def simhash_near_dup_pairs(documents: DataFrame, max_hamming: int = 3) -> DataFr
     loop callers should compute fingerprints once and bucket externally
     (or ``spark.catalog.clearCache()`` between rounds).
     """
-    if max_hamming >= 4:
-        raise ValueError("pigeonhole needs max_hamming < 4 bands")
 
     def band_bits(b: int):
         return F.shiftright("simhash", b * 16).bitwiseAND(F.lit(0xFFFF))
@@ -354,16 +363,15 @@ def simhash_near_dup_pairs(documents: DataFrame, max_hamming: int = 3) -> DataFr
                 "hamming"
             ),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= MAX_HAMMING)
         .distinct()
     )
     return pairs
 
 
-def ngram_jaccard_pairs(
-    documents: DataFrame, n: int = 3, threshold: float = 0.8
-) -> DataFrame:
-    """Exact n-gram Jaccard for candidate pairs under (lang, n_chars) blocking.
+def ngram_jaccard_pairs(documents: DataFrame) -> DataFrame:
+    """Exact :data:`PAIR_NGRAM`-gram Jaccard for candidate pairs under
+    (lang, n_chars) blocking; pairs at or above :data:`PAIR_JACCARD`.
 
     Spark-native set algebra: n-gram arrays via slice-transform, then
     ``array_intersect``/``array_union`` sizes — no Python in the join path.
@@ -373,8 +381,8 @@ def ngram_jaccard_pairs(
     """
     grams = F.array_distinct(
         F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length("text") - (n - 1), F.lit(1))),
-            lambda i: F.xxhash64(F.col("text").substr(i, F.lit(n))),
+            F.sequence(F.lit(1), F.greatest(F.length("text") - (PAIR_NGRAM - 1), F.lit(1))),
+            lambda i: F.xxhash64(F.col("text").substr(i, F.lit(PAIR_NGRAM))),
         )
     )
     # persist: the self-join would otherwise rebuild every n-gram array on
@@ -395,12 +403,12 @@ def ngram_jaccard_pairs(
             F.col("b.doc_id").alias("doc_b"),
             F.round(inter / union, 6).alias("jaccard"),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= PAIR_JACCARD)
     )
 
 
 def duplicate_spans(
-    documents: DataFrame, k: int = 32, min_docs: int = 2, cache_registry: list | None = None
+    documents: DataFrame, k: int = 32, cache_registry: list | None = None
 ) -> DataFrame:
     """Cross-document EXACT-SUBSTRING duplicate spans — the sixth dedup
     strategy: the span-level operator of "Deduplicating Training Data
@@ -409,11 +417,11 @@ def duplicate_spans(
     the window-hash formulation is the shuffle-native equivalent).
 
     Every length-``k`` character window whose text occurs in at least
-    ``min_docs`` DISTINCT documents is marked, and overlapping/adjacent
+    :data:`MIN_DOCS` DISTINCT documents is marked, and overlapping/adjacent
     marked positions within a document merge into maximal spans:
 
         windows   = posexplode(xxhash64 over all k-grams)   [narrow map]
-        dup grams = groupBy(gram) havING n_distinct_docs ≥ min_docs
+        dup grams = groupBy(gram) havING n_distinct_docs ≥ MIN_DOCS
         marked    = windows ⋈ dup grams                      [equi-join]
         spans     = gaps-and-islands per doc (window ordered by pos)
 
@@ -456,7 +464,7 @@ def duplicate_spans(
     dup_grams = (
         grams.groupBy("gram")
         .agg(F.countDistinct("doc_id").alias("n_docs"))
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= MIN_DOCS)
         .select("gram")
     )
     marked = grams.join(dup_grams, "gram").select("doc_id", "pos")

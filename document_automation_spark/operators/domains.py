@@ -44,10 +44,10 @@ __all__ = [
 NO_HOST = "(none)"
 
 
-def host_col(url_col: str = "url") -> F.Column:
-    """Lower-cased host of ``url_col``; ``(none)`` when unparseable."""
+def host_col() -> F.Column:
+    """Lower-cased host of ``url``; ``(none)`` when unparseable."""
     return F.coalesce(
-        F.lower(F.try_parse_url(F.col(url_col), F.lit("HOST"))), F.lit(NO_HOST)
+        F.lower(F.try_parse_url(F.col("url"), F.lit("HOST"))), F.lit(NO_HOST)
     )
 
 
@@ -135,7 +135,7 @@ def domain_stats(
     """
     if level not in ("host", "domain"):
         raise ValueError(f"level must be 'host' or 'domain', got {level!r}")
-    key = host_col("url")
+    key = host_col()
     if level == "domain":
         key = registrable_domain_col(key)
     per_doc = documents.select(
@@ -191,7 +191,7 @@ def filter_by_domain(
             "and broadcast-join instead (see docstring)"
         )
 
-    host = host_col("url")
+    host = host_col()
     if block_subdomains:
         # suffix candidates: host itself + every parent domain
         # ("a.b.example.com" -> [a.b.example.com, b.example.com,

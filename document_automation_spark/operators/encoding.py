@@ -145,10 +145,8 @@ def repair_mojibake_col(text: F.Column) -> F.Column:
     return F.when(clean.rlike(MOJIBAKE_GUARD_CLASS), repaired).otherwise(clean)
 
 
-def repair_mojibake(
-    documents: DataFrame, text_col: str = "text", passes: int = 1
-) -> DataFrame:
-    """``text_col`` repaired in place + ``was_mojibake`` (did the repair
+def repair_mojibake(documents: DataFrame, passes: int = 1) -> DataFrame:
+    """``text`` repaired in place + ``was_mojibake`` (did the repair
     change anything).  All other columns pass through untouched — callers
     that derive content identities from text (the ingest pipeline) must
     re-derive them afterwards, same contract as every rewriting stage.
@@ -164,14 +162,14 @@ def repair_mojibake(
     setting)."""
     if passes < 1:
         raise ValueError(f"passes must be >= 1, got {passes}")
-    repaired = F.col(text_col)
+    repaired = F.col("text")
     for _ in range(passes):
         repaired = repair_mojibake_col(repaired)
     # flag means "mojibake was repaired", so compare against the
     # NUL-stripped input: a text whose only change was losing a stray
     # NUL (the token sentinel, stripped unconditionally) is NOT mojibake
     # and must not inflate repair counters
-    nul_stripped = F.replace(F.col(text_col), F.lit(_SENTINEL), F.lit(""))
+    nul_stripped = F.replace(F.col("text"), F.lit(_SENTINEL), F.lit(""))
     return documents.withColumn(
         "was_mojibake", ~repaired.eqNullSafe(nul_stripped)
-    ).withColumn(text_col, repaired)
+    ).withColumn("text", repaired)

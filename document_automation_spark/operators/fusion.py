@@ -17,7 +17,7 @@ Parity targets (behavior only):
 * reciprocal rank fusion, K=61, 0-based rank — /root/reference/src/join_docs.py:146-158
 * concatenate-dedup (last writer wins)  — /root/reference/src/join_docs.py:127-131
 * hybrid image-level fusion (max passage score per image per retriever,
-  s_bm25 + weight·s_dpr, top rerank_topk) —
+  s_bm25 + (3/2)·s_dpr, top 10) —
   /root/reference/src/test_retrieval_pipeline.py:52-83
 """
 
@@ -27,6 +27,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 SCORE_DEN = 1_000_003  # prime denominator for derived integer scores
+
+#: The reference's image-level ensemble: ``s_bm25 + (3/2)·s_dpr``, top 10.
+WEIGHT_NUM = 3
+WEIGHT_DEN = 2
+RERANK_TOPK = 10
 
 
 def comb_sum(
@@ -94,17 +99,12 @@ def concatenate_dedup(scores: DataFrame) -> DataFrame:
     )
 
 
-def hybrid_image_fusion(
-    scores: DataFrame,
-    weight_num: int = 3,
-    weight_den: int = 2,
-    rerank_topk: int = 10,
-) -> DataFrame:
+def hybrid_image_fusion(scores: DataFrame) -> DataFrame:
     """Image-level ensemble: max passage score per image per retriever
-    (absent → 0), ``final = s_bm25 + (weight_num/weight_den)·s_dpr``,
-    top ``rerank_topk`` images per query.
+    (absent → 0), ``final = s_bm25 + (WEIGHT_NUM/WEIGHT_DEN)·s_dpr``,
+    top :data:`RERANK_TOPK` images per query.
 
-    Integer-space: final_num = weight_den·s1 + weight_num·s2, ranked on the
+    Integer-space: final_num = WEIGHT_DEN·s1 + WEIGHT_NUM·s2, ranked on the
     integer, divided only in the output projection.  Ties broken by
     image_id ascending (the reference's Python sort is stable on insertion
     order, which is not reproducible distributed — a deterministic total
@@ -121,19 +121,19 @@ def hybrid_image_fusion(
             "query_id",
             "image_id",
             (
-                F.lit(weight_den) * F.coalesce("s1", F.lit(0))
-                + F.lit(weight_num) * F.coalesce("s2", F.lit(0))
+                F.lit(WEIGHT_DEN) * F.coalesce("s1", F.lit(0))
+                + F.lit(WEIGHT_NUM) * F.coalesce("s2", F.lit(0))
             ).alias("final_num"),
         )
     )
     topk_window = Window.partitionBy("query_id").orderBy(F.desc("final_num"), F.asc("image_id"))
     return (
         per_image.withColumn("img_rank", F.row_number().over(topk_window))
-        .filter(F.col("img_rank") <= rerank_topk)
+        .filter(F.col("img_rank") <= RERANK_TOPK)
         .select(
             "query_id",
             "image_id",
             "img_rank",
-            (F.col("final_num") / F.lit(float(SCORE_DEN * weight_den))).alias("final_score"),
+            (F.col("final_num") / F.lit(float(SCORE_DEN * WEIGHT_DEN))).alias("final_score"),
         )
     )

@@ -39,6 +39,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from document_automation_spark.kernels.graph import (
+    GRAPH_K,
+    N_HOPS,
+    N_ROUNDS,
+    N_SEEDS,
+    TOP_K,
+)
 from document_automation_spark.operators.similarity import (
     bucket_ids,
     cosine_col,
@@ -75,13 +82,9 @@ def _topk_per_src(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def knn_graph(
-    embeddings: DataFrame,
-    k: int = 12,
-    n_rounds: int = 2,
-) -> DataFrame:
-    """Deterministic kNN graph (src, dst, cosine): LSH-bucket candidate
-    init + ``n_rounds`` of NN-descent refinement.
+def knn_graph(embeddings: DataFrame) -> DataFrame:
+    """Deterministic :data:`GRAPH_K`-NN graph (src, dst, cosine): LSH-bucket
+    candidate init + :data:`N_ROUNDS` of NN-descent refinement.
 
     Bucket init: a vector's candidates are its co-bucket members in each
     of 2 tables of 4 hyperplanes over 64 dims (seeds 42 and 43) — the same
@@ -102,7 +105,7 @@ def knn_graph(
         )
         cand = pairs if cand is None else cand.unionByName(pairs)
     cand = cand.distinct()
-    graph = _topk_per_src(_score_pairs(cand, emb), k)
+    graph = _topk_per_src(_score_pairs(cand, emb), GRAPH_K)
 
     # each round references the previous graph ~4x (undirected union, then
     # the 2-hop self-join on that union), so an unbroken lineage grows
@@ -113,12 +116,12 @@ def knn_graph(
     # storage for the application lifetime (localCheckpoint blocks can't be
     # unpersisted while a LAZY successor may still read them — dropping a
     # non-reliable checkpoint loses the data, there is no lineage to
-    # recompute from).  Bounded by construction: n_rounds+1 copies of an
+    # recompute from).  Bounded by construction: N_ROUNDS+1 copies of an
     # n*k edge table (the seat's 3 rounds over 500 vectors × k=8 retain
     # ~16k longs); production builds with large n should checkpoint
     # eagerly and unpersist the prior round explicitly.
     graph = graph.localCheckpoint(eager=False)
-    for _ in range(n_rounds):
+    for _ in range(N_ROUNDS):
         und = (
             graph.select("src", "dst")
             .unionByName(
@@ -133,7 +136,7 @@ def knn_graph(
             .select(F.col("x.src").alias("src"), F.col("y.dst").alias("dst"))
         )
         cand = und.unionByName(two_hop).distinct()
-        graph = _topk_per_src(_score_pairs(cand, emb), k).localCheckpoint(
+        graph = _topk_per_src(_score_pairs(cand, emb), GRAPH_K).localCheckpoint(
             eager=False
         )
     return graph
@@ -143,19 +146,16 @@ def graph_beam_search(
     embeddings: DataFrame,
     graph: DataFrame,
     queries: DataFrame,
-    k: int = 10,
-    n_seeds: int = 8,
     beam: int = 6,
-    n_hops: int = 3,
 ) -> DataFrame:
-    """Fixed-hop beam search over a kNN graph.
+    """Fixed-hop (:data:`N_HOPS`) beam search over a kNN graph.
 
     ``queries``: (query_vec_id, query_embedding).  Seeds are the
-    ``n_seeds`` lowest corpus vec_ids (deterministic; at scale the seed
+    :data:`N_SEEDS` lowest corpus vec_ids (deterministic; at scale the seed
     table is any small pre-chosen entry-point set, e.g. per-partition
     medoids).  Per hop: the best ``beam`` evaluated nodes per query
     expand their graph neighbours; unseen ones are scored.  Returns
-    (query_vec_id, vec_id, cosine, rank, n_scanned) for the top-k rows,
+    (query_vec_id, vec_id, cosine, rank, n_scanned) for the top-:data:`TOP_K` rows,
     where n_scanned = number of cosine evaluations the query paid — the
     scan-budget metric recall is judged against.
 
@@ -166,7 +166,7 @@ def graph_beam_search(
     emb = embeddings.select("vec_id", "embedding")
     qside = queries.select("query_vec_id", "query_embedding")
 
-    seeds = emb.orderBy("vec_id").limit(n_seeds).select("vec_id")
+    seeds = emb.orderBy("vec_id").limit(N_SEEDS).select("vec_id")
     # evaluated: (query_vec_id, vec_id, cosine) — every vector this query
     # has paid a cosine evaluation for
     evaluated = (
@@ -181,7 +181,7 @@ def graph_beam_search(
         )
     )
     w = Window.partitionBy("query_vec_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    for _ in range(n_hops):
+    for _ in range(N_HOPS):
         # each hop references `evaluated` three times (frontier, anti-join,
         # union) — left lazy, the plan would re-derive it 3^hops times.
         # localCheckpoint pins the hop's result (|queries| × evaluated-set
@@ -216,6 +216,6 @@ def graph_beam_search(
     return (
         evaluated.withColumn("n_scanned", F.count("*").over(w_scan))
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_vec_id", "vec_id", "cosine", "rank", "n_scanned")
     )

@@ -32,27 +32,31 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from document_automation_spark.kernels.cluster import kmeans_fit
+from document_automation_spark.kernels.graph import TOP_K
 from document_automation_spark.operators.similarity import cosine_col
 
+#: The ``ann_recall_eval`` seat's IVF point: 8 seeded-kmeans centroids, 3
+#: probed per query, centroid distances truncated at 6 decimals on both
+#: engines (:func:`_centroid_dists`).
+N_CENTROIDS = 8
+N_PROBE = 3
+QUANTIZE_DP = 6
 
-def train_centroids(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    sample_size: int = 4096,
-    seed: int = 42,
-) -> np.ndarray:
-    """(n_centroids, dim) float64 centroid matrix from a deterministic
-    sample (lowest vec_ids — stable across runs and partitionings)."""
+
+def train_centroids(embeddings: DataFrame, n_centroids: int = 16) -> np.ndarray:
+    """(n_centroids, dim) float64 centroid matrix from seed-42 k-means over
+    a deterministic sample (the 4096 lowest vec_ids — stable across runs
+    and partitionings)."""
     rows = (
         embeddings.select("vec_id", "embedding")
         .orderBy("vec_id")
-        .limit(sample_size)
+        .limit(4096)
         .collect()
     )
     if not rows:
         raise ValueError("cannot train IVF centroids on an empty embeddings table")
     X = np.array([r.embedding for r in rows], dtype=np.float64)
-    centers, _ = kmeans_fit(X, n_centroids, seed=seed)
+    centers, _ = kmeans_fit(X, n_centroids, seed=42)
     return centers
 
 
@@ -137,31 +141,23 @@ def probe_buckets_df(
     return queries.mapInPandas(batches, schema)
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    k: int = 10,
-    seed: int = 42,
-    quantize_dp: int | None = None,
-    include_scanned: bool = False,
-) -> DataFrame:
-    """ANN top-k per query via IVF probing.
+def ivf_topk(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
+    """ANN top-:data:`~kernels.graph.TOP_K` per query via IVF probing
+    (:data:`N_PROBE` of :data:`N_CENTROIDS` buckets).
 
     ``embeddings``: (vec_id, embedding); ``queries``: (query_vec_id,
-    query_embedding).  Returns (query_vec_id, vec_id, cosine, rank);
-    ``include_scanned=True`` adds ``n_scanned`` — the number of candidate
-    cosines this query evaluated (probed-bucket population), the scan
-    budget its recall is bought with.
+    query_embedding).  Returns (query_vec_id, vec_id, cosine, rank,
+    n_scanned); ``n_scanned`` is the number of candidate cosines this
+    query evaluated (probed-bucket population), the scan budget its
+    recall is bought with.
     """
-    centers = train_centroids(embeddings, n_centroids, seed=seed)
-    assigned = assign_buckets(embeddings, centers, quantize_dp=quantize_dp)
+    centers = train_centroids(embeddings, N_CENTROIDS)
+    assigned = assign_buckets(embeddings, centers, quantize_dp=QUANTIZE_DP)
     qdf = probe_buckets_df(
         queries.select("query_vec_id", "query_embedding"),
         centers,
-        n_probe,
-        quantize_dp=quantize_dp,
+        N_PROBE,
+        quantize_dp=QUANTIZE_DP,
     )
 
     candidates = assigned.join(F.broadcast(qdf), "bucket")  # equi-join, no cross join
@@ -173,15 +169,15 @@ def ivf_topk(
         ).alias("cosine"),
     )
     w = Window.partitionBy("query_vec_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    if include_scanned:
-        scored = scored.withColumn(
-            "n_scanned", F.count("*").over(Window.partitionBy("query_vec_id"))
-        )
-    out_cols = ["query_vec_id", "vec_id", "cosine", F.col("rank").cast("long").alias("rank")]
-    if include_scanned:
-        out_cols.append("n_scanned")
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(*out_cols)
+        scored.withColumn("n_scanned", F.count("*").over(Window.partitionBy("query_vec_id")))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= TOP_K)
+        .select(
+            "query_vec_id",
+            "vec_id",
+            "cosine",
+            F.col("rank").cast("long").alias("rank"),
+            "n_scanned",
+        )
     )

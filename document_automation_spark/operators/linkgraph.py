@@ -30,16 +30,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _lossy_html_str(html_is_binary: bool) -> Column:
-    """Lossy decode of the ``html`` payload: non-UTF-8 payloads (PDF bytes,
-    junk) must yield "no matches", never throw (``F.decode`` raises
-    MALFORMED_CHARACTER_CODING under ANSI; cast + ``make_valid_utf8``
-    substitutes U+FFFD instead)."""
-    return (
-        F.expr("make_valid_utf8(cast(html as string))")
-        if html_is_binary
-        else F.col("html").cast("string")
-    )
+#: Lossy decode of the ``html`` payload, binary or string: non-UTF-8
+#: payloads (PDF bytes, junk) must yield "no matches", never throw
+#: (``F.decode`` raises MALFORMED_CHARACTER_CODING under ANSI; cast +
+#: ``make_valid_utf8`` substitutes U+FFFD instead).
+LOSSY_HTML = "make_valid_utf8(cast(html as string))"
+
+#: PageRank's damping factor.
+DAMPING = 0.85
 
 
 def _href_dst_host(href: Column, src_host: Column) -> Column:
@@ -68,12 +66,9 @@ def _href_dst_host(href: Column, src_host: Column) -> Column:
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    n_iters: int = 5,
-    damping: float = 0.85,
-) -> DataFrame:
-    """Damped PageRank with uniform dangling-mass redistribution.
+def pagerank(edges: DataFrame, n_iters: int = 5) -> DataFrame:
+    """PageRank, damped by :data:`DAMPING`, with uniform dangling-mass
+    redistribution.
 
     ``edges`` is a distinct directed ``(src, dst)`` edge list (duplicate edges would
     weight contributions — callers dedup if that's not intended).
@@ -96,7 +91,7 @@ def pagerank(
     out_deg = edges.groupBy(src.alias("node")).agg(F.count("*").alias("out_deg"))
 
     ranks = nodes.withColumn("rank", F.round(F.lit(1.0 / n), 12))
-    base = (1.0 - damping) / n
+    base = (1.0 - DAMPING) / n
     for _ in range(n_iters):
         # mass sitting on nodes with no outlinks, redistributed uniformly
         dangling = (
@@ -117,7 +112,7 @@ def pagerank(
                 "node",
                 F.round(
                     F.lit(base)
-                    + F.lit(damping)
+                    + F.lit(DAMPING)
                     * (F.coalesce(F.col("inbound"), F.lit(0.0)) + F.col("dangling") / n),
                     12,
                 ).alias("rank"),
@@ -150,9 +145,9 @@ def host_link_edges(pages: DataFrame) -> DataFrame:
     from document_automation_spark.operators.domains import NO_HOST, host_col
 
     exploded = pages.select(
-        host_col("url").alias("src"),
+        host_col().alias("src"),
         F.explode(
-            F.regexp_extract_all(_lossy_html_str(True), F.lit('href="([^"]+)"'), 1)
+            F.regexp_extract_all(F.expr(LOSSY_HTML), F.lit('href="([^"]+)"'), 1)
         ).alias("href"),
     )
     dst = _href_dst_host(F.col("href"), F.col("src"))
@@ -192,9 +187,7 @@ with nested markup inside the text are skipped by design — [^<]* is the
 honest boundary a regex can defend; a DOM pass is the kernel's job."""
 
 
-def anchor_text_terms(
-    pages: DataFrame, html_is_binary: bool = True, min_refs: int = 1
-) -> DataFrame:
+def anchor_text_terms(pages: DataFrame, min_refs: int = 1) -> DataFrame:
     """Per-host ANCHOR-TEXT term aggregation — the description other pages
     give a host (the classic search/quality signal: anchor text is
     off-page evidence of what a destination is about, robust to the
@@ -224,9 +217,9 @@ def anchor_text_terms(
     """
     from document_automation_spark.operators.domains import NO_HOST, host_col
 
-    html_str = _lossy_html_str(html_is_binary)
+    html_str = F.expr(LOSSY_HTML)
     pairs = pages.select(
-        host_col("url").alias("src"),
+        host_col().alias("src"),
         F.explode(
             F.zip_with(
                 F.regexp_extract_all(html_str, F.lit(ANCHOR_RE), 1),

@@ -13,7 +13,7 @@ Two classic strategies, both deterministic (hash-seeded, no RNG state):
   one broadcast join against a |groups|-row rate table (|groups| =
   languages/domains, i.e. tiny).  No shuffle of the corpus, ever.
 
-* **Stratified quota sampling**: exactly ``quota`` rows per group, chosen
+* **Stratified quota sampling**: exactly :data:`QUOTA` rows per group, chosen
   by ranking the same uniform hash within each group.  This one DOES
   shuffle (a per-group window) — the honest cost of exact quotas; the
   shuffle key is the group column, skew-bounded because rank truncation
@@ -36,14 +36,24 @@ from pyspark.sql import functions as F
 
 _TWO_60 = float(1 << 60)
 
+#: The ``data_mixing`` seat's mix over the ``lang`` groups: temperature
+#: 0.5 downsampling to ~250 rows, temperature 0.3 upsampling to ~600 rows,
+#: and 40 rows per group by hash rank.
+GROUP_COL = "lang"
+TEMPERATURE_ALPHA = 0.5
+TEMPERATURE_TARGET = 250
+UPSAMPLE_ALPHA = 0.3
+UPSAMPLE_TARGET = 600
+QUOTA = 40
 
-def uniform_hash_col(id_col: str = "doc_id") -> "F.Column":
-    """Deterministic U[0,1) per row: first 60 bits of md5(id) / 2^60.
+
+def uniform_hash_col() -> "F.Column":
+    """Deterministic U[0,1) per row: first 60 bits of md5(doc_id) / 2^60.
 
     JVM-side only (md5 + conv + arithmetic); the DuckDB twin is
     ``('0x' || substr(md5(CAST(id AS VARCHAR)),1,15))::UBIGINT / 2^60``.
     """
-    h = F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10)
+    h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
     return (h.cast("double") / F.lit(_TWO_60)).alias("u")
 
 
@@ -78,56 +88,50 @@ def temperature_rates(
     )
 
 
-def temperature_resample(
-    documents: DataFrame,
-    group_col: str = "lang",
-    alpha: float = 0.5,
-    target_rows: int = 250,
-) -> DataFrame:
-    """Keep each row iff ``u(doc_id) < rate(group)`` — flattened group mix.
+def temperature_resample(documents: DataFrame) -> DataFrame:
+    """Keep each row iff ``u(doc_id) < rate(group)`` — flattened group mix
+    (:data:`TEMPERATURE_ALPHA`, :data:`TEMPERATURE_TARGET`).
 
-    Output: ``(doc_id, group_col, rate)`` for the surviving rows.  The
+    Output: ``(doc_id, lang, rate)`` for the surviving rows.  The
     corpus-side plan is scan → broadcast-join a tiny rate table → filter:
     zero corpus shuffles, safe at any scale.
     """
-    rates = temperature_rates(documents, group_col, alpha, target_rows)
+    rates = temperature_rates(documents, GROUP_COL, TEMPERATURE_ALPHA, TEMPERATURE_TARGET)
     return (
-        documents.select("doc_id", group_col, uniform_hash_col())
-        .join(F.broadcast(rates.select(group_col, "rate")), group_col)
+        documents.select("doc_id", GROUP_COL, uniform_hash_col())
+        .join(F.broadcast(rates.select(GROUP_COL, "rate")), GROUP_COL)
         .where(F.col("u") < F.col("rate"))
-        .select("doc_id", group_col, "rate")
+        .select("doc_id", GROUP_COL, "rate")
     )
 
 
-def upsample_with_repeats(
-    documents: DataFrame,
-    group_col: str = "lang",
-    alpha: float = 0.3,
-    target_rows: int = 600,
-) -> DataFrame:
-    """Temperature mixing with UPsampling — the half :func:`temperature_
+def upsample_with_repeats(documents: DataFrame) -> DataFrame:
+    """Temperature mixing (:data:`UPSAMPLE_ALPHA`, :data:`UPSAMPLE_TARGET`)
+    with UPsampling — the half :func:`temperature_
     resample` can't express: when a flattened group's share calls for more
     rows than it has (rate > 1), its documents repeat (what XLM-R/mT5
     actually do for low-resource languages).
 
     Each row emits ``floor(rate)`` copies plus one more iff ``u(doc_id) <
     frac(rate)`` — deterministic, expectation exactly ``rate`` per row.
-    Output: one row per copy ``(doc_id, group_col, copy_idx, rate)``.
+    Output: one row per copy ``(doc_id, lang, copy_idx, rate)``.
     Plan shape is identical to the downsampling path (broadcast rate
     table + row-local explode): zero corpus shuffles.
     """
-    rates = temperature_rates(documents, group_col, alpha, target_rows, cap_at_one=False)
+    rates = temperature_rates(
+        documents, GROUP_COL, UPSAMPLE_ALPHA, UPSAMPLE_TARGET, cap_at_one=False
+    )
     base = F.floor(F.col("rate")).cast("long")
     frac = F.col("rate") - base
     n_copies = base + F.when(F.col("u") < frac, F.lit(1)).otherwise(F.lit(0))
     return (
-        documents.select("doc_id", group_col, uniform_hash_col())
-        .join(F.broadcast(rates.select(group_col, "rate")), group_col)
+        documents.select("doc_id", GROUP_COL, uniform_hash_col())
+        .join(F.broadcast(rates.select(GROUP_COL, "rate")), GROUP_COL)
         .withColumn("n_copies", n_copies)
         .where(F.col("n_copies") > 0)
         .select(
             "doc_id",
-            group_col,
+            GROUP_COL,
             F.explode(F.sequence(F.lit(0).cast("long"), F.col("n_copies") - 1)).alias(
                 "copy_idx"
             ),
@@ -136,14 +140,11 @@ def upsample_with_repeats(
     )
 
 
-def stratified_quota_sample(
-    documents: DataFrame,
-    group_col: str = "lang",
-    quota: int = 40,
-) -> DataFrame:
-    """Exactly ``min(quota, n_group)`` rows per group, by hash rank.
+def stratified_quota_sample(documents: DataFrame) -> DataFrame:
+    """Exactly ``min(QUOTA, n_group)`` rows per ``lang`` group, by hash
+    rank.
 
-    Output: ``(doc_id, group_col, sample_rank)``; rank is the 1-based
+    Output: ``(doc_id, lang, sample_rank)``; rank is the 1-based
     position in the group's hash order (ties broken by id — md5 draws can
     collide in principle, never silently reorder).  Costs one per-group
     window; intended for group columns of small cardinality (languages,
@@ -151,10 +152,10 @@ def stratified_quota_sample(
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(group_col).orderBy(F.col("u"), F.col("doc_id"))
+    w = Window.partitionBy(GROUP_COL).orderBy(F.col("u"), F.col("doc_id"))
     return (
-        documents.select("doc_id", group_col, uniform_hash_col())
+        documents.select("doc_id", GROUP_COL, uniform_hash_col())
         .withColumn("sample_rank", F.row_number().over(w))
-        .where(F.col("sample_rank") <= quota)
-        .select("doc_id", group_col, F.col("sample_rank").cast("long"))
+        .where(F.col("sample_rank") <= QUOTA)
+        .select("doc_id", GROUP_COL, F.col("sample_rank").cast("long"))
     )

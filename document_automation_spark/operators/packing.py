@@ -116,20 +116,18 @@ def pack_sequences(
     )
 
 
-def chunk_stats(
-    segments: DataFrame, shard_col: str = "source", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-shard packing summary over a :func:`pack_sequences` result:
-    chunk count, token count, and the padding waste of the final short
-    chunk if the loader pads it to ``seq_len`` (callers pass seq_len to
-    compute waste; here we just expose totals).
+def chunk_stats(segments: DataFrame) -> DataFrame:
+    """Per-``shard`` packing summary over a :func:`pack_sequences` result
+    packed with ``shard_col="shard", id_col="pack_id"`` (the ingest pack
+    stage's names): chunk count, token count, and the padding waste of
+    the final short chunk if the loader pads it to ``seq_len`` (callers
+    pass seq_len to compute waste; here we just expose totals).
 
-    ``id_col`` must name the document-id column ``pack_sequences`` was
-    called with — resolving it positionally would break on a
-    partitioned read-back, where Spark appends the partition column
-    LAST and reorders the schema."""
-    return segments.groupBy(shard_col).agg(
+    The columns are resolved by name — resolving them positionally would
+    break on a partitioned read-back, where Spark appends the partition
+    column LAST and reorders the schema."""
+    return segments.groupBy("shard").agg(
         (F.max("chunk_id") + 1).cast("long").alias("n_chunks"),
         F.sum("seg_tokens").cast("long").alias("n_tokens"),
-        F.countDistinct(id_col).alias("n_docs"),
+        F.countDistinct("pack_id").alias("n_docs"),
     )

@@ -28,7 +28,7 @@ counts only what the earlier, more specific categories left behind.
 
 from __future__ import annotations
 
-from typing import Sequence, Tuple
+from typing import Tuple
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -65,17 +65,14 @@ PII_CATEGORIES: Tuple[Tuple[str, str, str], ...] = (
 
 
 def redact_pii(
-    documents: DataFrame,
-    *,
-    text_col: str = "text",
-    categories: Sequence[Tuple[str, str, str]] = PII_CATEGORIES,
-    count_cols: bool = True,
+    documents: DataFrame, *, count_cols: bool = True
 ) -> Tuple[DataFrame, Observation]:
-    """Redact PII in ``text_col``, count matches per category.
+    """Redact PII in ``text``, count matches per :data:`PII_CATEGORIES`
+    category.
 
     Returns ``(redacted, observation)``:
 
-    * ``redacted`` — the input frame with ``text_col`` rewritten and,
+    * ``redacted`` — the input frame with ``text`` rewritten and,
       when ``count_cols``, one ``n_<category>`` long column per category
       (matches of that category in the text as it stood when the
       category ran — see module docstring on ordering);
@@ -86,32 +83,22 @@ def redact_pii(
     The plan is a single Project over the input — ``explain()`` shows no
     Exchange and one WholeStageCodegen span.
     """
-    if not categories:
-        raise ValueError("categories must be non-empty")
-    cur = F.col(text_col)
+    cur = F.col("text")
     out_cols = []
-    for name, pattern, repl in categories:
+    for name, pattern, repl in PII_CATEGORIES:
         n = F.size(F.regexp_extract_all(cur, F.lit(pattern), 0)).cast("long")
         out_cols.append(n.alias(f"n_{name}"))
         cur = F.regexp_replace(cur, pattern, repl)
 
-    others = [c for c in documents.columns if c != text_col]
-    redacted = documents.select(*others, cur.alias(text_col), *out_cols)
-    names = [f"n_{name}" for name, _, _ in categories]
+    others = [c for c in documents.columns if c != "text"]
+    redacted = documents.select(*others, cur.alias("text"), *out_cols)
+    names = [f"n_{name}" for name, _, _ in PII_CATEGORIES]
     obs = Observation("redact_pii")
     redacted = redacted.observe(
         obs,
         *[F.coalesce(F.sum(F.col(c)), F.lit(0)).alias(c) for c in names],
         F.coalesce(
-            F.sum(
-                (
-                    F.col(names[0])
-                    if len(names) == 1
-                    else F.greatest(*[F.col(c) for c in names])
-                )
-                .cast("boolean")
-                .cast("long")
-            ),
+            F.sum(F.greatest(*[F.col(c) for c in names]).cast("boolean").cast("long")),
             F.lit(0),
         ).alias("n_docs_with_pii"),
     )

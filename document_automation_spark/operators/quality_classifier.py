@@ -178,6 +178,6 @@ def pareto_importance_filter(
     """
     from document_automation_spark.operators.mixing import uniform_hash_col
 
-    u = uniform_hash_col("doc_id")
+    u = uniform_hash_col()
     pareto = F.pow(u, F.lit(-1.0 / alpha)) - F.lit(1.0)
     return scored.where(pareto > (F.lit(1.0) - F.col("quality_score")))

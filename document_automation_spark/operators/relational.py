@@ -16,6 +16,13 @@ from pyspark.sql import functions as F
 
 from document_automation_spark.operators.topk import topk_per_group
 
+#: Customers kept by :func:`top_customers_by_revenue`, events per type by
+#: :func:`top_events_per_type`, and the inactivity gap that splits
+#: :func:`sessionize_events` sessions.
+TOP_CUSTOMERS = 10
+TOP_EVENTS = 5
+SESSION_GAP_MINUTES = 30
+
 
 def pricing_summary(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q1-shaped aggregation: map-side partial aggregation + one
@@ -38,8 +45,9 @@ def pricing_summary(lineitem: DataFrame) -> DataFrame:
     )
 
 
-def top_customers_by_revenue(orders: DataFrame, customer: DataFrame, k: int = 10) -> DataFrame:
-    """Revenue per customer with a broadcast dimension join + global top-k.
+def top_customers_by_revenue(orders: DataFrame, customer: DataFrame) -> DataFrame:
+    """Revenue per customer with a broadcast dimension join + global
+    top-:data:`TOP_CUSTOMERS`.
 
     ``customer`` is the small side → explicit broadcast (no shuffle of the
     orders fact table beyond the aggregation itself)."""
@@ -52,7 +60,7 @@ def top_customers_by_revenue(orders: DataFrame, customer: DataFrame, k: int = 10
                      revenue["o_custkey"] == customer["c_custkey"], "inner")
         .select("c_custkey", "c_name", "c_mktsegment", "revenue", "num_orders")
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(k)
+        .limit(TOP_CUSTOMERS)
     )
 
 
@@ -103,19 +111,21 @@ def hourly_event_rollup(events: DataFrame) -> DataFrame:
     )
 
 
-def top_events_per_type(events: DataFrame, k: int = 5) -> DataFrame:
-    """Windowed top-k per group (T1 parity) on the events table."""
+def top_events_per_type(events: DataFrame) -> DataFrame:
+    """Windowed top-:data:`TOP_EVENTS` per group (T1 parity) on the events
+    table."""
     return topk_per_group(
         events.select("event_type", "event_id", "value"),
         group_cols=["event_type"],
         order_col="value",
-        k=k,
+        k=TOP_EVENTS,
         tiebreak_col="event_id",
     ).select("event_type", "event_id", F.round("value", 6).alias("value"), "rank")
 
 
-def sessionize_events(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Sessionization: per-user sessions split at inactivity gaps.
+def sessionize_events(events: DataFrame) -> DataFrame:
+    """Sessionization: per-user sessions split at inactivity gaps of more
+    than :data:`SESSION_GAP_MINUTES`.
 
     The classic lag + cumulative-sum window rewrite (one shuffle on
     user_id): a new session starts where ``ts - lag(ts) > gap``; the
@@ -127,7 +137,7 @@ def sessionize_events(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     from pyspark.sql import Window
 
     w_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_s = gap_minutes * 60
+    gap_s = SESSION_GAP_MINUTES * 60
     # parquet timestamps read as TIMESTAMP_NTZ: cast via timestamp (session
     # tz pinned UTC) to epoch seconds, matching DuckDB epoch() on naive ts
     epoch = F.col("ts").cast("timestamp").cast("long")

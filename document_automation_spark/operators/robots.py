@@ -129,7 +129,7 @@ def robots_gate(
     over the host's own rules: per page O(|host rules|), never a
     corpus-wide sort.
     """
-    from document_automation_spark.operators.domains import host_col as _host_of
+    from document_automation_spark.operators.domains import host_col
 
     agent_l = agent.lower()
     mine = rules.where(F.col("agent").isin(agent_l, "*"))
@@ -159,7 +159,7 @@ def robots_gate(
         raw_path.isNull() | (raw_path == ""), F.lit("/")
     ).otherwise(raw_path)
     joined = pages.join(
-        per_host, _host_of("url") == F.col("host"), "left"
+        per_host, host_col() == F.col("host"), "left"
     ).drop("host")
     best = F.aggregate(
         F.col("_rules"),

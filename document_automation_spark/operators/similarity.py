@@ -26,7 +26,13 @@ from typing import List
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from document_automation_spark.kernels.graph import TOP_K
 from document_automation_spark.partitioning import fan_out
+
+#: Hyperplanes per LSH table (16 buckets).
+N_PLANES = 4
+#: Cosine at which two label-blocked embeddings are near duplicates.
+NEAR_DUP_COSINE = 0.3
 
 
 def _dot(a, b):
@@ -54,10 +60,8 @@ def cosine_col(a, b):
     return _dot(a_d, b_d) / (_norm(a_d) * _norm(b_d))
 
 
-def brute_force_topk(
-    embeddings: DataFrame, queries: DataFrame, k: int = 10
-) -> DataFrame:
-    """Exact cosine top-k per query vector.
+def brute_force_topk(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact cosine top-:data:`TOP_K` per query vector.
 
     ``queries``: (query_vec_id, query_embedding).  The query side is
     broadcast — the corpus never shuffles; scoring happens map-side in the
@@ -86,7 +90,7 @@ def brute_force_topk(
     w = Window.partitionBy("query_vec_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_vec_id", "vec_id", "cosine", "rank")
     )
 
@@ -142,34 +146,33 @@ def probe_masks(n_planes: int, probe_bits: int) -> List[int]:
 def lsh_bucketed_topk(
     embeddings: DataFrame,
     queries: DataFrame,
-    k: int = 10,
-    n_planes: int = 4,
     probe_bits: int = 0,
     n_tables: int = 1,
-    include_scanned: bool = False,
 ) -> DataFrame:
-    """Approximate top-k: score only corpus vectors in the query's bucket.
+    """Approximate top-:data:`TOP_K`: score only corpus vectors in the
+    query's bucket of :data:`N_PLANES` hyperplanes.
 
-    ``include_scanned=True`` appends ``n_scanned`` — distinct candidate
-    cosines the query evaluated across its probed buckets (and tables) —
-    the scan budget its recall is bought with.
+    Returns (query_vec_id, vec_id, cosine, rank, n_scanned); ``n_scanned``
+    is the number of distinct candidate cosines the query evaluated across
+    its probed buckets (and tables) — the scan budget its recall is bought
+    with.
 
     Equi-join on bucket id replaces the cross join — at 10^12 vectors this
     is the difference between an impossible scan and a 1/2^planes slice.
 
     ``probe_bits`` = multiprobe radius: each query also probes EVERY
     bucket within that Hamming distance of its own — an exhaustive radius
-    fan-out over all Σ C(n_planes, r) sign-flip masks, NOT the classic
+    fan-out over all Σ C(N_PLANES, r) sign-flip masks, NOT the classic
     query-directed multiprobe that orders probes by per-plane dot
     magnitude and visits only the most promising few.  Exhaustive is the
     right trade at small radius/planes (every distance-1 bucket is
     probed, so recall ≥ confidence-ordered at the same radius); a
-    confidence-ordered variant would matter once n_planes is large enough
+    confidence-ordered variant would matter once N_PLANES is large enough
     that the full radius fan-out itself becomes the cost.
     The QUERY side fans out —
-    Σ C(n_planes, r) extra rows per query — while the corpus is neither
+    Σ C(N_PLANES, r) extra rows per query — while the corpus is neither
     re-scanned nor re-bucketed: recall rises at the cost of scanning
-    ~(1 + n_planes·…)/2^planes of the corpus instead of 1/2^planes.
+    ~(1 + N_PLANES·…)/2^planes of the corpus instead of 1/2^planes.
     ``n_tables`` = independent hash tables (the OTHER classic recall
     lever): table ``t`` uses its own hyperplanes over the 64 embedding
     dims (seed ``42 + t``), candidates
@@ -190,13 +193,13 @@ def lsh_bucketed_topk(
     )
     per_table = []
     for t in range(n_tables):
-        planes = hyperplanes(64, n_planes, 42 + t)
+        planes = hyperplanes(64, N_PLANES, 42 + t)
         corpus_b = bucket_ids(embeddings, planes)
         queries_b = bucket_ids(q, planes).select(
             "query_vec_id", F.col("embedding").alias("query_embedding"), "bucket"
         )
         if probe_bits:
-            masks = probe_masks(n_planes, probe_bits)
+            masks = probe_masks(N_PLANES, probe_bits)
             queries_b = queries_b.withColumn(
                 "bucket",
                 F.explode(
@@ -218,24 +221,18 @@ def lsh_bucketed_topk(
     if n_tables > 1:
         # a (query, vec) pair found by several tables ranks once
         scored = scored.dropDuplicates(["query_vec_id", "vec_id"])
-    if include_scanned:
-        scored = scored.withColumn(
-            "n_scanned", F.count("*").over(Window.partitionBy("query_vec_id"))
-        )
     w = Window.partitionBy("query_vec_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    out_cols = ["query_vec_id", "vec_id", "cosine", "rank"]
-    if include_scanned:
-        out_cols.append("n_scanned")
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(*out_cols)
+        scored.withColumn("n_scanned", F.count("*").over(Window.partitionBy("query_vec_id")))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= TOP_K)
+        .select("query_vec_id", "vec_id", "cosine", "rank", "n_scanned")
     )
 
 
-def embedding_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95) -> DataFrame:
-    """Cosine near-dup pairs within the ``label`` blocking key (embedding
-    dedup leg).
+def embedding_near_dup_pairs(embeddings: DataFrame) -> DataFrame:
+    """Cosine near-dup pairs (cosine ≥ :data:`NEAR_DUP_COSINE`) within the
+    ``label`` blocking key (embedding dedup leg).
 
     Norms precomputed once per vector (not once per PAIR — a blocked
     self-join visits each vector |block| times)."""
@@ -259,7 +256,7 @@ def embedding_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95) -> 
             F.col("b.vec_id").alias("vec_b"),
             F.round(dot / (F.col("a.nrm") * F.col("b.nrm")), 6).alias("cosine"),
         )
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= NEAR_DUP_COSINE)
     )
 
 
@@ -267,8 +264,6 @@ def semantic_dedup(
     embeddings: DataFrame,
     n_clusters: int = 8,
     threshold: float = 0.95,
-    sample_size: int = 4096,
-    seed: int = 42,
     quantize_dp: int | None = None,
     cache_registry: list | None = None,
 ) -> DataFrame:
@@ -313,9 +308,7 @@ def semantic_dedup(
 
     from document_automation_spark.operators.ivf import assign_buckets, train_centroids
 
-    C = train_centroids(
-        embeddings, n_centroids=n_clusters, sample_size=sample_size, seed=seed
-    )
+    C = train_centroids(embeddings, n_centroids=n_clusters)
     # the numpy assignment kernel fuses with the scan — fan an
     # under-split input out so every core runs a worker (no-op at scale)
     assigned = assign_buckets(fan_out(embeddings), C, quantize_dp=quantize_dp)

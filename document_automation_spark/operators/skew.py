@@ -23,23 +23,22 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Salts per key in :func:`salted_agg`.
+N_SALT = 16
 
-def salted_agg(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    aggs: dict,
-    n_salt: int = 16,
-) -> DataFrame:
-    """Two-phase salted aggregation, result-identical to a plain groupBy.
+
+def salted_agg(df: DataFrame, key_cols: Sequence[str], aggs: dict) -> DataFrame:
+    """Two-phase salted aggregation over :data:`N_SALT` salts,
+    result-identical to a plain groupBy.
 
     ``aggs`` maps output column name → ("sum"|"count"|"min"|"max",
     input column) — the algebraic aggregates whose partials re-merge with
     the same function (count partials re-merge with SUM).  Phase 2's input
-    has at most ``n_groups × n_salt`` rows — always tiny.
+    has at most ``n_groups × N_SALT`` rows — always tiny.
     """
     # partition-id salt: deterministic per task, uniform enough to split
-    # any hot group across ~n_salt reducers
-    salt = F.pmod(F.spark_partition_id().cast("long"), F.lit(n_salt))
+    # any hot group across ~N_SALT reducers
+    salt = F.pmod(F.spark_partition_id().cast("long"), F.lit(N_SALT))
 
     phase1_aggs = []
     phase2_aggs = []

@@ -26,29 +26,32 @@ from document_automation_spark.partitioning import fan_out
 
 
 
-def _fingerprint_expr(text_col: str = "text"):
+def _fingerprint_expr():
     """Polynomial rolling hash over code points as ONE shared fold
     expression — ``h = (h*31 + cp) % (~2^47)`` via ``F.aggregate``,
     identical math to kernels.fingerprint.rolling_fingerprint and to the
     DuckDB list_reduce oracle twin."""
     return F.aggregate(
-        F.split(F.col(text_col), ""),
+        F.split(F.col("text"), ""),
         F.lit(0).cast("long"),
         lambda acc, ch: (acc * ROLLING_BASE + F.ascii(ch)) % F.lit(ROLLING_MOD),
     )
 
 
-def token_stats(
-    documents: DataFrame,
-    include_bpe: bool = False,
-    include_fingerprint: bool = False,
-) -> DataFrame:
-    """Whitespace token count + length stats — pure column expressions.
+def token_stats(documents: DataFrame) -> DataFrame:
+    """Whitespace token count + length stats (pure column expressions),
+    the BPE-ish token count (Arrow-batched kernel UDF) and the rolling-hash
+    document fingerprint — all in the SAME single-pass select: one scan,
+    no join."""
+    from document_automation_spark.kernels.textstats import count_tokens_bpe_ish
 
-    ``include_bpe=True`` adds the BPE-ish token count (Arrow-batched
-    kernel UDF) and ``include_fingerprint=True`` the rolling-hash document
-    fingerprint — all in the SAME single-pass select: one scan, no join."""
-    cols = [
+    @F.pandas_udf(T.LongType())
+    def bpe_udf(texts: pd.Series) -> pd.Series:
+        return texts.map(count_tokens_bpe_ish)
+
+    # the per-char fingerprint fold / Python BPE counter dominate and
+    # fuse with the scan — spread an under-split input first
+    return fan_out(documents).select(
         F.col("doc_id"),
         F.length("text").alias("n_chars_measured"),
         F.when(F.length(F.trim(F.col("text"))) == 0, F.lit(0))
@@ -57,22 +60,9 @@ def token_stats(
         F.round(
             F.length(F.regexp_replace(F.col("text"), r"[^ ]", "")) / F.length("text"), 6
         ).alias("space_ratio"),
-    ]
-    if include_bpe:
-        from document_automation_spark.kernels.textstats import count_tokens_bpe_ish
-
-        @F.pandas_udf(T.LongType())
-        def bpe_udf(texts: pd.Series) -> pd.Series:
-            return texts.map(count_tokens_bpe_ish)
-
-        cols.append(bpe_udf(F.col("text")).alias("n_tokens_bpe"))
-    if include_fingerprint:
-        cols.append(_fingerprint_expr().alias("fingerprint"))
-    if include_bpe or include_fingerprint:
-        # the per-char fingerprint fold / Python BPE counter dominate and
-        # fuse with the scan — spread an under-split input first
-        documents = fan_out(documents)
-    return documents.select(*cols)
+        bpe_udf(F.col("text")).alias("n_tokens_bpe"),
+        _fingerprint_expr().alias("fingerprint"),
+    )
 
 
 def script_case_expr(text: "F.Column") -> "F.Column":

@@ -555,11 +555,7 @@ class BigramLM(NamedTuple):
     total_tokens: int
 
 
-def train_bigram_lm(
-    corpus: DataFrame,
-    min_count: int = 1,
-    cache_registry: list | None = None,
-) -> BigramLM:
+def train_bigram_lm(corpus: DataFrame, min_count: int = 1) -> BigramLM:
     """Fit bigram + unigram counts over ``corpus.text`` (the in-domain slice).
 
     Two hash aggregations, each map-side partial-combined on a bounded
@@ -568,12 +564,14 @@ def train_bigram_lm(
     broadcast LM stays bounded at corpus scale (unseen ≡ pruned under
     Stupid Backoff, so pruning only sharpens the backoff, never breaks
     scoring).  The single driver-side scalar is ``total_tokens`` (one
-    aggregate row — bounded like the IVF centroid collect)."""
+    aggregate row — bounded like the IVF centroid collect).
+
+    One-shot-operator contract: the unigram table stays persisted (it is
+    LM-sized, bounded by ``min_count`` pruning); loop callers
+    ``spark.catalog.clearCache()`` between rounds."""
     # the unigram table feeds THREE consumers (total-tokens collect,
-    # pre-scored bigram join, backoff table): cache_registry=[] persists
-    # it once instead of re-tokenizing the corpus per consumer (table is
-    # LM-sized, bounded by min_count pruning; caller owns the unpersist —
-    # dedup_by_url's contract)
+    # pre-scored bigram join, backoff table): persisted once instead of
+    # re-tokenizing the corpus per consumer
     # tokenization fuses with the scan; fan an under-split corpus out
     # across the cluster first (no-op at real-corpus scale)
     ws = fan_out(corpus).select(words_col(F.col("text")).alias("_ws"))
@@ -582,9 +580,7 @@ def train_bigram_lm(
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("uc"))
     )
-    if cache_registry is not None:
-        uni = uni.persist()
-        cache_registry.append(uni)
+    uni = uni.persist()
     total = uni.agg(F.sum("uc").alias("t")).collect()[0]["t"] or 0
     if min_count > 1:
         uni = uni.filter(F.col("uc") >= min_count)

@@ -3,8 +3,11 @@
 The reference's resume story is a re-run with a ``vector_id IS NULL``
 filter plus a retry-once writer (/root/reference/src/sql.py:313-314,
 /root/reference/src/gen-sods-doc-image-ray.py:158-165).  Rebuilt here as
-explicit job-level bookkeeping that works with ANY number of concurrent
-writers:
+explicit job-level bookkeeping that works with any number of concurrent
+writer TASKS within one job.  It assumes one job at a time per output
+path: two concurrent jobs on one path would pick the same pending
+buckets, delete each other's bucket files, and read, rewrite and delete
+the one ``_inflight`` record without a lock.  The bookkeeping:
 
 * output is hash-partitioned by ``bucket = pmod(xxhash64(url), n_buckets)``
   (the column the extraction operator already emits) and written with
@@ -35,7 +38,8 @@ writers:
   A crash between data write and manifest append re-runs that bucket,
   under any fingerprint: the bucket stays in the ``_inflight`` record,
   which the run clears only after its append, and overwrite makes the
-  re-run harmless.
+  re-run harmless.  A run that finds buckets in that record also deletes
+  any hidden manifest file a dead run wrote and never renamed.
 
 On Iceberg the manifest append and data commit would share a transaction
 (snapshot id recorded in the manifest); with plain parquet the
@@ -316,6 +320,10 @@ def run_extraction_job(
     counters, collected, and one driver-written file
     (:func:`_append_manifest`); when no pending bucket wrote a row it
     starts no Spark job.
+
+    One job at a time per ``output_path`` (module docstring): a run that
+    finds buckets in the ``_inflight`` record takes them for a dead run's,
+    and deletes that run's hidden ``_manifest/.part-*`` file.
     """
     run_id = uuid.uuid4().hex[:12]
     already_done = set(done_buckets(spark, output_path, input_fingerprint))
@@ -366,7 +374,17 @@ def run_extraction_job(
     # died before its append and that this run leaves out, stay not-done
     # until the manifest commits them
     fs, inflight = _hadoop_path(spark, _inflight_path(output_path))
-    left_out = _read_buckets(fs, inflight) - set(pending)
+    dirty = _read_buckets(fs, inflight)
+    if dirty:
+        # a run died: it may have written its hidden manifest file and not
+        # renamed it (with one job per output path, no other run is
+        # appending now)
+        hidden = _path_class(spark.sparkContext._jvm)(
+            os.path.join(manifest_path(output_path), ".part-*")
+        )
+        for status in fs.globStatus(hidden) or []:
+            fs.delete(status.getPath(), False)
+    left_out = dirty - set(pending)
     _write_buckets(fs, inflight, left_out | set(pending))
     _clear_buckets(spark, output_path, pending)
     started = time.time()

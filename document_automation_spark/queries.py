@@ -153,7 +153,7 @@ def q_semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         null_str.alias("c_mktsegment"), null_dbl.alias("revenue"),
         null_lng.alias("num_orders"),
     )
-    topk = top_customers_by_revenue(orders, cust, k=10).select(
+    topk = top_customers_by_revenue(orders, cust).select(
         F.lit("topk").alias("relation"), "c_custkey", "c_name",
         "c_mktsegment", "revenue", "num_orders",
     )
@@ -197,7 +197,7 @@ def q_semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_top_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_automation_spark.operators.relational import top_events_per_type
 
-    out = top_events_per_type(_t(spark, sf_dir, "events"), k=5)
+    out = top_events_per_type(_t(spark, sf_dir, "events"))
     return out.select("event_type", "event_id", "value", F.col("rank").cast("long").alias("rank"))
 
 
@@ -320,9 +320,7 @@ _HYBRID_SQL_BODY = f"""
 def q_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_automation_spark.operators.fusion import hybrid_image_fusion
 
-    out = hybrid_image_fusion(
-        derived_scores(_t(spark, sf_dir, "documents")), 3, 2, rerank_topk=10
-    )
+    out = hybrid_image_fusion(derived_scores(_t(spark, sf_dir, "documents")))
     return out.select(
         "query_id", "image_id", F.col("img_rank").cast("long").alias("img_rank"), "final_score"
     )
@@ -354,9 +352,7 @@ def q_error_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     missed query with its gold image and the ordered retrieved top-10."""
     from document_automation_spark.operators.fusion import hybrid_image_fusion
 
-    ranked = hybrid_image_fusion(
-        derived_scores(_t(spark, sf_dir, "documents")), 3, 2, rerank_topk=10
-    )
+    ranked = hybrid_image_fusion(derived_scores(_t(spark, sf_dir, "documents")))
     gold = gold_labels(spark)
     joined = ranked.join(F.broadcast(gold), "query_id")
     hits = (
@@ -408,9 +404,7 @@ def q_recall_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_automation_spark.operators.eval_metrics import hits_and_ranks, recall_and_mrr
     from document_automation_spark.operators.fusion import hybrid_image_fusion
 
-    ranked = hybrid_image_fusion(
-        derived_scores(_t(spark, sf_dir, "documents")), 3, 2, rerank_topk=10
-    )
+    ranked = hybrid_image_fusion(derived_scores(_t(spark, sf_dir, "documents")))
     gold = gold_labels(spark)
     return recall_and_mrr(hits_and_ranks(ranked, gold, topk=10))
 
@@ -626,7 +620,7 @@ def q_bm25_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     query_terms = _bm25_query_terms(docs)
-    topk = bm25_topk(docs.select("doc_id", "text"), query_terms, k=10)
+    topk = bm25_topk(docs.select("doc_id", "text"), query_terms)
     ranked = topk.select(
         "query_id", F.col("doc_id").alias("image_id"), F.col("rank").cast("int").alias("img_rank")
     )
@@ -1098,7 +1092,7 @@ def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_automation_spark.operators.dedup import ngram_jaccard_pairs
 
-    return ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), n=3, threshold=0.5)
+    return ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
 
 
 # MinHash/SimHash oracles: the kernels hash shingles with md5 (see
@@ -1203,7 +1197,7 @@ def q_near_dup_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ground truth on constructed near-dups."""
     from document_automation_spark.operators.dedup import near_dup_dedup
 
-    out = near_dup_dedup(_t(spark, sf_dir, "documents"), jaccard_threshold=0.9)
+    out = near_dup_dedup(_t(spark, sf_dir, "documents"))
     return out.select("doc_id", "text", "lang", "source", "n_chars")
 
 
@@ -1319,7 +1313,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("long").alias("id_b"),
         F.col("simhash").alias("value"),
     )
-    pairs = simhash_near_dup_pairs(_docs_with_dups(spark, sf_dir), max_hamming=3).select(
+    pairs = simhash_near_dup_pairs(_docs_with_dups(spark, sf_dir)).select(
         F.lit("pair").alias("kind"),
         F.col("doc_a").alias("id_a"),
         F.col("doc_b").alias("id_b"),
@@ -1406,7 +1400,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    nd = embedding_near_dup_pairs(emb, threshold=0.3).select(
+    nd = embedding_near_dup_pairs(emb).select(
         F.lit("near_dup").alias("kind"),
         F.col("vec_a").alias("id_a"),
         F.col("vec_b").alias("id_b"),
@@ -1417,7 +1411,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_vec_id"),
         F.col("embedding").alias("query_embedding"),
     )
-    tk = brute_force_topk(emb, queries_df, k=10).select(
+    tk = brute_force_topk(emb, queries_df).select(
         F.lit("topk").alias("kind"),
         F.col("query_vec_id").alias("id_a"),
         F.col("vec_id").alias("id_b"),
@@ -1688,8 +1682,8 @@ def _ann_recall_sql() -> Optional[str]:
     # round-5 sweep (pure mirror, BENCH/BASELINE.md): 3 NN-descent rounds
     # dominate 2 (recall 0.88 vs 0.84 at LOWER scan), and beam=8 on the
     # SAME graph buys the high-recall point 0.94 @ ~30% scanned
-    graph_rows = graph_ann_rows(n_rounds=3)
-    graph_hi_rows = graph_ann_rows(n_rounds=3, beam=8)
+    graph_rows = graph_ann_rows()
+    graph_hi_rows = graph_ann_rows(beam=8)
     if ivf is None or graph_rows is None or graph_hi_rows is None:
         return None
     graph_vals = ", ".join(
@@ -1814,32 +1808,19 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_vec_id"),
         F.col("embedding").alias("query_embedding"),
     )
-    brute = brute_force_topk(emb, queries_df, k=10).select("query_vec_id", "vec_id")
+    brute = brute_force_topk(emb, queries_df).select("query_vec_id", "vec_id")
     sel = ["query_vec_id", "vec_id", "n_scanned"]
-    lsh = lsh_bucketed_topk(
-        emb, queries_df, k=10, n_planes=4, include_scanned=True
-    ).select(*sel)
-    lsh_mp = lsh_bucketed_topk(
-        emb, queries_df, k=10, n_planes=4, probe_bits=1, include_scanned=True
-    ).select(*sel)
-    lsh_2t = lsh_bucketed_topk(
-        emb, queries_df, k=10, n_planes=4, n_tables=2, include_scanned=True
-    ).select(*sel)
-    ivf = ivf_topk(
-        emb, queries_df, n_centroids=8, n_probe=3, k=10, seed=42,
-        quantize_dp=6, include_scanned=True,
-    ).select(*sel)
+    lsh = lsh_bucketed_topk(emb, queries_df).select(*sel)
+    lsh_mp = lsh_bucketed_topk(emb, queries_df, probe_bits=1).select(*sel)
+    lsh_2t = lsh_bucketed_topk(emb, queries_df, n_tables=2).select(*sel)
+    ivf = ivf_topk(emb, queries_df).select(*sel)
     # the index build is a separate (re-used) artifact: persist it so the
     # H search hops read the built graph, not H rebuilds of its lineage.
     # n_rounds=3 (round-5 sweep): dominates 2 rounds — recall 0.88 vs
     # 0.84 at LOWER scan; both search rows share the ONE built graph
-    graph_df = knn_graph(emb, k=12, n_rounds=3).persist()
-    graph = graph_beam_search(
-        emb, graph_df, queries_df, k=10, n_seeds=8, beam=6, n_hops=3
-    ).select(*sel)
-    graph_hi = graph_beam_search(
-        emb, graph_df, queries_df, k=10, n_seeds=8, beam=8, n_hops=3
-    ).select(*sel)
+    graph_df = knn_graph(emb).persist()
+    graph = graph_beam_search(emb, graph_df, queries_df, beam=6).select(*sel)
+    graph_hi = graph_beam_search(emb, graph_df, queries_df, beam=8).select(*sel)
     methods = (
         lsh.withColumn("method", F.lit("lsh"))
         .unionByName(lsh_mp.withColumn("method", F.lit("lsh_mp1")))
@@ -1942,7 +1923,7 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    out = token_stats(docs, include_bpe=True, include_fingerprint=True)
+    out = token_stats(docs)
     ts = out.select(
         "doc_id",
         F.col("n_chars_measured").cast("long").alias("n_chars_measured"),
@@ -2014,7 +1995,7 @@ def q_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     span_cut_corpus seat)."""
     from document_automation_spark.operators.dedup import duplicate_spans
 
-    return duplicate_spans(_docs_with_dups(spark, sf_dir), k=32, min_docs=2)
+    return duplicate_spans(_docs_with_dups(spark, sf_dir), k=32)
 
 
 def _span_cut_sql(k: int = 32) -> str:
@@ -2081,7 +2062,7 @@ def q_span_cut_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from document_automation_spark.operators.dedup import cut_spans, duplicate_spans
 
     docs = _docs_with_dups(spark, sf_dir)
-    spans = duplicate_spans(docs, k=32, min_docs=2)
+    spans = duplicate_spans(docs, k=32)
     return cut_spans(docs, spans).select(
         "doc_id",
         F.col("n_cut_chars").cast("long").alias("n_cut_chars"),
@@ -2194,19 +2175,19 @@ def q_data_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents")
-    temp = temperature_resample(docs, "lang", alpha=0.5, target_rows=250).select(
+    temp = temperature_resample(docs).select(
         F.lit("temperature").alias("strategy"),
         "doc_id",
         "lang",
         F.col("rate").alias("detail"),
     )
-    quota = stratified_quota_sample(docs, "lang", quota=40).select(
+    quota = stratified_quota_sample(docs).select(
         F.lit("quota").alias("strategy"),
         "doc_id",
         "lang",
         F.col("sample_rank").cast("double").alias("detail"),
     )
-    ups = upsample_with_repeats(docs, "lang", alpha=0.3, target_rows=600).select(
+    ups = upsample_with_repeats(docs).select(
         F.lit("upsample").alias("strategy"),
         "doc_id",
         "lang",
@@ -2614,7 +2595,7 @@ def q_anchor_text_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("url"),
         html.alias("html"),
     )
-    return anchor_text_terms(pages, html_is_binary=False)
+    return anchor_text_terms(pages)
 
 
 def _synth_host_col(e: F.Column) -> F.Column:
@@ -2659,7 +2640,7 @@ def q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = F.col("doc_id")
 
     def leg(tag: str, edges: DataFrame) -> DataFrame:
-        out = pagerank(edges, n_iters=5, damping=0.85)
+        out = pagerank(edges, n_iters=5)
         return out.select(
             F.lit(tag).alias("leg"),
             F.col("node").cast("string").alias("node"),
@@ -3182,7 +3163,7 @@ def q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     # persist the LM-sized unigram table across its three consumers (same
     # run-once-session rationale as semantic_dedup / ann_recall_eval)
-    lm = train_bigram_lm(docs.filter(F.col("lang") == "en"), cache_registry=[])
+    lm = train_bigram_lm(docs.filter(F.col("lang") == "en"))
     return ccnet_ppl_buckets(score_with_bigram_lm(docs, lm))
 
 
@@ -3289,7 +3270,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("max_value").alias("user_max_value"),
         F.col("num_events").alias("user_num_events"),
     )
-    return sessionize_events(events, gap_minutes=30).join(per_user, "user_id")
+    return sessionize_events(events).join(per_user, "user_id")
 
 
 # =====================================================================
@@ -3337,7 +3318,6 @@ def q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value_raw": ("sum", "value"),
             "max_value_raw": ("max", "value"),
         },
-        n_salt=16,
     )
     sources = (
         # collect_set already deduplicates — no pre-distinct shuffle
@@ -3553,9 +3533,7 @@ def q_learned_encoder_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).repartition(8)
 
     factory, key = make_encoder_model_factory(spark, enc)
-    learned = embed_with_model(
-        halves, factory, batch_size=50, id_col="hid", cache_key=key
-    )
+    learned = embed_with_model(halves, factory, cache_key=key)
     hashed = embed_documents(halves.withColumnRenamed("hid", "doc_id")).select(
         F.col("doc_id").alias("hid"), "embedding"
     )
@@ -3749,7 +3727,7 @@ def q_maxsim_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", F.explode(F.split("query_text", " ")).alias("term")
     ).filter(F.col("term") != "").distinct()
     candidates = (
-        bm25_topk(docs.select("doc_id", "text"), query_terms, k=10)
+        bm25_topk(docs.select("doc_id", "text"), query_terms)
         .join(F.broadcast(queries_df), "query_id")
         .join(docs.select("doc_id", F.col("text").alias("doc_text")), "doc_id")
     )
@@ -4214,7 +4192,7 @@ def q_bpe_train_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     wf = word_frequencies(docs)
     merges = learn_bpe(wf.where(F.col("freq") >= 2), 8)
     vocab = segment_vocabulary(wf, merges)
-    enc = encode_documents(docs, vocab, broadcast_vocab=True)
+    enc = encode_documents(docs, vocab)
     return enc.select(
         "doc_id",
         F.col("n_tokens").cast("long").alias("n_tokens"),

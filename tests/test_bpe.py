@@ -173,7 +173,7 @@ class TestEncodeDocuments:
         }
         via_count = {
             r["doc_id"]: r["n_tokens_bpe"]
-            for r in count_tokens(docs, vocab, broadcast_vocab=True).collect()
+            for r in count_tokens(docs, vocab).collect()
         }
         assert via_count == via_encode
 
@@ -187,11 +187,18 @@ class TestEncodeDocuments:
         assert tokens == ["z", "q" + END_OF_WORD]
 
     def test_broadcast_vocab_plan_and_parity(self, spark, docs):
+        """Both halves join the vocab map-side, even with broadcast joins
+        off by size."""
+        from document_automation_spark.operators.bpe import count_tokens
+
         wf = word_frequencies(docs)
         vocab = segment_vocabulary(wf, learn_bpe(wf, 8))
-        plain = encode_documents(docs, vocab)
-        bcast = encode_documents(docs, vocab, broadcast_vocab=True)
-        assert "BroadcastHashJoin" in bcast._jdf.queryExecution().executedPlan().toString()
-        a = {r["doc_id"]: r["tokens"] for r in plain.collect()}
-        b = {r["doc_id"]: r["tokens"] for r in bcast.collect()}
-        assert a == b
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        before = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            for out in (encode_documents(docs, vocab), count_tokens(docs, vocab)):
+                plan = out._jdf.queryExecution().executedPlan().toString()
+                assert "BroadcastHashJoin" in plan
+        finally:
+            spark.conf.set(key, before)

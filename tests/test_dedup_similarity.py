@@ -14,6 +14,8 @@ from document_automation_spark.kernels.fingerprint import (
     simhash64,
 )
 from document_automation_spark.operators.dedup import (
+    MAX_HAMMING,
+    PAIR_JACCARD,
     duplicate_groups,
     exact_dedup,
     minhash_lsh_candidates,
@@ -21,6 +23,7 @@ from document_automation_spark.operators.dedup import (
     simhash_fingerprints,
 )
 from document_automation_spark.operators.similarity import (
+    TOP_K,
     brute_force_topk,
     embedding_near_dup_pairs,
     lsh_bucketed_topk,
@@ -100,14 +103,14 @@ class TestCanonicalization:
             "doc_id long, text string, lang string, source string, n_chars long",
         ).cache()
 
-    def test_greedy_vs_cc_differ_on_chain(self, chain_docs):
-        from document_automation_spark.operators.dedup import near_dup_dedup
+    def test_greedy_vs_cc_differ_on_chain(self, chain_docs, monkeypatch):
+        from document_automation_spark.operators import dedup
 
-        greedy = {r.doc_id for r in
-                  near_dup_dedup(chain_docs, jaccard_threshold=0.6).collect()}
+        # the chain's links verify at 0.6, its ends do not
+        monkeypatch.setattr(dedup, "JACCARD_THRESHOLD", 0.6)
+        greedy = {r.doc_id for r in dedup.near_dup_dedup(chain_docs).collect()}
         cc = {r.doc_id for r in
-              near_dup_dedup(chain_docs, jaccard_threshold=0.6,
-                             canonicalize="cc").collect()}
+              dedup.near_dup_dedup(chain_docs, canonicalize="cc").collect()}
         assert greedy == {0, 1}
         assert cc == {0}
 
@@ -126,18 +129,22 @@ class TestCanonicalization:
 class TestNgramJaccard:
     def test_matches_python_jaccard(self, docs):
         out = {(r.doc_a, r.doc_b): r.jaccard
-               for r in ngram_jaccard_pairs(docs, n=3, threshold=0.0).collect()}
+               for r in ngram_jaccard_pairs(docs).collect()}
         rows = {r.doc_id: r for r in docs.collect()}
         # blocking: same (lang, n_chars) → pairs (1,2), (1,3), (2,3)
         for a, b in [(1, 2), (1, 3), (2, 3)]:
-            expected = jaccard(set(char_shingles(rows[a].text, 3)), set(char_shingles(rows[b].text, 3)))
-            assert out[(a, b)] == pytest.approx(round(expected, 6), abs=1e-6)
-        assert (1, 2) in out and out[(1, 2)] == 1.0
+            expected = round(
+                jaccard(set(char_shingles(rows[a].text, 3)), set(char_shingles(rows[b].text, 3))),
+                6,
+            )
+            if expected >= PAIR_JACCARD:
+                assert out.pop((a, b)) == pytest.approx(expected, abs=1e-6)
+        assert not out
 
     def test_threshold_filters(self, docs):
-        out = ngram_jaccard_pairs(docs, n=3, threshold=0.9).collect()
+        out = ngram_jaccard_pairs(docs).collect()
         assert {(r.doc_a, r.doc_b) for r in out} >= {(1, 2)}
-        assert all(r.jaccard >= 0.9 for r in out)
+        assert all(r.jaccard >= PAIR_JACCARD for r in out)
 
 
 def _cosine(a, b):
@@ -159,14 +166,14 @@ class TestSimilarity:
             .select(F.col("vec_id").alias("query_vec_id"), F.col("embedding").alias("query_embedding"))
         )
         got = {}
-        for r in brute_force_topk(emb, queries, k=5).collect():
+        for r in brute_force_topk(emb, queries).collect():
             got.setdefault(r.query_vec_id, []).append((r.rank, r.vec_id, r.cosine))
         vecs = {r.vec_id: list(r.embedding) for r in emb.collect()}
         for q in range(3):
             sims = sorted(
                 ((round(_cosine(vecs[q], v), 6), -i) for i, v in vecs.items()),
                 reverse=True,
-            )[:5]
+            )[:TOP_K]
             expected_ids = [-neg for _, neg in sims]
             got_ids = [vid for _, vid, _ in sorted(got[q])]
             assert got_ids == expected_ids, q
@@ -176,7 +183,7 @@ class TestSimilarity:
             emb.filter(F.col("vec_id") < 2)
             .select(F.col("vec_id").alias("query_vec_id"), F.col("embedding").alias("query_embedding"))
         )
-        out = lsh_bucketed_topk(emb, queries, k=5, n_planes=3).collect()
+        out = lsh_bucketed_topk(emb, queries).collect()
         assert out, "bucketed search must return results"
         # self-similarity must survive bucketing (query vec is in its own bucket)
         self_hits = {r.query_vec_id for r in out if r.vec_id == r.query_vec_id}
@@ -193,15 +200,18 @@ class TestSimilarity:
             (4, [1.0, 0.0, 0.001], 8),  # near dup of 1 but different block
         ]
         df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-        pairs = {(r.vec_a, r.vec_b) for r in embedding_near_dup_pairs(df, 0.99).collect()}
+        pairs = {(r.vec_a, r.vec_b) for r in embedding_near_dup_pairs(df).collect()}
         assert (1, 2) in pairs
         assert (1, 3) not in pairs
         assert (1, 4) not in pairs  # blocked away
 
 
 class TestNearDupPipeline:
-    def test_planted_near_dups_removed(self, spark):
-        from document_automation_spark.operators.dedup import near_dup_dedup
+    def test_planted_near_dups_removed(self, spark, monkeypatch):
+        from document_automation_spark.operators import dedup
+
+        # the dog -> cat rewrite of doc 3 verifies at 0.7, not at 0.9
+        monkeypatch.setattr(dedup, "JACCARD_THRESHOLD", 0.7)
 
         base = "the quick brown fox jumps over the lazy dog again and again " * 8
         rows = [
@@ -214,7 +224,7 @@ class TestNearDupPipeline:
         docs = spark.createDataFrame(
             rows, "doc_id long, text string, lang string, source string, n_chars long"
         )
-        kept = {r.doc_id for r in near_dup_dedup(docs, jaccard_threshold=0.7).collect()}
+        kept = {r.doc_id for r in dedup.near_dup_dedup(docs).collect()}
         assert 1 in kept  # canonical (lowest id) survives
         assert 2 not in kept and 3 not in kept  # verified near-dups dropped
         assert {4, 5} <= kept  # unrelated docs untouched
@@ -234,7 +244,7 @@ class TestNearDupPipeline:
             for b in ids[i_pos + 1 :]:
                 if jaccard(shingles[a], shingles[b]) >= 0.9:
                     expected_dropped.add(b)
-        kept = {r.doc_id for r in near_dup_dedup(docs, jaccard_threshold=0.9).collect()}
+        kept = {r.doc_id for r in near_dup_dedup(docs).collect()}
         dropped = set(ids) - kept
         # LSH candidates ⊆ all pairs → no false drops; banding with 32/8
         # perms catches every J≥0.9 pair here → no misses either
@@ -278,7 +288,7 @@ class TestSimhashNearDup:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
         got = {
             (r.doc_a, r.doc_b): r.hamming
-            for r in simhash_near_dup_pairs(docs, max_hamming=3).collect()
+            for r in simhash_near_dup_pairs(docs).collect()
         }
         fps = {}
         for r in docs.collect():
@@ -289,16 +299,9 @@ class TestSimhashNearDup:
         for i, a in enumerate(ids):
             for b in ids[i + 1 :]:
                 h = hamming64(fps[a], fps[b])
-                if h <= 3:
+                if h <= MAX_HAMMING:
                     expected[(a, b)] = h
         assert got == expected  # banded multi-probe is EXACT for h<=bands-1
-
-    def test_pigeonhole_guard(self, spark, sf_dir):
-        from document_automation_spark.operators.dedup import simhash_near_dup_pairs
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-        with pytest.raises(ValueError, match="pigeonhole"):
-            simhash_near_dup_pairs(docs, max_hamming=4)
 
     def test_simhash_near_dup_skips_empty_and_null(self, spark):
         from document_automation_spark.operators.dedup import simhash_near_dup_pairs
@@ -398,7 +401,7 @@ class TestFastHashPath:
         texts = {r.doc_id: r.text for r in docs.collect()}
         pairs = {
             (r.doc_a, r.doc_b)
-            for r in simhash_near_dup_pairs(docs, max_hamming=3).collect()
+            for r in simhash_near_dup_pairs(docs).collect()
         }
         assert (100, 101) in pairs
         for a, b in pairs:
@@ -421,7 +424,7 @@ class TestDuplicateSpans:
         ]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
         got = {r.doc_id: (r.span_start, r.span_end)
-               for r in duplicate_spans(docs, k=32, min_docs=2).collect()}
+               for r in duplicate_spans(docs, k=32).collect()}
         assert got == {1: (20, 60), 2: (5, 45)}
 
     def test_separate_islands_not_merged(self, spark):
@@ -435,7 +438,7 @@ class TestDuplicateSpans:
         ]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
         out = {}
-        for r in duplicate_spans(docs, k=32, min_docs=2).collect():
+        for r in duplicate_spans(docs, k=32).collect():
             out.setdefault(r.doc_id, []).append((r.span_start, r.span_end))
         assert len(out[1]) == 2 and len(out[2]) == 2  # two islands per doc
         t1 = rows[0][1]
@@ -449,7 +452,7 @@ class TestDuplicateSpans:
                 (2, "totally different content here " * 8)]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
         # the Z-run repeats WITHIN doc 1 only → countDistinct(doc)=1 → no span
-        assert duplicate_spans(docs, k=32, min_docs=2).count() == 0
+        assert duplicate_spans(docs, k=32).count() == 0
 
     def test_cut_spans_surgery_and_convergence(self, spark):
         from document_automation_spark.operators.dedup import cut_spans, duplicate_spans
@@ -461,7 +464,7 @@ class TestDuplicateSpans:
             (3, "untouched unique document text " * 4),
         ]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-        spans = duplicate_spans(docs, k=32, min_docs=2)
+        spans = duplicate_spans(docs, k=32)
         out = {r.doc_id: (r.text, r.n_cut_chars) for r in cut_spans(docs, spans).collect()}
         assert out[1] == ("a" * 20 + "b" * 20, 40)
         assert out[2] == ("c" * 5 + "d" * 50, 40)
@@ -469,7 +472,7 @@ class TestDuplicateSpans:
         # convergence: after cutting every duplicated span everywhere, a
         # re-run finds nothing (no cross-doc 32-gram survives here)
         cleaned = cut_spans(docs, spans).select("doc_id", "text")
-        assert duplicate_spans(cleaned, k=32, min_docs=2).count() == 0
+        assert duplicate_spans(cleaned, k=32).count() == 0
 
     def test_cut_spans_multiple_islands(self, spark):
         from document_automation_spark.operators.dedup import cut_spans, duplicate_spans
@@ -481,7 +484,7 @@ class TestDuplicateSpans:
         mid = "many distinct middle words here." * 3
         rows = [(1, s1 + mid + s2), (2, s1 + "other unique middle text;" * 4 + s2)]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-        spans = duplicate_spans(docs, k=32, min_docs=2)
+        spans = duplicate_spans(docs, k=32)
         out = {r.doc_id: r.text for r in cut_spans(docs, spans).collect()}
         assert out[1] == mid  # both islands excised, middle intact
 
@@ -509,9 +512,9 @@ class TestMultiprobeLsh:
             F.col("vec_id").alias("query_vec_id"),
             F.col("embedding").alias("query_embedding"),
         )
-        base = lsh_bucketed_topk(emb, queries, k=10, n_planes=4)
-        mp = lsh_bucketed_topk(emb, queries, k=10, n_planes=4, probe_bits=1)
-        brute = brute_force_topk(emb, queries, k=10)
+        base = lsh_bucketed_topk(emb, queries)
+        mp = lsh_bucketed_topk(emb, queries, probe_bits=1)
+        brute = brute_force_topk(emb, queries)
 
         def topk(df):
             return {
@@ -546,9 +549,9 @@ class TestMultiprobeLsh:
             F.col("vec_id").alias("query_vec_id"),
             F.col("embedding").alias("query_embedding"),
         )
-        one = lsh_bucketed_topk(emb, queries, k=10, n_planes=4)
-        two = lsh_bucketed_topk(emb, queries, k=10, n_planes=4, n_tables=2)
-        brute = brute_force_topk(emb, queries, k=10)
+        one = lsh_bucketed_topk(emb, queries)
+        two = lsh_bucketed_topk(emb, queries, n_tables=2)
+        brute = brute_force_topk(emb, queries)
 
         def hits(df):
             ex = {}

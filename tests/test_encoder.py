@@ -130,7 +130,7 @@ class TestInference:
         factory, key = make_encoder_model_factory(spark, enc)
         got = {
             r.doc_id: np.array(r.embedding)
-            for r in embed_with_model(docs, factory, batch_size=5, cache_key=key).collect()
+            for r in embed_with_model(docs, factory, cache_key=key).collect()
         }
         want = enc.encode_texts(TEXTS_A + TEXTS_B)
         for i in range(len(TEXTS_A + TEXTS_B)):

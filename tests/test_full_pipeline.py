@@ -53,7 +53,7 @@ def test_extract_dedup_embed_retrieve(spark, passages):
         F.col("vec_id").alias("query_vec_id"),
         F.col("embedding").alias("query_embedding"),
     )
-    hits = brute_force_topk(corpus, queries, k=3).collect()
+    hits = brute_force_topk(corpus, queries).collect()
 
     # every query passage must retrieve itself at rank 1 (cosine 1.0)
     top1 = {r.query_vec_id: r for r in hits if r.rank == 1}
@@ -88,10 +88,10 @@ def test_training_data_curation_stack(spark, passages):
     assert lang.count() == n_gated
     assert {r.detected_lang for r in lang.collect()} <= {"en", "de", "fr", "es", "zh", "ja", "ko", "ru", "und"}
 
-    deduped = near_dup_dedup(gated, jaccard_threshold=0.9)
+    deduped = near_dup_dedup(gated)
     n_unique = deduped.count()
     assert 0 < n_unique <= n_gated
 
-    stats = token_stats(deduped, include_bpe=True, include_fingerprint=True)
+    stats = token_stats(deduped)
     assert stats.agg(F.sum("n_tokens_bpe")).first()[0] > 0
     assert stats.select("fingerprint").distinct().count() == n_unique  # no collisions here

@@ -9,6 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from document_automation_spark.kernels.graph import (
+    GRAPH_K,
+    N_ROUNDS,
     graph_search_py,
     knn_graph_py,
     round6,
@@ -37,9 +39,9 @@ class TestKnnGraph:
         df, ids, X = corpus
         got = {
             (r.src, r.dst): r.cosine
-            for r in knn_graph(df, k=8, n_rounds=1).collect()
+            for r in knn_graph(df).collect()
         }
-        G = knn_graph_py(ids, X, k=8, n_rounds=1)
+        G = knn_graph_py(ids, X, k=GRAPH_K, n_rounds=N_ROUNDS)
         want = {(a, b): c for a, nbs in G.items() for b, c in nbs}
         assert got == want
 
@@ -68,21 +70,17 @@ class TestKnnGraph:
 class TestGraphSearch:
     def test_search_matches_kernel_mirror(self, spark, corpus):
         df, ids, X = corpus
-        G = knn_graph_py(ids, X, k=12, n_rounds=2)
+        G = knn_graph_py(ids, X, k=GRAPH_K, n_rounds=N_ROUNDS)
         queries = df.filter(F.col("vec_id") < 5).select(
             F.col("vec_id").alias("query_vec_id"),
             F.col("embedding").alias("query_embedding"),
         )
-        graph_df = knn_graph(df, k=12, n_rounds=2).persist()
+        graph_df = knn_graph(df).persist()
         try:
-            got = graph_beam_search(
-                df, graph_df, queries, k=10, n_seeds=8, beam=6, n_hops=3
-            ).collect()
+            got = graph_beam_search(df, graph_df, queries, beam=6).collect()
         finally:
             graph_df.unpersist()
-        want = graph_search_py(
-            ids, X, G, query_ids=range(5), k=10, n_seeds=8, beam=6, n_hops=3
-        )
+        want = graph_search_py(ids, X, G, query_ids=range(5), beam=6)
         got_by_q = {}
         for r in got:
             got_by_q.setdefault(r.query_vec_id, []).append(r)
@@ -107,9 +105,7 @@ class TestGraphSearch:
         n = len(ids)
 
         G = knn_graph_py(ids, X, k=12, n_rounds=2)
-        res = graph_search_py(
-            ids, X, G, query_ids=range(5), k=10, n_seeds=8, beam=6, n_hops=3
-        )
+        res = graph_search_py(ids, X, G, query_ids=range(5), beam=6)
 
         # brute-force reference with the same rounding/tie rules
         from document_automation_spark.kernels.graph import _Cos

@@ -237,7 +237,7 @@ class TestIngestPipeline:
         from document_automation_spark.operators.dedup import duplicate_spans
 
         remaining = duplicate_spans(
-            cut.withColumnRenamed("content", "text"), k=32, min_docs=2
+            cut.withColumnRenamed("content", "text"), k=32
         ).count()
         spark.catalog.clearCache()
         assert remaining == 0

@@ -5,7 +5,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from document_automation_spark.operators.ivf import assign_buckets, ivf_topk, train_centroids
+from document_automation_spark.operators import ivf
+from document_automation_spark.operators.ivf import (
+    assign_buckets,
+    ivf_topk,
+    probe_buckets_df,
+    train_centroids,
+)
 from document_automation_spark.operators.similarity import brute_force_topk
 
 
@@ -25,21 +31,19 @@ def queries(emb):
 
 
 class TestIvf:
-    def test_full_probe_equals_brute_force(self, emb, queries):
-        exact = brute_force_topk(emb, queries, k=10).collect()
-        ivf = ivf_topk(emb, queries, n_centroids=8, n_probe=8, k=10).collect()
+    def test_full_probe_equals_brute_force(self, emb, queries, monkeypatch):
+        monkeypatch.setattr(ivf, "N_PROBE", ivf.N_CENTROIDS)
+        exact = brute_force_topk(emb, queries).collect()
+        got = ivf_topk(emb, queries).collect()
         key = lambda rs: sorted((r.query_vec_id, r.vec_id, r.rank) for r in rs)
-        assert key(ivf) == key(exact)
+        assert key(got) == key(exact)
 
     def test_partial_probe_recall(self, emb, queries):
         exact = {
             (r.query_vec_id, r.vec_id)
-            for r in brute_force_topk(emb, queries, k=10).collect()
+            for r in brute_force_topk(emb, queries).collect()
         }
-        got = {
-            (r.query_vec_id, r.vec_id)
-            for r in ivf_topk(emb, queries, n_centroids=8, n_probe=3, k=10).collect()
-        }
+        got = {(r.query_vec_id, r.vec_id) for r in ivf_topk(emb, queries).collect()}
         recall = len(exact & got) / len(exact)
         # probing 3/8 buckets; self-queries guarantee the top hit's bucket
         # is probed, and the 16-dim corpus clusters loosely — floor pinned
@@ -94,8 +98,10 @@ class TestProbeOverflow:
     def test_n_probe_above_n_centroids_degrades_to_full_probe(self, emb, queries):
         """n_probe > n_centroids (a natural recall-tuning call) must probe
         everything, not crash the Arrow worker with a length mismatch."""
-        exact = {(r.query_vec_id, r.rank): r.vec_id
-                 for r in ivf_topk(emb, queries, n_centroids=4, n_probe=4, k=10).collect()}
-        over = {(r.query_vec_id, r.rank): r.vec_id
-                for r in ivf_topk(emb, queries, n_centroids=4, n_probe=8, k=10).collect()}
-        assert over == exact
+        centers = train_centroids(emb, n_centroids=4)
+        probed = {}
+        for r in probe_buckets_df(queries, centers, 8).collect():
+            probed.setdefault(r.query_vec_id, []).append(r.bucket)
+        assert {q: sorted(b) for q, b in probed.items()} == {
+            q: [0, 1, 2, 3] for q in range(5)
+        }

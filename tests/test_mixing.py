@@ -8,7 +8,13 @@ import math
 
 import pytest
 
+from document_automation_spark.operators import mixing
 from document_automation_spark.operators.mixing import (
+    QUOTA,
+    TEMPERATURE_ALPHA,
+    TEMPERATURE_TARGET,
+    UPSAMPLE_ALPHA,
+    UPSAMPLE_TARGET,
     stratified_quota_sample,
     temperature_rates,
     temperature_resample,
@@ -48,49 +54,50 @@ class TestTemperatureResample:
             assert r["rate"] == pytest.approx(round(30.0 / n, 6), abs=1e-9)
 
     def test_survivors_deterministic_and_under_rate(self, docs):
-        a = sorted(r["doc_id"] for r in temperature_resample(docs, "lang", 0.5, 40).collect())
-        b = sorted(r["doc_id"] for r in temperature_resample(docs, "lang", 0.5, 40).collect())
+        a = sorted(r["doc_id"] for r in temperature_resample(docs).collect())
+        b = sorted(r["doc_id"] for r in temperature_resample(docs).collect())
         assert a == b and len(a) > 0
 
     def test_survivor_count_near_target(self, docs):
-        got = temperature_resample(docs, "lang", 0.5, 40).count()
-        # Bernoulli draws around an expected 40: generous 3-sigma band
-        assert 20 <= got <= 60, got
+        got = temperature_resample(docs).count()
+        rates = temperature_rates(docs, "lang", TEMPERATURE_ALPHA, TEMPERATURE_TARGET)
+        expect = sum(r["n_group"] * r["rate"] for r in rates.collect())
+        # Bernoulli draws around their expectation: generous 3-sigma band
+        assert abs(got - expect) <= 3 * math.sqrt(expect), (got, expect)
 
     def test_no_corpus_shuffle(self, docs):
         """The corpus-side plan is scan → broadcast join → filter: the
         only Exchanges permitted are the tiny rate-table aggregation and
         its broadcast — never a corpus repartition / sort-merge join."""
-        plan = temperature_resample(docs, "lang", 0.5, 40)._jdf.queryExecution().executedPlan().toString()
+        plan = temperature_resample(docs)._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" not in plan, plan
         assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, plan
 
 
 class TestStratifiedQuota:
     def test_exact_quota_per_group(self, docs):
-        out = stratified_quota_sample(docs, "lang", quota=10)
+        out = stratified_quota_sample(docs)
         per_group = {r["lang"]: r["n"] for r in
                      out.groupBy("lang").count().withColumnRenamed("count", "n").collect()}
         sizes = {r["lang"]: r["n"] for r in
                  docs.groupBy("lang").count().withColumnRenamed("count", "n").collect()}
         for lang, n in sizes.items():
-            assert per_group.get(lang, 0) == min(10, n), lang
+            assert per_group.get(lang, 0) == min(QUOTA, n), lang
 
     def test_ranks_are_dense_from_one(self, docs):
-        out = stratified_quota_sample(docs, "lang", quota=10).collect()
+        out = stratified_quota_sample(docs).collect()
         by_lang: dict[str, list[int]] = {}
         for r in out:
             by_lang.setdefault(r["lang"], []).append(r["sample_rank"])
         for lang, ranks in by_lang.items():
             assert sorted(ranks) == list(range(1, len(ranks) + 1)), lang
 
-    def test_quota_subset_of_larger_quota(self, docs):
+    def test_quota_subset_of_larger_quota(self, docs, monkeypatch):
         """Hash ranking is stable: the 5-per-group sample must be a strict
-        subset of the 10-per-group sample."""
-        small = {(r["lang"], r["doc_id"])
-                 for r in stratified_quota_sample(docs, "lang", quota=5).collect()}
-        large = {(r["lang"], r["doc_id"])
-                 for r in stratified_quota_sample(docs, "lang", quota=10).collect()}
+        subset of the QUOTA-per-group sample."""
+        large = {(r["lang"], r["doc_id"]) for r in stratified_quota_sample(docs).collect()}
+        monkeypatch.setattr(mixing, "QUOTA", 5)
+        small = {(r["lang"], r["doc_id"]) for r in stratified_quota_sample(docs).collect()}
         assert small < large
 
 
@@ -98,7 +105,7 @@ class TestUpsampleWithRepeats:
     def test_expected_total_and_repeats_present(self, docs):
         from document_automation_spark.operators.mixing import upsample_with_repeats
 
-        out = upsample_with_repeats(docs, "lang", alpha=0.3, target_rows=600).cache()
+        out = upsample_with_repeats(docs).cache()
         total = out.count()
         # expectation is exactly 600 (Σ_g n_g · rate_g = target); Bernoulli
         # remainders give a tight band
@@ -112,7 +119,7 @@ class TestUpsampleWithRepeats:
     def test_copy_indices_dense_per_doc(self, docs):
         from document_automation_spark.operators.mixing import upsample_with_repeats
 
-        rows = upsample_with_repeats(docs, "lang", alpha=0.3, target_rows=600).collect()
+        rows = upsample_with_repeats(docs).collect()
         by_doc: dict[int, list[int]] = {}
         for r in rows:
             by_doc.setdefault(r["doc_id"], []).append(r["copy_idx"])
@@ -128,8 +135,8 @@ class TestUpsampleWithRepeats:
         )
 
         rates = {r["lang"]: r["rate"]
-                 for r in temperature_rates(docs, "lang", 0.3, 600, cap_at_one=False).collect()}
-        rows = upsample_with_repeats(docs, "lang", alpha=0.3, target_rows=600).collect()
+                 for r in temperature_rates(docs, "lang", UPSAMPLE_ALPHA, UPSAMPLE_TARGET, cap_at_one=False).collect()}
+        rows = upsample_with_repeats(docs).collect()
         copies: dict[int, int] = {}
         lang_of: dict[int, str] = {}
         for r in rows:

@@ -11,6 +11,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
+from document_automation_spark.functions import embed
 from document_automation_spark.functions.embed import embed_with_model
 from document_automation_spark.functions.encoder import (
     make_encoder_model_factory,
@@ -55,10 +56,8 @@ class TestModelSeam:
 
             return model
 
-        n, parts, bs = 517, 4, 50
-        out = embed_with_model(
-            _docs(spark, n, parts), factory, batch_size=bs, cache_key=run_key
-        ).collect()
+        n, parts, bs = 517, 4, embed.BATCH_SIZE
+        out = embed_with_model(_docs(spark, n, parts), factory, cache_key=run_key).collect()
         assert len(out) == n
         assert all(len(r.embedding) == 2 for r in out)
 
@@ -92,16 +91,16 @@ class TestModelSeam:
             return lambda texts: [[1.0, 0.0] for _ in texts]
 
         docs = _docs(spark, 100, 2)
-        embed_with_model(docs, factory, batch_size=32, cache_key=run_key).collect()
+        embed_with_model(docs, factory, cache_key=run_key).collect()
         first = {f.split("_")[1] for f in os.listdir(log_dir) if f.startswith("init_")}
-        embed_with_model(docs, factory, batch_size=32, cache_key=run_key).collect()
+        embed_with_model(docs, factory, cache_key=run_key).collect()
         # pids seen in job 2 that already initialized in job 1 re-used the
         # cached model: per-pid init count stays 1
         pids = [f.split("_")[1] for f in os.listdir(log_dir) if f.startswith("init_")]
         assert len(pids) == len(set(pids))
         assert first  # job 1 did initialize somewhere
 
-    def test_projection_model_broadcast_and_determinism(self, spark):
+    def test_projection_model_broadcast_and_determinism(self, spark, monkeypatch):
         """The encoder factory: weights broadcast from the driver; output
         independent of partitioning AND batch size (per-row math), pinned
         to 9 dp to stay clear of BLAS-shape noise."""
@@ -112,16 +111,9 @@ class TestModelSeam:
                 r.doc_id: tuple(round(v, 9) for v in r.embedding) for r in rows
             }
 
-        a = canon(
-            embed_with_model(
-                _docs(spark, 200, 1), factory, batch_size=50, cache_key=key
-            ).collect()
-        )
-        b = canon(
-            embed_with_model(
-                _docs(spark, 200, 7), factory, batch_size=17, cache_key=key
-            ).collect()
-        )
+        a = canon(embed_with_model(_docs(spark, 200, 1), factory, cache_key=key).collect())
+        monkeypatch.setattr(embed, "BATCH_SIZE", 17)
+        b = canon(embed_with_model(_docs(spark, 200, 7), factory, cache_key=key).collect())
         assert a == b
         # unit-norm rows (the encoder L2-normalizes)
         import math
@@ -135,7 +127,7 @@ class TestModelSeam:
             [(1, "hello world"), (2, ""), (3, None)], "doc_id long, text string"
         )
         rows = {r.doc_id: r.embedding for r in
-                embed_with_model(df, factory, batch_size=2, cache_key=key).collect()}
+                embed_with_model(df, factory, cache_key=key).collect()}
         assert len(rows) == 3
         assert rows[2] == [0.0, 0.0, 0.0, 0.0]  # empty text → zero vector kept
         assert rows[3] == [0.0, 0.0, 0.0, 0.0]  # null tolerated, not a crash
@@ -152,7 +144,7 @@ class TestStringIds:
             "doc_id string, text string",
         )
         rows = {r.doc_id: r.embedding for r in
-                embed_with_model(df, factory, batch_size=2, cache_key=key).collect()}
+                embed_with_model(df, factory, cache_key=key).collect()}
         assert set(rows) == {"sha-abc", "sha-def"}
         assert all(len(v) == 4 for v in rows.values())
 
@@ -171,7 +163,7 @@ class TestStringIds:
 
         docs = _docs(spark, 64, 2)
         # no explicit cache_key: exercise the DEFAULT key path both times
-        out1 = embed_with_model(docs, make_factory(1.0), batch_size=16).collect()
-        out2 = embed_with_model(docs, make_factory(2.0), batch_size=16).collect()
+        out1 = embed_with_model(docs, make_factory(1.0)).collect()
+        out2 = embed_with_model(docs, make_factory(2.0)).collect()
         assert {tuple(r.embedding) for r in out1} == {(1.0,)}
         assert {tuple(r.embedding) for r in out2} == {(2.0,)}

@@ -92,7 +92,7 @@ class TestConcatenateDedup:
 class TestHybridImageFusion:
     def test_max_per_image_and_weighted_sum(self, scores):
         out = {(r.query_id, r.image_id): (r.img_rank, r.final_score)
-               for r in hybrid_image_fusion(scores, 3, 2, rerank_topk=10).collect()}
+               for r in hybrid_image_fusion(scores).collect()}
         # q0 img10: bm25 max = 900000, dpr max = 950000 → 2*900000+3*950000
         expected_num = 2 * 900_000 + 3 * 950_000
         assert out[(0, 10)][1] == pytest.approx(expected_num / (SCORE_DEN * 2))

@@ -112,11 +112,14 @@ class TestEdgeCases:
     def test_chunk_stats(self, spark):
         df = spark.createDataFrame(
             [(1, "s", 5), (2, "s", 4), (3, "t", 2)],
-            "doc_id long, source string, n_tok long",
+            "pack_id long, shard string, n_tok long",
+        )
+        packed = pack_sequences(
+            df, seq_len=4, shard_col="shard", id_col="pack_id", tokens_col="n_tok"
         )
         stats = {
-            r["source"]: (r["n_chunks"], r["n_tokens"], r["n_docs"])
-            for r in chunk_stats(pack_sequences(df, seq_len=4, tokens_col="n_tok")).collect()
+            r["shard"]: (r["n_chunks"], r["n_tokens"], r["n_docs"])
+            for r in chunk_stats(packed).collect()
         }
         assert stats == {"s": (3, 9, 2), "t": (1, 2, 1)}
 

@@ -44,7 +44,7 @@ def test_salted_agg_invariant(spark, sf_dir):
 
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
     out = lambda df: _rows(
-        salted_agg(df, ["event_type"], {"n": ("count", "*"), "mx": ("max", "value")}, n_salt=16)
+        salted_agg(df, ["event_type"], {"n": ("count", "*"), "mx": ("max", "value")})
     )
     assert out(events.coalesce(1)) == out(events.repartition(8))
 
@@ -54,7 +54,7 @@ def test_fusion_invariant(spark, docs_pair):
     from document_automation_spark.operators.fusion import hybrid_image_fusion, rrf
 
     one, eight = docs_pair
-    for op in (lambda d: rrf(derived_scores(d)), lambda d: hybrid_image_fusion(derived_scores(d), 3, 2)):
+    for op in (lambda d: rrf(derived_scores(d)), lambda d: hybrid_image_fusion(derived_scores(d))):
         assert _rows(op(one)) == _rows(op(eight))
 
 
@@ -65,6 +65,6 @@ def test_embedding_similarity_invariant(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_vec_id"), F.col("embedding").alias("query_embedding")
     )
-    a = _rows(brute_force_topk(emb.coalesce(1), queries, k=8))
-    b = _rows(brute_force_topk(emb.repartition(8), queries, k=8))
+    a = _rows(brute_force_topk(emb.coalesce(1), queries))
+    b = _rows(brute_force_topk(emb.repartition(8), queries))
     assert a == b

@@ -64,10 +64,6 @@ class TestRedaction:
         red.count()
         assert obs.get["n_docs_with_pii"] == 5  # counters still observed
 
-    def test_empty_categories_raise(self, spark, docs):
-        with pytest.raises(ValueError, match="non-empty"):
-            redact_pii(docs, categories=())
-
     def test_schema_preserved_and_column_position(self, spark, docs):
         extra = docs.withColumn("lang", F.lit("en"))
         red, _ = redact_pii(extra)

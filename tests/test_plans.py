@@ -96,7 +96,7 @@ class TestRelationalPlans:
         from document_automation_spark.operators.eval_metrics import hits_and_ranks
         from document_automation_spark.operators.fusion import hybrid_image_fusion
 
-        ranked = hybrid_image_fusion(derived_scores(tables["documents"]), 3, 2)
+        ranked = hybrid_image_fusion(derived_scores(tables["documents"]))
         plan = plan_of(hits_and_ranks(ranked, gold_labels(spark), topk=10))
         assert "BroadcastHashJoin" in plan
 
@@ -107,5 +107,5 @@ class TestRelationalPlans:
         queries = emb.filter(F.col("vec_id") < 3).select(
             F.col("vec_id").alias("query_vec_id"), F.col("embedding").alias("query_embedding")
         )
-        plan = plan_of(brute_force_topk(emb, queries, k=5))
+        plan = plan_of(brute_force_topk(emb, queries))
         assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan

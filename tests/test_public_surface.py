@@ -9,6 +9,7 @@ from __future__ import annotations
 import ast
 import json
 import sys
+import textwrap
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -48,11 +49,13 @@ KEPT = {
 }
 
 
-# Defaulted parameters of public package functions that no entry point
-# sets, each kept on purpose, with one of four reasons: (a) a CLI test
-# seam, (b) a test-input builder, (c) a safety cap or scale-tier switch
-# that SCALE.md or COVERAGE.md names and tests switch on, (d) part of a
-# component COVERAGE.md lists.
+# Defaulted parameters of public package functions that entry points
+# pass at one value, each kept on purpose, with one of six reasons: (a) a
+# CLI test seam, (b) a test-input builder, (c) a safety cap or scale-tier
+# switch that SCALE.md or COVERAGE.md names and tests switch on, (d) part
+# of a component COVERAGE.md lists, (e) a ``perfbench/`` call passes it by
+# keyword, and ``perfbench/`` is frozen, (f) it selects the reference path
+# that tests compare against.
 KEPT_PARAMS = {
     "jobs.extract_job.main.argv": "(a) CLI test seam",
     "jobs.ingest_pipeline.main.argv": "(a) CLI test seam",
@@ -76,6 +79,19 @@ KEPT_PARAMS = {
     "negatives of the DPR samples (COVERAGE hard-negative mining, S12)",
     "operators.webtext_quality.filter_by_quality.lm": "(d) the perplexity rule "
     "(COVERAGE quality-filter gate row)",
+    "operators.webtext_quality.filter_by_quality.rules": "(d) the gate's "
+    "thresholds; the perplexity rule above is switched on by rules.max_ppl",
+    "operators.urls.dedup_by_url.shuffle_payloads": "(e) perfbench's re-crawl "
+    "layer passes it; (f) the window path tests compare the join path against",
+    "operators.dsir.train_dsir_weights.hash_impl": "(f) md5 selects the granular "
+    "reference tests compare dsir_select (the dsir_selection seat) against",
+    "operators.dsir.dsir_scores.hash_impl": "(f) as train_dsir_weights.hash_impl",
+    **{
+        f"functions.encoder.train_contrastive.{p}": "(f) the driver-side "
+        "reference train_contrastive_distributed is compared against at the "
+        "tests' own hyperparameters"
+        for p in ("dim_in", "hidden", "dim_out", "seed", "epochs", "lr", "temp")
+    },
 }
 
 
@@ -160,15 +176,78 @@ def _callee(node) -> str | None:
     return None
 
 
-def _parameters_set(paths) -> dict[str, set]:
-    """Function name -> what its callers set: keyword names, positional
-    indexes, or ``"*"`` for everything.  A call through
-    ``functools.partial`` sets what the partial binds; a call with
-    ``*``/``**`` expansion, and any use of the function as a value
-    instead of a call by name, sets everything."""
-    setting: dict[str, set] = {}
+# What a call with ``*``/``**`` expansion, or a use of the function as a
+# value, passes: every parameter, at values the source does not show.
+ANY = "*"
+
+
+def _value(node) -> str:
+    """The literal a call passes, as source text, or ``ANY`` for a value
+    computed at run time."""
+    try:
+        ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+        return ANY
+    return ast.unparse(node)
+
+
+def _dict_items(node) -> dict | None:
+    """``{key: value}`` of a dict literal, ``{...}`` or ``dict(k=...)``,
+    whose keys are all known; None for anything else."""
+    if isinstance(node, ast.Dict) and all(
+        isinstance(k, ast.Constant) and isinstance(k.value, str) for k in node.keys
+    ):
+        return {k.value: _value(v) for k, v in zip(node.keys, node.values)}
+    if (
+        isinstance(node, ast.Call)
+        and _callee(node.func) == "dict"
+        and not node.args
+        and all(k.arg for k in node.keywords)
+    ):
+        return {k.arg: _value(k.value) for k in node.keywords}
+    return None
+
+
+def _local_names(fn) -> set[str]:
+    """The parameters of ``fn`` and the names its body binds."""
+    a = fn.args
+    names = {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+    names.update(p.arg for p in (a.vararg, a.kwarg) if p)
+    names.update(
+        n.id
+        for n in ast.walk(fn)
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+    )
+    return names
+
+
+def _parameters_set(paths) -> dict[str, list[tuple[dict, str]]]:
+    """Function name -> one ``({parameter: value}, "file:line")`` per call
+    by name, where a parameter is a keyword or a positional index and a
+    value is what :func:`_value` reads.  A call through
+    ``functools.partial`` passes what the partial binds; ``**`` of a
+    module-level dict literal passes that dict's items.  Any other
+    ``*``/``**`` expansion, and any use of the function as a value, passes
+    ``{ANY: ANY}``.  A name is such a use unless an enclosing function
+    binds it; an attribute only when its base is an imported name, so
+    ``args.f`` is not a use of ``f``."""
+    calls: dict[str, list[tuple[dict, str]]] = {}
     for path in paths:
         tree = ast.parse(path.read_text())
+        where = path.relative_to(ROOT) if path.is_relative_to(ROOT) else path
+        dicts = {
+            t.id: items
+            for node in tree.body
+            if isinstance(node, ast.Assign) and (items := _dict_items(node.value))
+            for t in node.targets
+            if isinstance(t, ast.Name)
+        }
+        imported = {
+            (alias.asname or alias.name).split(".")[0]
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.Import, ast.ImportFrom))
+            for alias in node.names
+        }
         called = set()
         for node in ast.walk(tree):
             if not isinstance(node, ast.Call):
@@ -180,49 +259,135 @@ def _parameters_set(paths) -> dict[str, set]:
                 name, args = _callee(args[0]), args[1:]
             if name is None:
                 continue
-            if any(isinstance(a, ast.Starred) for a in args) or any(
-                k.arg is None for k in node.keywords
+            bound: dict = {i: _value(a) for i, a in enumerate(args)}
+            for k in node.keywords:
+                if k.arg is not None:
+                    bound[k.arg] = _value(k.value)
+                elif isinstance(k.value, ast.Name) and k.value.id in dicts:
+                    bound.update(dicts[k.value.id])
+                else:
+                    bound[ANY] = ANY
+            if any(isinstance(a, ast.Starred) for a in args):
+                bound[ANY] = ANY
+            calls.setdefault(name, []).append((bound, f"{where}:{node.lineno}"))
+
+        def uses(node, local: frozenset):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                local = local | _local_names(node)
+            elif id(node) not in called and isinstance(
+                getattr(node, "ctx", None), ast.Load
             ):
-                setting.setdefault(name, set()).add("*")
-            else:
-                setting.setdefault(name, set()).update(
-                    [*range(len(args)), *(k.arg for k in node.keywords)]
-                )
-        for node in ast.walk(tree):
-            if (
-                isinstance(node, (ast.Name, ast.Attribute))
-                and id(node) not in called
-                and not isinstance(node.ctx, (ast.Store, ast.Del))
-            ):
-                setting.setdefault(_callee(node), set()).add("*")
-    return setting
+                if isinstance(node, ast.Name) and node.id not in local:
+                    yield node.id, node.lineno
+                elif isinstance(node, ast.Attribute):
+                    base = node.value
+                    while isinstance(base, ast.Attribute):
+                        base = base.value
+                    if isinstance(base, ast.Name) and base.id in imported:
+                        yield node.attr, node.lineno
+            for child in ast.iter_child_nodes(node):
+                yield from uses(child, local)
+
+        for name, line in uses(tree, frozenset()):
+            calls.setdefault(name, []).append(({ANY: ANY}, f"{where}:{line}"))
+    return calls
 
 
-def _unset_defaulted_parameters(paths) -> set[str]:
-    setting = _parameters_set(paths)
-    unset = set()
+def _values_in_use(fn, calls) -> dict[str, dict[str, list[str]]]:
+    """Defaulted parameter of ``fn`` -> ``{value: ["file:line", ...]}``:
+    what each call passes, its default where it passes nothing."""
+    a = fn.args
+    positional = [p.arg for p in a.posonlyargs + a.args]
+    defaults = dict(zip(positional[len(positional) - len(a.defaults):], a.defaults))
+    defaults.update(
+        (p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+    )
+    values: dict[str, dict[str, list[str]]] = {param: {} for param in defaults}
+    for bound, where in calls:
+        for param, default in defaults.items():
+            index = positional.index(param) if param in positional else None
+            value = bound.get(param, bound.get(index, bound.get(ANY)))
+            values[param].setdefault(value or ast.unparse(default), []).append(where)
+    return values
+
+
+def _one_value_parameters(paths) -> dict[str, dict[str, list[str]]]:
+    """``module.function.parameter`` -> its values in use, for each
+    defaulted parameter of a public package function (``KEPT`` aside)
+    that entry points pass at one literal at most."""
+    calls = _parameters_set(paths)
+    found = {}
     for qualname, fn in _public_functions().items():
         if qualname in KEPT:
             continue
-        done = setting.get(fn.name, set())
-        if "*" in done:
-            continue
-        a = fn.args
-        positional = [p.arg for p in a.posonlyargs + a.args]
-        defaulted = positional[len(positional) - len(a.defaults):] + [
-            p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
-        ]
-        for param in defaulted:
-            index = positional.index(param) if param in positional else None
-            if param not in done and index not in done:
-                unset.add(f"{qualname}.{param}")
-    return unset
+        for param, values in _values_in_use(fn, calls.get(fn.name, [])).items():
+            if ANY not in values and len(values) <= 1:
+                found[f"{qualname}.{param}"] = values
+    return found
 
 
 def test_every_defaulted_parameter_has_a_non_test_setter_or_a_reason():
-    """A defaulted parameter that no entry point sets has one value in use:
-    it is a constant, or a knob kept for one of the reasons above."""
-    assert _unset_defaulted_parameters(_callers()) == set(KEPT_PARAMS)
+    """A defaulted parameter that entry points pass at one value has one
+    value in use: it is a constant, or a knob kept for one of the reasons
+    above."""
+    found = _one_value_parameters(_callers())
+    lines = [
+        f"{q}: "
+        + (
+            "; ".join(f"{v} at {', '.join(w)}" for v, w in values.items())
+            or "no entry point calls it"
+        )
+        for q, values in sorted(found.items())
+        if q not in KEPT_PARAMS
+    ]
+    lines += [
+        f"{q}: in KEPT_PARAMS, but entry points pass more than one value"
+        for q in sorted(set(KEPT_PARAMS) - set(found))
+    ]
+    assert not lines, "\n".join(["", *lines])
+
+
+def test_the_parameter_guard_reads_calls_as_documented(tmp_path):
+    snippet = tmp_path / "snippet.py"
+    snippet.write_text(
+        textwrap.dedent(
+            """
+            from functools import partial
+
+            from pkg import f, g, h, k
+
+            OPTIONS = dict(x=1, y="a")
+
+
+            def main(args, kwargs, h):
+                f(0, **OPTIONS)
+                g(**kwargs)
+                partial(h, x=1)
+                if args.k:
+                    k(1)
+                k(1, y=2)
+                return h
+
+
+            def k(x, y=2):
+                return x + y
+            """
+        )
+    )
+    calls = _parameters_set([snippet])
+    # ** of a literal dict passes its items; any other ** passes everything
+    assert [bound for bound, _ in calls["f"]] == [{0: "0", "x": "1", "y": "'a'"}]
+    assert [bound for bound, _ in calls["g"]] == [{ANY: ANY}]
+    # partial passes what it binds; main's parameter h is not a use of h
+    assert [bound for bound, _ in calls["h"]] == [{"x": "1"}]
+    # args.k is not a use of k, and y=2 is k's default: one value in use
+    assert sorted((bound for bound, _ in calls["k"]), key=len) == [
+        {0: "1"},
+        {0: "1", "y": "2"},
+    ]
+    (k_def,) = [n for n in ast.parse(snippet.read_text()).body if getattr(n, "name", "") == "k"]
+    where = [w for _, w in calls["k"]]
+    assert _values_in_use(k_def, calls["k"]) == {"y": {"2": where}}
 
 
 def _bench():

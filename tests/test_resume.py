@@ -654,7 +654,7 @@ def test_crash_before_the_manifest_rename_leaves_no_row(
     """B commits; A's run writes its manifest file under the hidden name
     and dies before the rename.  No reader sees A's rows — neither
     ``done_buckets``, nor Spark, nor pyarrow — and the resume of A equals
-    a clean run of A."""
+    a clean run of A and deletes the hidden file."""
     import pyarrow.parquet as pq
 
     inputs, clean = fingerprint_runs
@@ -692,6 +692,11 @@ def test_crash_before_the_manifest_rename_leaves_no_row(
     assert _rows(spark, out_dir) == clean["pages40"]
     assert done_buckets(spark, out_dir, "pages40") == list(range(8))
     assert _manifest(spark, out_dir).count() == 16
+    # the resume deleted the dead run's hidden file and its checksum
+    assert not [
+        f for f in os.listdir(manifest_path(out_dir))
+        if f.startswith("..part-") or (f.startswith(".part-") and f.endswith(".parquet"))
+    ]
 
 
 def test_durable_call_keeps_the_session_overwrite_mode(spark, tmp_path, out_dir):

@@ -35,7 +35,7 @@ class TestKeepRule:
         smaller (centroid_sim, vec_id)."""
         from document_automation_spark.operators.ivf import train_centroids
 
-        C = train_centroids(emb, n_centroids=8, seed=42)
+        C = train_centroids(emb, n_centroids=8)
         rows = sorted(emb.select("vec_id", "embedding").collect())
         ids = np.array([r.vec_id for r in rows])
         X = np.array([r.embedding for r in rows], dtype=np.float64)

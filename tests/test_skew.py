@@ -39,7 +39,6 @@ def test_salted_agg_identical_to_naive(skewed):
             skewed,
             ["k"],
             {"n": ("count", "*"), "s": ("sum", "v"), "mn": ("min", "v"), "mx": ("max", "v")},
-            n_salt=8,
         ).collect()
     }
     assert salted == naive

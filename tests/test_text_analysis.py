@@ -33,7 +33,7 @@ def test_token_stats_matches_kernel(docs):
 def test_rolling_fingerprint_matches_kernel(docs):
     got = {
         r.doc_id: r.fingerprint
-        for r in token_stats(docs, include_fingerprint=True).collect()
+        for r in token_stats(docs).collect()
     }
     for r in docs.collect():
         assert got[r.doc_id] == rolling_fingerprint(r.text), r.doc_id
@@ -67,6 +67,6 @@ def test_detect_language_script_sql_path(spark):
 def test_bpe_token_counts_match_kernel(docs):
     from document_automation_spark.kernels.textstats import count_tokens_bpe_ish
 
-    got = {r.doc_id: r.n_tokens_bpe for r in token_stats(docs, include_bpe=True).collect()}
+    got = {r.doc_id: r.n_tokens_bpe for r in token_stats(docs).collect()}
     for r in docs.collect():
         assert got[r.doc_id] == count_tokens_bpe_ish(r.text)

@@ -3,7 +3,8 @@
 Runs selected bench rows (``bench.BenchRows``: the flagship rows, the
 registry seats and the bare-operator rows that override them) in the bench
 session with the UI enabled, warm (``BenchRows.warm_up``, as in
-``bench.py``), then pulls per-stage metrics from the Spark
+``bench.py``, then one untimed rep of each row before its timed reps),
+then pulls per-stage metrics from the Spark
 REST API so the seconds can be attributed to stages/operators instead of
 guessed at.  Also dumps ``explain("formatted")`` per query to
 ``plans/r06/<query>_<tag>.txt`` when ``--plans <tag>`` is given.
@@ -82,6 +83,10 @@ def main() -> None:
             with open(f"plans/r06/{name}_{args.plans}.txt", "w") as f:
                 f.write(plan)
             spark.catalog.clearCache()
+        # one untimed rep: a row's first run pays its own first-job cost
+        # (4.91 s, then 1.37-2.07 s, for exact_dedup at sf0.001, local[4])
+        spark.sparkContext.setJobDescription(f"{name} warm-up")
+        rows.time(name)
         first_stage = 0
         try:
             apps = rest("applications")
