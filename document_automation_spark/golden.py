@@ -139,10 +139,10 @@ def kmeans_golden_sql() -> Optional[str]:
 
 @lru_cache(maxsize=None)
 def ivf_centroids(n_centroids: int = 8):
-    """Train the IVF centroids EXACTLY as operators/ivf.train_centroids does
-    (lowest 4096 vec_ids, float32→float64 upcast, seeded
-    kmeans_fit) but from a plain pyarrow read — same bytes in, same numpy
-    ops, bit-identical centers; returns None when the parquet is absent."""
+    """The IVF centroids from operators/ivf's one training recipe
+    (``_fit_centroids``, which ``train_centroids`` also calls) over a
+    plain pyarrow read — same bytes in, bit-identical centers; returns
+    None when the parquet is absent."""
     path = os.path.join(oracle_sf_dir(), "embeddings.parquet")
     try:
         import pyarrow.parquet as pq
@@ -150,16 +150,12 @@ def ivf_centroids(n_centroids: int = 8):
         table = pq.read_table(path, columns=["vec_id", "embedding"])
     except Exception:
         return None
-    import numpy as np
+    from document_automation_spark.operators.ivf import _fit_centroids
 
-    from document_automation_spark.kernels.cluster import kmeans_fit
-
-    pairs = sorted(
-        zip(table.column("vec_id").to_pylist(), table.column("embedding").to_pylist())
-    )[:4096]
-    X = np.array([e for _, e in pairs], dtype=np.float64)
-    centers, _ = kmeans_fit(X, n_centroids, seed=42)
-    return centers
+    return _fit_centroids(
+        zip(table.column("vec_id").to_pylist(), table.column("embedding").to_pylist()),
+        n_centroids,
+    )
 
 
 @lru_cache(maxsize=None)

@@ -9,9 +9,8 @@
       → durable extraction          (plans/checkpoint.run_extraction_job:
                                      bucketed write + resume manifests)
       → curation                    (operators/curate: quarantine drop,
-                                     gates, exact dedup — physical copy,
-                                     tombstone view, or fused into the
-                                     extraction write)
+                                     gates, exact dedup — physical copy
+                                     or tombstone view)
       → the optional stages, in this order, run by one loop:
           [--fix-encoding]          mojibake repair          curated_encfix
           [--dedup-against CORPUS]  cross-snapshot dedup     curated_incremental
@@ -52,7 +51,7 @@ import json
 import os
 import sys
 
-from contextlib import contextmanager, nullcontext
+from contextlib import contextmanager
 from functools import partial
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -60,7 +59,6 @@ from pyspark.sql import functions as F
 
 from document_automation_spark.plans.checkpoint import (
     PARQUET_WRITE_OPTIONS,
-    _hadoop_path,
     read_output,
     run_extraction_job,
 )
@@ -157,14 +155,8 @@ def run_ingest_pipeline(
     TOMBSTONE table + gate config (``operators.curate.curation_tombstones``)
     — at 100 TB this halves ingest write bytes, and consumers reconstruct
     the curated view with :func:`read_curated` (gates re-evaluate at scan
-    speed, losers broadcast-anti-join).  ``"fused"`` curates IN-FLIGHT:
-    gates + exact dedup run between the extraction kernel and the one
-    durable write, so the corpus table IS the curated table (quarantine
-    rows retained with ``error`` set — filter ``error IS NULL`` to read
-    the curated view); fastest wall-clock at small/medium scale, at the
-    cost of persisting the extracted rows for the job's duration (the
-    dup-loser subquery reads them twice).  Of the optional stages only
-    ``embed`` runs outside ``"copy"``; the others rewrite or re-read the
+    speed, losers broadcast-anti-join).  Of the optional stages only
+    ``embed`` runs in ``"view"``; the others rewrite or re-read the
     corpus table and are rejected there.
 
     ``from_text=True`` takes the WET path (documents_from_text over the
@@ -190,10 +182,8 @@ def run_ingest_pipeline(
     """
     from document_automation_spark.operators.extract import ExtractConfig
 
-    if curated_mode not in ("copy", "view", "fused"):
-        raise ValueError(
-            f"curated_mode must be 'copy', 'view' or 'fused', got {curated_mode!r}"
-        )
+    if curated_mode not in ("copy", "view"):
+        raise ValueError(f"curated_mode must be 'copy' or 'view', got {curated_mode!r}")
     if dedup_paragraphs_mode is not None:
         _para_mode, _, _para_k = dedup_paragraphs_mode.partition(":")
         _para_mode, _, _para_flag = _para_mode.partition("+")
@@ -331,10 +321,6 @@ def run_ingest_pipeline(
         docs_fn = None  # default: HTML/PDF extraction
     gates = dict(min_chars=min_chars, scripts=scripts, drop_exact_dups=drop_exact_dups)
     caches: list = []  # persisted frames, released once extraction is done
-    fused_stats: dict = {}
-    if curated_mode == "fused":
-        docs_fn = _fused_docs_fn(docs_fn, caches, fused_stats, gates)
-
     try:
         if url_dedup:
             from document_automation_spark.operators.urls import dedup_by_url
@@ -362,10 +348,6 @@ def run_ingest_pipeline(
                 spark, pages, output_path, input_fingerprint, cfg, docs_fn=docs_fn
             )
         )
-        if curated_mode == "fused":
-            summary.update(
-                _fused_curation(spark, output_path, lambda: docs_fn(pages, cfg), fused_stats)
-            )
     finally:
         for handle in caches:
             handle.unpersist()
@@ -379,32 +361,26 @@ def run_ingest_pipeline(
     # a 4 MB split vs 4.2-4.6 s at 128/32 MB.  32 MB keeps ~4x more tasks
     # in flight than the 128 MB default at this corpus size (straggler
     # headroom) at the same measured cost; the caller's value is restored
-    # after the pipeline (it may be extraction-tuned).  Fused mode curated
-    # inside the extraction write and reads under the caller's value.
-    with (
-        nullcontext()
-        if curated_mode == "fused"
-        else _conf_override(spark, "spark.sql.files.maxPartitionBytes", "32m")
-    ):
-        if curated_mode != "fused":
-            # content_sha completeness: THIS run's writer populates
-            # content_sha for every row it writes — but a RESUMED run keeps
-            # already-done buckets verbatim, and those may predate the
-            # sha-writing writer (NULL shas).  Keying curation on a NULL sha
-            # would collapse every legacy row into one dedup group and
-            # silently drop all but one.  Only trust the pruned-scan path
-            # when zero buckets were carried over from a previous run; a
-            # resumed run falls back to curate's coalesce(sha, re-hash) guard.
-            curate = _curate_view if curated_mode == "view" else _curate_copy
-            summary.update(
-                curate(
-                    spark,
-                    read_output(spark, output_path, with_sha=True),
-                    output_path,
-                    sha_is_complete=summary["buckets_skipped"] == 0,
-                    **gates,
-                )
+    # after the pipeline (it may be extraction-tuned).
+    with _conf_override(spark, "spark.sql.files.maxPartitionBytes", "32m"):
+        # content_sha completeness: THIS run's writer populates content_sha
+        # for every row it writes — but a RESUMED run keeps already-done
+        # buckets verbatim, and those may predate the sha-writing writer
+        # (NULL shas).  Keying curation on a NULL sha would collapse every
+        # legacy row into one dedup group and silently drop all but one.
+        # Only trust the pruned-scan path when zero buckets were carried
+        # over from a previous run; a resumed run falls back to curate's
+        # coalesce(sha, re-hash) guard.
+        curate = _curate_view if curated_mode == "view" else _curate_copy
+        summary.update(
+            curate(
+                spark,
+                read_output(spark, output_path, with_sha=True),
+                output_path,
+                sha_is_complete=summary["buckets_skipped"] == 0,
+                **gates,
             )
+        )
         for _, stage in stages:
             summary.update(
                 stage(
@@ -423,65 +399,7 @@ def _read_corpus(
     """The current curated corpus, the input of the next optional stage."""
     if curated_mode == "view":
         return read_curated(spark, output_path)
-    if curated_mode == "fused":
-        return read_output(spark, output_path).filter(F.col("error").isNull())
     return spark.read.parquet(summary["curated_path"])
-
-
-def _fused_docs_fn(base_fn, caches: list, fused_stats: dict, gates: dict):
-    """The FUSED-mode documents builder: curation (gates + exact dedup)
-    runs BETWEEN the extraction kernel and the one durable write — the
-    corpus table IS the curated table, so the composed ingest pays a
-    single write instead of write-read-write (measured: the curated copy
-    pass alone is ~5 s of the 200k-page composed job).  Quarantine rows
-    are RETAINED in the table (filter ``error IS NULL`` to read the
-    curated view) so the audit trail survives without a side write.  The
-    dup-loser subquery re-reads the extraction lineage, so the extracted
-    docs persist for the job's duration (registered in ``caches``) — the
-    memory-footprint trade that makes this the small/medium-scale mode: at
-    100 TB prefer 'view' (metadata-only curation) or 'copy'
-    (write-then-curate, nothing persisted).  Each build leaves its stats
-    callable in ``fused_stats["collect"]``."""
-    from pyspark import StorageLevel
-
-    from document_automation_spark.operators.curate import curate_extracted
-    from document_automation_spark.operators.extract import extract_documents
-
-    base_fn = base_fn or extract_documents
-
-    def fused_docs_fn(pages_, cfg_):
-        docs = base_fn(pages_, cfg_).persist(StorageLevel.MEMORY_AND_DISK)
-        caches.append(docs)
-        curated, collect = curate_extracted(docs, keep_quarantined=True, **gates)
-        fused_stats["collect"] = collect
-        return curated
-
-    return fused_docs_fn
-
-
-def _fused_curation(
-    spark: SparkSession, output_path: str, build_curated, fused_stats: dict
-) -> dict:
-    """Fused mode's curation counters.  When every bucket was already
-    committed no curation plan was built: the counters are the committing
-    run's ``_curation_stats``, unless it died before writing them — then
-    ``build_curated()`` is re-counted into a noop sink."""
-    stats_path = os.path.join(output_path, "_curation_stats")
-    stats_row = None
-    if "collect" not in fused_stats:
-        fs, jpath = _hadoop_path(spark, stats_path)
-        if fs.exists(jpath):
-            stats_row = spark.read.parquet(stats_path).first().asDict()
-        else:
-            build_curated().write.format("noop").mode("overwrite").save()
-    if stats_row is None:
-        stats_row = fused_stats["collect"]().first().asDict()
-        _write_curation_stats(spark, output_path, stats_row)
-    return {
-        **stats_row,
-        "curated_mode": "fused",
-        "curated_path": os.path.join(output_path, "data"),
-    }
 
 
 def _curate_copy(
@@ -579,24 +497,13 @@ def _fix_encoding_stage(
     ).withColumnRenamed("text", "content")
     repaired = _rederive_identities(repaired)
     if drop_exact_dups:
-        # re-apply curation's keeper rule (min (url, passage_idx) per
-        # content key) on the repaired shas.  Curate's byte-identical (url,
-        # passage_idx) collision guard is intentionally omitted:
-        # post-curation rows have unique (url, passage_idx) by construction
-        # (extraction emits one row per passage), so two rows can never tie
-        # on the min key here.  A future caller feeding NON-unique keys
-        # through this stage must add the guard back.
-        keep = repaired.groupBy("content_sha").agg(
-            F.min(F.struct("url", "passage_idx")).alias("_keep")
+        # curation's keeper rule again, keyed on the repaired shas
+        from document_automation_spark.operators.curate import _losers
+
+        losers = _losers(
+            repaired.select(F.col("content_sha").alias("_ck"), "url", "passage_idx")
         )
-        repaired = (
-            repaired.join(keep, "content_sha")
-            .filter(
-                (F.col("url") == F.col("_keep.url"))
-                & (F.col("passage_idx") == F.col("_keep.passage_idx"))
-            )
-            .drop("_keep")
-        )
+        repaired = repaired.join(losers, ["url", "passage_idx"], "left_anti")
     obs_enc = Observation("fix_encoding")
     enc_path = os.path.join(output_path, "curated_encfix")
     _write_table(
@@ -610,8 +517,8 @@ def _fix_encoding_stage(
     # Counter contract: the Observation rides the post-dedup write, so a
     # repaired row that then loses the re-applied exact dedup is counted in
     # mojibake_dedup_losers, not in mojibake_repaired.  Observing pre-dedup
-    # instead would pin a CollectMetrics node into a plan the keeper-rule
-    # self-join reads twice; the losers counter already carries the
+    # instead would pin a CollectMetrics node into a plan the keeper rule
+    # reads more than once; the losers counter already carries the
     # collapsed rows, so the pair (repaired, dedup_losers) is complete.
     return {
         "mojibake_repaired": int(obs_enc.get["n_repaired"] or 0),
@@ -642,8 +549,10 @@ def _dedup_against_stage(
     cannot leak back in as "fresh").  ``trust_existing_sha=True`` prunes
     the existing-corpus scan to its ``content_sha`` column alone (pass it
     only for corpora written by this engine's durable writer).  Writes
-    ``curated_incremental``; summary gains ``xsnap_rows_in`` (the
-    curation's ``rows_out``) / ``xsnap_rows_kept``."""
+    ``curated_incremental``; summary gains ``xsnap_rows_in`` (the rows
+    this stage read: curation's ``rows_out`` less the
+    ``mojibake_dedup_losers`` the repair stage dropped) /
+    ``xsnap_rows_kept``."""
     from document_automation_spark.operators.curate import dedup_against_corpus
 
     fresh = dedup_against_corpus(
@@ -661,7 +570,8 @@ def _dedup_against_stage(
     xsnap_path = os.path.join(output_path, "curated_incremental")
     _write_table(fresh.observe(obs_x, F.count(F.lit(1)).alias("rows_kept")), xsnap_path)
     return {
-        "xsnap_rows_in": int(summary.get("rows_out") or 0),
+        "xsnap_rows_in": int(summary.get("rows_out") or 0)
+        - summary.get("mojibake_dedup_losers", 0),
         "xsnap_rows_kept": int(obs_x.get["rows_kept"] or 0),
         "curated_path": xsnap_path,
     }
@@ -1059,8 +969,7 @@ def _embed_stage(
     changes), assign dense 0-based vector ids WITHOUT a global
     single-partition window, write the ``embeddings`` table.  The ANN
     operators (similarity/ivf) and the serving layer read this table
-    as-is.  The one optional stage that also runs in view and fused
-    mode.  Summary gains ``embeddings_path`` / ``n_vectors``."""
+    as-is.  The one optional stage that also runs in view mode.  Summary gains ``embeddings_path`` / ``n_vectors``."""
     from document_automation_spark.functions.embed import (
         assign_dense_vector_ids,
         embed_documents,
@@ -1355,13 +1264,10 @@ def main(argv=None) -> None:
     parser.add_argument("--semantic-clusters", type=int, default=16)
     parser.add_argument(
         "--curated-mode",
-        choices=("copy", "view", "fused"),
+        choices=("copy", "view"),
         default="copy",
         help="'view' materializes only the dup-loser tombstone table "
-        "(halves write bytes; read back with read_curated); 'fused' "
-        "curates in-flight so the durable corpus write IS the curated "
-        "table (fastest wall-clock; quarantine rows retained — read with "
-        "error IS NULL)",
+        "(halves write bytes; read back with read_curated)",
     )
     args = parser.parse_args(argv)
 

@@ -7,7 +7,10 @@ dedup operators over the analytics ``documents`` fixture (doc_id / text) —
 the two schemas meet real pipelines at different stages, so both surfaces
 exist.
 
-One configurable pass:
+One policy in two forms, the physical copy (:func:`curate_extracted`)
+and the tombstone view (:func:`curation_tombstones`, read back with
+:func:`apply_tombstones`), built from one gate (:func:`_gate`) and one
+keeper rule (:func:`_losers`):
 
 * quarantine rows dropped (``error`` non-null) — they were kept through
   extraction so accounting sees them, but never enter a corpus;
@@ -31,10 +34,10 @@ pages):
 * every stage counter rides the curated plan itself as an ``Observation``
   (CollectMetrics) — zero extra actions, zero extra scans.
 
-Returns ``(curated_df, collect_stats)`` — ``collect_stats()`` yields the
-1-row stats DataFrame and must be called AFTER the first action on
-``curated_df`` (it blocks otherwise; the observation fires with that
-action).
+:func:`curate_extracted` returns ``(curated_df, collect_stats)`` —
+``collect_stats()`` yields the 1-row stats DataFrame and must be called
+AFTER the first action on ``curated_df`` (it blocks otherwise; the
+observation fires with that action).
 """
 
 from __future__ import annotations
@@ -91,108 +94,126 @@ def _dedup_key(documents: DataFrame, sha_is_complete: bool = False) -> "F.Column
     return F.sha2(F.col("content"), 256)
 
 
+def _gate(min_chars: Optional[int], scripts: Optional[Sequence[str]]) -> "F.Column":
+    """The one curation gate: true for a row that the length gate
+    (``min_chars``) or the script gate (``scripts``) drops.  Quarantine
+    (``error`` non-null) is apart from it, so the two are counted apart."""
+    gate = F.lit(False)
+    if min_chars is not None:
+        gate = gate | (F.length("content") < min_chars)
+    if scripts is not None:
+        gate = gate | ~_script_of(F.col("content")).isin(list(scripts))
+    return gate
+
+
+def _passed(documents: DataFrame, gate: "F.Column") -> DataFrame:
+    """The rows that reach exact dedup: neither quarantined nor gated."""
+    return documents.filter(~F.col("error").isNotNull() & ~gate)
+
+
+def _input_counters(gate: "F.Column") -> tuple:
+    """The input-side counters ``rows_in``, ``quarantined``, ``gated``."""
+    quarantined = F.col("error").isNotNull()
+    return (
+        F.count(F.lit(1)).alias("rows_in"),
+        F.sum(quarantined.cast("long")).alias("quarantined"),
+        F.sum((~quarantined & gate).cast("long")).alias("gated"),
+    )
+
+
+def _in_counts(row) -> dict:
+    # sum() is NULL on empty input
+    return {
+        "rows_in": int(row["rows_in"]),
+        "quarantined": int(row["quarantined"] or 0),
+        "gated": int(row["gated"] or 0),
+    }
+
+
+def _keyed(
+    documents: DataFrame, gate: "F.Column", sha_is_complete: bool
+) -> DataFrame:
+    """The narrow ``(_ck, url, passage_idx)`` projection of the passed rows
+    that exact dedup ranks; the wide content column never enters it."""
+    return _passed(documents, gate).select(
+        _dedup_key(documents, sha_is_complete).alias("_ck"), "url", "passage_idx"
+    )
+
+
+def _losers(keyed: DataFrame, probe: Optional[DataFrame] = None) -> DataFrame:
+    """The one keeper rule: the dup losers ``(url, passage_idx)`` of
+    ``keyed``, a ``(_ck, url, passage_idx)`` projection.  Per key the
+    lexicographically smallest ``(url, passage_idx)`` is kept, and every
+    other row loses, unless it is some key's keeper: with non-unique
+    ``(url, passage_idx)`` (possible only without upstream url dedup)
+    over-keeping a dup beats silently dropping a keeper.
+
+    ``probe`` is the same projection on a second lineage, the rows the
+    keepers are compared with.  An Observation on it fires once, because
+    the keeper aggregation reads ``keyed`` and not the observed node."""
+    keep = keyed.groupBy("_ck").agg(
+        F.min(F.struct("url", "passage_idx")).alias("_keep")
+    )
+    losers = (
+        (keyed if probe is None else probe)
+        .join(keep, "_ck")
+        .filter(
+            (F.col("url") != F.col("_keep.url"))
+            | (F.col("passage_idx") != F.col("_keep.passage_idx"))
+        )
+        .select("url", "passage_idx")
+    )
+    keepers = keep.select(
+        F.col("_keep.url").alias("url"),
+        F.col("_keep.passage_idx").alias("passage_idx"),
+    )
+    return losers.join(keepers, ["url", "passage_idx"], "left_anti")
+
+
+def _reconstruct(
+    documents: DataFrame, gate: "F.Column", losers: Optional[DataFrame]
+) -> DataFrame:
+    """The curated rows: the passed rows minus the ``losers`` (none when
+    exact dedup is off)."""
+    passed = _passed(documents, gate)
+    if losers is None:
+        return passed
+    return passed.join(losers, ["url", "passage_idx"], "left_anti")
+
+
 def curate_extracted(
     documents: DataFrame,
     min_chars: Optional[int] = None,
     scripts: Optional[Sequence[str]] = None,
     drop_exact_dups: bool = True,
     sha_is_complete: bool = False,
-    keep_quarantined: bool = False,
 ) -> Tuple[DataFrame, Callable[[], DataFrame]]:
-    """Curate extraction output into a training-ready passages table.
+    """Curate extraction output into a training-ready passages table: the
+    view that :func:`apply_tombstones` rebuilds from
+    :func:`curation_tombstones`, built as one plan.
 
     Cost: the caller's ONE action (typically the corpus write) runs
     everything — input counters and output count are CollectMetrics nodes
     on the curated plan, and the dup-loser subquery touches only narrow
-    columns.  Dedup semantics match the round-3 version exactly: the
-    lexicographically smallest ``(url, passage_idx)`` survives per content
-    hash; byte-identical ``(url, passage_idx)`` collisions (possible only
-    without upstream url dedup) all survive, as before.
-
-    ``keep_quarantined=True`` (the FUSED ingest mode) retains error rows
-    in the output instead of dropping them — the single durable table then
-    serves both as the curated corpus (filter ``error IS NULL``) and the
-    quarantine audit trail; all counters (including ``rows_out``, which
-    always counts NON-quarantined output rows) are unchanged."""
-    quarantined_f = F.col("error").isNotNull()
-    gate_f = F.lit(False)
-    if min_chars is not None:
-        gate_f = gate_f | (F.length("content") < min_chars)
-    if scripts is not None:
-        gate_f = gate_f | ~_script_of(F.col("content")).isin(list(scripts))
-
+    columns.  The lexicographically smallest ``(url, passage_idx)``
+    survives per content hash (:func:`_losers`)."""
+    gate = _gate(min_chars, scripts)
     obs_in = Observation("curate_in")
     obs_out = Observation("curate_out")
-
-    # counters observed on the OUTPUT branch only (the loser subplan scans
-    # `documents` separately — observing the shared node would double-fire)
-    observed = documents.observe(
-        obs_in,
-        F.count(F.lit(1)).alias("total"),
-        F.sum(quarantined_f.cast("long")).alias("quarantined"),
-        F.sum((~quarantined_f & gate_f).cast("long")).alias("gated"),
-    )
-    if keep_quarantined:
-        # error rows pass through untouched; gates/dedup apply to the rest
-        gated = observed.filter(quarantined_f | ~gate_f)
-    else:
-        gated = observed.filter(~quarantined_f & ~gate_f)
-
-    curated = gated
-    if drop_exact_dups:
-        key_expr = _dedup_key(documents, sha_is_complete)
-        keyed = documents.filter(~quarantined_f & ~gate_f).select(
-            key_expr.alias("_ck"), "url", "passage_idx"
-        )
-        keep = keyed.groupBy("_ck").agg(
-            F.min(F.struct("url", "passage_idx")).alias("_keep")
-        )
-        losers = (
-            keyed.join(keep, "_ck")
-            .filter(
-                (F.col("url") != F.col("_keep.url"))
-                | (F.col("passage_idx") != F.col("_keep.passage_idx"))
-            )
-            .select(F.col("url").alias("_lu"), F.col("passage_idx").alias("_lp"))
-        )
-        # guard for non-unique (url, passage_idx) inputs (possible only
-        # without upstream url dedup): a key that is ANY group's keeper is
-        # never dropped, even if another content group ranked it a loser —
-        # over-keeping a dup beats silently dropping a keeper
-        keeper_keys = keep.select(
-            F.col("_keep.url").alias("_lu"), F.col("_keep.passage_idx").alias("_lp")
-        )
-        losers = losers.join(keeper_keys, ["_lu", "_lp"], "left_anti")
-        anti_cond = (gated["url"] == losers["_lu"]) & (
-            gated["passage_idx"] == losers["_lp"]
-        )
-        if keep_quarantined:
-            # a quarantine row can never be a dup loser, even if a docs_fn
-            # gave it a (url, passage_idx) colliding with a content row
-            anti_cond = anti_cond & gated["error"].isNull()
-        curated = gated.join(losers, anti_cond, "left_anti")
-    # rows_out counts NON-quarantined output in both modes (identical to
-    # count(*) when quarantined rows are dropped)
-    curated = curated.observe(
-        obs_out, F.sum((~quarantined_f).cast("long")).alias("rows_out")
-    )
+    # the input counters ride the output branch only: the loser subplan
+    # reads the un-observed `documents`, so the metrics node fires once
+    losers = _losers(_keyed(documents, gate, sha_is_complete)) if drop_exact_dups else None
+    curated = _reconstruct(
+        documents.observe(obs_in, *_input_counters(gate)), gate, losers
+    ).observe(obs_out, F.count(F.lit(1)).alias("rows_out"))
 
     def collect_stats() -> DataFrame:
-        gi, go = obs_in.get, obs_out.get  # blocks until the first action
-        total = int(gi["total"])
-        n_quarantined = int(gi["quarantined"] or 0)
-        n_gated_out = int(gi["gated"] or 0)
-        n_curated = int(go["rows_out"] or 0)  # sum() is NULL on empty input
-        n_gated_in = total - n_quarantined - n_gated_out
+        counts = _in_counts(obs_in.get)  # blocks until the first action
+        rows_out = int(obs_out.get["rows_out"])
+        passed = counts["rows_in"] - counts["quarantined"] - counts["gated"]
         return _stats_frame(
             documents.sparkSession,
-            {
-                "rows_in": total,
-                "quarantined": n_quarantined,
-                "gated": n_gated_out,
-                "deduped": n_gated_in - n_curated,
-                "rows_out": n_curated,
-            },
+            {**counts, "deduped": passed - rows_out, "rows_out": rows_out},
         )
 
     return curated, collect_stats
@@ -221,26 +242,13 @@ def curation_tombstones(
     valid after the first action on ``losers`` — the counters ride the
     loser plan as an ``Observation``, so no SEPARATE stats action exists.
     (Physically the self-join still scans the documents table once per
-    branch — the branches are deliberately distinct lineages so the
-    metrics node fires once — and the scans are column-pruned only when
+    branch, and the scans are column-pruned only when
     ``sha_is_complete=True``; see :func:`_dedup_key`.)
-    Dedup semantics (keeper choice, keeper-key guard, null-safe
-    ``content_sha``) are identical to :func:`curate_extracted` — pinned by
-    tests.  ``drop_exact_dups=False`` returns an EMPTY loser table (the
-    view is then gates-only), keeping the flag's meaning consistent with
-    the copy path."""
-    quarantined_f = F.col("error").isNotNull()
-    gate_f = F.lit(False)
-    if min_chars is not None:
-        gate_f = gate_f | (F.length("content") < min_chars)
-    if scripts is not None:
-        gate_f = gate_f | ~_script_of(F.col("content")).isin(list(scripts))
-
-    counter_exprs = (
-        F.count(F.lit(1)).alias("rows_in"),
-        F.sum(quarantined_f.cast("long")).alias("quarantined"),
-        F.sum((~quarantined_f & gate_f).cast("long")).alias("gated"),
-    )
+    The gate and the keeper rule are :func:`curate_extracted`'s own.
+    ``drop_exact_dups=False`` returns an EMPTY loser table (the view is
+    then gates-only), keeping the flag's meaning consistent with the copy
+    path."""
+    gate = _gate(min_chars, scripts)
 
     if not drop_exact_dups:
         # gates-only view: no loser computation exists to ride, so the
@@ -248,56 +256,17 @@ def curation_tombstones(
         empty = documents.sparkSession.createDataFrame(
             [], "url string, passage_idx int"
         )
-
-        def collect_stats_agg() -> dict:
-            row = documents.agg(*counter_exprs).first()
-            return {
-                "rows_in": int(row["rows_in"]),
-                "quarantined": int(row["quarantined"] or 0),
-                "gated": int(row["gated"] or 0),
-            }
-
-        return empty, collect_stats_agg
+        return empty, lambda: _in_counts(documents.agg(*_input_counters(gate)).first())
 
     obs_in = Observation("tombstones_in")
-    # the observation rides ONLY the join's left branch — the groupBy/keep
-    # branch re-derives from the un-observed lineage, otherwise the
-    # CollectMetrics node would sit in both subtrees of the self-join and
-    # double-fire (same reason curate_extracted splits its branches)
-    keyed_obs = (
-        documents.observe(obs_in, *counter_exprs)
-        .filter(~quarantined_f & ~gate_f)
-        .select(_dedup_key(documents, sha_is_complete).alias("_ck"), "url", "passage_idx")
+    losers = _losers(
+        _keyed(documents, gate, sha_is_complete),
+        probe=_keyed(
+            documents.observe(obs_in, *_input_counters(gate)), gate, sha_is_complete
+        ),
     )
-    keyed_plain = documents.filter(~quarantined_f & ~gate_f).select(
-        _dedup_key(documents, sha_is_complete).alias("_ck"), "url", "passage_idx"
-    )
-    keep = keyed_plain.groupBy("_ck").agg(
-        F.min(F.struct("url", "passage_idx")).alias("_keep")
-    )
-    losers = (
-        keyed_obs.join(keep, "_ck")
-        .filter(
-            (F.col("url") != F.col("_keep.url"))
-            | (F.col("passage_idx") != F.col("_keep.passage_idx"))
-        )
-        .select("url", "passage_idx")
-    )
-    keeper_keys = keep.select(
-        F.col("_keep.url").alias("url"),
-        F.col("_keep.passage_idx").alias("passage_idx"),
-    )
-    losers = losers.join(keeper_keys, ["url", "passage_idx"], "left_anti")
-
-    def collect_stats() -> dict:
-        got = obs_in.get  # blocks until the first action on `losers`
-        return {
-            "rows_in": int(got["rows_in"]),
-            "quarantined": int(got["quarantined"] or 0),
-            "gated": int(got["gated"] or 0),
-        }
-
-    return losers, collect_stats
+    # blocks until the first action on `losers`
+    return losers, lambda: _in_counts(obs_in.get)
 
 
 def apply_tombstones(
@@ -311,15 +280,7 @@ def apply_tombstones(
     anti-join away (broadcast when small — they are, by construction).
     Same gate parameters MUST be passed as at tombstone time (the ingest
     pipeline persists them next to the loser table)."""
-    quarantined_f = F.col("error").isNotNull()
-    gate_f = F.lit(False)
-    if min_chars is not None:
-        gate_f = gate_f | (F.length("content") < min_chars)
-    if scripts is not None:
-        gate_f = gate_f | ~_script_of(F.col("content")).isin(list(scripts))
-    return documents.filter(~quarantined_f & ~gate_f).join(
-        losers, ["url", "passage_idx"], "left_anti"
-    )
+    return _reconstruct(documents, _gate(min_chars, scripts), losers)
 
 
 def dedup_against_corpus(

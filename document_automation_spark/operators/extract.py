@@ -87,7 +87,7 @@ def _documents(pages: DataFrame, cfg: ExtractConfig, payload: str, row_fn) -> Da
     payload-size skew is bounded by the size-based scan split, not by a
     shuffle.  Every output row keeps its input page's ``bucket``, which is
     what lets a resume filter pages below this stage
-    (``plans.checkpoint.ROW_LOCAL_BUILDERS``)."""
+    (``plans.checkpoint.pending_documents``)."""
     import pandas as pd
 
     max_len, overlap, min_chars, split_doc = (

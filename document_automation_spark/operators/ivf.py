@@ -43,21 +43,35 @@ N_PROBE = 3
 QUANTIZE_DP = 6
 
 
-def train_centroids(embeddings: DataFrame, n_centroids: int = 16) -> np.ndarray:
+#: Centroids are trained on the TRAIN_SAMPLE lowest vec_ids: a sample that
+#: is stable across runs and partitionings.
+TRAIN_SAMPLE = 4096
+
+
+def _fit_centroids(pairs, n_centroids: int) -> np.ndarray:
     """(n_centroids, dim) float64 centroid matrix from seed-42 k-means over
-    a deterministic sample (the 4096 lowest vec_ids — stable across runs
-    and partitionings)."""
+    the :data:`TRAIN_SAMPLE` lowest-``vec_id`` rows of ``pairs``, an
+    iterable of ``(vec_id, embedding)``.  The one training recipe: Spark
+    (:func:`train_centroids`) and the pinned goldens (``golden.
+    ivf_centroids``) both feed it, so their centers are bit-identical."""
+    sample = sorted(pairs, key=lambda pair: pair[0])[:TRAIN_SAMPLE]
+    X = np.array([embedding for _, embedding in sample], dtype=np.float64)
+    centers, _ = kmeans_fit(X, n_centroids, seed=42)
+    return centers
+
+
+def train_centroids(embeddings: DataFrame, n_centroids: int = 16) -> np.ndarray:
+    """:func:`_fit_centroids` over the ``embeddings`` table; only the
+    sample reaches the driver."""
     rows = (
         embeddings.select("vec_id", "embedding")
         .orderBy("vec_id")
-        .limit(4096)
+        .limit(TRAIN_SAMPLE)
         .collect()
     )
     if not rows:
         raise ValueError("cannot train IVF centroids on an empty embeddings table")
-    X = np.array([r.embedding for r in rows], dtype=np.float64)
-    centers, _ = kmeans_fit(X, n_centroids, seed=42)
-    return centers
+    return _fit_centroids(rows, n_centroids)
 
 
 def _centroid_dists(X: np.ndarray, C: np.ndarray, quantize_dp: int | None) -> np.ndarray:

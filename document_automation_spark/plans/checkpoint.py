@@ -73,11 +73,6 @@ from document_automation_spark.operators.extract import (
     extract_documents,
 )
 
-# plan builders whose every output row comes from one input page and keeps
-# that page's bucket: a bucket predicate on their INPUT selects exactly the
-# rows it would select on their output
-ROW_LOCAL_BUILDERS = (extract_documents, documents_from_text)
-
 # Parquet writer options for every data table the pipeline writes (the
 # durable extraction output here and each jobs/ingest_pipeline stage), set
 # as WRITER options so the choice is session-independent.  zstd at level 1,
@@ -261,20 +256,29 @@ def pending_documents(
     """The documents plan restricted to the ``pending`` buckets, the ones a
     run still has to write (no filter when they cover ``range(n_buckets)``).
 
-    For the :data:`ROW_LOCAL_BUILDERS` the predicate is a JVM filter on
-    ``pages``, built on the same ``bucket_sql`` expression the builder
-    attaches, so it sits BELOW the Python stage and a committed page is
-    never decoded again (Spark cannot push a filter through
-    ``mapInPandas``).  Any other builder gets it on its OUTPUT: fused
-    curation's exact dedup picks one winner per content across ALL
-    buckets, so feeding it only the pending pages would keep duplicates
-    whose winner sits in a committed bucket."""
+    The predicate is a JVM filter on ``pages``, built on the same
+    ``bucket_sql`` expression the builder attaches, so it sits BELOW the
+    Python stage and a committed page is never decoded again (Spark cannot
+    push a filter through ``mapInPandas``).  That is right because every
+    output row of a :func:`_row_local` builder comes from one input page
+    and keeps that page's bucket."""
+    build = _row_local(docs_fn)
+    if not set(pending) >= set(range(cfg.n_buckets)):
+        pages = pages.filter(_in_buckets(bucket_sql(cfg.n_buckets), pending))
+    return build(pages, cfg)
+
+
+def _row_local(docs_fn):
+    """``docs_fn``, or :func:`extract_documents` for ``None``.  Any builder
+    but the two row-local ones raises ``ValueError``: one that looks across
+    rows (a dedup, say) would see only the pending pages on a resume."""
     build = docs_fn or extract_documents
-    if set(pending) >= set(range(cfg.n_buckets)):
-        return build(pages, cfg)
-    if build in ROW_LOCAL_BUILDERS:
-        return build(pages.filter(_in_buckets(bucket_sql(cfg.n_buckets), pending)), cfg)
-    return build(pages, cfg).filter(_in_buckets("bucket", pending))
+    if build not in (extract_documents, documents_from_text):
+        raise ValueError(
+            "docs_fn must be extract_documents or documents_from_text, "
+            f"got {docs_fn!r}"
+        )
+    return build
 
 
 def run_extraction_job(
@@ -304,10 +308,10 @@ def run_extraction_job(
     DOCUMENTS_SCHEMA DataFrame`` — default :func:`extract_documents` (the
     HTML/PDF path); pass ``operators.extract.documents_from_text`` to run
     the WET/pre-extracted-text path through the SAME bucketed write +
-    manifest + resume machinery (every plan builder emits the ``bucket``
-    column via ``with_bucket``, which is all the checkpointing needs; a
-    builder outside :data:`ROW_LOCAL_BUILDERS` still decodes committed
-    pages on a resume, because its bucket filter sits above it).
+    manifest + resume machinery (both emit the ``bucket`` column via
+    ``with_bucket``, which is all the checkpointing needs).  Any other
+    builder raises ``ValueError`` before any Spark job
+    (:func:`_row_local`).
 
     The data files are written with :data:`PARQUET_WRITE_OPTIONS` by
     ``4 × defaultParallelism`` writer tasks; each (bucket, salt) slice goes
@@ -325,6 +329,7 @@ def run_extraction_job(
     finds buckets in the ``_inflight`` record takes them for a dead run's,
     and deletes that run's hidden ``_manifest/.part-*`` file.
     """
+    docs_fn = _row_local(docs_fn)
     run_id = uuid.uuid4().hex[:12]
     already_done = set(done_buckets(spark, output_path, input_fingerprint))
     pending = [

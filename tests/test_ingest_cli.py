@@ -60,3 +60,17 @@ def test_cli_rejects_view_mode_with_rewriting_stage(spark, tmp_path, capsys):
             "--curated-mode", "view",
             "--fix-encoding",
         ])
+
+
+def test_cli_offers_only_copy_and_view_modes(tmp_path, capsys):
+    import pytest
+
+    with pytest.raises(SystemExit) as exited:
+        main([
+            "--synthesize", "10",
+            "--output", str(tmp_path / "z"),
+            "--input-fingerprint", "cli-bad",
+            "--curated-mode", "fused",
+        ])
+    assert exited.value.code == 2
+    assert "invalid choice: 'fused'" in capsys.readouterr().err

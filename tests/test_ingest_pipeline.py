@@ -470,242 +470,26 @@ class TestIngestPipeline:
         }
         assert resumed_rows == fresh_rows
 
-    def test_fused_mode_equals_copy_mode(self, spark, tmp_path):
-        """curated_mode='fused' (single durable write, curation in-flight)
-        produces the SAME curated row set and stats as copy mode; the
-        quarantine rows ride the same table with error set."""
-        pages = pages_df(spark, 120, partitions=4)
-        out_c = str(tmp_path / "copy")
-        s_c = run_ingest_pipeline(
-            spark, pages, out_c, "fp", cfg=ExtractConfig(n_buckets=8)
-        )
-        out_f = str(tmp_path / "fused")
-        s_f = run_ingest_pipeline(
-            spark, pages, out_f, "fp", cfg=ExtractConfig(n_buckets=8),
-            curated_mode="fused",
-        )
-        for k in ("rows_in", "quarantined", "gated", "deduped", "rows_out"):
-            assert s_f[k] == s_c[k], k
-        fused_tbl = spark.read.parquet(s_f["curated_path"])
-        copy_rows = {
-            (r.url, r.passage_idx)
-            for r in spark.read.parquet(s_c["curated_path"])
-            .select("url", "passage_idx").collect()
-        }
-        fused_rows = {
-            (r.url, r.passage_idx)
-            for r in fused_tbl.filter(F.col("error").isNull())
-            .select("url", "passage_idx").collect()
-        }
-        assert fused_rows == copy_rows
-        # quarantine rows retained for audit
-        assert fused_tbl.filter(F.col("error").isNotNull()).count() == s_f["quarantined"]
-
-        # every mode writes the same _curation_stats sidecar: STATS_SCHEMA,
-        # one row, the summary's values
+    def test_both_modes_write_one_curation_stats_sidecar(self, spark, tmp_path):
+        """Both curated modes write the same _curation_stats sidecar:
+        STATS_SCHEMA, one row, the summary's values."""
         from pyspark.sql.types import _parse_datatype_string
 
         from document_automation_spark.operators.curate import STATS_SCHEMA
 
-        out_v = str(tmp_path / "view")
-        s_v = run_ingest_pipeline(
-            spark, pages, out_v, "fp", cfg=ExtractConfig(n_buckets=8),
-            curated_mode="view",
-        )
+        pages = pages_df(spark, 120, partitions=4)
         counters = ("rows_in", "quarantined", "gated", "deduped", "rows_out")
-        for out, s in ((out_c, s_c), (out_v, s_v), (out_f, s_f)):
+        for mode in ("copy", "view"):
+            out = str(tmp_path / mode)
+            s = run_ingest_pipeline(
+                spark, pages, out, "fp", cfg=ExtractConfig(n_buckets=8),
+                curated_mode=mode,
+            )
             stats = spark.read.parquet(os.path.join(out, "_curation_stats"))
             assert stats.schema == _parse_datatype_string(STATS_SCHEMA), out
             assert [r.asDict() for r in stats.collect()] == [
                 {k: s[k] for k in counters}
             ], out
-
-    def test_fused_mode_crash_resume(self, spark, tmp_path):
-        """A fused-mode run resumes through the same per-bucket manifests:
-        crash (buckets missing) → resume completes → rows match a fresh
-        fused run exactly."""
-        from document_automation_spark.plans.checkpoint import run_extraction_job
-
-        pages = pages_df(spark, 80, partitions=4)
-        cfg = ExtractConfig(n_buckets=8)
-        out = str(tmp_path / "fused_resume")
-
-        # crash the FUSED write path midway: reuse the extraction job's
-        # fail hook through a first partial ingest-like run
-        from document_automation_spark.operators.curate import curate_extracted
-        from document_automation_spark.operators.extract import extract_documents
-        from pyspark import StorageLevel
-
-        cache = []
-
-        def fused_fn(pages_, cfg_):
-            docs = extract_documents(pages_, cfg_).persist(StorageLevel.MEMORY_AND_DISK)
-            cache.append(docs)
-            curated, _ = curate_extracted(docs, keep_quarantined=True)
-            return curated
-
-        crashed = run_extraction_job(
-            spark, pages, out, "fp-f", cfg, docs_fn=fused_fn, fail_buckets_above=4
-        )
-        for h in cache:
-            h.unpersist()
-        assert 0 < crashed["buckets_processed"] < 8
-
-        s = run_ingest_pipeline(
-            spark, pages, out, "fp-f", cfg=cfg, curated_mode="fused"
-        )
-        assert s["buckets_skipped"] == crashed["buckets_processed"]
-
-        out2 = str(tmp_path / "fused_fresh")
-        s2 = run_ingest_pipeline(
-            spark, pages, out2, "fp-f", cfg=cfg, curated_mode="fused"
-        )
-        rows_a = {
-            (r.url, r.passage_idx)
-            for r in spark.read.parquet(s["curated_path"]).select("url", "passage_idx").collect()
-        }
-        rows_b = {
-            (r.url, r.passage_idx)
-            for r in spark.read.parquet(s2["curated_path"]).select("url", "passage_idx").collect()
-        }
-        assert rows_a == rows_b
-
-    def test_fused_crash_between_write_and_manifest_append_resumes_clean(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """The fused builder at the second crash point: the curated data
-        files are written, then the job dies before the manifest append.
-        The resume rewrites those buckets and the corpus table equals a
-        clean fused run row for row."""
-        from document_automation_spark.plans import checkpoint
-        from document_automation_spark.plans.checkpoint import read_output
-
-        pages = pages_df(spark, 80, partitions=4)
-        cfg = ExtractConfig(n_buckets=8)
-        out = str(tmp_path / "fused_crash")
-
-        class ManifestAppendCrash(RuntimeError):
-            pass
-
-        def crash_on_manifest(spark_, output_path, *args):
-            raise ManifestAppendCrash(output_path)
-
-        with monkeypatch.context() as patched:
-            patched.setattr(checkpoint, "_append_manifest", crash_on_manifest)
-            with pytest.raises(ManifestAppendCrash):
-                run_ingest_pipeline(
-                    spark, pages, out, "fp-fc", cfg=cfg, curated_mode="fused"
-                )
-        assert os.listdir(os.path.join(out, "data"))  # the data write happened
-
-        resumed = run_ingest_pipeline(
-            spark, pages, out, "fp-fc", cfg=cfg, curated_mode="fused"
-        )
-        assert resumed["buckets_processed"] == 8
-        clean = str(tmp_path / "fused_clean")
-        run_ingest_pipeline(spark, pages, clean, "fp-fc", cfg=cfg, curated_mode="fused")
-
-        def table(path):
-            return sorted(
-                repr(tuple(r)) for r in read_output(spark, path, with_sha=True).collect()
-            )
-
-        assert table(out) == table(clean)
-
-    def test_fused_resume_dedups_across_committed_buckets(self, spark, tmp_path):
-        """Fused curation picks one exact-dedup winner across ALL buckets,
-        so a resume must not hide the committed buckets from it.  Fixture:
-        every page plus a mirror copy under a later-sorting url; at least
-        one pair has its winner in a committed bucket and its loser in a
-        pending one.  Crash → resume equals a fresh fused run row for row,
-        counters included, and so do the no-op re-runs after it."""
-        import shutil
-
-        from pyspark import StorageLevel
-
-        from document_automation_spark.operators.curate import curate_extracted
-        from document_automation_spark.operators.extract import extract_documents
-        from document_automation_spark.plans.checkpoint import run_extraction_job
-        from document_automation_spark.sources.pages import PAGES_SCHEMA, gen_rows
-
-        rows = gen_rows(range(40))
-        rows += [
-            dict(r, url=f"https://zz-mirror.example.com/copy/{i}")
-            for i, r in enumerate(rows)
-        ]
-        pages = spark.createDataFrame(
-            [tuple(r[f] for f in PAGES_SCHEMA.names) for r in rows], PAGES_SCHEMA
-        )
-        cfg = ExtractConfig(n_buckets=8)
-        fail = 4
-
-        docs = extract_documents(pages, cfg).filter(F.col("error").isNull())
-        pairs = docs.groupBy("content").agg(
-            F.min(F.struct("url", "bucket")).alias("winner"),
-            F.max("bucket").alias("top"),
-        )
-        assert pairs.filter(
-            (F.col("winner.bucket") < fail) & (F.col("top") >= fail)
-        ).count() > 0
-
-        cache = []
-
-        def fused_fn(pages_, cfg_):
-            extracted = extract_documents(pages_, cfg_).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            cache.append(extracted)
-            return curate_extracted(extracted, keep_quarantined=True)[0]
-
-        out = str(tmp_path / "fused_mirror_resume")
-        crashed = run_extraction_job(
-            spark, pages, out, "fp-m", cfg, docs_fn=fused_fn, fail_buckets_above=fail
-        )
-        for h in cache:
-            h.unpersist()
-        assert 0 < crashed["buckets_processed"] < 8
-        resumed = run_ingest_pipeline(
-            spark, pages, out, "fp-m", cfg=cfg, curated_mode="fused"
-        )
-        assert resumed["buckets_skipped"] == crashed["buckets_processed"]
-        fresh = run_ingest_pipeline(
-            spark, pages, str(tmp_path / "fused_mirror_fresh"), "fp-m",
-            cfg=cfg, curated_mode="fused",
-        )
-
-        def table(summary):
-            return sorted(
-                tuple(r) for r in spark.read.parquet(summary["curated_path"])
-                .select("url", "passage_idx", "bucket", "content", "error")
-                .collect()
-            )
-
-        counters = ("rows_in", "quarantined", "gated", "deduped", "rows_out")
-        assert table(resumed) == table(fresh)
-        assert fresh["deduped"] > 0
-        assert {k: resumed[k] for k in counters} == {k: fresh[k] for k in counters}
-
-        # every bucket committed: the counters come from the committing
-        # run, or are re-counted when its stats file is gone
-        again = run_ingest_pipeline(
-            spark, pages, out, "fp-m", cfg=cfg, curated_mode="fused"
-        )
-        shutil.rmtree(os.path.join(out, "_curation_stats"))
-        recount = run_ingest_pipeline(
-            spark, pages, out, "fp-m", cfg=cfg, curated_mode="fused"
-        )
-        for s in (again, recount):
-            assert s["buckets_processed"] == 0
-            assert {k: s[k] for k in counters} == {k: fresh[k] for k in counters}
-        assert table(recount) == table(fresh)
-
-    def test_fused_rejects_cut_dup_spans(self, spark, tmp_path):
-        with pytest.raises(ValueError, match="copy"):
-            run_ingest_pipeline(
-                spark, pages_df(spark, 10, partitions=1), str(tmp_path / "x"),
-                "fp", cfg=ExtractConfig(n_buckets=2),
-                curated_mode="fused", cut_dup_spans=True,
-            )
 
     def test_hygiene_stage_decontaminate_and_pii(self, spark, tmp_path):
         """--decontaminate + --redact-pii compose into one hygiene write:
@@ -1579,27 +1363,32 @@ class TestFixEncodingStage:
         assert s2["xsnap_rows_in"] > 0
         assert s2["xsnap_rows_kept"] == 0
 
+    COLLIDE_TEXT = ("It’s the same café article für €5 with enough words that "
+                    "the gates keep it either way, clean or repaired.")
+    CONTROL_TEXT = "an unrelated control document with plenty of plain words"
+
+    def _collide_pages(self, spark):
+        """A clean copy, a mojibake-corrupted copy of the same text, and a
+        control page."""
+        moji = self.COLLIDE_TEXT.encode("utf-8").decode("cp1252")
+        ts = dt.datetime(2024, 1, 1)
+        return spark.createDataFrame(
+            [
+                ("https://a.example.com/x", ts, None, self.COLLIDE_TEXT, "en"),
+                ("https://b.example.com/y", ts, None, moji, "en"),
+                ("https://c.example.com/z", ts, None, self.CONTROL_TEXT, "en"),
+            ],
+            "url string, warc_ts timestamp, html binary, text string, lang string",
+        )
+
     def test_clean_and_corrupted_copies_collapse_after_repair(self, spark, tmp_path):
         """Within ONE snapshot, a clean copy and a mojibake-corrupted copy
         of the same text both survive curation's exact dedup (their
         UNREPAIRED shas differ) — the repair stage must re-apply the
         keeper rule on the repaired shas or the corpus ships byte-identical
         duplicates."""
-        import datetime as dt
-
-        text = ("It’s the same café article für €5 with enough words that "
-                "the gates keep it either way, clean or repaired.")
-        moji = text.encode("utf-8").decode("cp1252")
-        schema = "url string, warc_ts timestamp, html binary, text string, lang string"
-        pages = spark.createDataFrame(
-            [
-                ("https://a.example.com/x", dt.datetime(2024, 1, 1), None, text, "en"),
-                ("https://b.example.com/y", dt.datetime(2024, 1, 1), None, moji, "en"),
-                ("https://c.example.com/z", dt.datetime(2024, 1, 1), None,
-                 "an unrelated control document with plenty of plain words", "en"),
-            ],
-            schema,
-        )
+        text = self.COLLIDE_TEXT
+        pages = self._collide_pages(spark)
         summary = run_ingest_pipeline(
             spark, pages, str(tmp_path / "c"), "fp-collide",
             cfg=ExtractConfig(n_buckets=2), from_text=True, fix_encoding=True,
@@ -1611,3 +1400,23 @@ class TestFixEncodingStage:
         assert summary["mojibake_dedup_losers"] == 1
         # keeper rule matches curation's: min (url, passage_idx) wins
         assert final.where(F.col("content") == text).first().url == "https://a.example.com/x"
+
+    def test_cross_snapshot_stage_counts_the_rows_it_reads(self, spark, tmp_path):
+        """``xsnap_rows_in`` is the row count of the repaired corpus the
+        cross-snapshot stage reads: curation's ``rows_out`` less the
+        repair stage's dedup losers."""
+        previous = str(tmp_path / "previous")
+        spark.createDataFrame([(self.CONTROL_TEXT,)], "content string").write.parquet(
+            previous
+        )
+        out = str(tmp_path / "c")
+        summary = run_ingest_pipeline(
+            spark, self._collide_pages(spark), out, "fp-collide",
+            cfg=ExtractConfig(n_buckets=2), from_text=True, fix_encoding=True,
+            dedup_against_path=previous,
+        )
+        read = spark.read.parquet(os.path.join(out, "curated_encfix")).count()
+        assert summary["rows_out"] == 3
+        assert summary["mojibake_dedup_losers"] == 1
+        assert summary["xsnap_rows_in"] == read == 2
+        assert summary["xsnap_rows_kept"] == 1

@@ -365,24 +365,38 @@ def _plan_lines(df):
 
 
 def _cross_row(pages_, cfg_):
-    """A builder that looks across rows, like fused curation's exact dedup:
-    keeps each content only under its smallest url."""
+    """A builder that looks across rows: keeps each content only under its
+    smallest url."""
     docs = extract_documents(pages_, cfg_)
     firsts = docs.groupBy("content").agg(F.min("url").alias("url"))
     return docs.join(firsts, ["content", "url"], "left_semi")
 
 
+def test_a_cross_row_builder_is_rejected_before_any_job(spark, out_dir):
+    """Only the row-local builders may run: a resume filters pages below
+    the builder, so a builder that looks across rows would see only the
+    pending pages.  Any other builder raises before a Spark job starts
+    and before anything is written."""
+    pages = pages_df(spark, N_PAGES, partitions=4)
+    cfg = ExtractConfig(n_buckets=8)
+    with jobs_started(spark) as jobs:
+        with pytest.raises(ValueError, match="docs_fn"):
+            run_extraction_job(spark, pages, out_dir, FP, cfg, docs_fn=_cross_row)
+        with pytest.raises(ValueError, match="docs_fn"):
+            pending_documents(pages, cfg, [0], docs_fn=_cross_row)
+    assert jobs == []
+    assert not os.path.exists(out_dir)
+
+
 @pytest.mark.parametrize(
-    "docs_fn, below",
-    [(extract_documents, True), (documents_from_text, True), (_cross_row, False)],
-    ids=["extract_documents", "documents_from_text", "cross_row"],
+    "docs_fn", [extract_documents, documents_from_text],
+    ids=["extract_documents", "documents_from_text"],
 )
 def test_partial_resume_filters_buckets_below_python_stage(
-    spark, tmp_path, out_dir, docs_fn, below
+    spark, tmp_path, out_dir, docs_fn
 ):
-    """On a partial resume the row-local builders see only the pending
-    buckets: the bucket Filter sits under MapInPandas in the optimized
-    plan.  A builder that looks across rows keeps the Filter above it."""
+    """On a partial resume the builder sees only the pending buckets: the
+    bucket Filter sits under MapInPandas in the optimized plan."""
     src = str(tmp_path / "pages.parquet")
     pages_df(spark, N_PAGES, partitions=4).write.parquet(src)
     pages = spark.read.parquet(src)
@@ -403,7 +417,7 @@ def test_partial_resume_filters_buckets_below_python_stage(
         i for i, ln in enumerate(lines)
         if "Filter" in ln and ("xxhash64" in ln or "bucket" in ln)
     )
-    assert (bucket_filter > python_stage) == below, "\n".join(lines)
+    assert bucket_filter > python_stage, "\n".join(lines)
 
     resumed = run_extraction_job(spark, pages, out_dir, FP, cfg, docs_fn=docs_fn)
     assert resumed["buckets_skipped"] == len(done)

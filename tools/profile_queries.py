@@ -2,15 +2,15 @@
 
 Runs selected bench rows (``bench.BenchRows``: the flagship rows, the
 registry seats and the bare-operator rows that override them) in the bench
-session with the UI enabled, warm (``BenchRows.warm_up``, as in
-``bench.py``, then one untimed rep of each row before its timed reps),
-then pulls per-stage metrics from the Spark
-REST API so the seconds can be attributed to stages/operators instead of
-guessed at.  Also dumps ``explain("formatted")`` per query to
+session, warm (``BenchRows.warm_up``, as in ``bench.py``, then one untimed
+rep of each row before its timed reps).  With ``--stages`` it enables the
+UI and pulls per-stage metrics from the Spark REST API, so the seconds can
+be attributed to stages/operators instead of guessed at; a failed REST
+call ends the run.  Also dumps ``explain("formatted")`` per query to
 ``plans/r06/<query>_<tag>.txt`` when ``--plans <tag>`` is given.
 
 Usage:
-    python tools/profile_queries.py [--plans before] [--reps 2] query [query ...]
+    python tools/profile_queries.py [--plans before] [--reps 2] [--stages] query [query ...]
 """
 
 from __future__ import annotations
@@ -66,7 +66,9 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = bench_session(
-        "profile-queries", cpus, {"spark.ui.enabled": "true", "spark.ui.port": "4057"}
+        "profile-queries",
+        cpus,
+        {"spark.ui.enabled": "true", "spark.ui.port": "4057"} if args.stages else None,
     )
     rows = BenchRows(spark, sf_dir, cpus)
     rows.warm_up()
@@ -87,13 +89,12 @@ def main() -> None:
         # (4.91 s, then 1.37-2.07 s, for exact_dedup at sf0.001, local[4])
         spark.sparkContext.setJobDescription(f"{name} warm-up")
         rows.time(name)
-        first_stage = 0
-        try:
+        if args.stages:
+            # a failed probe raises: a guessed first stage would attribute
+            # every stage since process start to this row
             apps = rest("applications")
             sts = rest(f"applications/{apps[0]['id']}/stages")
             first_stage = max((s["stageId"] for s in sts), default=-1) + 1
-        except Exception:
-            pass
         times = []
         for rep in range(args.reps):
             spark.sparkContext.setJobDescription(f"{name} rep{rep}")
